@@ -1,0 +1,35 @@
+package perfbench
+
+/** Minimal JSON writer for the harness's result file. */
+object Json {
+  def str(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case '\n' => b ++= "\\n"
+      case '\r' => b ++= "\\r"
+      case '\t' => b ++= "\\t"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    (b += '"').toString
+  }
+
+  def value(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => value(x)
+    case s: String => str(s)
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case f: Float => value(f.toDouble)
+    case n: Number => n.toString
+    case b: Boolean => b.toString
+    case m: Map[_, _] => "{" + m.map { case (k, x) => str(k.toString) + ": " + value(x) }
+      .mkString(", ") + "}"
+    case s: Iterable[_] => "[" + s.map(value).mkString(", ") + "]"
+    case other => str(other.toString)
+  }
+
+  def obj(kv: (String, Any)*): String = value(kv.toMap)
+  def arr(xs: Iterable[Any]): String = value(xs)
+}
