@@ -808,73 +808,6 @@ object ScaleProbe {
       return
     }
 
-    // SPARK_GRAFT_PROBE_MODE=bandab: the controlled A/B isolating the
-    // v2 band-key premium (the round-15 adverse bench signal: d25
-    // 8.1→14.4 s, d14 3.3→7.0 s vs the r14 binary, never separated
-    // from box noise). ONE binary, two layouts per rep, interleaved on
-    // the same corpus: pfxBits=2 (v2 — installs/appends ALSO land the
-    // (band, pfx)-partitioned band-key generation; probes prune) vs
-    // pfxBits=0 (v1 — no band-key table; probes band the full
-    // signature scan). Medians over `reps` reps; each (rep, layout)
-    // gets its own salted batch so the operators' plan-keyed caches
-    // never cross-serve, and the cache is cleared between layouts.
-    // The headline is (v2 − v1) per op: the install/append premium the
-    // pruned probe buys, measured with everything else bit-identical.
-    if (sys.env.get("SPARK_GRAFT_PROBE_MODE").contains("bandab")) {
-      val reps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "5").toInt
-      val corpus = replicated(2)
-      val docs = corpus.count()
-      def salted(off: Long, tag: String): DataFrame =
-        base.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + off).as("doc_id"),
-            when(col("doc_id") % 97 === 0, col("text"))
-              .otherwise(concat(col("text"), lit(s" $tag"))).as("text"))
-      val batchDocs = salted(700000000L, "x").count()
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      val out = scala.collection.mutable.Map[(String, String), Vector[Double]]()
-        .withDefaultValue(Vector())
-      (1 to reps).foreach { rep =>
-        Seq(("v2", 2), ("v1", 0)).foreach { case (layout, pfx) =>
-          val tmp = java.nio.file.Files
-            .createTempDirectory(s"bandab_${layout}_$rep").toString
-          val append = salted(700000000L + rep * 2000000L,
-            s"fresh-$layout-$rep")
-          val probe = salted(800000000L + rep * 2000000L,
-            s"probe-$layout-$rep")
-          out((layout, "install")) :+= timed {
-            Dedup.writeNearDupStore(corpus, "doc_id", "text", s"$tmp/nd",
-              pfxBits = pfx)
-          }
-          out((layout, "append")) :+= timed {
-            Dedup.appendToNearDupStore(append, s"$tmp/nd", "doc_id",
-              "text", batchId = 1L)
-          }
-          out((layout, "probe")) :+= timed {
-            Dedup.incrementalNearDupFromStore(probe, s"$tmp/nd",
-              "doc_id", "text").count()
-          }
-          // drop the operators' plan-keyed internal persists so the
-          // next layout/rep starts cold (NOTES.md cache policy)
-          spark.catalog.clearCache()
-        }
-      }
-      def med(xs: Vector[Double]): Double = {
-        val s = xs.sorted; s(s.size / 2)
-      }
-      def sect(layout: String): String =
-        Seq("install", "append", "probe").map { op =>
-          val xs = out((layout, op))
-          f""""$op":${med(xs)}%.2f,"${op}_all":[${
-            xs.map(x => f"$x%.2f").mkString(",")}]"""
-        }.mkString("{", ",", "}")
-      println(s"""{"mode":"bandab","docs":$docs,"batch":$batchDocs,""" +
-        s""""reps":$reps,"v2":${sect("v2")},"v1":${sect("v1")}}""")
-      spark.stop()
-      return
-    }
-
     // SPARK_GRAFT_PROBE_MODE=medallion: the reference's FLAGSHIP
     // pipeline (silver cleaners → gold featurizers → feature/label
     // stores) at growing LOAN-SPINE counts — the scale law for the one

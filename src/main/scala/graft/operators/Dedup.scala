@@ -558,7 +558,7 @@ object Dedup {
                                        dir: String, idCol: String,
                                        textCol: String): DataFrame = {
     val spark = batch.sparkSession
-    requireNoCrashedCompaction(spark, dir)
+    StoreMaintenance.requireNoCrashedCompaction(spark, dir)
     val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
     // stores written before sharding existed carry no "shards" key = 1
     val shards = meta.getOrElse("shards", "1").toInt
@@ -634,7 +634,7 @@ object Dedup {
     // empty dir
     if (newFps.isEmpty) return
     val spark = newFps.sparkSession
-    requireNoCrashedCompaction(spark, dir)
+    StoreMaintenance.requireNoCrashedCompaction(spark, dir)
     val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
     require(meta.getOrElse("formatVersion", "1") == "2",
       s"fp store at $dir predates per-batch generations (formatVersion " +
@@ -1518,7 +1518,7 @@ object Dedup {
                             dir: String, batchId: Long): Unit = {
     require(batchId > 0, "batchId 0 is the base install (writeEvalGramStore)")
     val spark = evalSet.sparkSession
-    requireNoCrashedCompaction(spark, dir)
+    StoreMaintenance.requireNoCrashedCompaction(spark, dir)
     val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
     // a v1 store keeps its gram parquet FLAT under $dir/grams — landing
     // a grams/batch=<id> dir next to flat files makes every subsequent
@@ -1787,7 +1787,7 @@ object Dedup {
   def decontaminateRewriteFromStore(corpus: DataFrame, dir: String,
                                     idCol: String, textCol: String): DataFrame = {
     val spark = corpus.sparkSession
-    requireNoCrashedCompaction(spark, dir)
+    StoreMaintenance.requireNoCrashedCompaction(spark, dir)
     val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
     decontaminateRewriteLoaded(corpus, dir, meta("n").toInt,
       mergedBloomBytes(spark, dir, None), idCol, textCol)
@@ -2254,26 +2254,22 @@ object Dedup {
     * Hadoop filesystem so an hdfs://-/s3a://-rooted store keeps its
     * meta NEXT TO its tables, not on the driver's local disk.
     *
-    * `pfxBits` sizes the band-key tree: a generation writes
-    * bands · 2^pfxBits directories, and a batch probe reads ~2^-pfxBits
-    * of the store per matched band. The default (2 → 64 dirs) prices
-    * directory/committer churn for small generations; at cluster scale
-    * raise it (4–6) — bigger generations amortize the dirs and the
-    * probes prune proportionally harder. `pfxBits = 0` opts OUT of the
-    * band-key table entirely (the v1 layout): installs and appends
-    * skip the per-generation band-key write, and probes band the
-    * signature table at read time — store-linear probes, cheaper
-    * ingest. Right for one-shot stores probed a handful of times;
-    * wrong for a long ingest line, where every batch would re-scan the
-    * growing signature table (the round-14 linear term the v2 layout
-    * removed). */
+    * Every generation (this install is `batch=0`) also lands its
+    * band-bucket keys as ONE flat, size-targeted file set under
+    * `bandkeys/batch=<id>` — (band, bh, id) rows, ~(4 B + 4 B + 8 B) ×
+    * bands per doc — and probes join their own band keys against it on
+    * (band, bh). The banding geometry is pinned in the sidecar. The
+    * earlier (band, pfx)-partitioned tree (bands · 2^pfxBits directories
+    * per generation) was dropped: its prefix prune never fires on a
+    * batch of more than a few docs — a 100-doc batch misses one of a
+    * band's 4 prefixes with probability ≤ 4·(3/4)^100 ≈ 1e-12 — so every
+    * probe read every directory anyway, while every install, append and
+    * fold paid a 64-way shuffle and 64 directory creates. */
   def writeNearDupStore(corpus: DataFrame, idCol: String, textCol: String,
                         dir: String, shingleSize: Int = 3,
                         numHashes: Int = 64, seed: Long = 42L,
-                        bands: Int = 16, pfxBits: Int = 2): Unit = {
+                        bands: Int = 16): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    require(pfxBits >= 0 && pfxBits <= 16,
-      "pfxBits must be in [1, 16], or 0 for the v1 no-band-key layout")
     val h = hashedShingles(shingles(corpus, idCol, textCol, shingleSize))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // batch=0 is the base install; appends land under their own
@@ -2304,36 +2300,22 @@ object Dedup {
       () => {
         sigs.hint("rebalance").write.mode("overwrite")
           .parquet(s"$dir/signatures/batch=0")
-        // formatVersion 2+: the store ALSO lands its band-bucket keys,
-        // partitioned by (band, pfx = top pfxBits bits of the bucket
-        // hash) — a probing batch knows exactly which (band, pfx)
-        // partitions its own band keys can collide in, so the candidate
-        // read is partition-pruned instead of banding a full signature
-        // scan per batch (the round-14 store-linear term). The banding
-        // geometry is pinned here; a probe called with a different
-        // `bands` knob falls back to the signature path (still correct,
-        // store-linear) rather than mis-colliding. Band keys land AFTER
-        // the signature write: a candidate implies its band-key row,
-        // which now implies the signature (and its sz) landed — the
-        // inert-orphan classes stay exactly the documented ones.
-        if (pfxBits > 0)
-          writeBandKeysGeneration(sigs, dir, 0L, numHashes, bands, pfxBits)
+        // band keys land AFTER the signature write: a candidate implies
+        // its band-key row, which now implies the signature (and its
+        // sz) landed — the inert-orphan classes stay exactly the
+        // documented ones
+        writeBandKeysGeneration(sigs, dir, 0L, numHashes, bands)
       })
     sigs.unpersist()
     h.unpersist()
-    val geometry =
-      if (pfxBits > 0)
-        Map("bands" -> bands.toString, "pfxBits" -> pfxBits.toString,
-          "formatVersion" -> "3")
-      else Map("formatVersion" -> "3") // no pinned bands: probes re-band
     graft.sources.Sources.writeJsonSidecarFs(corpus.sparkSession,
       s"$dir/_meta.json",
       Map("shingleSize" -> shingleSize.toString,
         "numHashes" -> numHashes.toString,
         "minhashSeed" -> seed.toString,
-        // v3 marker: the signature table carries the per-doc shingle
-        // count; probes on a pre-v3 store fall back to aggregating
-        "sigSize" -> "1") ++ geometry)
+        "bands" -> bands.toString,
+        // v4: sized signatures + one flat band-key file set per generation
+        "formatVersion" -> "4"))
     // a RE-install over a previously-read dir (same session) must
     // invalidate the shared file-status cache, or the first read serves
     // the pre-install listing and dies on vanished files — the append
@@ -2378,7 +2360,7 @@ object Dedup {
     // or the overwrite silently replaces the earlier batch
     require(batchId > 0, "batchId 0 is the base install (writeNearDupStore)")
     val spark = batch.sparkSession
-    requireNoCrashedCompaction(spark, dir)
+    StoreMaintenance.requireNoCrashedCompaction(spark, dir)
     val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
     appendHashedShingles(spark,
       hashedShingles(shingles(batch, idCol, textCol,
@@ -2395,7 +2377,7 @@ object Dedup {
                                                 batchId: Long): Unit = {
     require(batchId > 0, "batchId 0 is the base install (writeNearDupStore)")
     val spark = hIn.sparkSession
-    requireNoCrashedCompaction(spark, dir)
+    StoreMaintenance.requireNoCrashedCompaction(spark, dir)
     val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
     appendHashedShingles(spark, hIn, dir, batchId, meta)
   }
@@ -2414,14 +2396,8 @@ object Dedup {
                                    hIn: DataFrame, dir: String,
                                    batchId: Long,
                                    meta: Map[String, String]): Unit = {
-    val numHashes = meta("numHashes").toInt
-    val seed = meta.getOrElse("minhashSeed", "42").toLong
     val h = hIn.localCheckpoint()
-    // sz column only when the store's layout has it (sigSize, v3+) — an
-    // append must match the store it grows, or the fold would union
-    // mismatched schemas
-    val sigs = minHashSignaturesHashed(h, numHashes, seed,
-      withSize = meta.get("sigSize").contains("1")).localCheckpoint()
+    val sigs = sizedSignaturesFor(h, meta).localCheckpoint()
     appendGenerationTables(spark, h, sigs, dir, batchId, meta)
     sigs.unpersist()
     h.unpersist()
@@ -2443,12 +2419,8 @@ object Dedup {
                                               meta: Map[String, String]): Unit = {
     require(batchId > 0, "batchId 0 is the base install (writeNearDupStore)")
     val spark = hKept.sparkSession
-    requireNoCrashedCompaction(spark, dir)
-    // the probe's sigB always carries sz; a pre-v3 store's layout does
-    // not — drop it so the appended generation matches the store
-    val aligned =
-      if (meta.get("sigSize").contains("1")) sigsKept else sigsKept.drop("sz")
-    appendGenerationTables(spark, hKept, aligned, dir, batchId, meta)
+    StoreMaintenance.requireNoCrashedCompaction(spark, dir)
+    appendGenerationTables(spark, hKept, sigsKept, dir, batchId, meta)
   }
 
   /** Shared write fan-out of the append paths. `h`/`sigs` must be
@@ -2465,7 +2437,7 @@ object Dedup {
                                      h: DataFrame, sigs: DataFrame,
                                      dir: String, batchId: Long,
                                      meta: Map[String, String]): Unit = {
-    val numHashes = meta("numHashes").toInt
+    requireFlatBandKeys(meta, dir)
     // rebalance before write (same file-sizing rationale as the
     // installer) — applied ABOVE any checkpoint, so frozen rows are
     // only re-bucketed, never recomputed
@@ -2475,14 +2447,8 @@ object Dedup {
       () => {
         sigs.hint("rebalance").write.mode("overwrite")
           .parquet(s"$dir/signatures/batch=$batchId")
-        // v2+ stores also land the batch's band keys (see
-        // writeNearDupStore); a v1 store (no pinned bands) skips it —
-        // its probes band the signature table at read time, so the
-        // table would be dead weight.
-        meta.get("bands").foreach { b =>
-          writeBandKeysGeneration(sigs, dir, batchId, numHashes,
-            b.toInt, meta("pfxBits").toInt)
-        }
+        writeBandKeysGeneration(sigs, dir, batchId,
+          meta("numHashes").toInt, meta("bands").toInt)
       })
     // invalidate cached reads of the store: CacheManager matches plans
     // by ROOT PATH, not file listing, so a store scan persisted by an
@@ -2493,33 +2459,29 @@ object Dedup {
     spark.catalog.refreshByPath(dir)
   }
 
-  /** Shared writer half of the v2 band-key table: explode signatures
-    * into (band, bh) keys and land them partitioned by (band, pfx =
-    * top `pfxBits` bits of the 32-bit bucket hash) under the batch's
-    * generation dir. ~(4 B key + 8 B id) × bands per doc at rest. */
+  /** Shared writer half of the band-key table: explode signatures into
+    * (band, bh, id) keys and land them as ONE flat, size-targeted file
+    * set under the batch's generation dir — a rebalance, not a
+    * (band, pfx) partitioned write: a generation is a handful of files
+    * whatever the banding geometry, and the probe's (band, bh) join
+    * reads them whole. A prefix prune would never prune a batch of more
+    * than a few docs (see writeNearDupStore). */
   private def writeBandKeysGeneration(sigs: DataFrame, dir: String,
                                       batchId: Long, numHashes: Int,
-                                      bands: Int, pfxBits: Int): Unit =
+                                      bands: Int): Unit =
     bandBuckets(sigs, numHashes, bands)
-      .select(col("band"),
-        shiftrightunsigned(col("bh"), 32 - pfxBits).as("pfx"),
-        col("bh"), col("id"))
-      // co-locate each (band, pfx) before the dynamic-partition write:
-      // without this every task holds an open writer per directory it
-      // touches (up to bands · 2^pfxBits each — measured 10-60× wall
-      // on the store gates); with it a directory is one task's one
-      // file, and the shuffle is skinny (band, pfx, bh, id) rows.
-      // EXPLICIT partition count = the directory count: an unnumbered
-      // repartition lets AQE coalesce a small generation to ONE task
-      // that then creates all bands·2^pfxBits directories serially
-      // (profiled 1.0–1.35 s of pure file-create per generation, the
-      // single slowest job in every store gate trigger); pinning the
-      // count spreads directory creation across the pool, and at
-      // cluster scale the dir count IS the natural write parallelism
-      // for this table.
-      .repartition(bands << pfxBits, col("band"), col("pfx"))
-      .write.partitionBy("band", "pfx")
-      .mode("overwrite").parquet(s"$dir/bandkeys/batch=$batchId")
+      .select(col("band"), col("bh"), col("id"))
+      .hint("rebalance")
+      .write.mode("overwrite").parquet(s"$dir/bandkeys/batch=$batchId")
+
+  /** Loud guard for the writers: a pre-v4 store keeps its band keys in a
+    * (band, pfx) directory tree, and landing a flat generation beside it
+    * would leave a table no reader can list. */
+  private def requireFlatBandKeys(meta: Map[String, String], dir: String): Unit =
+    require(meta.get("formatVersion").contains("4"),
+      s"near-dup store at $dir predates flat band-key generations " +
+        s"(formatVersion ${meta.getOrElse("formatVersion", "1")}); " +
+        "reinstall it with writeNearDupStore")
 
   /** Fold every landed generation of the near-dup store into a single
     * `batch=0` per table — the maintenance op that bounds file/dir
@@ -2545,32 +2507,16 @@ object Dedup {
                           dir: String,
                           maxBatchId: Long = Long.MaxValue): Unit = {
     val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    val numHashes = meta("numHashes").toInt
-    // v3 stores carry the per-doc shingle count on the signature table —
-    // the fold must preserve it or probes lose their size lookup
-    val sigCols = (0 until numHashes).map(i => s"mh_$i") ++
-      (if (meta.get("sigSize").contains("1")) Seq("sz") else Nil)
-    val tables = Seq(
+    requireFlatBandKeys(meta, dir)
+    // the fold keeps the per-doc shingle count on the signature table,
+    // or probes lose their size lookup
+    val sigCols = (0 until meta("numHashes").toInt).map(i => s"mh_$i") :+ "sz"
+    StoreMaintenance.compact(spark, dir, Seq(
       StoreMaintenance.TableSpec("shingles", _.select("id", "hs")),
-      StoreMaintenance.TableSpec("signatures",
-        _.select("id", sigCols: _*))) ++
-      (if (meta.contains("bands"))
-        Seq(StoreMaintenance.TableSpec("bandkeys",
-          _.select(col("band"), col("pfx"), col("bh"), col("id"))
-            // explicit count = dir count, same rationale as
-            // writeBandKeysGeneration: an AQE-coalesced single task
-            // would create every (band, pfx) directory serially
-            .repartition(
-              meta("bands").toInt << meta("pfxBits").toInt,
-              col("band"), col("pfx")),
-          partitionCols = Seq("band", "pfx")))
-       else Nil)
-    StoreMaintenance.compact(spark, dir, tables, maxBatchId)
+      StoreMaintenance.TableSpec("signatures", _.select("id", sigCols: _*)),
+      StoreMaintenance.TableSpec("bandkeys", _.select("band", "bh", "id"))),
+      maxBatchId)
   }
-
-  private def requireNoCrashedCompaction(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    StoreMaintenance.requireNoCrashedCompaction(spark, dir)
 
   /** D10 against the at-rest store: the batch is the only side that
     * tokenizes, hashes, or signs — the corpus arrives as two pruned
@@ -2598,7 +2544,7 @@ object Dedup {
     // crashed-compaction guard BEFORE any store file is touched (meta
     // included) — reading mid-swap could see a half-old/half-new table
     // set; the meta is read ONCE here and passed through
-    requireNoCrashedCompaction(batch.sparkSession, dir)
+    StoreMaintenance.requireNoCrashedCompaction(batch.sparkSession, dir)
     val meta = graft.sources.Sources.readJsonSidecarFs(batch.sparkSession,
       s"$dir/_meta.json")
     incrementalNearDupFromStoreHashedMeta(
@@ -2618,7 +2564,7 @@ object Dedup {
   private[graft] def incrementalNearDupFromStoreHashed(
       hB: DataFrame, dir: String,
       bands: Int = 16, threshold: Double = 0.8): DataFrame = {
-    requireNoCrashedCompaction(hB.sparkSession, dir)
+    StoreMaintenance.requireNoCrashedCompaction(hB.sparkSession, dir)
     incrementalNearDupFromStoreHashedMeta(hB, dir,
       graft.sources.Sources.readJsonSidecarFs(hB.sparkSession,
         s"$dir/_meta.json"),
@@ -2630,96 +2576,66 @@ object Dedup {
     * once). The crashed-compaction guard has already run. */
   private[graft] def incrementalNearDupFromStoreHashedMeta(
       hB: DataFrame, dir: String, meta: Map[String, String],
-      bands: Int = 16, threshold: Double = 0.8): DataFrame = {
-    val spark = hB.sparkSession
-    val numHashes = meta("numHashes").toInt
-    val seed = meta.getOrElse("minhashSeed", "42").toLong
-    if (meta.get("bands").map(_.toInt).contains(bands)) {
+      bands: Int = 16, threshold: Double = 0.8): DataFrame =
+    if (meta.get("bands").map(_.toInt).contains(bands))
       // the batch's sized signatures feed the band keys AND the a-side
       // size lookup — frozen once, shared
-      val sigB = minHashSignaturesHashed(hB, numHashes, seed,
-        withSize = true).localCheckpoint()
-      incrementalNearDupFromStoreSigs(hB, sigB, dir, meta, bands, threshold)
-    } else {
-      // fallback: the caller's `bands` knob differs from the store's
-      // pinned geometry (or a v1 store with no band keys) — band the
-      // signature table at read time, store-linear but correct
-      val hC = spark.read.parquet(s"$dir/shingles").select("id", "hs")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      crossNearDup(hB, hC,
-        spark.read.parquet(s"$dir/signatures")
-          .select("id", (0 until numHashes).map(i => s"mh_$i"): _*),
-        numHashes, bands, threshold, seed)
-    }
+      incrementalNearDupFromStoreSigs(hB,
+        sizedSignaturesFor(hB, meta).localCheckpoint(), dir, meta, bands,
+        threshold)
+    else signatureFallback(hB, dir, meta, bands, threshold)
+
+  /** The caller's `bands` knob differs from the store's pinned geometry:
+    * band the signature table at read time — store-linear but correct,
+    * never mis-colliding against band keys cut for another geometry. */
+  private def signatureFallback(hB: DataFrame, dir: String,
+                                meta: Map[String, String], bands: Int,
+                                threshold: Double): DataFrame = {
+    val spark = hB.sparkSession
+    val numHashes = meta("numHashes").toInt
+    val hC = spark.read.parquet(s"$dir/shingles").select("id", "hs")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    crossNearDup(hB, hC,
+      spark.read.parquet(s"$dir/signatures")
+        .select("id", (0 until numHashes).map(i => s"mh_$i"): _*),
+      numHashes, bands, threshold, meta.getOrElse("minhashSeed", "42").toLong)
   }
 
-  /** The v2+ pruned probe from caller-held FROZEN sized batch
-    * signatures (localCheckpoint'd, `sz` column present) — the
-    * streaming loop's share-the-signatures seam: the same sigB feeds
-    * this probe and the survivor append, so the minhash aggregation
-    * runs once per micro-batch instead of twice. Candidates come from
-    * the at-rest band-key table, read ONLY in the (band, pfx)
-    * partitions the batch's own band keys can collide in — per-batch
-    * candidate cost tracks the batch's prefix coverage, not the landed
-    * corpus. Sizes: the batch side reads `sz` off sigB; the store side
-    * reads (id, sz) off the SIGNATURE table's pruned 2-column scan when
-    * the store is v3+ (sigSize), else falls back to aggregating the
-    * store shingles — the pre-v3 O(store) term. */
+  /** The band-key probe from caller-held FROZEN sized batch signatures
+    * (localCheckpoint'd, `sz` column present) — the streaming loop's
+    * share-the-signatures seam: the same sigB feeds this probe and the
+    * survivor append, so the minhash aggregation runs once per
+    * micro-batch instead of twice. Candidates are the plain join of the
+    * batch's own band keys with the at-rest band-key table on
+    * (band, bh): no driver-side key fetch, no prune predicate — every
+    * generation is a few flat files, and a batch of more than a few docs
+    * collides with every prefix of every band anyway (see
+    * writeNearDupStore). Sizes: the batch side reads `sz` off sigB, the
+    * store side reads (id, sz) off the SIGNATURE table's pruned
+    * 2-column scan — no O(store) sizes aggregate. */
   private[graft] def incrementalNearDupFromStoreSigs(
       hB: DataFrame, sigB: DataFrame, dir: String, meta: Map[String, String],
       bands: Int = 16, threshold: Double = 0.8): DataFrame =
     if (!meta.get("bands").map(_.toInt).contains(bands))
-      // no pinned matching geometry (v1 store, or a caller bands knob
-      // that differs) — the store-linear fallback; sigB goes unused
-      incrementalNearDupFromStoreHashedMeta(hB, dir, meta, bands, threshold)
-    else incrementalNearDupFromStoreSigsPruned(hB, sigB, dir, meta, bands,
-      threshold)
-
-  private def incrementalNearDupFromStoreSigsPruned(
-      hB: DataFrame, sigB: DataFrame, dir: String, meta: Map[String, String],
-      bands: Int, threshold: Double): DataFrame = {
-    val spark = hB.sparkSession
-    val numHashes = meta("numHashes").toInt
-    val pfxBits = meta("pfxBits").toInt
-    val bB = bandBuckets(sigB, numHashes, bands)
-      .select(col("id"), col("band"),
-        shiftrightunsigned(col("bh"), 32 - pfxBits).as("pfx"), col("bh"))
-    // bounded driver fetch: ≤ bands · 2^pfxBits distinct keys. sigB is
-    // frozen, so re-deriving bB for the join below recomputes only the
-    // cheap band-hash projection, never the minhash agg.
-    val wanted = bB.select("band", "pfx").distinct().collect()
-      .map(row => (row.getInt(0), row.getInt(1)))
-    val prune =
-      if (wanted.isEmpty) lit(false)
-      else wanted.groupBy(_._1).map { case (b, ps) =>
-        col("band") === b && col("pfx").isin(ps.map(_._2).toIndexedSeq: _*)
-      }.reduce(_ || _)
-    // join on (band, bh) only — bh equality implies pfx equality, and
-    // the directory-inferred partition column type stays out of keys
-    val bC = spark.read.parquet(s"$dir/bandkeys")
-      .filter(prune)
-      .select(col("id").as("id_b"), col("band"), col("bh"))
-    val cands = bB.drop("pfx").as("x")
-      .join(bC, Seq("band", "bh"))
-      .select(col("x.id").as("id_a"), col("id_b"))
-      .distinct()
-    // explicit projections: the store dirs are batch=<id>-partitioned,
-    // and the discovered partition column must not ride into joins.
-    // hC has ONE consumer here (the id_b-side intersection join), so it
-    // is deliberately NOT persisted — the pre-v3 probe cached the whole
-    // store shingle table because three consumers (sizes agg + both
-    // intersection sides) read it.
-    val hC = spark.read.parquet(s"$dir/shingles").select("id", "hs")
-    if (meta.get("sigSize").contains("1"))
-      jaccardCrossHashed(hB, hC,
+      signatureFallback(hB, dir, meta, bands, threshold) // sigB unused
+    else {
+      val spark = hB.sparkSession
+      // explicit projections: the store dirs are batch=<id>-partitioned,
+      // and the discovered partition column must not ride into joins
+      val bC = spark.read.parquet(s"$dir/bandkeys")
+        .select(col("id").as("id_b"), col("band"), col("bh"))
+      val cands = bandBuckets(sigB, meta("numHashes").toInt, bands).as("x")
+        .join(bC, Seq("band", "bh"))
+        .select(col("x.id").as("id_a"), col("id_b"))
+        .distinct()
+      // hC has ONE consumer here (the id_b-side intersection join), so
+      // it is deliberately NOT persisted
+      jaccardCrossHashed(hB,
+        spark.read.parquet(s"$dir/shingles").select("id", "hs"),
         sigB.select(col("id"), col("sz")),
         spark.read.parquet(s"$dir/signatures").select(col("id"), col("sz")),
         cands, threshold)
-    else
-      jaccardForHashed(
-        hB.unionByName(hC.persist(StorageLevel.MEMORY_AND_DISK)),
-        cands, threshold)
-  }
+    }
 
   /** True ⇔ the corpus is small enough that the exact all-shared-shingle
     * self-join (`jaccardPairs`) is affordable; false ⇔ take the MinHash

@@ -1,8 +1,10 @@
 #!/bin/bash
 # Run a graft main class against compiled classes without sbt startup cost.
-# Usage: tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/verify_out
+# Usage: tools/run.sh graft.Verify <testdata>/sf0.01 /tmp/verify_out
+# Classes come from the checkout this script lives in (run `sbt compile` first).
 set -e
-CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes:/opt/spark/jars/*"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
