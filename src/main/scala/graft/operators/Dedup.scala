@@ -219,10 +219,11 @@ object Dedup {
         s"the single-sidecar ceiling (~1e9 fps at 1e-3); raise `shards` " +
         s"(currently $shards)")
     val spark = corpus.sparkSession
-    // the v1 guard prescribes "reinstall with writeFpStore": over a v1
-    // flat layout, fps/batch=0 landing next to flat files would brick
-    // every later read; over a v2-with-appends, stale generations and
-    // their blooms would survive a full rebuild — clear both shapes
+    // the version guard prescribes "reinstall with writeFpStore": over
+    // an older flat layout, fps/batch=0 landing next to flat files would
+    // brick every later read; over a store with appends, stale
+    // generations and their blooms would survive a full rebuild — clear
+    // both shapes
     StoreMaintenance.requireInputNotFromStore(corpus, dir, "writeFpStore")
     StoreMaintenance.clearForReinstall(spark, dir,
       Seq("fps"), Seq("_bloom*.bin"))
@@ -251,16 +252,21 @@ object Dedup {
         writeShardBloom(spark, dir, i, keys, perShard, fpp)
       }
     }
-    graft.sources.Sources.writeJsonSidecarFs(spark, s"$dir/_meta.json",
+    fps.unpersist(blocking = false)
+    StoreMaintenance.publishMeta(spark, dir, fpStoreVersion,
       Map("expectedTotalFps" -> expectedTotalFps.toString,
         "fpp" -> fpp.toString,
-        "shards" -> shards.toString,
-        "formatVersion" -> "2"))
-    fps.unpersist(blocking = false)
-    // re-install invalidates stale same-session listings (see
-    // writeNearDupStore)
-    corpus.sparkSession.catalog.refreshByPath(dir)
+        "shards" -> shards.toString))
   }
+
+  /** The fp store's layout version (per-batch `fps/batch=<id>`
+    * generations, one bloom sidecar per append), shared by
+    * [[writeFpStore]] and every reader through [[openFpStore]]. */
+  private val fpStoreVersion = "2"
+
+  private def openFpStore(spark: org.apache.spark.sql.SparkSession,
+                          dir: String): Map[String, String] =
+    StoreMaintenance.open(spark, dir, fpStoreVersion, "writeFpStore")
 
   /** Shard routing for the fp store: xxhash64(fp) mod k, non-negative.
     * The SAME xxhash64 key feeds the Bloom probes — harmless, because a
@@ -306,9 +312,14 @@ object Dedup {
     * read-modify-write the per-batch layout exists to avoid, which is
     * fine when nobody else is writing. */
   def compactFpStoreSidecars(spark: org.apache.spark.sql.SparkSession,
-                             dir: String): Unit = {
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    val shards = meta.getOrElse("shards", "1").toInt
+                             dir: String): Unit =
+    foldBloomSidecars(spark, dir, openFpStore(spark, dir)("shards").toInt)
+
+  /** [[compactFpStoreSidecars]] over `shards` bloom lanes — shared with
+    * the eval-gram store, whose one lane has the fp store's unsharded
+    * sidecar layout. */
+  private def foldBloomSidecars(spark: org.apache.spark.sql.SparkSession,
+                                dir: String, shards: Int): Unit = {
     val d = new org.apache.hadoop.fs.Path(dir)
     val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val lineages: Seq[Option[Int]] =
@@ -351,14 +362,14 @@ object Dedup {
     * anti-join-invisible, but the store should not grow on replay). */
   def compactFpStore(spark: org.apache.spark.sql.SparkSession, dir: String,
                      maxBatchId: Long = Long.MaxValue): Unit = {
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    val shards = meta.getOrElse("shards", "1").toInt
-    val spec =
-      if (shards == 1) StoreMaintenance.TableSpec("fps", _.select("fp"))
-      else StoreMaintenance.TableSpec("fps",
+    StoreMaintenance.compactStore(spark, dir, fpStoreVersion,
+        "writeFpStore", maxBatchId) { meta =>
+      if (meta("shards") == "1")
+        Seq(StoreMaintenance.TableSpec("fps", _.select("fp")))
+      else Seq(StoreMaintenance.TableSpec("fps",
         _.select(col("fp"), col("shard")).repartition(col("shard")),
-        partitionCols = Seq("shard"))
-    StoreMaintenance.compact(spark, dir, Seq(spec), maxBatchId)
+        partitionCols = Seq("shard")))
+    }
     resizeFpSidecarsAfterFold(spark, dir)
   }
 
@@ -468,12 +479,14 @@ object Dedup {
   private[graft] def resizeFpSidecarsAfterFold(
       spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
     if (batchBloomFiles(spark, dir).isEmpty) return
+    // re-opened, never carried over from the fold: this rewrites
+    // expectedTotalFps, and every later reader must see the new value
+    val meta = openFpStore(spark, dir)
+    val shards = meta("shards").toInt
     if ((liveGenIds(spark, s"$dir/fps") - 0L).nonEmpty) {
-      compactFpStoreSidecars(spark, dir)
+      foldBloomSidecars(spark, dir, shards)
       return
     }
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    val shards = meta.getOrElse("shards", "1").toInt
     val fpp = meta("fpp").toDouble
     val installed = meta("expectedTotalFps").toLong
     val perShard = fpShardCapacity(installed, shards)
@@ -483,7 +496,7 @@ object Dedup {
     // writeFpStore reinstall
     def unionWithWarn(msg: String): Unit = {
       System.err.println(msg)
-      compactFpStoreSidecars(spark, dir)
+      foldBloomSidecars(spark, dir, shards)
     }
     if (shards == 1) {
       val (ok, n0) = resizeLane(spark, dir,
@@ -491,8 +504,7 @@ object Dedup {
           .select("fp").distinct()
           .select(xxhash64(col("fp")).as("k")),
         installed, fpp,
-        newCap => graft.sources.Sources.writeJsonSidecarFs(spark,
-          s"$dir/_meta.json",
+        newCap => StoreMaintenance.publishMeta(spark, dir, fpStoreVersion,
           meta + ("expectedTotalFps" -> newCap.toString)))
       if (!ok) unionWithWarn(s"[graft] fp store $dir: $n0 folded fps " +
         "need a filter past the single-sidecar ceiling — keeping the " +
@@ -515,8 +527,7 @@ object Dedup {
           // meta FIRST (the resizeLane crash discipline), then every
           // shard's filter, batch-file deletes last
           if (newPerShard != perShard)
-            graft.sources.Sources.writeJsonSidecarFs(spark,
-              s"$dir/_meta.json",
+            StoreMaintenance.publishMeta(spark, dir, fpStoreVersion,
               meta + ("expectedTotalFps" ->
                 (newPerShard * shards).toString))
           (0 until shards).foreach { i =>
@@ -558,10 +569,7 @@ object Dedup {
                                        dir: String, idCol: String,
                                        textCol: String): DataFrame = {
     val spark = batch.sparkSession
-    StoreMaintenance.requireNoCrashedCompaction(spark, dir)
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    // stores written before sharding existed carry no "shards" key = 1
-    val shards = meta.getOrElse("shards", "1").toInt
+    val shards = openFpStore(spark, dir)("shards").toInt
     // sharded probe: route each fp to its shard's filter with a
     // when-chain keyed on the shard id. NOTE the plan carries ALL shard
     // filters (they are expression literals) — sharding raises the
@@ -634,15 +642,10 @@ object Dedup {
     // empty dir
     if (newFps.isEmpty) return
     val spark = newFps.sparkSession
-    StoreMaintenance.requireNoCrashedCompaction(spark, dir)
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    require(meta.getOrElse("formatVersion", "1") == "2",
-      s"fp store at $dir predates per-batch generations (formatVersion " +
-        s"${meta.getOrElse("formatVersion", "1")}); reinstall with " +
-        "writeFpStore to grow it")
+    val meta = openFpStore(spark, dir)
     val expected = meta("expectedTotalFps").toLong
     val fpp = meta("fpp").toDouble
-    val shards = meta.getOrElse("shards", "1").toInt
+    val shards = meta("shards").toInt
     if (shards == 1) {
       val batchFilter = newFps.select(xxhash64(col("fp")).as("k"))
         .stat.bloomFilter("k", expected, fpp)
@@ -1070,13 +1073,18 @@ object Dedup {
     val counts = boilerplateGramCounts(
       tokenizedWithGroup(corpus, idCol, textCol, groupCol), n)
     counts.write.mode("overwrite").parquet(s"$dir/counts/batch=0")
-    graft.sources.Sources.writeJsonSidecarFs(corpus.sparkSession,
-      s"$dir/_meta.json",
-      Map("n" -> n.toString, "formatVersion" -> "1"))
-    // re-install invalidates stale same-session listings (see
-    // writeNearDupStore)
-    corpus.sparkSession.catalog.refreshByPath(dir)
+    StoreMaintenance.publishMeta(corpus.sparkSession, dir,
+      boilerplateStoreVersion, Map("n" -> n.toString))
   }
+
+  /** Layout version of the boilerplate store, shared by its installer
+    * and [[openBoilerplateStore]]. */
+  private val boilerplateStoreVersion = "1"
+
+  private def openBoilerplateStore(spark: org.apache.spark.sql.SparkSession,
+                                   dir: String): Map[String, String] =
+    StoreMaintenance.open(spark, dir, boilerplateStoreVersion,
+      "writeBoilerplateStore")
 
   /** Grow the boilerplate store with one batch's counts — idempotent
     * per batch by overwrite, O(batch). */
@@ -1085,7 +1093,7 @@ object Dedup {
                                batchId: Long): Unit = {
     require(batchId > 0, "batchId 0 is the base install (writeBoilerplateStore)")
     val spark = batch.sparkSession
-    val n = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")("n").toInt
+    val n = openBoilerplateStore(spark, dir)("n").toInt
     boilerplateGramCounts(
         tokenizedWithGroup(batch, idCol, textCol, groupCol), n)
       .write.mode("overwrite").parquet(s"$dir/counts/batch=$batchId")
@@ -1108,7 +1116,7 @@ object Dedup {
                                  textCol: String, groupCol: String,
                                  minDocs: Int = 3): DataFrame = {
     val spark = batch.sparkSession
-    val n = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")("n").toInt
+    val n = openBoilerplateStore(spark, dir)("n").toInt
     val boiler = spark.read.parquet(s"$dir/counts")
       .groupBy("_g", "hg").agg(sum("_df").as("_df"))
       .filter(col("_df") >= minDocs)
@@ -1453,7 +1461,7 @@ object Dedup {
                          fpp: Double = 0.001): Unit = {
     val spark = evalSet.sparkSession
     // "rebuild over the full suite" is this store's prescribed recovery
-    // (saturation warn, v1 guard): stale gram generations, per-batch
+    // (saturation warn, version guard): stale gram generations, per-batch
     // blooms, or stats entries surviving the reinstall would keep
     // redacting retired suites and double-count the accounting
     StoreMaintenance.requireInputNotFromStore(evalSet, dir,
@@ -1486,14 +1494,21 @@ object Dedup {
       else grams.select(col("h1").as("k")).stat.bloomFilter("k", capacity, fpp)
     graft.sources.Sources.writeBinarySidecarFs(spark, s"$dir/_bloom.bin",
       graft.functions.BloomMightContain.toBytes(filter))
-    graft.sources.Sources.writeJsonSidecarFs(spark, s"$dir/_meta.json",
+    StoreMaintenance.publishMeta(spark, dir, evalGramStoreVersion,
       Map("n" -> n.toString, "fpp" -> fpp.toString,
-        "expectedTotalGrams" -> capacity.toString,
-        "formatVersion" -> "2"))
-    // re-install invalidates stale same-session listings (see
-    // writeNearDupStore)
-    spark.catalog.refreshByPath(dir)
+        "expectedTotalGrams" -> capacity.toString))
   }
+
+  /** The eval-gram store's layout version (per-batch `grams/batch=<id>`
+    * generations, bloom sidecars and `_stats` entries), shared by
+    * [[writeEvalGramStore]] and every reader through
+    * [[openEvalGramStore]]. */
+  private val evalGramStoreVersion = "2"
+
+  private[graft] def openEvalGramStore(spark: org.apache.spark.sql.SparkSession,
+                                       dir: String): Map[String, String] =
+    StoreMaintenance.open(spark, dir, evalGramStoreVersion,
+      "writeEvalGramStore")
 
   /** Grow the eval-gram store when new benchmarks are published: fold
     * the new suite's gram keys into the sidecar and land them in the
@@ -1518,33 +1533,11 @@ object Dedup {
                             dir: String, batchId: Long): Unit = {
     require(batchId > 0, "batchId 0 is the base install (writeEvalGramStore)")
     val spark = evalSet.sparkSession
-    StoreMaintenance.requireNoCrashedCompaction(spark, dir)
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    // a v1 store keeps its gram parquet FLAT under $dir/grams — landing
-    // a grams/batch=<id> dir next to flat files makes every subsequent
-    // read of $dir/grams fail on conflicting directory structures,
-    // bricking the store AFTER this batch's sidecar already landed.
-    // Mirror appendToFpStore: growing a v1 store requires a
-    // writeEvalGramStore reinstall.
-    require(meta.getOrElse("formatVersion", "1") == "2",
-      s"eval-gram store at $dir predates per-batch generations " +
-        s"(formatVersion ${meta.getOrElse("formatVersion", "1")}); " +
-        "reinstall with writeEvalGramStore to grow it")
-    // a v2 store installed before the per-batch `_stats` layout has no
-    // batch_0 entry — heal ONCE by counting the base generation (two
-    // appenders racing the heal write the same value), else the base
-    // suite's grams would contribute 0 to the saturation warn forever
-    val stat0 = new org.apache.hadoop.fs.Path(s"$dir/_stats/batch_0.json")
-    val statFs = stat0.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val baseEntry: Map[String, String] =
-      if (statFs.exists(stat0))
-        graft.sources.Sources.readJsonSidecarFs(spark, stat0.toString)
-      else {
-        val n0 = spark.read.parquet(s"$dir/grams/batch=0").count()
-        graft.sources.Sources.writeJsonSidecarFs(spark, stat0.toString,
-          Map("grams" -> n0.toString))
-        Map("grams" -> n0.toString)
-      }
+    val meta = openEvalGramStore(spark, dir)
+    // batch 0's entry lands with the install (before the meta) and is
+    // rewritten by every fold, so an opened store always has it
+    val baseEntry = graft.sources.Sources.readJsonSidecarFs(spark,
+      s"$dir/_stats/batch_0.json")
     // ids folded into batch 0 by compactEvalGramStore are RETIRED: the
     // accounting would read a re-landed entry as crash residue and the
     // next fold would double the generation's rows — enforce the
@@ -1555,15 +1548,16 @@ object Dedup {
     require(!retired(batchId),
       s"batch id $batchId was folded into batch 0 by " +
         "compactEvalGramStore and is retired — append with a fresh id")
-    // same heal for APPENDED generations: a v2 store grown before the
-    // per-batch accounting change has live grams/batch=<id> dirs with
-    // no `_stats` entry, so the saturation warn undercounts them until
+    // an APPENDED generation can be live with no `_stats` entry: a
+    // crash between an append's gram write and its entry write leaves
+    // exactly that, and the saturation warn would undercount it until
     // a compaction happens to run — backfill each missing entry once
     // (one parquet count, then never again; racing appenders write the
     // same value). Retired ids are skipped: a re-landed folded dir is
     // replay residue whose rows batch 0 already counts.
     locally {
       val gdir = new org.apache.hadoop.fs.Path(s"$dir/grams")
+      val statFs = gdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       statFs.listStatus(gdir).toSeq
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
         .map(_.getPath.getName.stripPrefix("batch=").toLong)
@@ -1626,23 +1620,20 @@ object Dedup {
                               statsDir: String, field: String): Long = {
     val d = new org.apache.hadoop.fs.Path(statsDir)
     val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(d)) 0L
-    else {
-      val pat = "batch_(\\d+)\\.json".r
-      val entries = fs.listStatus(d).toSeq.map(_.getPath).flatMap { p =>
-        p.getName match {
-          case pat(id) => Some(id.toLong ->
-            graft.sources.Sources.readJsonSidecarFs(spark, p.toString))
-          case _ => None
-        }
+    val pat = "batch_(\\d+)\\.json".r
+    val entries = fs.listStatus(d).toSeq.map(_.getPath).flatMap { p =>
+      p.getName match {
+        case pat(id) => Some(id.toLong ->
+          graft.sources.Sources.readJsonSidecarFs(spark, p.toString))
+        case _ => None
       }
-      val folded = entries.find(_._1 == 0L).map(_._2)
-        .flatMap(_.get("folded"))
-        .map(_.split(",").filter(_.nonEmpty).map(_.toLong).toSet)
-        .getOrElse(Set.empty[Long])
-      entries.collect { case (id, m) if id == 0L || !folded(id) =>
-        m.get(field).map(_.toLong).getOrElse(0L) }.sum
     }
+    val folded = entries.find(_._1 == 0L).map(_._2)
+      .flatMap(_.get("folded"))
+      .map(_.split(",").filter(_.nonEmpty).map(_.toLong).toSet)
+      .getOrElse(Set.empty[Long])
+    entries.collect { case (id, m) if id == 0L || !folded(id) =>
+      m(field).toLong }.sum
   }
 
   /** Fold the eval-gram store's committed generations into one
@@ -1672,9 +1663,10 @@ object Dedup {
                            maxBatchId: Long = Long.MaxValue): Unit = {
     def gens(): Set[Long] = liveGenIds(spark, s"$dir/grams")
     val gensBefore = gens()
-    StoreMaintenance.compact(spark, dir,
-      Seq(StoreMaintenance.TableSpec("grams", _.select("h1", "h2"))),
-      maxBatchId)
+    StoreMaintenance.compactStore(spark, dir, evalGramStoreVersion,
+        "writeEvalGramStore", maxBatchId) { _ =>
+      Seq(StoreMaintenance.TableSpec("grams", _.select("h1", "h2")))
+    }
     // same `_bloom.b<id>.bin` lineage as the fp store (unsharded), same
     // post-fold policy (see compactFpStore): union only while unfolded
     // generations remain; once batch=0 is the only generation, REBUILD
@@ -1686,9 +1678,8 @@ object Dedup {
     resizeEvalGramSidecarAfterFold(spark, dir)
     // stats: batch 0's entry becomes the EXACT row count of the folded
     // generation — one parquet count of the table the fold just
-    // rewrote, so a pre-accounting generation (installed before the
-    // per-batch `_stats` layout) heals here instead of contributing 0
-    // forever. Entries of generations no longer on disk are recorded
+    // rewrote, so a generation whose entry a crashed append never wrote
+    // heals here instead of contributing 0 forever. Entries of generations no longer on disk are recorded
     // in batch 0's `folded` list BEFORE being deleted, so a crash
     // between the write and the deletes leaves [[sumStatsEntries]]
     // exact (it skips listed ids) and a re-run prunes the residue.
@@ -1696,20 +1687,18 @@ object Dedup {
     val fs = statsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val pat = "batch_(\\d+)\\.json".r
     val entryIds: Set[Long] =
-      if (!fs.exists(statsDir)) Set.empty
-      else fs.listStatus(statsDir).toSeq.map(_.getPath.getName).flatMap {
+      fs.listStatus(statsDir).toSeq.map(_.getPath.getName).flatMap {
         case pat(id) => Some(id.toLong)
         case _ => None
       }.toSet
     val liveGens: Set[Long] = gens()
-    val alreadyFolded =
-      (if (entryIds(0L)) graft.sources.Sources.readJsonSidecarFs(spark,
-        s"$dir/_stats/batch_0.json") else Map.empty[String, String])
-        .get("folded")
+    val alreadyFolded = graft.sources.Sources
+      .readJsonSidecarFs(spark, s"$dir/_stats/batch_0.json")
+      .get("folded")
         .map(_.split(",").filter(_.nonEmpty).map(_.toLong).toSet)
         .getOrElse(Set.empty[Long])
     // an id is RETIRED the moment its generation folds into batch=0:
-    // the ids folded THIS call (generation-set diff — catches legacy
+    // the ids folded THIS call (generation-set diff — catches
     // entry-less generations too), entries whose generation dir is gone
     // (a crashed prior run's fold), and every id retired before. The
     // retire set is PERMANENT — batch 0's `folded` list keeps carrying
@@ -1725,11 +1714,10 @@ object Dedup {
     // (crash between the fold write and the entry deletes)
     val residue = retire & entryIds
     // idempotent no-op: nothing was folded this call (generation set
-    // unchanged), no crash residue to prune, batch 0's entry present
-    // (and with it the persisted retire list) — skip the O(store)
+    // unchanged) and no crash residue to prune — skip the O(store)
     // recount + rewrite a maintenance sweep would otherwise pay per
     // visit
-    if (liveGens == gensBefore && residue.isEmpty && entryIds(0L)) return
+    if (liveGens == gensBefore && residue.isEmpty) return
     val keepFolded = retire.toSeq.sorted
     val count0 = spark.read.parquet(s"$dir/grams/batch=0").count()
     graft.sources.Sources.writeJsonSidecarFs(spark,
@@ -1753,23 +1741,23 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
     if (batchBloomFiles(spark, dir).isEmpty) return
     if ((liveGenIds(spark, s"$dir/grams") - 0L).nonEmpty) {
-      compactFpStoreSidecars(spark, dir)
+      foldBloomSidecars(spark, dir, shards = 1)
       return
     }
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
+    val meta = openEvalGramStore(spark, dir)
     val fpp = meta("fpp").toDouble
     val (ok, n0) = resizeLane(spark, dir,
       spark.read.parquet(s"$dir/grams/batch=0")
         .select(col("h1").as("k")).distinct(),
       meta("expectedTotalGrams").toLong, fpp,
-      newCap => graft.sources.Sources.writeJsonSidecarFs(spark,
-        s"$dir/_meta.json",
+      newCap => StoreMaintenance.publishMeta(spark, dir,
+        evalGramStoreVersion,
         meta + ("expectedTotalGrams" -> newCap.toString)))
     if (!ok) {
       System.err.println(s"[graft] eval-gram store $dir: $n0 folded " +
         "grams need a filter past the single-sidecar ceiling — keeping " +
         "the saturated union; split the suite across stores")
-      compactFpStoreSidecars(spark, dir)
+      foldBloomSidecars(spark, dir, shards = 1)
     }
   }
 
@@ -1787,8 +1775,7 @@ object Dedup {
   def decontaminateRewriteFromStore(corpus: DataFrame, dir: String,
                                     idCol: String, textCol: String): DataFrame = {
     val spark = corpus.sparkSession
-    StoreMaintenance.requireNoCrashedCompaction(spark, dir)
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
+    val meta = openEvalGramStore(spark, dir)
     decontaminateRewriteLoaded(corpus, dir, meta("n").toInt,
       mergedBloomBytes(spark, dir, None), idCol, textCol)
   }
@@ -1915,7 +1902,7 @@ object Dedup {
   /** (id, hs) hashed-shingle projection of a frame — the shared
     * per-batch table the streaming near-dup loop computes ONCE and
     * feeds to the store probe, the within-batch pair pass, and the
-    * survivor append (the *Hashed seams). */
+    * survivor append (the *Sigs seams). */
   private[graft] def hashedShinglesFor(df: DataFrame, idCol: String,
                                        textCol: String, n: Int): DataFrame =
     hashedShingles(shingles(df, idCol, textCol, n))
@@ -1927,7 +1914,7 @@ object Dedup {
   private[graft] def sizedSignaturesFor(h: DataFrame,
                                         meta: Map[String, String]): DataFrame =
     minHashSignaturesHashed(h, meta("numHashes").toInt,
-      meta.getOrElse("minhashSeed", "42").toLong, withSize = true)
+      meta("minhashSeed").toLong, withSize = true)
 
   /** Shared tail of the Jaccard paths: join per-doc sizes onto the
     * per-pair shared counts, compute/filter the coefficient. Kept single
@@ -2308,20 +2295,29 @@ object Dedup {
       })
     sigs.unpersist()
     h.unpersist()
-    graft.sources.Sources.writeJsonSidecarFs(corpus.sparkSession,
-      s"$dir/_meta.json",
+    StoreMaintenance.publishMeta(corpus.sparkSession, dir,
+      nearDupStoreVersion,
       Map("shingleSize" -> shingleSize.toString,
         "numHashes" -> numHashes.toString,
         "minhashSeed" -> seed.toString,
-        "bands" -> bands.toString,
-        // v4: sized signatures + one flat band-key file set per generation
-        "formatVersion" -> "4"))
-    // a RE-install over a previously-read dir (same session) must
-    // invalidate the shared file-status cache, or the first read serves
-    // the pre-install listing and dies on vanished files — the append
-    // path already refreshes; the installer owes the same courtesy
-    corpus.sparkSession.catalog.refreshByPath(dir)
+        "bands" -> bands.toString))
   }
+
+  /** The near-dup store's layout version — sized signatures plus one
+    * flat band-key file set per generation — shared by
+    * [[writeNearDupStore]] and every reader through
+    * [[openNearDupStore]]. An older store (a (band, pfx) band-key
+    * tree, or no band keys at all) is refused, never read: a flat
+    * generation cannot share a table with the tree. */
+  private val nearDupStoreVersion = "4"
+
+  /** [[StoreMaintenance.open]] for the near-dup store: the streaming
+    * loop opens once per trigger and hands the meta to the probe and
+    * the append. */
+  private[graft] def openNearDupStore(spark: org.apache.spark.sql.SparkSession,
+                                      dir: String): Map[String, String] =
+    StoreMaintenance.open(spark, dir, nearDupStoreVersion,
+      "writeNearDupStore")
 
   /** Grow the at-rest store with a batch — the other half of the ingest
     * loop `writeNearDupStore` starts: after a batch has been paired
@@ -2360,55 +2356,32 @@ object Dedup {
     // or the overwrite silently replaces the earlier batch
     require(batchId > 0, "batchId 0 is the base install (writeNearDupStore)")
     val spark = batch.sparkSession
-    StoreMaintenance.requireNoCrashedCompaction(spark, dir)
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    appendHashedShingles(spark,
-      hashedShingles(shingles(batch, idCol, textCol,
-        meta("shingleSize").toInt)),
-      dir, batchId, meta)
-  }
-
-  /** [[appendToNearDupStore]] from a caller-held hashed-shingle table
-    * (id, hs) signed with the store's geometry — the streaming loop's
-    * compute-once seam (see incrementalNearDupFromStoreHashed). The
-    * frozen-snapshot contract is enforced HERE (localCheckpoint before
-    * the first write) regardless of the caller's lineage. */
-  private[graft] def appendToNearDupStoreHashed(hIn: DataFrame, dir: String,
-                                                batchId: Long): Unit = {
-    require(batchId > 0, "batchId 0 is the base install (writeNearDupStore)")
-    val spark = hIn.sparkSession
-    StoreMaintenance.requireNoCrashedCompaction(spark, dir)
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    appendHashedShingles(spark, hIn, dir, batchId, meta)
-  }
-
-  /** Shared append tail. EAGER SNAPSHOT, not persist: the rows to
-    * write must be frozen BEFORE the first write touches the store. A
-    * caller's batch — e.g. the streaming loop's `kept` — typically
-    * descends from a pairing that scans the store, and Spark recaches
-    * path-dependent plan-keyed cache entries after each parquet write;
-    * a merely persisted `h` would be invalidated by the FIRST write
-    * and recomputed against the HALF-WRITTEN store — where the batch
-    * doc now near-dups its own just-landed signature — so the SECOND
-    * write would land zero rows. localCheckpoint truncates the
-    * lineage so both writes emit the same frozen rows. */
-  private def appendHashedShingles(spark: org.apache.spark.sql.SparkSession,
-                                   hIn: DataFrame, dir: String,
-                                   batchId: Long,
-                                   meta: Map[String, String]): Unit = {
-    val h = hIn.localCheckpoint()
+    val meta = openNearDupStore(spark, dir)
+    // EAGER SNAPSHOT, not persist: the rows to write must be frozen
+    // BEFORE the first write touches the store. A caller's batch — e.g.
+    // a streaming loop's `kept` — typically descends from a pairing
+    // that scans the store, and Spark recaches path-dependent
+    // plan-keyed cache entries after each parquet write; a merely
+    // persisted `h` would be invalidated by the FIRST write and
+    // recomputed against the HALF-WRITTEN store — where the batch doc
+    // now near-dups its own just-landed signature — so the SECOND
+    // write would land zero rows. localCheckpoint truncates the
+    // lineage so both writes emit the same frozen rows.
+    val h = hashedShingles(shingles(batch, idCol, textCol,
+      meta("shingleSize").toInt)).localCheckpoint()
     val sigs = sizedSignaturesFor(h, meta).localCheckpoint()
     appendGenerationTables(spark, h, sigs, dir, batchId, meta)
     sigs.unpersist()
     h.unpersist()
   }
 
-  /** [[appendToNearDupStoreHashed]] from caller-held shingles AND sized
-    * signatures — the streaming loop's share-the-minhash seam: the
-    * probe's frozen sigB, sliced to the survivors, lands directly, so
-    * the per-trigger minhash aggregation runs ONCE (probe) instead of
-    * twice (probe + append). CALLER CONTRACT, replacing this tail's
-    * usual localCheckpoint: both frames must be safe to recompute
+  /** [[appendToNearDupStore]] from caller-held shingles AND sized
+    * signatures, under a `meta` the caller [[openNearDupStore]]ed in
+    * the same trigger — the streaming loop's share-the-minhash seam:
+    * the probe's frozen sigB, sliced to the survivors, lands directly,
+    * so the per-trigger minhash aggregation runs ONCE (probe) instead
+    * of twice (probe + append). CALLER CONTRACT, replacing the public
+    * append's localCheckpoint: both frames must be safe to recompute
     * mid-append — lineage either FROZEN (a localCheckpoint'd frame, or
     * a slice of one by a frozen id list) or reading only non-store
     * inputs. A lineage that scans the store would be recomputed against
@@ -2418,9 +2391,8 @@ object Dedup {
                                               dir: String, batchId: Long,
                                               meta: Map[String, String]): Unit = {
     require(batchId > 0, "batchId 0 is the base install (writeNearDupStore)")
-    val spark = hKept.sparkSession
-    StoreMaintenance.requireNoCrashedCompaction(spark, dir)
-    appendGenerationTables(spark, hKept, sigsKept, dir, batchId, meta)
+    appendGenerationTables(hKept.sparkSession, hKept, sigsKept, dir,
+      batchId, meta)
   }
 
   /** Shared write fan-out of the append paths. `h`/`sigs` must be
@@ -2437,7 +2409,6 @@ object Dedup {
                                      h: DataFrame, sigs: DataFrame,
                                      dir: String, batchId: Long,
                                      meta: Map[String, String]): Unit = {
-    requireFlatBandKeys(meta, dir)
     // rebalance before write (same file-sizing rationale as the
     // installer) — applied ABOVE any checkpoint, so frozen rows are
     // only re-bucketed, never recomputed
@@ -2474,15 +2445,6 @@ object Dedup {
       .hint("rebalance")
       .write.mode("overwrite").parquet(s"$dir/bandkeys/batch=$batchId")
 
-  /** Loud guard for the writers: a pre-v4 store keeps its band keys in a
-    * (band, pfx) directory tree, and landing a flat generation beside it
-    * would leave a table no reader can list. */
-  private def requireFlatBandKeys(meta: Map[String, String], dir: String): Unit =
-    require(meta.get("formatVersion").contains("4"),
-      s"near-dup store at $dir predates flat band-key generations " +
-        s"(formatVersion ${meta.getOrElse("formatVersion", "1")}); " +
-        "reinstall it with writeNearDupStore")
-
   /** Fold every landed generation of the near-dup store into a single
     * `batch=0` per table — the maintenance op that bounds file/dir
     * counts on a long ingest line (week 50 of a crawl is thousands of
@@ -2500,109 +2462,56 @@ object Dedup {
     * by the rename-atomic `_compact_swap.json` marker (staging is now
     * authoritative); (3) SWAP table by table (delete old dir, move
     * staged dir in), then clear marker + staging. A crash during (3)
-    * resumes from the marker — the next compact call (or any probe/
-    * append, which fail loudly on the marker) finishes the swap
-    * idempotently: a table already swapped has no staged dir left. */
+    * resumes from the marker — the next compact call finishes the swap
+    * idempotently (a table already swapped has no staged dir left), and
+    * until then every probe and append fails loudly on the marker. */
   def compactNearDupStore(spark: org.apache.spark.sql.SparkSession,
                           dir: String,
-                          maxBatchId: Long = Long.MaxValue): Unit = {
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    requireFlatBandKeys(meta, dir)
-    // the fold keeps the per-doc shingle count on the signature table,
-    // or probes lose their size lookup
-    val sigCols = (0 until meta("numHashes").toInt).map(i => s"mh_$i") :+ "sz"
-    StoreMaintenance.compact(spark, dir, Seq(
-      StoreMaintenance.TableSpec("shingles", _.select("id", "hs")),
-      StoreMaintenance.TableSpec("signatures", _.select("id", sigCols: _*)),
-      StoreMaintenance.TableSpec("bandkeys", _.select("band", "bh", "id"))),
-      maxBatchId)
-  }
+                          maxBatchId: Long = Long.MaxValue): Unit =
+    StoreMaintenance.compactStore(spark, dir, nearDupStoreVersion,
+        "writeNearDupStore", maxBatchId) { meta =>
+      // the fold keeps the per-doc shingle count on the signature
+      // table, or probes lose their size lookup
+      val sigCols = (0 until meta("numHashes").toInt).map(i => s"mh_$i") :+ "sz"
+      Seq(
+        StoreMaintenance.TableSpec("shingles", _.select("id", "hs")),
+        StoreMaintenance.TableSpec("signatures", _.select("id", sigCols: _*)),
+        StoreMaintenance.TableSpec("bandkeys", _.select("band", "bh", "id")))
+    }
 
   /** D10 against the at-rest store: the batch is the only side that
-    * tokenizes, hashes, or signs — the corpus arrives as two pruned
-    * parquet scans of the store `writeNearDupStore` landed. The
-    * shingle size, hash count, AND MinHash seed come FROM the store's
-    * `_meta.json` (a mismatched reader would silently emit near-zero
-    * pairs — 4-gram hashes never collide with a 3-gram store, and a
-    * differently-seeded batch signer never bands with the stored
-    * signatures; stores written before the seed was recorded default
-    * to the historical 42); `bands` and `threshold` stay query-time
-    * knobs. Same output as `incrementalNearDup` on the same corpus
+    * tokenizes, hashes, or signs — the corpus arrives as parquet scans
+    * of the store `writeNearDupStore` landed. The shingle size, hash
+    * count, MinHash seed AND banding come FROM the store's `_meta.json`
+    * (a mismatched reader would silently emit near-zero pairs — 4-gram
+    * hashes never collide with a 3-gram store, and a differently-seeded
+    * or differently-banded batch never meets the stored band keys);
+    * `threshold` stays a query-time knob. Same output as
+    * `incrementalNearDup` on the same corpus at the store's banding
     * (spec-pinned).
     *
-    * Cache policy: the batch projection and the store shingle scan are
-    * persisted (both feed the candidate join AND the exact-Jaccard
-    * verify — unpersisted, the store would be scanned three times per
-    * batch). Like the rest of the dedup family the blocks are keyed by
-    * logical plan and reused across calls on the same inputs; one-shot
-    * sessions reclaim them with spark.catalog.clearCache() (NOTES.md
-    * "Cache policy in dedup operators"). */
+    * Cache policy: the batch projection is persisted (it feeds the
+    * signatures AND the exact-Jaccard verify). Like the rest of the
+    * dedup family the blocks are keyed by logical plan and reused
+    * across calls on the same inputs; one-shot sessions reclaim them
+    * with spark.catalog.clearCache() (NOTES.md "Cache policy in dedup
+    * operators"). */
   def incrementalNearDupFromStore(batch: DataFrame, dir: String,
                                   idCol: String, textCol: String,
-                                  bands: Int = 16,
                                   threshold: Double = 0.8): DataFrame = {
-    // crashed-compaction guard BEFORE any store file is touched (meta
-    // included) — reading mid-swap could see a half-old/half-new table
-    // set; the meta is read ONCE here and passed through
-    StoreMaintenance.requireNoCrashedCompaction(batch.sparkSession, dir)
-    val meta = graft.sources.Sources.readJsonSidecarFs(batch.sparkSession,
-      s"$dir/_meta.json")
-    incrementalNearDupFromStoreHashedMeta(
-      hashedShingles(shingles(batch, idCol, textCol,
+    val meta = openNearDupStore(batch.sparkSession, dir)
+    val hB = hashedShingles(shingles(batch, idCol, textCol,
         meta("shingleSize").toInt))
-        .persist(StorageLevel.MEMORY_AND_DISK),
-      dir, meta, bands, threshold)
-  }
-
-  /** [[incrementalNearDupFromStore]] from a caller-held hashed-shingle
-    * table (id, hs) signed with the STORE's geometry — the
-    * compute-the-batch-once seam of the streaming ingest loop: one
-    * (tokenize → gram → hash) pass per micro-batch feeds the store
-    * probe, the within-batch pair pass, AND the survivor append
-    * (guide §1.2). The caller persists `hB`; its lineage must not read
-    * the store (a raw batch projection qualifies). */
-  private[graft] def incrementalNearDupFromStoreHashed(
-      hB: DataFrame, dir: String,
-      bands: Int = 16, threshold: Double = 0.8): DataFrame = {
-    StoreMaintenance.requireNoCrashedCompaction(hB.sparkSession, dir)
-    incrementalNearDupFromStoreHashedMeta(hB, dir,
-      graft.sources.Sources.readJsonSidecarFs(hB.sparkSession,
-        s"$dir/_meta.json"),
-      bands, threshold)
-  }
-
-  /** The probe body, from a caller-held meta (read once per call chain —
-    * the wrapper and the streaming loop both read the sidecar exactly
-    * once). The crashed-compaction guard has already run. */
-  private[graft] def incrementalNearDupFromStoreHashedMeta(
-      hB: DataFrame, dir: String, meta: Map[String, String],
-      bands: Int = 16, threshold: Double = 0.8): DataFrame =
-    if (meta.get("bands").map(_.toInt).contains(bands))
-      // the batch's sized signatures feed the band keys AND the a-side
-      // size lookup — frozen once, shared
-      incrementalNearDupFromStoreSigs(hB,
-        sizedSignaturesFor(hB, meta).localCheckpoint(), dir, meta, bands,
-        threshold)
-    else signatureFallback(hB, dir, meta, bands, threshold)
-
-  /** The caller's `bands` knob differs from the store's pinned geometry:
-    * band the signature table at read time — store-linear but correct,
-    * never mis-colliding against band keys cut for another geometry. */
-  private def signatureFallback(hB: DataFrame, dir: String,
-                                meta: Map[String, String], bands: Int,
-                                threshold: Double): DataFrame = {
-    val spark = hB.sparkSession
-    val numHashes = meta("numHashes").toInt
-    val hC = spark.read.parquet(s"$dir/shingles").select("id", "hs")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    crossNearDup(hB, hC,
-      spark.read.parquet(s"$dir/signatures")
-        .select("id", (0 until numHashes).map(i => s"mh_$i"): _*),
-      numHashes, bands, threshold, meta.getOrElse("minhashSeed", "42").toLong)
+    // the batch's sized signatures feed the band keys AND the a-side
+    // size lookup — frozen once, shared
+    incrementalNearDupFromStoreSigs(hB,
+      sizedSignaturesFor(hB, meta).localCheckpoint(), dir, meta, threshold)
   }
 
   /** The band-key probe from caller-held FROZEN sized batch signatures
-    * (localCheckpoint'd, `sz` column present) — the streaming loop's
+    * (localCheckpoint'd, `sz` column present) under a `meta` from
+    * [[openNearDupStore]] — also the streaming loop's
     * share-the-signatures seam: the same sigB feeds this probe and the
     * survivor append, so the minhash aggregation runs once per
     * micro-batch instead of twice. Candidates are the plain join of the
@@ -2615,27 +2524,25 @@ object Dedup {
     * 2-column scan — no O(store) sizes aggregate. */
   private[graft] def incrementalNearDupFromStoreSigs(
       hB: DataFrame, sigB: DataFrame, dir: String, meta: Map[String, String],
-      bands: Int = 16, threshold: Double = 0.8): DataFrame =
-    if (!meta.get("bands").map(_.toInt).contains(bands))
-      signatureFallback(hB, dir, meta, bands, threshold) // sigB unused
-    else {
-      val spark = hB.sparkSession
-      // explicit projections: the store dirs are batch=<id>-partitioned,
-      // and the discovered partition column must not ride into joins
-      val bC = spark.read.parquet(s"$dir/bandkeys")
-        .select(col("id").as("id_b"), col("band"), col("bh"))
-      val cands = bandBuckets(sigB, meta("numHashes").toInt, bands).as("x")
-        .join(bC, Seq("band", "bh"))
-        .select(col("x.id").as("id_a"), col("id_b"))
-        .distinct()
-      // hC has ONE consumer here (the id_b-side intersection join), so
-      // it is deliberately NOT persisted
-      jaccardCrossHashed(hB,
-        spark.read.parquet(s"$dir/shingles").select("id", "hs"),
-        sigB.select(col("id"), col("sz")),
-        spark.read.parquet(s"$dir/signatures").select(col("id"), col("sz")),
-        cands, threshold)
-    }
+      threshold: Double): DataFrame = {
+    val spark = hB.sparkSession
+    // explicit projections: the store dirs are batch=<id>-partitioned,
+    // and the discovered partition column must not ride into joins
+    val bC = spark.read.parquet(s"$dir/bandkeys")
+      .select(col("id").as("id_b"), col("band"), col("bh"))
+    val cands = bandBuckets(sigB, meta("numHashes").toInt,
+        meta("bands").toInt).as("x")
+      .join(bC, Seq("band", "bh"))
+      .select(col("x.id").as("id_a"), col("id_b"))
+      .distinct()
+    // hC has ONE consumer here (the id_b-side intersection join), so
+    // it is deliberately NOT persisted
+    jaccardCrossHashed(hB,
+      spark.read.parquet(s"$dir/shingles").select("id", "hs"),
+      sigB.select(col("id"), col("sz")),
+      spark.read.parquet(s"$dir/signatures").select(col("id"), col("sz")),
+      cands, threshold)
+  }
 
   /** True ⇔ the corpus is small enough that the exact all-shared-shingle
     * self-join (`jaccardPairs`) is affordable; false ⇔ take the MinHash

@@ -444,11 +444,19 @@ object Multimodal {
     writeBandedGeneration(
       imageDHash(images, idCol, bytesCol), idCol,
       dir, 0L, bands, pfxBits)
-    graft.sources.Sources.writeJsonSidecarFs(spark, s"$dir/_meta.json",
-      Map("formatVersion" -> "2", "bands" -> bands.toString,
-        "pfxBits" -> pfxBits.toString))
-    spark.catalog.refreshByPath(dir)
+    StoreMaintenance.publishMeta(spark, dir, imageStoreVersion,
+      Map("bands" -> bands.toString, "pfxBits" -> pfxBits.toString))
   }
+
+  /** Layout version of the perceptual banded store, shared by
+    * [[writeImageNearDupStore]] and every reader through
+    * [[openImageStore]]. */
+  private val imageStoreVersion = "2"
+
+  private def openImageStore(spark: org.apache.spark.sql.SparkSession,
+                             dir: String): Map[String, String] =
+    StoreMaintenance.open(spark, dir, imageStoreVersion,
+      "writeImageNearDupStore")
 
   /** Grow the near-dup store: batch band rows land under their own
     * batch subdir — idempotent per batchId by overwrite. Geometry comes
@@ -460,8 +468,7 @@ object Multimodal {
                                 bytesCol: String = "bytes"): Unit = {
     require(batchId > 0, "batchId 0 is the base install")
     val spark = batch.sparkSession
-    StoreMaintenance.requireNoCrashedCompaction(spark, dir)
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
+    val meta = openImageStore(spark, dir)
     writeBandedGeneration(
       imageDHash(batch, idCol, bytesCol), idCol,
       dir, batchId, meta("bands").toInt, meta("pfxBits").toInt)
@@ -497,11 +504,13 @@ object Multimodal {
   def compactImageNearDupStore(spark: org.apache.spark.sql.SparkSession,
                                dir: String,
                                maxBatchId: Long = Long.MaxValue): Unit =
-    StoreMaintenance.compact(spark, dir, Seq(
-      StoreMaintenance.TableSpec("bands",
+    StoreMaintenance.compactStore(spark, dir, imageStoreVersion,
+        "writeImageNearDupStore", maxBatchId) { _ =>
+      Seq(StoreMaintenance.TableSpec("bands",
         _.select(col("band"), col("pfx"), col("bk"), col("id"), col("h"))
           .repartition(col("band"), col("pfx")),
-        partitionCols = Seq("band", "pfx"))), maxBatchId)
+        partitionCols = Seq("band", "pfx")))
+    }
 
   /** Batch × store NEAR-dup pairs at Hamming ≤ `maxHamming` — the
     * incremental fuzzy-image-dedup read path (d10's shape on the
@@ -523,8 +532,7 @@ object Multimodal {
                               idCol: String = "media_id",
                               bytesCol: String = "bytes"): DataFrame = {
     val spark = batch.sparkSession
-    StoreMaintenance.requireNoCrashedCompaction(spark, dir)
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
+    val meta = openImageStore(spark, dir)
     val bands = meta("bands").toInt
     val pfxBits = meta("pfxBits").toInt
     requireBandedExact(maxHamming, bands)

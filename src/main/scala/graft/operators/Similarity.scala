@@ -124,7 +124,7 @@ object Similarity {
     * iterations over a DRIVER-SIDED bounded sample. The sample is
     * bounded by construction (≤ fitCap rows of subDim floats), so
     * pushing it through distributed MLlib KMeans bought nothing and
-    * cost (init + maxIter) scheduled Spark jobs PER FIT — profiling
+    * cost (init + iterations) scheduled Spark jobs PER FIT — profiling
     * round 18 measured 147 jobs for ann10_ivf_pq alone, ~0.1 s of
     * scheduling each on an otherwise idle 32-core box. One local fit
     * is a few ms of arithmetic and ZERO jobs, and — unlike k-means||,
@@ -147,17 +147,17 @@ object Similarity {
     * `fitCap` sizes it deliberately (centroid quality needs
     * points-per-centroid, not corpus coverage).
     *
-    * `maxIter` is a floor-overridable hint: Lloyd polishes to
-    * convergence with an iteration floor of 25, because locally an
-    * iteration is microseconds and the knob's distributed-era cost
-    * rationale (a scheduled job per iteration) no longer applies. */
+    * Lloyd polishes to convergence within [[lloydIters]] iterations:
+    * locally an iteration is microseconds, so there is no iteration
+    * knob — the distributed-era cost rationale for one (a scheduled
+    * job per iteration) no longer applies. */
   private[operators] def localKMeans(points: Array[Array[Float]], k: Int,
-                                     seed: Long, maxIter: Int)
+                                     seed: Long)
       : Array[Array[Double]] = {
     import scala.collection.parallel.CollectionConverters._
     val restarts = 5
     val runs = (0 until restarts).par.map { r =>
-      val cs = localKMeansOnce(points, k, seed + 1000L * r, maxIter)
+      val cs = localKMeansOnce(points, k, seed + 1000L * r)
       var cost = 0.0
       val dim = points(0).length
       var i = 0
@@ -189,7 +189,7 @@ object Similarity {
     * matches the "duplicate centroids are harmless" posture of the
     * padding logic). */
   private def localKMeansOnce(points: Array[Array[Float]], k: Int,
-                              seed: Long, maxIter: Int)
+                              seed: Long)
       : Array[Array[Double]] = {
     require(points.nonEmpty, "localKMeans: empty training sample")
     val n = points.length
@@ -225,15 +225,11 @@ object Similarity {
     }
     val kk = centers.length
     val cs = centers.toArray
-    // Lloyd: assign (first-min tie-break) + recompute means. The
-    // caller's maxIter is a distributed-era knob (iterations used to
-    // cost a scheduled job each); locally an iteration is microseconds,
-    // so polish to (near-)convergence instead — floor the iteration
-    // budget at 25 and early-stop when no centroid moved ≥ 1e-12.
-    val iters = math.max(maxIter, 25)
+    // Lloyd: assign (first-min tie-break) + recompute means, polished
+    // to (near-)convergence — early-stop when no centroid moved ≥ 1e-12
     var moved = true
     var iter = 0
-    while (iter < iters && moved) {
+    while (iter < lloydIters && moved) {
       val sums = Array.fill(kk)(new Array[Double](dim))
       val counts = new Array[Long](kk)
       var i = 0
@@ -270,6 +266,10 @@ object Similarity {
     }
     cs
   }
+
+  /** Lloyd iteration budget of every local k-means fit (IVF cells, PQ
+    * sub-codebooks); fits usually converge well before it. */
+  private val lloydIters = 25
 
   /** Draw the bounded, deterministic fit sample (the engine's seeded
     * xxhash64-rank draw, not a bare limit — limit takes the
@@ -310,7 +310,7 @@ object Similarity {
     val fitPts = collectFitSample(corpus, vecCol, cap, seed)
     require(fitPts.nonEmpty,
       "quantize: the corpus is empty — an IVF index needs at least one vector")
-    val cs = localKMeans(fitPts, nCells, seed, maxIter = 5)
+    val cs = localKMeans(fitPts, nCells, seed)
     val centroids = cs.zipWithIndex.map { case (c, i) =>
       (i, c.map(_.toFloat))
     }.toSeq
@@ -524,12 +524,8 @@ object Similarity {
       .parquet(s"$path/cells/batch=0")
     spark.createDataFrame(centroids).toDF("cell", "c_vec")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    graft.sources.Sources.writeJsonSidecarFs(spark, s"$path/_meta.json",
-      Map("nCells" -> nCells.toString, "kmeansSeed" -> seed.toString,
-        "formatVersion" -> "1"))
-    // re-install invalidates stale same-session listings (the
-    // writeNearDupStore convention — the append path already refreshes)
-    spark.catalog.refreshByPath(path)
+    StoreMaintenance.publishMeta(spark, path, formatVersion = "1",
+      Map("nCells" -> nCells.toString, "kmeansSeed" -> seed.toString))
     centroids
   }
 
@@ -878,22 +874,19 @@ object Similarity {
     * default matches the classic 8-byte-code layout for
     * memory-constrained corpora.
     *
-    * `maxIter` is a FLOOR-OVERRIDABLE HINT, not an exact budget: the
-    * local fit polishes to convergence with an iteration floor of 25
-    * (see [[localKMeansOnce]]) — locally an iteration is microseconds,
-    * so honoring a distributed-era "5 iterations" literally would
-    * trade centroid quality for nothing. Values above the floor raise
-    * the budget; values below it are absorbed by it. */
+    * Each sub-codebook fit polishes to convergence (see
+    * [[localKMeansOnce]]) — locally an iteration is microseconds, so
+    * there is no iteration knob to trade centroid quality for. */
   def trainPq(corpus: DataFrame, dim: Int, m: Int = 8, k: Int = 16,
               seed: Long = 42L, sampleCap: Int = 100000,
-              vecCol: String = "embedding", maxIter: Int = 5): PqCodebooks = {
+              vecCol: String = "embedding"): PqCodebooks = {
     require(dim % m == 0, s"dim $dim must split evenly into $m subspaces")
     val subDim = dim / m
     // one seeded-hash TakeOrdered draw + collect (see collectFitSample
     // — bounded by `sampleCap` at any corpus size), then the m
     // sub-codebook fits run as LOCAL deterministic k-means over slices
     // of the collected sample: zero Spark jobs per fit where the
-    // previous distributed-MLlib path scheduled (init + maxIter) jobs
+    // previous distributed-MLlib path scheduled (init + iterations) jobs
     // × m subspaces over a driver-sized sample (the round-18 profile:
     // ann10 ran 147 sub-second jobs, nearly all of them these fits).
     val pts = collectFitSample(corpus, vecCol, sampleCap, seed)
@@ -904,12 +897,8 @@ object Similarity {
       val sub = pts.map(v => java.util.Arrays.copyOfRange(v, j * subDim,
         (j + 1) * subDim))
       // seed + j: subspaces must not share init — identical seeds on
-      // near-identical marginals would correlate codebook errors.
-      // maxIter 5 is the `quantize` argument: recall is governed by
-      // the re-rank depth, not codebook polish (measured across the
-      // three SFs: 5 vs 10 iterations moved reranked recall by ≤ 2
-      // of 25, in neither direction consistently)
-      val cs = localKMeans(sub, k, seed + j, maxIter).map(_.map(_.toFloat))
+      // near-identical marginals would correlate codebook errors
+      val cs = localKMeans(sub, k, seed + j).map(_.map(_.toFloat))
       // fewer DISTINCT points than k ⇒ fewer centers come back; pad by
       // repeating the last so codebooks stay rectangular (duplicate
       // centroids are harmless: argmin takes the first)
@@ -1028,20 +1017,21 @@ object Similarity {
       yield (j, c, cb.centroids(j)(c).toSeq, cb.norm2(j)(c))
     spark.createDataFrame(rows).toDF("j", "c", "centroid", "norm2")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-    graft.sources.Sources.writeJsonSidecarFs(spark, s"$path/_meta.json",
+    StoreMaintenance.publishMeta(spark, path, pqIndexVersion,
       Map("m" -> cb.m.toString, "k" -> cb.k.toString,
-        "subDim" -> cb.subDim.toString,
-        "formatVersion" -> "1") ++ metaExtra)
-    // re-install invalidates stale same-session listings (the
-    // writeNearDupStore convention)
-    spark.catalog.refreshByPath(path)
+        "subDim" -> cb.subDim.toString) ++ metaExtra)
   }
+
+  /** Layout version of the PQ index, shared by [[installPqIndex]] and
+    * [[loadPqCodebooks]]. */
+  private val pqIndexVersion = "1"
 
   /** Codebooks of an at-rest PQ index — m·k tiny rows plus the meta
     * sidecar (parameters travel WITH the store: a reader guessing m/k
     * would silently mis-decode, the near-dup store's `_meta` lesson). */
   def loadPqCodebooks(spark: SparkSession, path: String): PqCodebooks = {
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$path/_meta.json")
+    val meta = StoreMaintenance.open(spark, path, pqIndexVersion,
+      "writePqIndex or installPqIndex")
     val m = meta("m").toInt; val k = meta("k").toInt
     val subDim = meta("subDim").toInt
     val rows = spark.read.parquet(s"$path/codebooks")

@@ -29,8 +29,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * during (3) resumes from the marker: the next compact call finishes
   * the swap idempotently (a table whose staged dir is gone was already
   * swapped), and until then every probe/append entry point fails
-  * loudly on the marker ([[requireNoCrashedCompaction]]) — reading
-  * mid-swap could see a half-old/half-new table set. */
+  * loudly on the marker ([[open]]) — reading mid-swap could see a
+  * half-old/half-new table set. */
 private[graft] object StoreMaintenance {
 
   /** One store table: how to project its fold (include any
@@ -47,11 +47,48 @@ private[graft] object StoreMaintenance {
     new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Loud guard shared by the stores' probe/append entry points. */
+  private def metaPath(dir: String): String = s"$dir/_meta.json"
+
+  /** Loud guard for readers that already hold a store's meta (a
+    * streaming loop's hoisted read-only state) and re-check per batch. */
   def requireNoCrashedCompaction(spark: SparkSession, dir: String): Unit =
     require(!hadoopFs(spark, dir).exists(marker(dir)),
       s"store at $dir has an unfinished compaction swap — run its " +
         "compact*Store maintenance op to finish it first")
+
+  /** The one way to open an at-rest store: the crashed-compaction guard
+    * first (reading mid-swap could see a half-old/half-new table set),
+    * then ONE read of `_meta.json`, refused loudly unless its
+    * `formatVersion` is exactly the family's current one. Every probe,
+    * append and maintenance op of every store goes through here, so a
+    * store in another layout is refused on every path — never read
+    * half-right by one of them. `installer` names the op that rebuilds
+    * the store in the current layout. */
+  def open(spark: SparkSession, dir: String, formatVersion: String,
+           installer: String): Map[String, String] = {
+    requireNoCrashedCompaction(spark, dir)
+    val meta = graft.sources.Sources.readJsonSidecarFs(spark, metaPath(dir))
+    val found = meta.get("formatVersion")
+    require(found.contains(formatVersion),
+      s"store at $dir has ${found.fold("no formatVersion")(v => s"formatVersion $v")}" +
+        s"; this build reads formatVersion $formatVersion only — " +
+        s"reinstall it with $installer")
+    meta
+  }
+
+  /** Land a store's meta — the installer's LAST write (a reader that
+    * finds the meta can rely on every table it describes), or a
+    * maintenance op's in-place geometry update — tagged with the
+    * family's `formatVersion`, then invalidate same-session listings
+    * under `dir` (a re-install over a previously-read dir would
+    * otherwise serve the pre-install file list and die on vanished
+    * files). */
+  def publishMeta(spark: SparkSession, dir: String, formatVersion: String,
+                  meta: Map[String, String]): Unit = {
+    graft.sources.Sources.writeJsonSidecarFs(spark, metaPath(dir),
+      meta + ("formatVersion" -> formatVersion))
+    spark.catalog.refreshByPath(dir)
+  }
 
   /** Loud guard for every installer that CLEARS the store before its
     * input DataFrame is materialized ([[clearForReinstall]] callers):
@@ -120,13 +157,26 @@ private[graft] object StoreMaintenance {
     if (fs.exists(marker(dir))) fs.delete(marker(dir), false)
   }
 
-  def compact(spark: SparkSession, dir: String, tables: Seq[TableSpec],
-              maxBatchId: Long): Unit = {
-    val fs = hadoopFs(spark, dir)
-    if (fs.exists(marker(dir))) {
-      finish(spark, dir)
-      return
+  /** The maintenance entry of every compact*Store: a crashed swap is
+    * FINISHED first — and that is the whole call, the fold it belonged
+    * to already ran — so nothing refuses a store a re-run can heal;
+    * otherwise the store is [[open]]ed and its committed generations
+    * are folded with the tables its meta describes. */
+  def compactStore(spark: SparkSession, dir: String, formatVersion: String,
+                   installer: String, maxBatchId: Long)
+                  (tables: Map[String, String] => Seq[TableSpec]): Unit =
+    if (hadoopFs(spark, dir).exists(marker(dir))) finish(spark, dir)
+    else {
+      val meta = open(spark, dir, formatVersion, installer)
+      compact(spark, dir, tables(meta), maxBatchId)
     }
+
+  /** Phases 1–3 over a store with no pending swap (see
+    * [[compactStore]], the entry point that checks). */
+  private[operators] def compact(spark: SparkSession, dir: String,
+                                 tables: Seq[TableSpec],
+                                 maxBatchId: Long): Unit = {
+    val fs = hadoopFs(spark, dir)
     val staging = new org.apache.hadoop.fs.Path(s"$dir/_compacting")
     if (fs.exists(staging)) fs.delete(staging, true) // stage-phase crash
     def foldable(t: String): Seq[(Long, org.apache.hadoop.fs.Path)] = {
@@ -176,7 +226,7 @@ private[graft] object StoreMaintenance {
   }
 
   /** Phase 3, idempotent under re-entry. */
-  def finish(spark: SparkSession, dir: String): Unit = {
+  private def finish(spark: SparkSession, dir: String): Unit = {
     val fs = hadoopFs(spark, dir)
     val m = graft.sources.Sources
       .readJsonSidecarFs(spark, marker(dir).toString)

@@ -205,10 +205,18 @@ object TextAnalysis {
     // geometry-only meta, written LAST (a probe that finds it can rely
     // on postings/batch=0 and _stats/batch_0 being in place); the
     // corpus stats live in _stats, never read-modify-written
-    graft.sources.Sources.writeJsonSidecarFs(spark, s"$dir/_meta.json", Map(
-      "formatVersion" -> "2", "buckets" -> buckets.toString))
-    spark.catalog.refreshByPath(s"$dir/postings")
+    StoreMaintenance.publishMeta(spark, dir, bm25IndexVersion,
+      Map("buckets" -> buckets.toString))
   }
+
+  /** The BM25 index's layout version (per-batch postings generations
+    * and `_stats` entries, geometry-only meta), shared by
+    * [[writeBm25Index]] and every reader through [[openBm25Index]]. */
+  private val bm25IndexVersion = "2"
+
+  private def openBm25Index(spark: org.apache.spark.sql.SparkSession,
+                            dir: String): Map[String, String] =
+    StoreMaintenance.open(spark, dir, bm25IndexVersion, "writeBm25Index")
 
   /** Grow the BM25 index: the batch's postings land under their own
     * `batch=<id>` subdir AND its corpus-stats contribution under its
@@ -238,18 +246,7 @@ object TextAnalysis {
                         textCol: String = "text"): Unit = {
     require(batchId > 0, "batchId 0 is the base install")
     val spark = batch.sparkSession
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    // a v1 index keeps nDocs/sumDl inline in _meta.json and
-    // readBm25Stats PREFERS that branch — landing a batch's postings +
-    // _stats entry against it would leave post-append probes scoring
-    // with the batch's df but stale corpus totals (silently wrong,
-    // violating the rebuild-identical contract). Mirror appendToFpStore:
-    // growing a v1 index requires a writeBm25Index rebuild.
-    require(meta.getOrElse("formatVersion", "1") == "2",
-      s"bm25 index at $dir predates per-batch _stats entries " +
-        s"(formatVersion ${meta.getOrElse("formatVersion", "1")}); " +
-        "rebuild with writeBm25Index to grow it")
-    val buckets = meta("buckets").toLong
+    val buckets = openBm25Index(spark, dir)("buckets").toLong
     def terms(c: Column) = split(trim(lower(c)), "\\s+")
     val body = batch.select(col(idCol).as("n_id"), terms(col(textCol)).as("_tk"))
     val dl = body.select(col("n_id"), size(col("_tk")).cast("long").as("dl"))
@@ -276,24 +273,18 @@ object TextAnalysis {
       s"$dir/_stats/batch_$batchId.json",
       Map("nDocs" -> nDocs.toString, "sumDl" -> sumDl.toString))
 
-  /** Corpus totals of a BM25 index: the exact-long sum over the
-    * per-batch `_stats` entries. A v1 store (stats inline in
-    * `_meta.json`, before the per-batch layout) reads from the meta —
-    * read-only legacy support. */
-  private[operators] def readBm25Stats(spark: org.apache.spark.sql.SparkSession,
-                                       dir: String): (Long, Long) = {
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    if (meta.contains("nDocs")) (meta("nDocs").toLong, meta("sumDl").toLong)
-    else {
-      val d = new org.apache.hadoop.fs.Path(s"$dir/_stats")
-      val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val pat = "batch_(\\d+)\\.json".r
-      val entries = fs.listStatus(d).toSeq.map(_.getPath)
-        .filter(p => pat.matches(p.getName))
-        .map(p => graft.sources.Sources.readJsonSidecarFs(spark, p.toString))
-      require(entries.nonEmpty, s"bm25 index at $dir has no _stats entries")
-      (entries.map(_("nDocs").toLong).sum, entries.map(_("sumDl").toLong).sum)
-    }
+  /** Corpus totals of an opened BM25 index: the exact-long sum over
+    * the per-batch `_stats` entries. */
+  private def readBm25Stats(spark: org.apache.spark.sql.SparkSession,
+                            dir: String): (Long, Long) = {
+    val d = new org.apache.hadoop.fs.Path(s"$dir/_stats")
+    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val pat = "batch_(\\d+)\\.json".r
+    val entries = fs.listStatus(d).toSeq.map(_.getPath)
+      .filter(p => pat.matches(p.getName))
+      .map(p => graft.sources.Sources.readJsonSidecarFs(spark, p.toString))
+    require(entries.nonEmpty, s"bm25 index at $dir has no _stats entries")
+    (entries.map(_("nDocs").toLong).sum, entries.map(_("sumDl").toLong).sum)
   }
 
   /** [[bm25TopK]] served from the at-rest index: same formula, same
@@ -310,8 +301,7 @@ object TextAnalysis {
                         k1: Double = 1.2, b: Double = 0.75,
                         maxDfRatio: Double = 0.5): DataFrame = {
     val spark = queries.sparkSession
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    val buckets = meta("buckets").toLong
+    val buckets = openBm25Index(spark, dir)("buckets").toLong
     val (nDocs, sumDl) = readBm25Stats(spark, dir)
     // an empty base install (or a corrupt stats entry) must fail loudly
     // here, not surface as NaN/Infinity scores downstream
@@ -1162,15 +1152,21 @@ object TextAnalysis {
       .orderBy(desc("bc"), md5(concat_ws(" ", col("p"), col("c"))).asc)
       .limit(maxBigrams)
       .write.mode("overwrite").parquet(s"$dir/bigrams")
-    graft.sources.Sources.writeJsonSidecarFs(spark, s"$dir/_meta.json",
+    StoreMaintenance.publishMeta(spark, dir, bigramLmStoreVersion,
       Map("denom" -> denom.toString,
         "maxBigrams" -> maxBigrams.toString,
-        "maxVocab" -> maxVocab.toString,
-        "formatVersion" -> "1"))
-    // re-install invalidates stale same-session listings (the
-    // writeNearDupStore convention)
-    spark.catalog.refreshByPath(dir)
+        "maxVocab" -> maxVocab.toString))
   }
+
+  /** Layout version of the bigram-LM store, shared by
+    * [[writeBigramLmStore]] and every reader through
+    * [[openBigramLmStore]]. */
+  private val bigramLmStoreVersion = "1"
+
+  private[graft] def openBigramLmStore(spark: org.apache.spark.sql.SparkSession,
+                                       dir: String): Map[String, String] =
+    StoreMaintenance.open(spark, dir, bigramLmStoreVersion,
+      "writeBigramLmStore")
 
   /** [[bigramLogProbAgainst]] read from the at-rest model — BIT-
     * IDENTICAL scores to the live path over the train corpus the
@@ -1182,8 +1178,7 @@ object TextAnalysis {
                              idCol: String, textCol: String,
                              lambda: Double = 0.7): DataFrame = {
     val spark = score.sparkSession
-    val denom = graft.sources.Sources
-      .readJsonSidecarFs(spark, s"$dir/_meta.json")("denom").toDouble
+    val denom = openBigramLmStore(spark, dir)("denom").toDouble
     scoreBatchAgainstLm(score,
       spark.read.parquet(s"$dir/uni"),
       spark.read.parquet(s"$dir/bigrams"),

@@ -286,17 +286,6 @@ object EventStream {
                              compactStoreEvery: Int = 0)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     import graft.operators.Dedup
-    // the store's meta pins the shingle geometry; it is IMMUTABLE for
-    // the store's lifetime (in-loop compaction folds tables, never the
-    // sidecar), so it is read ONCE here and closed over — the
-    // streamingDecontamIngest convention: read-only state is hoisted,
-    // never re-read per micro-batch. The WITHIN-batch judgment must use
-    // the same parameters as the vs-store one or two docs' dup verdict
-    // would depend on whether they arrived in one micro-batch or two.
-    val meta0 = graft.sources.Sources.readJsonSidecarFs(
-      docs.sparkSession, s"$storeDir/_meta.json")
-    val shingleSize = meta0("shingleSize").toInt
-    val numHashes = meta0("numHashes").toInt
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         // ONE counting action per trigger: the count both gates the
@@ -332,10 +321,15 @@ object EventStream {
           // (a session-global clearCache here would evict them every
           // micro-batch)
           val preexisting = spark.sparkContext.getPersistentRDDs.keySet
-          // the crashed-compaction guard runs once per trigger, before
-          // any store file is read (the append re-checks — cheap)
-          graft.operators.StoreMaintenance
-            .requireNoCrashedCompaction(spark, storeDir)
+          // the store is opened once per trigger, AFTER the maintenance
+          // slot (which finishes a crashed swap) and before any store
+          // file is read: the crashed-compaction guard, the version
+          // check and the one meta read the probe and the append share.
+          // The meta pins the shingle geometry, and the WITHIN-batch
+          // judgment uses the same parameters as the vs-store one, or
+          // two docs' dup verdict would depend on whether they arrived
+          // in one micro-batch or two.
+          val meta = Dedup.openNearDupStore(spark, storeDir)
           // replay guard — a manifest entry for this batch means a prior
           // attempt fully published it. Recomputing `kept` on that replay
           // path is WRONG, not just wasteful: the store may already hold
@@ -354,13 +348,13 @@ object EventStream {
           // times). Lineage is the raw batch only (never the store),
           // so the persisted blocks stay valid across the appends.
           val hB = Dedup.hashedShinglesFor(batch, idCol, textCol,
-              shingleSize)
+              meta("shingleSize").toInt)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           // ONE sized minhash aggregation per trigger, frozen: feeds
           // the probe's band keys + a-side sizes AND the survivor
           // append's signature generation (pre-sharing, the agg ran
           // twice per trigger)
-          val sigB = Dedup.sizedSignaturesFor(hB, meta0).localCheckpoint()
+          val sigB = Dedup.sizedSignaturesFor(hB, meta).localCheckpoint()
           val kept =
             if (alreadyPublished)
               graft.sources.Sources.readPublishedBatch(spark, keptDir,
@@ -368,10 +362,10 @@ object EventStream {
             else {
               // vs the landed corpus
               val vsStore = Dedup.incrementalNearDupFromStoreSigs(
-                hB, sigB, storeDir, meta0, threshold = threshold)
+                hB, sigB, storeDir, meta, threshold)
               // within-batch: keep the smallest id of each near-dup pair
               val selfPairs = Dedup.nearDupPairsHashed(hB, nBatch,
-                threshold = threshold, numHashes = numHashes)
+                threshold = threshold, numHashes = meta("numHashes").toInt)
               val dropIds = vsStore.select(col("id_a").as(idCol))
                 .unionByName(selfPairs.select(col("id_b").as(idCol)))
                 .distinct()
@@ -398,7 +392,7 @@ object EventStream {
           val keptIds = kept.select(col(idCol).as("id")).localCheckpoint()
           Dedup.appendToNearDupStoreSigs(
             hB.join(keptIds, "id"), sigB.join(keptIds, "id"),
-            storeDir, batchId + 1, meta0)
+            storeDir, batchId + 1, meta)
           kept.unpersist()
           hB.unpersist(blocking = false)
           // release only what THIS batch created; a long-running stream
@@ -669,8 +663,7 @@ object EventStream {
     // pay a driver read + executor re-broadcast of the filter bytes on
     // every micro-batch for bits that never change
     val spark = docs.sparkSession
-    val n = graft.sources.Sources
-      .readJsonSidecarFs(spark, s"$evalStoreDir/_meta.json")("n").toInt
+    val n = Dedup.openEvalGramStore(spark, evalStoreDir)("n").toInt
     val probeBytes =
       graft.operators.Dedup.mergedBloomBytes(spark, evalStoreDir, None)
     docs.writeStream.outputMode("append").foreachBatch {
@@ -720,8 +713,8 @@ object EventStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     import graft.operators.TextAnalysis
     val spark = docs.sparkSession
-    val denom = graft.sources.Sources
-      .readJsonSidecarFs(spark, s"$lmStoreDir/_meta.json")("denom").toDouble
+    val denom = TextAnalysis.openBigramLmStore(spark, lmStoreDir)("denom")
+      .toDouble
     // localCheckpoint, not persist: eager (materialized before the
     // first batch), and the blocks are released by the ContextCleaner
     // once the writer/query is dropped — a persist here had no

@@ -683,26 +683,6 @@ class DedupSpec extends SparkSpec {
       16L * spark.read.parquet(s"$dir/signatures/batch=1").count())
   }
 
-  test("incrementalNearDupFromStore falls back to signatures on a bands mismatch") {
-    // the pinned-geometry contract: a caller probing with a different
-    // bands knob must NOT mis-collide against the at-rest band keys —
-    // it takes the (store-linear but correct) signature path, and the
-    // exact-Jaccard verify makes both paths agree on this corpus
-    val dir = java.nio.file.Files.createTempDirectory("ndfallback").toString
-    val docs = Tables.documents(spark, sf)
-    val batch = docs.filter($"doc_id" % 5 === 0)
-    val corpus = docs.filter($"doc_id" % 5 =!= 0)
-    Dedup.writeNearDupStore(corpus, "doc_id", "text", dir)
-    val v2 = Dedup.incrementalNearDupFromStore(batch, dir, "doc_id", "text")
-      .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().toSet
-    val fb = Dedup.incrementalNearDupFromStore(batch, dir, "doc_id", "text",
-        bands = 8)
-      .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().toSet
-    assert(v2 == fb && v2.nonEmpty,
-      "pruned and fallback paths must agree on the planted corpus")
-    spark.catalog.clearCache()
-  }
-
   test("softDedupWeights: commonness counts, 1/n weights, every row flows") {
     val docs = Seq(
       (1L, "Hello, World!"), (2L, "hello world"), (3L, "HELLO  world..."),
@@ -1333,32 +1313,6 @@ class DedupSpec extends SparkSpec {
       "rebuilt store must not remember the pre-rebuild corpus")
   }
 
-  test("appendToEvalGramStore refuses a v1 (flat-layout) store") {
-    // a v1 store keeps grams FLAT under $dir/grams; landing a
-    // batch=<id> dir next to flat files bricks every later read on
-    // conflicting directory structures — the guard must fire BEFORE
-    // anything lands
-    val tmp = java.nio.file.Files.createTempDirectory("evalgramv1").toString
-    val suiteA = Seq((100L, "x quick brown fox jumps over y")).toDF("doc_id", "text")
-    Dedup.writeEvalGramStore(suiteA, "text", tmp, n = 5)
-    // rewrite the store into v1 shape: flatten the generation dir, strip
-    // the version tag
-    val gen = new java.io.File(s"$tmp/grams/batch=0")
-    gen.listFiles().foreach(f =>
-      f.renameTo(new java.io.File(s"$tmp/grams/${f.getName}")))
-    assert(gen.delete())
-    val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$tmp/_meta.json")
-    graft.sources.Sources.writeJsonSidecarFs(spark, s"$tmp/_meta.json",
-      meta - "formatVersion")
-    val suiteB = Seq((101L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
-    val ex = intercept[IllegalArgumentException] {
-      Dedup.appendToEvalGramStore(suiteB, "text", tmp, batchId = 1L)
-    }
-    assert(ex.getMessage.contains("writeEvalGramStore"))
-    // nothing landed: the flat layout still reads
-    assert(spark.read.parquet(s"$tmp/grams").count() > 0)
-  }
-
   test("compactFpStore RE-SIZES the base bloom from the folded keys — " +
        "a store grown past its install sizing de-saturates at fold time") {
     val dir = java.nio.file.Files.createTempDirectory("fpresize").toString
@@ -1514,8 +1468,8 @@ class DedupSpec extends SparkSpec {
     Dedup.appendToEvalGramStore(suite("b"), "text", dir, batchId = 1L)
     val entry1 = new java.io.File(s"$dir/_stats/batch_1.json")
     val want = spark.read.parquet(s"$dir/grams/batch=1").count()
-    // simulate a store grown before the accounting change: generation
-    // landed, entry never written
+    // simulate an append that crashed between its gram write and its
+    // entry write: generation landed, entry never written
     assert(entry1.delete())
     Dedup.appendToEvalGramStore(suite("c"), "text", dir, batchId = 2L)
     assert(entry1.exists(), "append must heal the missing batch_1 entry")

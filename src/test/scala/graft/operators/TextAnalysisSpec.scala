@@ -668,39 +668,6 @@ class TextAnalysisSpec extends SparkSpec {
     assert(ex.getMessage.contains("nDocs=0"))
   }
 
-  test("appendToBm25Index refuses a v1 (inline-stats) index") {
-    // a v1 index keeps nDocs/sumDl inline in _meta.json, and
-    // readBm25Stats PREFERS that branch — an append that landed against
-    // it would add the batch's df while probes keep the stale corpus
-    // totals: silently wrong scores. The guard must fire BEFORE any
-    // postings land.
-    import spark.implicits._
-    val docs = graft.core.Tables.documents(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("bm25v1").toString
-    TextAnalysis.writeBm25Index(docs.filter($"doc_id" % 3 =!= 0), dir,
-      buckets = 8)
-    // rewrite the meta into the v1 shape: stats inline, no version tag
-    val (n0, s0) = {
-      val st = graft.sources.Sources.readJsonSidecarFs(spark,
-        s"$dir/_stats/batch_0.json")
-      (st("nDocs"), st("sumDl"))
-    }
-    graft.sources.Sources.writeJsonSidecarFs(spark, s"$dir/_meta.json",
-      Map("buckets" -> "8", "nDocs" -> n0, "sumDl" -> s0))
-    val before = spark.read.parquet(s"$dir/postings").count()
-    val ex = intercept[IllegalArgumentException] {
-      TextAnalysis.appendToBm25Index(docs.filter($"doc_id" % 3 === 0), dir, 1L)
-    }
-    assert(ex.getMessage.contains("writeBm25Index"))
-    assert(spark.read.parquet(s"$dir/postings").count() == before,
-      "nothing may land on the refused append")
-    // the v1 index still serves probes read-only (legacy support)
-    val q = docs.filter($"doc_id" % 83 === 0 && $"doc_id" < 500)
-      .select($"doc_id".as("q_id"), substring($"text", 1, 60).as("q_text"))
-    assert(TextAnalysis.bm25TopKFromIndex(dir, q, 5, maxDfRatio = 1.0)
-      .count() > 0)
-  }
-
   test("bm25 store: df prune live on the store path ≡ live path " +
        "(t49's realistic-vocabulary fixture)") {
     import spark.implicits._
