@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for a training-data pipeline: exact,
@@ -1899,13 +1900,13 @@ object Dedup {
   private def hashedShingles(sh: DataFrame): DataFrame =
     sh.select(col("id"), xxhash64(col("shingle")).as("hs"))
 
-  /** (id, hs) hashed-shingle projection of a frame — the shared
+  /** Sized (id, hs, sz) hashed-shingle rows of a frame — the shared
     * per-batch table the streaming near-dup loop computes ONCE and
-    * feeds to the store probe, the within-batch pair pass, and the
-    * survivor append (the *Sigs seams). */
+    * feeds to the signing, the store probe, the within-batch pair pass
+    * and the survivor append (the *Sigs seams). */
   private[graft] def hashedShinglesFor(df: DataFrame, idCol: String,
                                        textCol: String, n: Int): DataFrame =
-    hashedShingles(shingles(df, idCol, textCol, n))
+    withDocSizes(hashedShingles(shingles(df, idCol, textCol, n)))
 
   /** SIZED signature table of a hashed-shingle frame under a store's
     * pinned geometry — the streaming loop's compute-once seam for the
@@ -1956,34 +1957,41 @@ object Dedup {
     * boilerplate-only and sit far below any near-dup threshold (and
     * byte-identical docs are d1's job, run first).
     *
-    * The guard path persists the hashed projection (16-byte rows). The
-    * cache is keyed by logical plan, so repeated runs over the same input
-    * reuse one copy rather than accumulating; long-lived sessions doing
-    * one-shot scans can `spark.catalog.clearCache()`. */
+    * The guard path persists the sized hashed projection (24-byte
+    * rows), keyed by logical plan, so repeated runs over the same input
+    * reuse one copy; one-shot sessions can `spark.catalog.clearCache()`. */
   def jaccardPairs(sh: DataFrame, threshold: Double,
-                   maxDocFreq: Option[Int] = None): DataFrame = maxDocFreq match {
-    case None =>
-      jaccardAllPairs(hashedShingles(sh))(threshold)
-    case Some(cap) =>
-      val h = hashedShingles(sh).persist(StorageLevel.MEMORY_AND_DISK)
-      val hot = h.groupBy("hs").agg(count(lit(1)).as("df"))
-        .filter(col("df") > cap).select("hs")
-      // the stats action also materializes h into the cache, so whichever
-      // plan follows re-reads 16-byte rows instead of re-tokenizing
-      if (hot.isEmpty) jaccardAllPairs(h)(threshold)
-      else jaccardCapped(h, hot, threshold)
+                   maxDocFreq: Option[Int] = None): DataFrame = {
+    val h = withDocSizes(hashedShingles(sh))
+    jaccardPairsHashed(
+      if (maxDocFreq.isDefined) h.persist(StorageLevel.MEMORY_AND_DISK) else h,
+      threshold, maxDocFreq)
   }
 
-  /** The uncapped plan: one hash-bucket self-join + per-pair count. */
-  private def jaccardAllPairs(h: DataFrame)(threshold: Double): DataFrame = {
-    val sizes = h.groupBy("id").agg(count(lit(1)).as("sz"))
-    val shared = h.as("a")
-      .join(h.as("b"),
-        col("a.hs") === col("b.hs") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .agg(count(lit(1)).as("shared"))
-    jaccardFromShared(shared, sizes, threshold)
-  }
+  /** (id, hs) → (id, hs, sz): every row carries its doc's shingle
+    * count, so no size join follows the shared-shingle count. The
+    * window's id partitioning is reused by a later `groupBy("id")`. */
+  private def withDocSizes(h: DataFrame): DataFrame =
+    h.withColumn("sz", count(lit(1)).over(Window.partitionBy("id")))
+
+  /** Exact Jaccard of the pairs in per-shared-shingle rows
+    * (id_a, id_b, sz_a, sz_b): one aggregation, sizes in the key. */
+  private def jaccardFromSizedRows(rows: DataFrame, threshold: Double): DataFrame =
+    rows.groupBy("id_a", "id_b", "sz_a", "sz_b").agg(count(lit(1)).as("shared"))
+      .withColumn("jaccard",
+        round(col("shared") / (col("sz_a") + col("sz_b") - col("shared")), 6))
+      .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "jaccard")
+
+  /** The uncapped plan over sized rows ([[withDocSizes]]): one
+    * hash-bucket self-join + one per-pair count. */
+  private def jaccardAllPairs(h: DataFrame)(threshold: Double): DataFrame =
+    jaccardFromSizedRows(
+      h.as("a").join(h.as("b"),
+          col("a.hs") === col("b.hs") && col("a.id") < col("b.id"))
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+          col("a.sz").as("sz_a"), col("b.sz").as("sz_b")),
+      threshold)
 
   /** Active-guard plan: candidate pairs AND their cold-shared counts come
     * from ONE self-join over cold postings (df <= cap bounds every join
@@ -2050,9 +2058,6 @@ object Dedup {
   }
 
   /** Exact Jaccard restricted to a candidate pair set (id_a < id_b). */
-  def jaccardFor(sh: DataFrame, candidates: DataFrame, threshold: Double): DataFrame =
-    jaccardForHashed(hashedShingles(sh), candidates, threshold)
-
   private def jaccardForHashed(h: DataFrame, candidates: DataFrame,
                                threshold: Double): DataFrame = {
     // deliberately THREE plain consumers of the (persisted/checkpointed)
@@ -2073,38 +2078,41 @@ object Dedup {
     jaccardFromShared(shared, sizes, threshold)
   }
 
-  /** [[jaccardForHashed]] for the CROSS-SET case (id_a always from hA,
-    * id_b always from hC — the incremental/store probes' contract, ids
-    * disjoint): the intersection join reads each side's own shingle
-    * table, and per-doc sizes arrive PRECOMPUTED — the batch side off
-    * its sized signature agg, the store side off the signature table's
-    * (id, sz) columns — so the store's shingle table is scanned exactly
-    * once (the b-side verify) and never aggregated. Emits the same
-    * (id_a, id_b, jaccard) rows as jaccardForHashed over hA ∪ hC. */
+  /** Exact Jaccard of FROZEN cross-set candidate pairs (id_a from the
+    * sized batch rows `hA`, the one broadcast; id_b from the store,
+    * whose shingle and signature tables stream through, pruned to the
+    * candidates). Store sizes are the signature table's `sz`, carried to
+    * each pair's shared-shingle rows by the window exchange that also
+    * feeds the per-pair count: the verify is one exchange. Same rows as
+    * jaccardForHashed over hA ∪ hC. */
   private def jaccardCrossHashed(hA: DataFrame, hC: DataFrame,
-                                 sizesA: DataFrame, sizesB: DataFrame,
-                                 candidates: DataFrame,
+                                 sizesC: DataFrame,
+                                 candidates: Seq[(Any, Any)],
                                  threshold: Double): DataFrame = {
-    val shared = candidates
-      .join(hA.withColumnRenamed("id", "id_a").withColumnRenamed("hs", "h_a"), "id_a")
-      .join(hC.as("b"),
-        col("id_b") === col("b.id") && col("h_a") === col("b.hs"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("shared"))
-    shared
-      .join(sizesA.select(col("id").as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sizesB.select(col("id").as("id_b"), col("sz").as("sz_b")), "id_b")
-      .withColumn("jaccard",
-        round(col("shared") / (col("sz_a") + col("sz_b") - col("shared")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    val idType = hA.schema("id").dataType
+    val storeIds = candidates.map(_._2).distinct
+    val isCandidate = struct(col("id_a"), col("id_b")).isin(candidates.map {
+      case (a, b) => struct(lit(a).as("id_a"), lit(b).as("id_b"))
+    }: _*)
+    val sharedRows = hC.filter(col("id").isin(storeIds: _*))
+      .select(col("id").as("id_b"), col("hs"))
+      .join(broadcast(hA), "hs")
+      .select(col("id").as("id_a"), col("id_b"), col("sz").as("sz_a"),
+        lit(null).cast("long").as("sz_b"))
+      .filter(isCandidate)
+    val sizeRows = sizesC.filter(col("id").isin(storeIds: _*))
+      .select(lit(null).cast(idType).as("id_a"), col("id").as("id_b"),
+        lit(null).cast("long").as("sz_a"), col("sz").as("sz_b"))
+    jaccardFromSizedRows(
+      sharedRows.unionByName(sizeRows)
+        .withColumn("sz_b", max("sz_b").over(Window.partitionBy("id_b")))
+        .filter(col("id_a").isNotNull),
+      threshold)
   }
 
   /** MinHash signatures: `numHashes` affine transforms of xxhash64(shingle),
     * min per hash per doc — ONE aggregation pass over the shingle table.
     * Seeded, fully deterministic. */
-  def minHashSignatures(sh: DataFrame, numHashes: Int, seed: Long = 42L): DataFrame =
-    minHashSignaturesHashed(hashedShingles(sh), numHashes, seed)
-
   private def minHashSignaturesHashed(h: DataFrame, numHashes: Int,
                                       seed: Long,
                                       withSize: Boolean = false): DataFrame = {
@@ -2242,7 +2250,7 @@ object Dedup {
     * meta NEXT TO its tables, not on the driver's local disk.
     *
     * Every generation (this install is `batch=0`) also lands its
-    * band-bucket keys as ONE flat, size-targeted file set under
+    * band-bucket keys as ONE flat file set under
     * `bandkeys/batch=<id>` — (band, bh, id) rows, ~(4 B + 4 B + 8 B) ×
     * bands per doc — and probes join their own band keys against it on
     * (band, bh). The banding geometry is pinned in the sidecar. The
@@ -2265,7 +2273,7 @@ object Dedup {
     // replaces batch=0 only — re-installing over a dir that already has
     // append batches keeps them (resuming an ingest line); a true
     // fresh install starts from an empty dir.
-    // REBALANCE before every table write (guide §6): the upstream map
+    // REBALANCE before the shingle and signature writes (guide §6): the upstream map
     // pass runs at core parallelism (shingles' widen), so an unhinted
     // write would land one tiny file per task per generation — and at
     // probe time each tiny file is its own scan split. The AQE-managed
@@ -2409,14 +2417,17 @@ object Dedup {
                                      h: DataFrame, sigs: DataFrame,
                                      dir: String, batchId: Long,
                                      meta: Map[String, String]): Unit = {
-    // rebalance before write (same file-sizing rationale as the
-    // installer) — applied ABOVE any checkpoint, so frozen rows are
-    // only re-bucketed, never recomputed
+    // no rebalance: a generation lands as its writer's partitions, one
+    // scan-and-write job per table. Measured on the 100-doc streaming
+    // append (perfbench dedup_ingest, 4 cores): the rebalance exchange
+    // cost three jobs per trigger and a slower median trigger for
+    // fewer, not smaller, files — and the in-loop fold re-packs the
+    // small generations anyway
     graft.core.Par.run(
-      () => h.hint("rebalance").write.mode("overwrite")
+      () => h.write.mode("overwrite")
         .parquet(s"$dir/shingles/batch=$batchId"),
       () => {
-        sigs.hint("rebalance").write.mode("overwrite")
+        sigs.write.mode("overwrite")
           .parquet(s"$dir/signatures/batch=$batchId")
         writeBandKeysGeneration(sigs, dir, batchId,
           meta("numHashes").toInt, meta("bands").toInt)
@@ -2431,8 +2442,8 @@ object Dedup {
   }
 
   /** Shared writer half of the band-key table: explode signatures into
-    * (band, bh, id) keys and land them as ONE flat, size-targeted file
-    * set under the batch's generation dir — a rebalance, not a
+    * (band, bh, id) keys and land them as ONE flat file set under the
+    * batch's generation dir, partitioned as the signatures are — not a
     * (band, pfx) partitioned write: a generation is a handful of files
     * whatever the banding geometry, and the probe's (band, bh) join
     * reads them whole. A prefix prune would never prune a batch of more
@@ -2442,7 +2453,6 @@ object Dedup {
                                       bands: Int): Unit =
     bandBuckets(sigs, numHashes, bands)
       .select(col("band"), col("bh"), col("id"))
-      .hint("rebalance")
       .write.mode("overwrite").parquet(s"$dir/bandkeys/batch=$batchId")
 
   /** Fold every landed generation of the near-dup store into a single
@@ -2500,48 +2510,41 @@ object Dedup {
                                   idCol: String, textCol: String,
                                   threshold: Double = 0.8): DataFrame = {
     val meta = openNearDupStore(batch.sparkSession, dir)
-    val hB = hashedShingles(shingles(batch, idCol, textCol,
-        meta("shingleSize").toInt))
+    val hB = hashedShinglesFor(batch, idCol, textCol,
+        meta("shingleSize").toInt)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // the batch's sized signatures feed the band keys AND the a-side
-    // size lookup — frozen once, shared
     incrementalNearDupFromStoreSigs(hB,
       sizedSignaturesFor(hB, meta).localCheckpoint(), dir, meta, threshold)
   }
 
-  /** The band-key probe from caller-held FROZEN sized batch signatures
-    * (localCheckpoint'd, `sz` column present) under a `meta` from
-    * [[openNearDupStore]] — also the streaming loop's
-    * share-the-signatures seam: the same sigB feeds this probe and the
-    * survivor append, so the minhash aggregation runs once per
-    * micro-batch instead of twice. Candidates are the plain join of the
-    * batch's own band keys with the at-rest band-key table on
-    * (band, bh): no driver-side key fetch, no prune predicate — every
-    * generation is a few flat files, and a batch of more than a few docs
-    * collides with every prefix of every band anyway (see
-    * writeNearDupStore). Sizes: the batch side reads `sz` off sigB, the
-    * store side reads (id, sz) off the SIGNATURE table's pruned
-    * 2-column scan — no O(store) sizes aggregate. */
+  /** The band-key probe from caller-held sized batch shingles `hB`
+    * ([[hashedShinglesFor]], persisted) and their FROZEN sized
+    * signatures under a `meta` from [[openNearDupStore]] — also the
+    * streaming loop's seam: the same sigB feeds the survivor append.
+    * Only the batch side is broadcast: its band keys meet the at-rest
+    * band-key table on (band, bh), and the candidate pairs are FROZEN
+    * on the driver (one collect, deduplicated there rather than by a
+    * shuffle) for [[jaccardCrossHashed]]. Store tables are read with
+    * pinned schemas, so a probe runs no schema-inference job. */
   private[graft] def incrementalNearDupFromStoreSigs(
       hB: DataFrame, sigB: DataFrame, dir: String, meta: Map[String, String],
       threshold: Double): DataFrame = {
     val spark = hB.sparkSession
-    // explicit projections: the store dirs are batch=<id>-partitioned,
-    // and the discovered partition column must not ride into joins
-    val bC = spark.read.parquet(s"$dir/bandkeys")
-      .select(col("id").as("id_b"), col("band"), col("bh"))
-    val cands = bandBuckets(sigB, meta("numHashes").toInt,
-        meta("bands").toInt).as("x")
-      .join(bC, Seq("band", "bh"))
-      .select(col("x.id").as("id_a"), col("id_b"))
-      .distinct()
-    // hC has ONE consumer here (the id_b-side intersection join), so
-    // it is deliberately NOT persisted
+    val idType = hB.schema("id").dataType
+    def store(table: String, cols: (String, DataType)*): DataFrame = spark.read
+      .schema(StructType(cols.map { case (n, t) => StructField(n, t) }))
+      .parquet(s"$dir/$table")
+    val candidates = store("bandkeys",
+        "band" -> IntegerType, "bh" -> IntegerType, "id" -> idType)
+      .join(broadcast(bandBuckets(sigB, meta("numHashes").toInt,
+        meta("bands").toInt).withColumnRenamed("id", "id_a")), Seq("band", "bh"))
+      .select(col("id_a"), col("id")).collect()
+      .map(r => (r.get(0), r.get(1))).distinct.toSeq
+    // no candidates: the empty IN lists fold both store scans away
     jaccardCrossHashed(hB,
-      spark.read.parquet(s"$dir/shingles").select("id", "hs"),
-      sigB.select(col("id"), col("sz")),
-      spark.read.parquet(s"$dir/signatures").select(col("id"), col("sz")),
-      cands, threshold)
+      store("shingles", "id" -> idType, "hs" -> LongType),
+      store("signatures", "id" -> idType, "sz" -> LongType),
+      candidates, threshold)
   }
 
   /** True ⇔ the corpus is small enough that the exact all-shared-shingle
@@ -2577,12 +2580,15 @@ object Dedup {
     else
       minHashLshDedup(df, idCol, textCol, shingleSize, numHashes, bands, threshold)
 
-  /** [[nearDupPairs]] from a caller-held PERSISTED hashed-shingle table
-    * (the streaming loop's compute-once seam). Same routing rule and
-    * same emitted pairs as the from-text entry on the same docs: the
-    * exact path runs the capped jaccard over `h` directly, the LSH
-    * fallback bands `h`'s signatures with the default seed — exactly
-    * what minHashLshDedup derives from the raw text. */
+  /** [[nearDupPairs]] from caller-held PERSISTED sized shingle rows
+    * ([[hashedShinglesFor]]; the streaming loop's compute-once seam).
+    * Same routing rule and same emitted pairs as the from-text entry on
+    * the same docs: the exact path runs the capped jaccard over `h`
+    * directly, the LSH fallback bands `h`'s signatures with the default
+    * seed — exactly what minHashLshDedup derives from the raw text. The
+    * hot-shingle guard is armed only when `cap < nDocs`: `h` is
+    * (id, hs)-unique, so no shingle's document frequency can exceed
+    * nDocs, and a stats pass that can never bite is skipped. */
   private[graft] def nearDupPairsHashed(h: DataFrame, nDocs: Long,
                                         threshold: Double,
                                         maxDocFreq: Option[Int] = Some(100),
@@ -2590,24 +2596,27 @@ object Dedup {
                                         numHashes: Int = 64, bands: Int = 16,
                                         seed: Long = 42L): DataFrame =
     if (exactJaccardAffordable(nDocs, maxExactDocs))
-      jaccardPairsHashed(h, threshold, maxDocFreq)
+      jaccardPairsHashed(h, threshold, maxDocFreq.filter(_ < nDocs))
     else {
-      val sig = minHashSignaturesHashed(h, numHashes, seed)
-      jaccardForHashed(h, lshCandidates(sig, numHashes, bands), threshold)
+      val plain = h.select("id", "hs")
+      jaccardForHashed(plain, lshCandidates(
+        minHashSignaturesHashed(plain, numHashes, seed), numHashes, bands), threshold)
     }
 
-  /** [[jaccardPairs]] over a caller-held PERSISTED (id, hs) table —
-    * identical plans minus the tokenize+hash projection (the caller's
-    * persist replaces the one this family would otherwise install). */
-  private[graft] def jaccardPairsHashed(h: DataFrame, threshold: Double,
-                                        maxDocFreq: Option[Int]): DataFrame =
+  /** [[jaccardPairs]] over sized (id, hs, sz) rows — the caller
+    * persists them when the guard is armed (its stats pass and the plan
+    * it picks both read `h`). */
+  private def jaccardPairsHashed(h: DataFrame, threshold: Double,
+                                 maxDocFreq: Option[Int]): DataFrame =
     maxDocFreq match {
       case None => jaccardAllPairs(h)(threshold)
       case Some(cap) =>
         val hot = h.groupBy("hs").agg(count(lit(1)).as("df"))
           .filter(col("df") > cap).select("hs")
+        // the stats action also materializes a persisted h, so whichever
+        // plan follows re-reads cached rows instead of re-tokenizing
         if (hot.isEmpty) jaccardAllPairs(h)(threshold)
-        else jaccardCapped(h, hot, threshold)
+        else jaccardCapped(h.select("id", "hs"), hot, threshold)
     }
 
   /** Smallest number of INDEPENDENT MinHash seeds that drives the

@@ -288,119 +288,109 @@ object EventStream {
     import graft.operators.Dedup
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        // ONE counting action per trigger: the count both gates the
-        // empty batch (the old isEmpty job) and routes the within-batch
-        // pair pass (exact vs LSH) — guide §1.2, don't schedule two
-        // jobs where one number answers both questions
-        val nBatch = batch.count()
-        if (nBatch > 0) {
-          val spark = batch.sparkSession
-          // in-loop store maintenance, BEFORE this trigger touches the
-          // store: fold generations ≤ batchId — those came from
-          // triggers that have committed (trigger N starting means
-          // N−1's checkpoint committed), so no replay can ever
-          // re-append a folded generation and duplicate its shingle
-          // rows. This trigger's own generation (batchId + 1, possibly
-          // half-landed by a crashed prior attempt) stays unfolded by
-          // the bound. Best-effort like the exact loop's slot: a
-          // maintenance failure must not fail a data trigger.
-          if (compactStoreEvery > 0 && batchId > 0 &&
-              batchId % compactStoreEvery == 0)
-            try Dedup.compactNearDupStore(spark, storeDir,
-              maxBatchId = batchId)
-            catch {
-              case scala.util.control.NonFatal(e) =>
-                System.err.println(
-                  s"[graft] near-dup store compaction of $storeDir " +
-                    s"failed (batch $batchId, retried at the next " +
-                    s"qualifying trigger): ${e.getMessage}")
+        val spark = batch.sparkSession
+        val sc = spark.sparkContext
+        // every job carries its step's label, so the event log and any
+        // listener group a trigger's jobs by step; the stream's own
+        // description comes back when the trigger ends
+        val streamDescription = sc.getLocalProperty("spark.job.description")
+        def step(name: String): Unit =
+          sc.setJobDescription(s"near-dup ingest batch $batchId: $name")
+        try {
+          step("ids")
+          // ONE action gates the empty batch, sizes the within-batch pass
+          // and FREEZES the batch's ids (the drop set is a subset of them)
+          val batchIds = batch.select(idCol).collect().map(_.get(0))
+          if (batchIds.nonEmpty) {
+            step("fold")
+            // in-loop store maintenance, BEFORE this trigger touches the
+            // store: fold generations ≤ batchId — those came from
+            // triggers that have committed (trigger N starting means
+            // N−1's checkpoint committed), so no replay can ever
+            // re-append a folded generation and duplicate its shingle
+            // rows. This trigger's own generation (batchId + 1, possibly
+            // half-landed by a crashed prior attempt) stays unfolded by
+            // the bound. Best-effort like the exact loop's slot: a
+            // maintenance failure must not fail a data trigger.
+            if (compactStoreEvery > 0 && batchId > 0 &&
+                batchId % compactStoreEvery == 0)
+              try Dedup.compactNearDupStore(spark, storeDir,
+                maxBatchId = batchId)
+              catch {
+                case scala.util.control.NonFatal(e) =>
+                  System.err.println(
+                    s"[graft] near-dup store compaction of $storeDir " +
+                      s"failed (batch $batchId, retried at the next " +
+                      s"qualifying trigger): ${e.getMessage}")
+              }
+            // only blocks THIS batch persists are released at the end, so
+            // a co-resident batch job's persists survive
+            val preexisting = sc.getPersistentRDDs.keySet
+            // the store is opened once per trigger, AFTER the maintenance
+            // slot (which finishes a crashed swap) and before any store
+            // file is read. The meta pins the shingle geometry, and the
+            // WITHIN-batch judgment uses the same parameters as the
+            // vs-store one, or two docs' dup verdict would depend on
+            // whether they arrived in one micro-batch or two.
+            val meta = Dedup.openNearDupStore(spark, storeDir)
+            // replay guard — a manifest entry for this batch means a prior
+            // attempt fully published it. Re-probing is WRONG there: the
+            // store may already hold the batch's own shingles (crash
+            // between the store append and the checkpoint commit), so
+            // every doc near-dups ITSELF and the append would erase the
+            // batch's fingerprints. The as-published batch IS the kept set.
+            val alreadyPublished = graft.sources.Sources
+              .publishedBatches(spark, keptDir).contains(batchId + 1)
+            step("sign")
+            // ONE tokenize → gram → hash pass and ONE sized minhash
+            // aggregation per trigger, shared by the probe and the
+            // survivor append. hB reads the raw batch only and sigB is
+            // frozen, so neither can be recomputed against the store.
+            val hB = Dedup.hashedShinglesFor(batch, idCol, textCol,
+                meta("shingleSize").toInt)
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            val sigB = Dedup.sizedSignaturesFor(hB, meta).localCheckpoint()
+            step("probe")
+            // the drop set is FROZEN on the driver before the first write:
+            // the publish and the append slice the batch by it, so the
+            // probe runs once and no write can recompute it mid-append
+            val dropIds: Set[Any] =
+              if (alreadyPublished)
+                batchIds.toSet -- graft.sources.Sources
+                  .readPublishedBatch(spark, keptDir, batchId + 1)
+                  .select(idCol).collect().map(_.get(0))
+              else {
+                // vs the landed corpus, and within the batch (keep the
+                // smallest id of each near-dup pair): one action
+                val vsStore = Dedup.incrementalNearDupFromStoreSigs(
+                  hB, sigB, storeDir, meta, threshold)
+                val selfPairs = Dedup.nearDupPairsHashed(hB,
+                  batchIds.length, threshold = threshold,
+                  numHashes = meta("numHashes").toInt)
+                vsStore.select(col("id_a").as("id"))
+                  .unionByName(selfPairs.select(col("id_b").as("id")))
+                  .collect().map(_.get(0)).toSet
+              }
+            def kept(id: String) = !col(id).isin(dropIds.toSeq: _*)
+            step("publish")
+            // manifest-committed under the stable batchId: a replay
+            // overwrites its own data dir, so delivery is exactly-once
+            if (!alreadyPublished)
+              graft.sources.Sources.publishBatch(batch.filter(kept(idCol)),
+                keptDir, batchId + 1)
+            step("append")
+            // the SURVIVORS' shingles and signatures land as store
+            // generation batchId + 1 (batch=0 is the base install), so a
+            // replay overwrites the same directory
+            Dedup.appendToNearDupStoreSigs(
+              hB.select("id", "hs").filter(kept("id")), sigB.filter(kept("id")),
+              storeDir, batchId + 1, meta)
+            hB.unpersist(blocking = false)
+            sc.getPersistentRDDs.foreach { case (rddId, rdd) =>
+              if (!preexisting.contains(rddId)) rdd.unpersist(blocking = false)
             }
-          // blocks persisted BEFORE this batch stay untouched — only
-          // the dedup family's per-call caches created below are
-          // released, so a co-resident batch job's persists survive
-          // (a session-global clearCache here would evict them every
-          // micro-batch)
-          val preexisting = spark.sparkContext.getPersistentRDDs.keySet
-          // the store is opened once per trigger, AFTER the maintenance
-          // slot (which finishes a crashed swap) and before any store
-          // file is read: the crashed-compaction guard, the version
-          // check and the one meta read the probe and the append share.
-          // The meta pins the shingle geometry, and the WITHIN-batch
-          // judgment uses the same parameters as the vs-store one, or
-          // two docs' dup verdict would depend on whether they arrived
-          // in one micro-batch or two.
-          val meta = Dedup.openNearDupStore(spark, storeDir)
-          // replay guard — a manifest entry for this batch means a prior
-          // attempt fully published it. Recomputing `kept` on that replay
-          // path is WRONG, not just wasteful: the store may already hold
-          // the batch's own shingles (crash between the store append and
-          // the checkpoint commit), so every batch doc near-dups ITSELF
-          // and the recomputed kept set is empty — publishing it would
-          // erase the batch's published rows, and the batch-keyed store
-          // overwrite would erase its fingerprints. The as-published
-          // batch IS the correct kept set; re-derive store rows from it.
-          val alreadyPublished = graft.sources.Sources
-            .publishedBatches(spark, keptDir).contains(batchId + 1)
-          // ONE (tokenize → gram → hash) pass per micro-batch: the
-          // hashed-shingle table feeds the store probe, the
-          // within-batch pair pass, AND the survivor append (guide
-          // §1.2 — the un-shared loop re-shingled the batch three
-          // times). Lineage is the raw batch only (never the store),
-          // so the persisted blocks stay valid across the appends.
-          val hB = Dedup.hashedShinglesFor(batch, idCol, textCol,
-              meta("shingleSize").toInt)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          // ONE sized minhash aggregation per trigger, frozen: feeds
-          // the probe's band keys + a-side sizes AND the survivor
-          // append's signature generation (pre-sharing, the agg ran
-          // twice per trigger)
-          val sigB = Dedup.sizedSignaturesFor(hB, meta).localCheckpoint()
-          val kept =
-            if (alreadyPublished)
-              graft.sources.Sources.readPublishedBatch(spark, keptDir,
-                batchId + 1)
-            else {
-              // vs the landed corpus
-              val vsStore = Dedup.incrementalNearDupFromStoreSigs(
-                hB, sigB, storeDir, meta, threshold)
-              // within-batch: keep the smallest id of each near-dup pair
-              val selfPairs = Dedup.nearDupPairsHashed(hB, nBatch,
-                threshold = threshold, numHashes = meta("numHashes").toInt)
-              val dropIds = vsStore.select(col("id_a").as(idCol))
-                .unionByName(selfPairs.select(col("id_b").as(idCol)))
-                .distinct()
-              batch.join(dropIds, Seq(idCol), "left_anti")
-                .persist() // feeds the corpus sink AND the store append
-            }
-          // manifest-committed: a replayed batch overwrites its own data
-          // dir and re-commits the same manifest entry, so the cleaned
-          // corpus is delivered exactly-once (Sources.publishBatch),
-          // not at-least-once appended
-          if (!alreadyPublished)
-            graft.sources.Sources.publishBatch(kept, keptDir, batchId + 1)
-          // batchId + 1: the stream's ids start at 0, the store reserves
-          // batch=0 for the base install; the offset keeps replays keyed
-          // to the same store directory deterministically. The appended
-          // rows are the SURVIVORS' shingles and sized signatures: hB /
-          // sigB sliced to the kept ids (on the replay path `kept` is
-          // the as-published batch, a subset of the replayed source
-          // batch, so the slice still yields exactly its rows). The id
-          // list is FROZEN before the first write; hB and sigB are
-          // store-lineage-free (raw batch only / checkpointed), so the
-          // append's mid-write recompute hazard cannot arise — the
-          // appendToNearDupStoreSigs caller contract.
-          val keptIds = kept.select(col(idCol).as("id")).localCheckpoint()
-          Dedup.appendToNearDupStoreSigs(
-            hB.join(keptIds, "id"), sigB.join(keptIds, "id"),
-            storeDir, batchId + 1, meta)
-          kept.unpersist()
-          hB.unpersist(blocking = false)
-          // release only what THIS batch created; a long-running stream
-          // must not accumulate one plan-keyed block set per batch
-          spark.sparkContext.getPersistentRDDs.foreach { case (rddId, rdd) =>
-            if (!preexisting.contains(rddId)) rdd.unpersist(blocking = false)
           }
-        }
+        } finally sc.setJobDescription(streamDescription)
     }
   }
 

@@ -245,6 +245,35 @@ class DedupSpec extends SparkSpec {
     assert(nCands <= 10, s"df cap should bound candidates, got $nCands")
   }
 
+  test("nearDupPairsHashed skips the hot-shingle guard at nDocs = cap, " +
+       "and it still bites at cap + 1") {
+    // every doc ends in the same shingle; doc 1 near-dups doc 0. A
+    // threshold this low keeps the pairs that share ONLY that shingle
+    // (1/13) — exactly the pairs the guard exists to drop
+    val cap = 4
+    def text(i: Int) = ((1 to 6).map(k => if (i == 1 && k == 1) "v" else
+      s"u${if (i == 1) 0 else i}_$k") ++ Seq("common", "words", "here")).mkString(" ")
+    def pairs(n: Int) = {
+      val df = (0 until n).map(i => (i.toLong, text(i))).toDF("doc_id", "text")
+      def rows(p: org.apache.spark.sql.DataFrame) = p.select("id_a", "id_b", "jaccard")
+        .as[(Long, Long, Double)].collect().toSet
+      val h = Dedup.hashedShinglesFor(df, "doc_id", "text", 3)
+      (rows(Dedup.nearDupPairsHashed(h, n.toLong, threshold = 0.01,
+          maxDocFreq = Some(cap))),
+        rows(Dedup.jaccardPairs(Dedup.shingles(df, "doc_id", "text", 3), 0.01,
+          maxDocFreq = Some(cap))))
+    }
+    val (atCap, atCapOracle) = pairs(cap)
+    assert(atCap == atCapOracle)
+    assert(atCap.size == cap * (cap - 1) / 2,
+      s"at nDocs = cap no shingle is hot: every pair is kept, got $atCap")
+    val (above, aboveOracle) = pairs(cap + 1)
+    assert(above == aboveOracle)
+    assert(above.map(p => (p._1, p._2)) == Set((0L, 1L)),
+      s"at nDocs = cap + 1 the shared shingle is hot and the guard drops " +
+        s"the pairs that share only it, got $above")
+  }
+
   test("connectedComponents labels chains, separate components, converges") {
     // a 6-node chain (diameter forces multiple propagation rounds), a
     // triangle, and an isolated pair
@@ -515,13 +544,31 @@ class DedupSpec extends SparkSpec {
     val batch = docs.filter($"doc_id" % 5 === 0)
     val corpus = docs.filter($"doc_id" % 5 =!= 0)
     Dedup.writeNearDupStore(corpus, "doc_id", "text", dir)
-    val fromStore = Dedup.incrementalNearDupFromStore(batch, dir, "doc_id", "text")
-      .select("id_a", "id_b", "jaccard")
-      .as[(Long, Long, Double)].collect().toSet
+    val probe = Dedup.incrementalNearDupFromStore(batch, dir, "doc_id", "text")
+    val fromStore = probe.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val live = Dedup.incrementalNearDup(batch, corpus, "doc_id", "text")
       .select("id_a", "id_b", "jaccard")
       .as[(Long, Long, Double)].collect().toSet
     assert(fromStore == live && fromStore.nonEmpty)
+    // the batch side is the only broadcast: the store's tables stream
+    // through the verify, none is collected to build a broadcast
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    def storeScans(ps: Seq[SparkPlan]) = ps.collect {
+      case f: FileSourceScanExec
+        if f.relation.location.rootPaths.exists(_.toString.contains(dir)) => f
+    }
+    val plan = nodes(probe.queryExecution.executedPlan)
+    assert(storeScans(plan).size == 2, "the verify streams shingles and signatures")
+    assert(storeScans(plan.collect { case b: BroadcastExchangeExec => b }
+      .flatMap(nodes)).isEmpty, "no broadcast may be built from a store table")
   }
 
   test("near-dup store compaction: folds committed generations into " +

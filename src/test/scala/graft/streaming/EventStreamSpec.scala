@@ -406,6 +406,124 @@ class EventStreamSpec extends SparkSpec {
     }
   }
 
+  /** Jobs started by each trigger of the near-dup loop, keyed by
+    * (batch id, step): the loop's step label, or "unlabelled" for a job
+    * that carries only the stream's own batch description. A marker job
+    * run after the stream stops flushes the asynchronous listener bus:
+    * events arrive in order, so once the marker's start is seen every
+    * trigger job has been counted. */
+  private def jobsPerStep(run: => Unit): Map[(Long, String), Int] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val label = "near-dup ingest batch (\\d+): (\\w+)".r
+    val streamBatch = "(?s).*\\nbatch = (\\d+)".r
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      run
+      val marker = s"jobsPerStep marker ${System.nanoTime()}"
+      spark.sparkContext.setJobDescription(marker)
+      spark.range(1).count()
+      spark.sparkContext.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!seen.contains(marker) && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains(marker), "listener bus did not drain")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq.collect {
+      case label(b, s) => (b.toLong, s)
+      case streamBatch(b) => (b.toLong, "unlabelled")
+    }
+      .groupBy(identity).map { case (k, v) => k -> v.size }
+  }
+
+  test("streamingNearDupIngest: a plain trigger runs within its job budget, " +
+       "every job labelled by step") {
+    implicit val sqlCtx = spark.sqlContext
+    def doc(p: String): String = (1 to 20).map(i => s"$p$i").mkString(" ")
+    def variant(b: String): String = b.split(" ").dropRight(1).mkString(" ") + " zz"
+    val tmp = java.nio.file.Files.createTempDirectory("ndbudget").toString
+    val (storeDir, keptDir) = (s"$tmp/store", s"$tmp/kept")
+    graft.operators.Dedup.writeNearDupStore(
+      Seq((100L, doc("ja")), (101L, doc("jb"))).toDF("doc_id", "text"),
+      "doc_id", "text", storeDir)
+    val mem = MemoryStream[(Long, String)]
+    val q = streamingNearDupIngest(mem.toDF().toDF("doc_id", "text"),
+        storeDir, keptDir, "doc_id", "text", compactStoreEvery = 2)
+      .option("checkpointLocation", s"$tmp/ckpt").start()
+    // every trigger holds a store dup, a within-batch pair and a novel
+    // doc, so every probe branch runs; trigger 2 folds first
+    val batches = Seq(
+      Seq((1L, variant(doc("ja"))), (2L, doc("jc")), (3L, variant(doc("jc"))), (4L, doc("jd"))),
+      Seq((5L, variant(doc("jb"))), (6L, doc("je")), (7L, variant(doc("je"))), (8L, doc("jf"))),
+      Seq((9L, variant(doc("jd"))), (10L, doc("jg")), (11L, variant(doc("jg"))), (12L, doc("jh"))))
+    val perStep = jobsPerStep {
+      try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+      finally q.stop()
+    }
+    val kept = graft.sources.Sources.readPublished(spark, keptDir)
+      .select("doc_id").as[Long].collect().toSet
+    assert(kept == Set(2L, 4L, 6L, 8L, 10L, 12L), s"survivors: $kept")
+    def total(b: Long) = perStep.collect { case ((`b`, _), n) => n }.sum
+    val table = perStep.toSeq.sorted.map { case ((b, s), n) => s"$b/$s=$n" }
+    info(s"jobs per (batch, step): ${table.mkString(", ")}")
+    Seq(0L, 1L).foreach { b =>
+      assert(total(b) <= 14, s"plain trigger $b ran ${total(b)} jobs: $table")
+      assert(perStep.getOrElse((b, "fold"), 0) == 0, s"plain trigger $b folded")
+    }
+    assert(perStep.getOrElse((2L, "fold"), 0) > 0, s"trigger 2 must fold: $table")
+    assert(Seq("ids", "sign", "probe", "publish", "append")
+      .forall(s => perStep.contains((1L, s))), s"missing steps: $table")
+    assert(!perStep.keys.exists(_._2 == "unlabelled"), s"unlabelled jobs: $table")
+  }
+
+  test("streamingNearDupIngest: String ids and short docs match the Long-id twin") {
+    implicit val sqlCtx = spark.sqlContext
+    def doc(p: String): String = (1 to 20).map(i => s"$p$i").mkString(" ")
+    def variant(b: String): String = b.split(" ").dropRight(1).mkString(" ") + " zz"
+    // install, two plain triggers, a fold trigger (compactStoreEvery 2);
+    // trigger 1 holds a doc shorter than the 3-token shingle and an
+    // empty one: both publish and land no store rows
+    val base = Seq((100L, doc("sa")), (101L, doc("sb")))
+    val batches = Seq(
+      Seq((1L, variant(doc("sa"))), (2L, doc("sc")), (3L, variant(doc("sc")))),
+      Seq((4L, "two words"), (5L, ""), (6L, variant(doc("sb"))), (7L, doc("sd"))),
+      Seq((8L, variant(doc("sd"))), (9L, doc("se")), (10L, variant(doc("se")))))
+    def run(idOf: org.apache.spark.sql.Column): (Set[String], Set[String]) = {
+      val tmp = java.nio.file.Files.createTempDirectory("ndids").toString
+      val (storeDir, keptDir) = (s"$tmp/store", s"$tmp/kept")
+      graft.operators.Dedup.writeNearDupStore(
+        base.toDF("n", "text").select(idOf.as("doc_id"), col("text")),
+        "doc_id", "text", storeDir)
+      val mem = MemoryStream[(Long, String)]
+      val q = streamingNearDupIngest(
+          mem.toDF().toDF("n", "text").select(idOf.as("doc_id"), col("text")),
+          storeDir, keptDir, "doc_id", "text", compactStoreEvery = 2)
+        .option("checkpointLocation", s"$tmp/ckpt").start()
+      try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+      finally q.stop()
+      def ids(df: org.apache.spark.sql.DataFrame, c: String) =
+        df.select(col(c).cast("string")).distinct().as[String].collect().toSet
+      (ids(graft.sources.Sources.readPublished(spark, keptDir), "doc_id"),
+        ids(spark.read.parquet(s"$storeDir/signatures"), "id") ++
+          ids(spark.read.parquet(s"$storeDir/shingles"), "id"))
+    }
+    val (keptL, storeL) = run(col("n"))
+    // zero-padded, so string order is the Long twin's id order and the
+    // within-batch keeper (smallest id) is the same doc
+    val (keptS, storeS) = run(format_string("d%03d", col("n")))
+    def asLong(s: Set[String]) = s.map(_.stripPrefix("d").toLong)
+    assert(keptL.map(_.toLong) == Set(2L, 4L, 5L, 7L, 9L), s"Long survivors: $keptL")
+    assert(asLong(keptS) == keptL.map(_.toLong), s"String survivors: $keptS")
+    assert(storeL.map(_.toLong) == Set(100L, 101L, 2L, 7L, 9L),
+      s"short and empty docs must land no store rows: $storeL")
+    assert(asLong(storeS) == storeL.map(_.toLong), s"String store ids: $storeS")
+  }
+
   test("streamingExactDedupIngest drops exact dups against the growing fp store") {
     implicit val sqlCtx = spark.sqlContext
     val tmp = java.nio.file.Files.createTempDirectory("fpstream").toString
