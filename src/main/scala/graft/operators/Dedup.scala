@@ -1903,33 +1903,45 @@ object Dedup {
   /** Sized (id, hs, sz) hashed-shingle rows of a frame — the shared
     * per-batch table the streaming near-dup loop computes ONCE and
     * feeds to the signing, the store probe, the within-batch pair pass
-    * and the survivor append (the *Sigs seams). */
+    * and the survivor append (the *Sigs seams). Every row carries its
+    * doc's shingle count, so neither the store verify nor the
+    * within-batch pass needs a size lookup; the window is a sort, and
+    * needs no exchange when `shingles` widened the frame by id (every
+    * micro-batch of a few files). */
   private[graft] def hashedShinglesFor(df: DataFrame, idCol: String,
                                        textCol: String, n: Int): DataFrame =
-    withDocSizes(hashedShingles(shingles(df, idCol, textCol, n)))
+    hashedShingles(shingles(df, idCol, textCol, n))
+      .withColumn("sz", count(lit(1)).over(Window.partitionBy("id")))
 
   /** SIZED signature table of a hashed-shingle frame under a store's
     * pinned geometry — the streaming loop's compute-once seam for the
-    * frame [[incrementalNearDupFromStoreSigs]] probes and
-    * [[appendToNearDupStoreSigs]] lands (freeze it before sharing). */
+    * frame the store probe ([[nearDupStoreCandidates]],
+    * [[jaccardVsStore]]) reads and [[appendToNearDupStoreSigs]] lands
+    * (freeze it before sharing). */
   private[graft] def sizedSignaturesFor(h: DataFrame,
                                         meta: Map[String, String]): DataFrame =
     minHashSignaturesHashed(h, meta("numHashes").toInt,
       meta("minhashSeed").toLong, withSize = true)
 
-  /** Shared tail of the Jaccard paths: join per-doc sizes onto the
-    * per-pair shared counts, compute/filter the coefficient. Kept single
-    * so d4 (exact) and d2 (LSH-verified) can never silently diverge —
+  /** The one tail of every Jaccard path: per-pair rows carrying
+    * `shared`, `sz_a` and `sz_b` → the rounded coefficient, filtered to
+    * `threshold`. Kept single so d4 (exact, capped or not), d2
+    * (LSH-verified) and the store probe can never silently diverge —
     * they share one oracle. */
-  private def jaccardFromShared(shared: DataFrame, sizes: DataFrame,
-                                threshold: Double): DataFrame =
-    shared
-      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
+  private def jaccardOf(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs
       .withColumn("jaccard",
         round(col("shared") / (col("sz_a") + col("sz_b") - col("shared")), 6))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
+
+  /** [[jaccardOf]] with both docs' sizes joined from one (id, sz) table. */
+  private def jaccardFromShared(shared: DataFrame, sizes: DataFrame,
+                                threshold: Double): DataFrame =
+    jaccardOf(shared
+      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
+      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b"),
+      threshold)
 
   /** Exact pairwise Jaccard over distinct shingles for all pairs sharing
     * at least one shingle, filtered to `threshold`. Output:
@@ -1957,41 +1969,35 @@ object Dedup {
     * boilerplate-only and sit far below any near-dup threshold (and
     * byte-identical docs are d1's job, run first).
     *
-    * The guard path persists the sized hashed projection (24-byte
-    * rows), keyed by logical plan, so repeated runs over the same input
-    * reuse one copy; one-shot sessions can `spark.catalog.clearCache()`. */
+    * The guard path persists the hashed projection (16-byte rows). The
+    * cache is keyed by logical plan, so repeated runs over the same input
+    * reuse one copy rather than accumulating; long-lived sessions doing
+    * one-shot scans can `spark.catalog.clearCache()`. */
   def jaccardPairs(sh: DataFrame, threshold: Double,
                    maxDocFreq: Option[Int] = None): DataFrame = {
-    val h = withDocSizes(hashedShingles(sh))
+    val h = hashedShingles(sh)
     jaccardPairsHashed(
       if (maxDocFreq.isDefined) h.persist(StorageLevel.MEMORY_AND_DISK) else h,
       threshold, maxDocFreq)
   }
 
-  /** (id, hs) → (id, hs, sz): every row carries its doc's shingle
-    * count, so no size join follows the shared-shingle count. The
-    * window's id partitioning is reused by a later `groupBy("id")`. */
-  private def withDocSizes(h: DataFrame): DataFrame =
-    h.withColumn("sz", count(lit(1)).over(Window.partitionBy("id")))
-
-  /** Exact Jaccard of the pairs in per-shared-shingle rows
-    * (id_a, id_b, sz_a, sz_b): one aggregation, sizes in the key. */
-  private def jaccardFromSizedRows(rows: DataFrame, threshold: Double): DataFrame =
-    rows.groupBy("id_a", "id_b", "sz_a", "sz_b").agg(count(lit(1)).as("shared"))
-      .withColumn("jaccard",
-        round(col("shared") / (col("sz_a") + col("sz_b") - col("shared")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-
-  /** The uncapped plan over sized rows ([[withDocSizes]]): one
-    * hash-bucket self-join + one per-pair count. */
-  private def jaccardAllPairs(h: DataFrame)(threshold: Double): DataFrame =
-    jaccardFromSizedRows(
-      h.as("a").join(h.as("b"),
-          col("a.hs") === col("b.hs") && col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          col("a.sz").as("sz_a"), col("b.sz").as("sz_b")),
+  /** The uncapped plan: one hash-bucket self-join + per-pair count.
+    * Sized rows ([[hashedShinglesFor]]) carry both docs' sizes through
+    * the count; plain (id, hs) rows take them from a partial-aggregated
+    * `groupBy(id)`, whose shuffle carries one row per doc per task. */
+  private def jaccardAllPairs(h: DataFrame)(threshold: Double): DataFrame = {
+    val sized = h.columns.contains("sz")
+    val keys = Seq(col("a.id").as("id_a"), col("b.id").as("id_b")) ++
+      (if (sized) Seq(col("a.sz").as("sz_a"), col("b.sz").as("sz_b")) else Nil)
+    val shared = h.as("a")
+      .join(h.as("b"),
+        col("a.hs") === col("b.hs") && col("a.id") < col("b.id"))
+      .groupBy(keys: _*)
+      .agg(count(lit(1)).as("shared"))
+    if (sized) jaccardOf(shared, threshold)
+    else jaccardFromShared(shared, h.groupBy("id").agg(count(lit(1)).as("sz")),
       threshold)
+  }
 
   /** Active-guard plan: candidate pairs AND their cold-shared counts come
     * from ONE self-join over cold postings (df <= cap bounds every join
@@ -2029,14 +2035,11 @@ object Dedup {
         col("p.id_b") === col("y.id") && col("x.hs") === col("y.hs"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("hot_shared"))
-    bounded
+    jaccardOf(bounded
       .join(hotShared, Seq("id_a", "id_b"), "left")
       .na.fill(0L, Seq("hot_shared"))
-      .withColumn("shared", col("cold_shared") + col("hot_shared"))
-      .withColumn("jaccard",
-        round(col("shared") / (col("sz_a") + col("sz_b") - col("shared")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+      .withColumn("shared", col("cold_shared") + col("hot_shared")),
+      threshold)
   }
 
   /** Candidate pairs sharing at least one shingle with document frequency
@@ -2076,38 +2079,6 @@ object Dedup {
         col("id_b") === col("b.id") && col("h_a") === col("b.hs"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("shared"))
     jaccardFromShared(shared, sizes, threshold)
-  }
-
-  /** Exact Jaccard of FROZEN cross-set candidate pairs (id_a from the
-    * sized batch rows `hA`, the one broadcast; id_b from the store,
-    * whose shingle and signature tables stream through, pruned to the
-    * candidates). Store sizes are the signature table's `sz`, carried to
-    * each pair's shared-shingle rows by the window exchange that also
-    * feeds the per-pair count: the verify is one exchange. Same rows as
-    * jaccardForHashed over hA ∪ hC. */
-  private def jaccardCrossHashed(hA: DataFrame, hC: DataFrame,
-                                 sizesC: DataFrame,
-                                 candidates: Seq[(Any, Any)],
-                                 threshold: Double): DataFrame = {
-    val idType = hA.schema("id").dataType
-    val storeIds = candidates.map(_._2).distinct
-    val isCandidate = struct(col("id_a"), col("id_b")).isin(candidates.map {
-      case (a, b) => struct(lit(a).as("id_a"), lit(b).as("id_b"))
-    }: _*)
-    val sharedRows = hC.filter(col("id").isin(storeIds: _*))
-      .select(col("id").as("id_b"), col("hs"))
-      .join(broadcast(hA), "hs")
-      .select(col("id").as("id_a"), col("id_b"), col("sz").as("sz_a"),
-        lit(null).cast("long").as("sz_b"))
-      .filter(isCandidate)
-    val sizeRows = sizesC.filter(col("id").isin(storeIds: _*))
-      .select(lit(null).cast(idType).as("id_a"), col("id").as("id_b"),
-        lit(null).cast("long").as("sz_a"), col("sz").as("sz_b"))
-    jaccardFromSizedRows(
-      sharedRows.unionByName(sizeRows)
-        .withColumn("sz_b", max("sz_b").over(Window.partitionBy("id_b")))
-        .filter(col("id_a").isNotNull),
-      threshold)
   }
 
   /** MinHash signatures: `numHashes` affine transforms of xxhash64(shingle),
@@ -2418,11 +2389,14 @@ object Dedup {
                                      dir: String, batchId: Long,
                                      meta: Map[String, String]): Unit = {
     // no rebalance: a generation lands as its writer's partitions, one
-    // scan-and-write job per table. Measured on the 100-doc streaming
-    // append (perfbench dedup_ingest, 4 cores): the rebalance exchange
-    // cost three jobs per trigger and a slower median trigger for
-    // fewer, not smaller, files — and the in-loop fold re-packs the
-    // small generations anyway
+    // scan-and-write job per table. The trade-off, measured on the
+    // 100-doc streaming append (perfbench dedup_ingest, 4 cores, a fold
+    // every 3 triggers): the rebalance exchange cost three jobs per
+    // trigger and a slower median trigger, and without it a generation
+    // lands up to one file per writer task instead of one (store files
+    // 50 → 92 there). Until a fold (compactNearDupStore) re-packs them,
+    // every later probe lists and opens those files; a stream that never
+    // folds (compactStoreEvery = 0) keeps them all
     graft.core.Par.run(
       () => h.write.mode("overwrite")
         .parquet(s"$dir/shingles/batch=$batchId"),
@@ -2501,7 +2475,8 @@ object Dedup {
     * (spec-pinned).
     *
     * Cache policy: the batch projection is persisted (it feeds the
-    * signatures AND the exact-Jaccard verify). Like the rest of the
+    * signatures AND the exact-Jaccard verify), and so are the candidate
+    * pairs ([[nearDupStoreCandidates]]). Like the rest of the
     * dedup family the blocks are keyed by logical plan and reused
     * across calls on the same inputs; one-shot sessions reclaim them
     * with spark.catalog.clearCache() (NOTES.md "Cache policy in dedup
@@ -2513,38 +2488,78 @@ object Dedup {
     val hB = hashedShinglesFor(batch, idCol, textCol,
         meta("shingleSize").toInt)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    incrementalNearDupFromStoreSigs(hB,
-      sizedSignaturesFor(hB, meta).localCheckpoint(), dir, meta, threshold)
+    // persisted and materialized, not checkpointed: the planner then
+    // sizes the band-key join by sigB's real size and builds it on the
+    // smaller side (a checkpoint would carry the minhash aggregate's
+    // estimate, many times the real size)
+    val sigB = sizedSignaturesFor(hB, meta).persist(StorageLevel.MEMORY_AND_DISK)
+    sigB.rdd.count()
+    jaccardVsStore(hB, nearDupStoreCandidates(sigB, dir, meta), dir,
+      threshold)
   }
 
-  /** The band-key probe from caller-held sized batch shingles `hB`
-    * ([[hashedShinglesFor]], persisted) and their FROZEN sized
-    * signatures under a `meta` from [[openNearDupStore]] — also the
-    * streaming loop's seam: the same sigB feeds the survivor append.
-    * Only the batch side is broadcast: its band keys meet the at-rest
-    * band-key table on (band, bh), and the candidate pairs are FROZEN
-    * on the driver (one collect, deduplicated there rather than by a
-    * shuffle) for [[jaccardCrossHashed]]. Store tables are read with
-    * pinned schemas, so a probe runs no schema-inference job. */
-  private[graft] def incrementalNearDupFromStoreSigs(
-      hB: DataFrame, sigB: DataFrame, dir: String, meta: Map[String, String],
-      threshold: Double): DataFrame = {
-    val spark = hB.sparkSession
-    val idType = hB.schema("id").dataType
-    def store(table: String, cols: (String, DataType)*): DataFrame = spark.read
-      .schema(StructType(cols.map { case (n, t) => StructField(n, t) }))
+  /** A store table read with a pinned schema, so no probe runs a
+    * parquet schema-inference job. */
+  private def storeTable(spark: org.apache.spark.sql.SparkSession,
+                         dir: String, table: String,
+                         cols: (String, DataType)*): DataFrame =
+    spark.read.schema(StructType(cols.map { case (n, t) => StructField(n, t) }))
       .parquet(s"$dir/$table")
-    val candidates = store("bandkeys",
-        "band" -> IntegerType, "bh" -> IntegerType, "id" -> idType)
-      .join(broadcast(bandBuckets(sigB, meta("numHashes").toInt,
-        meta("bands").toInt).withColumnRenamed("id", "id_a")), Seq("band", "bh"))
-      .select(col("id_a"), col("id")).collect()
-      .map(r => (r.get(0), r.get(1))).distinct.toSeq
-    // no candidates: the empty IN lists fold both store scans away
-    jaccardCrossHashed(hB,
-      store("shingles", "id" -> idType, "hs" -> LongType),
-      store("signatures", "id" -> idType, "sz" -> LongType),
-      candidates, threshold)
+
+  /** The probe's candidate pairs: (id_a, id_b) for every band key of
+    * the FROZEN sized batch signatures `sigB` (under a `meta` from
+    * [[openNearDupStore]]) that meets the at-rest band-key table on
+    * (band, bh). A pair meeting in several bands repeats; the verify
+    * drops the repeats in the exchange it needs anyway, so no
+    * `distinct` shuffle runs here. PERSISTED AND MATERIALIZED, so the
+    * planner sizes the verify's join by their real size (a frozen
+    * checkpoint would carry the join's product-sized estimate): a small
+    * candidate set is broadcast, a large one shuffled, none collected
+    * to the driver. No join carries a broadcast hint: each builds on
+    * its smaller side, so a 100-doc batch is broadcast against a large
+    * store and a large corpus streams against a small eval-suite store.
+    * The caller unpersists them once the verify's action is done (the
+    * streaming loop) or leaves them to the dedup family's cache policy. */
+  private[graft] def nearDupStoreCandidates(sigB: DataFrame, dir: String,
+                                            meta: Map[String, String]): DataFrame = {
+    val candidates = bandBuckets(sigB, meta("numHashes").toInt,
+        meta("bands").toInt)
+      .select(col("band"), col("bh"), col("id").as("id_a"))
+      .join(storeTable(sigB.sparkSession, dir, "bandkeys",
+          "band" -> IntegerType, "bh" -> IntegerType,
+          "id" -> sigB.schema("id").dataType)
+        .withColumnRenamed("id", "id_b"), Seq("band", "bh"))
+      .select("id_a", "id_b")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // an RDD count builds the cache without Dataset.count's aggregate
+    // stage: one job fewer
+    candidates.rdd.count()
+    candidates
+  }
+
+  /** Exact Jaccard of the store candidates (id_a from the sized batch
+    * rows `hB`, id_b from the store). The store's shingle table streams
+    * through a join with the candidates, which keeps only candidate
+    * docs; ONE exchange by pair then serves three steps: it drops the
+    * repeats of a pair that met in several bands, sizes each store doc
+    * by a window over its rows, and feeds the per-pair count. So the
+    * store side needs no size lookup and its signature table is not
+    * read. Same rows as jaccardForHashed over hB ∪ the store's
+    * shingles. */
+  private[graft] def jaccardVsStore(hB: DataFrame, candidates: DataFrame,
+                                    dir: String, threshold: Double): DataFrame = {
+    val storeRows = storeTable(hB.sparkSession, dir, "shingles",
+        "id" -> hB.schema("id").dataType, "hs" -> LongType)
+      .withColumnRenamed("id", "id_b")
+      .join(candidates, "id_b")
+      .repartition(col("id_a"), col("id_b"))
+      .dropDuplicates("id_a", "id_b", "hs")
+      .withColumn("sz_b", count(lit(1)).over(Window.partitionBy("id_a", "id_b")))
+    jaccardOf(storeRows
+      .join(hB.select(col("id").as("id_a"), col("hs"), col("sz").as("sz_a")),
+        Seq("id_a", "hs"))
+      .groupBy("id_a", "id_b", "sz_a", "sz_b").agg(count(lit(1)).as("shared")),
+      threshold)
   }
 
   /** True ⇔ the corpus is small enough that the exact all-shared-shingle
@@ -2603,7 +2618,7 @@ object Dedup {
         minHashSignaturesHashed(plain, numHashes, seed), numHashes, bands), threshold)
     }
 
-  /** [[jaccardPairs]] over sized (id, hs, sz) rows — the caller
+  /** [[jaccardPairs]] over hashed rows, plain or sized — the caller
     * persists them when the guard is armed (its stats pass and the plan
     * it picks both read `h`). */
   private def jaccardPairsHashed(h: DataFrame, threshold: Double,

@@ -297,42 +297,61 @@ object EventStream {
         def step(name: String): Unit =
           sc.setJobDescription(s"near-dup ingest batch $batchId: $name")
         try {
-          step("ids")
-          // ONE action gates the empty batch, sizes the within-batch pass
-          // and FREEZES the batch's ids (the drop set is a subset of them)
-          val batchIds = batch.select(idCol).collect().map(_.get(0))
+          step("fold")
+          // in-loop store maintenance, BEFORE this trigger touches the
+          // store: fold generations ≤ batchId — those came from
+          // triggers that have committed (trigger N starting means
+          // N−1's checkpoint committed), so no replay can ever
+          // re-append a folded generation and duplicate its shingle
+          // rows. This trigger's own generation (batchId + 1, possibly
+          // half-landed by a crashed prior attempt) stays unfolded by
+          // the bound. Best-effort like the exact loop's slot: a
+          // maintenance failure must not fail a data trigger.
+          if (compactStoreEvery > 0 && batchId > 0 &&
+              batchId % compactStoreEvery == 0)
+            try Dedup.compactNearDupStore(spark, storeDir,
+              maxBatchId = batchId)
+            catch {
+              case scala.util.control.NonFatal(e) =>
+                System.err.println(
+                  s"[graft] near-dup store compaction of $storeDir " +
+                    s"failed (batch $batchId, retried at the next " +
+                    s"qualifying trigger): ${e.getMessage}")
+            }
+          // only blocks THIS batch persists are released at the end, so
+          // a co-resident batch job's persists survive
+          val preexisting = sc.getPersistentRDDs.keySet
+          // the store is opened once per trigger, AFTER the maintenance
+          // slot (which finishes a crashed swap) and before any store
+          // file is read. The meta pins the shingle geometry, and the
+          // WITHIN-batch judgment uses the same parameters as the
+          // vs-store one, or two docs' dup verdict would depend on
+          // whether they arrived in one micro-batch or two.
+          val meta = Dedup.openNearDupStore(spark, storeDir)
+          step("sign")
+          // ONE tokenize → gram → hash pass and ONE sized minhash
+          // aggregation per trigger, shared by the probe and the
+          // survivor append. hB reads the raw batch only and sigB is
+          // frozen, so neither can be recomputed against the store.
+          val hB = Dedup.hashedShinglesFor(batch, idCol, textCol,
+              meta("shingleSize").toInt)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          // ONE action FREEZES, on the driver, the batch's signatures (a
+          // row per doc that has shingles) and ALL its ids (a doc too
+          // short to shingle has no signature but is published): the ids
+          // gate the empty batch, size the within-batch pass and bound
+          // the drop set. A local sigB carries its exact size, so the
+          // probe's band-key join broadcasts this side, never the
+          // store's band keys
+          val sigs = Dedup.sizedSignaturesFor(hB, meta)
+          val (sigRows, idRows) = sigs
+            .unionByName(batch.select(col(idCol).as("id")),
+              allowMissingColumns = true)
+            .collect().partition(r => !r.isNullAt(r.fieldIndex("sz")))
+          val batchIds = idRows.map(_.get(0))
           if (batchIds.nonEmpty) {
-            step("fold")
-            // in-loop store maintenance, BEFORE this trigger touches the
-            // store: fold generations ≤ batchId — those came from
-            // triggers that have committed (trigger N starting means
-            // N−1's checkpoint committed), so no replay can ever
-            // re-append a folded generation and duplicate its shingle
-            // rows. This trigger's own generation (batchId + 1, possibly
-            // half-landed by a crashed prior attempt) stays unfolded by
-            // the bound. Best-effort like the exact loop's slot: a
-            // maintenance failure must not fail a data trigger.
-            if (compactStoreEvery > 0 && batchId > 0 &&
-                batchId % compactStoreEvery == 0)
-              try Dedup.compactNearDupStore(spark, storeDir,
-                maxBatchId = batchId)
-              catch {
-                case scala.util.control.NonFatal(e) =>
-                  System.err.println(
-                    s"[graft] near-dup store compaction of $storeDir " +
-                      s"failed (batch $batchId, retried at the next " +
-                      s"qualifying trigger): ${e.getMessage}")
-              }
-            // only blocks THIS batch persists are released at the end, so
-            // a co-resident batch job's persists survive
-            val preexisting = sc.getPersistentRDDs.keySet
-            // the store is opened once per trigger, AFTER the maintenance
-            // slot (which finishes a crashed swap) and before any store
-            // file is read. The meta pins the shingle geometry, and the
-            // WITHIN-batch judgment uses the same parameters as the
-            // vs-store one, or two docs' dup verdict would depend on
-            // whether they arrived in one micro-batch or two.
-            val meta = Dedup.openNearDupStore(spark, storeDir)
+            val sigB = spark.createDataFrame(
+              java.util.Arrays.asList(sigRows: _*), sigs.schema)
             // replay guard — a manifest entry for this batch means a prior
             // attempt fully published it. Re-probing is WRONG there: the
             // store may already hold the batch's own shingles (crash
@@ -341,15 +360,6 @@ object EventStream {
             // batch's fingerprints. The as-published batch IS the kept set.
             val alreadyPublished = graft.sources.Sources
               .publishedBatches(spark, keptDir).contains(batchId + 1)
-            step("sign")
-            // ONE tokenize → gram → hash pass and ONE sized minhash
-            // aggregation per trigger, shared by the probe and the
-            // survivor append. hB reads the raw batch only and sigB is
-            // frozen, so neither can be recomputed against the store.
-            val hB = Dedup.hashedShinglesFor(batch, idCol, textCol,
-                meta("shingleSize").toInt)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            val sigB = Dedup.sizedSignaturesFor(hB, meta).localCheckpoint()
             step("probe")
             // the drop set is FROZEN on the driver before the first write:
             // the publish and the append slice the batch by it, so the
@@ -362,14 +372,17 @@ object EventStream {
               else {
                 // vs the landed corpus, and within the batch (keep the
                 // smallest id of each near-dup pair): one action
-                val vsStore = Dedup.incrementalNearDupFromStoreSigs(
-                  hB, sigB, storeDir, meta, threshold)
+                val candidates = Dedup.nearDupStoreCandidates(sigB,
+                  storeDir, meta)
+                val vsStore = Dedup.jaccardVsStore(hB, candidates,
+                  storeDir, threshold)
                 val selfPairs = Dedup.nearDupPairsHashed(hB,
                   batchIds.length, threshold = threshold,
                   numHashes = meta("numHashes").toInt)
-                vsStore.select(col("id_a").as("id"))
+                try vsStore.select(col("id_a").as("id"))
                   .unionByName(selfPairs.select(col("id_b").as("id")))
                   .collect().map(_.get(0)).toSet
+                finally candidates.unpersist(blocking = false)
               }
             def kept(id: String) = !col(id).isin(dropIds.toSeq: _*)
             step("publish")
@@ -385,10 +398,10 @@ object EventStream {
             Dedup.appendToNearDupStoreSigs(
               hB.select("id", "hs").filter(kept("id")), sigB.filter(kept("id")),
               storeDir, batchId + 1, meta)
-            hB.unpersist(blocking = false)
-            sc.getPersistentRDDs.foreach { case (rddId, rdd) =>
-              if (!preexisting.contains(rddId)) rdd.unpersist(blocking = false)
-            }
+          }
+          hB.unpersist(blocking = false)
+          sc.getPersistentRDDs.foreach { case (rddId, rdd) =>
+            if (!preexisting.contains(rddId)) rdd.unpersist(blocking = false)
           }
         } finally sc.setJobDescription(streamDescription)
     }

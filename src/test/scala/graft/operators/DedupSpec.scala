@@ -3,6 +3,10 @@ package graft.operators
 import graft.SparkSpec
 import graft.core.Tables
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -544,31 +548,75 @@ class DedupSpec extends SparkSpec {
     val batch = docs.filter($"doc_id" % 5 === 0)
     val corpus = docs.filter($"doc_id" % 5 =!= 0)
     Dedup.writeNearDupStore(corpus, "doc_id", "text", dir)
-    val probe = Dedup.incrementalNearDupFromStore(batch, dir, "doc_id", "text")
-    val fromStore = probe.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val fromStore = Dedup.incrementalNearDupFromStore(batch, dir, "doc_id", "text")
+      .select("id_a", "id_b", "jaccard")
+      .as[(Long, Long, Double)].collect().toSet
     val live = Dedup.incrementalNearDup(batch, corpus, "doc_id", "text")
       .select("id_a", "id_b", "jaccard")
       .as[(Long, Long, Double)].collect().toSet
     assert(fromStore == live && fromStore.nonEmpty)
-    // the batch side is the only broadcast: the store's tables stream
-    // through the verify, none is collected to build a broadcast
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => nodes(q.plan)
-      case _ => p.children.flatMap(nodes)
+    // a batch far smaller than the store (the streaming shape): the
+    // store's band keys and shingles stream through (its signature table
+    // is not read); only the batch side and the candidate pairs are
+    // small enough to be broadcast, so no broadcast holds store rows
+    val small = Dedup.incrementalNearDupFromStore(
+      docs.filter($"doc_id" % 50 === 0), dir, "doc_id", "text")
+    small.collect()
+    val plan = planNodes(small.queryExecution.executedPlan, intoCache = true)
+    assert(storeScans(plan, dir).map(_.relation.location.rootPaths.head.getName)
+      .sorted == Seq("bandkeys", "shingles"), "band keys and shingles, once each")
+    assert(plan.collect { case b: BroadcastExchangeExec => b }
+      .forall(b => storeScans(planNodes(b, intoCache = false), dir).isEmpty),
+      "no broadcast may be built from a store table")
+  }
+
+  /** A physical plan's nodes, through adaptive stages and, with
+    * `intoCache`, into the plans of persisted frames it reads. */
+  private def planNodes(p: SparkPlan, intoCache: Boolean): Seq[SparkPlan] =
+    p +: (p match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan, intoCache)
+      case q: QueryStageExec => planNodes(q.plan, intoCache)
+      case m: InMemoryTableScanExec if intoCache =>
+        planNodes(m.relation.cachedPlan, intoCache)
+      case _ => p.children.flatMap(planNodes(_, intoCache))
     })
-    def storeScans(ps: Seq[SparkPlan]) = ps.collect {
+
+  private def storeScans(ps: Seq[SparkPlan], dir: String): Seq[FileSourceScanExec] =
+    ps.collect {
       case f: FileSourceScanExec
         if f.relation.location.rootPaths.exists(_.toString.contains(dir)) => f
     }
-    val plan = nodes(probe.queryExecution.executedPlan)
-    assert(storeScans(plan).size == 2, "the verify streams shingles and signatures")
-    assert(storeScans(plan.collect { case b: BroadcastExchangeExec => b }
-      .flatMap(nodes)).isEmpty, "no broadcast may be built from a store table")
+
+  test("the near-dup store probes force no broadcast: with broadcast " +
+       "joins off they plan none and find the same rows") {
+    // a probing side above the broadcast threshold must stream, not be
+    // broadcast — the decontamination probe's batch is a whole corpus
+    val dir = java.nio.file.Files.createTempDirectory("ndnobc").toString
+    val docs = Tables.documents(spark, sf)
+    val batch = docs.filter($"doc_id" % 5 === 0)
+    val corpus = docs.filter($"doc_id" % 5 =!= 0)
+    Dedup.writeNearDupStore(corpus, "doc_id", "text", dir)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val probes = Seq(
+      () => Dedup.incrementalNearDupFromStore(batch, dir, "doc_id", "text"),
+      () => Dedup.fuzzyDecontaminateFromStore(batch, dir, "doc_id", "text"))
+    val expected = probes.map(p => rows(p()))
+    spark.catalog.clearCache()
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    try {
+      keys.foreach(spark.conf.set(_, "-1"))
+      probes.zip(expected).foreach { case (p, want) =>
+        val df = p()
+        assert(rows(df) == want && want.nonEmpty)
+        val bcasts = planNodes(df.queryExecution.executedPlan, intoCache = true)
+          .collect { case b: BroadcastExchangeExec => b }
+        assert(bcasts.isEmpty, s"forced broadcasts: ${bcasts.map(_.child.nodeName)}")
+      }
+    } finally {
+      keys.foreach(spark.conf.unset)
+      spark.catalog.clearCache()
+    }
   }
 
   test("near-dup store compaction: folds committed generations into " +
