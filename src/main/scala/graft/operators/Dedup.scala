@@ -1903,11 +1903,8 @@ object Dedup {
   /** Sized (id, hs, sz) hashed-shingle rows of a frame — the shared
     * per-batch table the streaming near-dup loop computes ONCE and
     * feeds to the signing, the store probe, the within-batch pair pass
-    * and the survivor append (the *Sigs seams). Every row carries its
-    * doc's shingle count, so neither the store verify nor the
-    * within-batch pass needs a size lookup; the window is a sort, and
-    * needs no exchange when `shingles` widened the frame by id (every
-    * micro-batch of a few files). */
+    * and the survivor append (the *Sigs seams). Rows carry their doc's
+    * size (a sort, no exchange, once `shingles` widened the frame by id). */
   private[graft] def hashedShinglesFor(df: DataFrame, idCol: String,
                                        textCol: String, n: Int): DataFrame =
     hashedShingles(shingles(df, idCol, textCol, n))
@@ -1923,11 +1920,9 @@ object Dedup {
     minHashSignaturesHashed(h, meta("numHashes").toInt,
       meta("minhashSeed").toLong, withSize = true)
 
-  /** The one tail of every Jaccard path: per-pair rows carrying
-    * `shared`, `sz_a` and `sz_b` → the rounded coefficient, filtered to
-    * `threshold`. Kept single so d4 (exact, capped or not), d2
-    * (LSH-verified) and the store probe can never silently diverge —
-    * they share one oracle. */
+  /** The one tail of every Jaccard path, (shared, sz_a, sz_b) → the
+    * rounded coefficient ≥ `threshold`: d4, d2 (LSH-verified) and the
+    * store probe share one oracle, so they can never silently diverge. */
   private def jaccardOf(pairs: DataFrame, threshold: Double): DataFrame =
     pairs
       .withColumn("jaccard",
@@ -1982,9 +1977,8 @@ object Dedup {
   }
 
   /** The uncapped plan: one hash-bucket self-join + per-pair count.
-    * Sized rows ([[hashedShinglesFor]]) carry both docs' sizes through
-    * the count; plain (id, hs) rows take them from a partial-aggregated
-    * `groupBy(id)`, whose shuffle carries one row per doc per task. */
+    * Sized rows ([[hashedShinglesFor]]) carry the sizes through the
+    * count; plain rows take them from a partial-aggregated groupBy. */
   private def jaccardAllPairs(h: DataFrame)(threshold: Double): DataFrame = {
     val sized = h.columns.contains("sz")
     val keys = Seq(col("a.id").as("id_a"), col("b.id").as("id_b")) ++
@@ -2253,7 +2247,8 @@ object Dedup {
     // pressure the maintenance matrix exists to relieve.
     //
     // The sized signature table (sz = per-doc shingle count on the same
-    // agg pass) is what lets probes skip the O(store) sizes aggregate.
+    // agg pass) is part of the v4 layout; probes do not read it — they
+    // size the candidate store docs from their shingle rows.
     val sigs = minHashSignaturesHashed(h, numHashes, seed, withSize = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
     // the three tables are independent given the persisted inputs
@@ -2388,15 +2383,12 @@ object Dedup {
                                      h: DataFrame, sigs: DataFrame,
                                      dir: String, batchId: Long,
                                      meta: Map[String, String]): Unit = {
-    // no rebalance: a generation lands as its writer's partitions, one
-    // scan-and-write job per table. The trade-off, measured on the
-    // 100-doc streaming append (perfbench dedup_ingest, 4 cores, a fold
-    // every 3 triggers): the rebalance exchange cost three jobs per
-    // trigger and a slower median trigger, and without it a generation
-    // lands up to one file per writer task instead of one (store files
-    // 50 → 92 there). Until a fold (compactNearDupStore) re-packs them,
-    // every later probe lists and opens those files; a stream that never
-    // folds (compactStoreEvery = 0) keeps them all
+    // no rebalance, measured on the 100-doc streaming append (perfbench
+    // dedup_ingest, 4 cores, a fold every 3 triggers): it cost three
+    // jobs and a slower median trigger. The price: a generation lands up
+    // to one file per writer task (store files 50 → 92 there), which
+    // every probe lists until a fold re-packs them — never, in a stream
+    // with compactStoreEvery = 0
     graft.core.Par.run(
       () => h.write.mode("overwrite")
         .parquet(s"$dir/shingles/batch=$batchId"),
@@ -2454,8 +2446,8 @@ object Dedup {
                           maxBatchId: Long = Long.MaxValue): Unit =
     StoreMaintenance.compactStore(spark, dir, nearDupStoreVersion,
         "writeNearDupStore", maxBatchId) { meta =>
-      // the fold keeps the per-doc shingle count on the signature
-      // table, or probes lose their size lookup
+      // the fold keeps the v4 layout's per-doc shingle count on the
+      // signature table
       val sigCols = (0 until meta("numHashes").toInt).map(i => s"mh_$i") :+ "sz"
       Seq(
         StoreMaintenance.TableSpec("shingles", _.select("id", "hs")),
@@ -2488,64 +2480,51 @@ object Dedup {
     val hB = hashedShinglesFor(batch, idCol, textCol,
         meta("shingleSize").toInt)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // persisted and materialized, not checkpointed: the planner then
-    // sizes the band-key join by sigB's real size and builds it on the
-    // smaller side (a checkpoint would carry the minhash aggregate's
-    // estimate, many times the real size)
+    // materialized, so the band-key join is planned on sigB's real size
     val sigB = sizedSignaturesFor(hB, meta).persist(StorageLevel.MEMORY_AND_DISK)
     sigB.rdd.count()
     jaccardVsStore(hB, nearDupStoreCandidates(sigB, dir, meta), dir,
       threshold)
   }
 
-  /** A store table read with a pinned schema, so no probe runs a
-    * parquet schema-inference job. */
+  /** A store table read with a pinned schema: no schema-inference job. */
   private def storeTable(spark: org.apache.spark.sql.SparkSession,
                          dir: String, table: String,
                          cols: (String, DataType)*): DataFrame =
     spark.read.schema(StructType(cols.map { case (n, t) => StructField(n, t) }))
       .parquet(s"$dir/$table")
 
-  /** The probe's candidate pairs: (id_a, id_b) for every band key of
-    * the FROZEN sized batch signatures `sigB` (under a `meta` from
-    * [[openNearDupStore]]) that meets the at-rest band-key table on
-    * (band, bh). A pair meeting in several bands repeats; the verify
-    * drops the repeats in the exchange it needs anyway, so no
-    * `distinct` shuffle runs here. PERSISTED AND MATERIALIZED, so the
-    * planner sizes the verify's join by their real size (a frozen
-    * checkpoint would carry the join's product-sized estimate): a small
-    * candidate set is broadcast, a large one shuffled, none collected
-    * to the driver. No join carries a broadcast hint: each builds on
-    * its smaller side, so a 100-doc batch is broadcast against a large
-    * store and a large corpus streams against a small eval-suite store.
-    * The caller unpersists them once the verify's action is done (the
-    * streaming loop) or leaves them to the dedup family's cache policy. */
+  /** The probe's candidate pairs (id_a, id_b): band keys of the frozen
+    * batch signatures `sigB` that meet the store's band keys. A pair
+    * meeting in several bands repeats; the verify drops repeats in an
+    * exchange it needs anyway. PERSISTED AND MATERIALIZED, so the verify
+    * is planned on their real size (a checkpoint would carry the join's
+    * product-sized estimate): small candidates are broadcast, large ones
+    * shuffled, none collected. No join has a broadcast hint: a 100-doc
+    * batch is broadcast against a large store, a corpus streams against
+    * a small eval-suite store. The caller unpersists them, or leaves
+    * them to the dedup family's cache policy. */
   private[graft] def nearDupStoreCandidates(sigB: DataFrame, dir: String,
                                             meta: Map[String, String]): DataFrame = {
     val candidates = bandBuckets(sigB, meta("numHashes").toInt,
-        meta("bands").toInt)
-      .select(col("band"), col("bh"), col("id").as("id_a"))
+        meta("bands").toInt).withColumnRenamed("id", "id_a")
       .join(storeTable(sigB.sparkSession, dir, "bandkeys",
           "band" -> IntegerType, "bh" -> IntegerType,
           "id" -> sigB.schema("id").dataType)
         .withColumnRenamed("id", "id_b"), Seq("band", "bh"))
       .select("id_a", "id_b")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // an RDD count builds the cache without Dataset.count's aggregate
-    // stage: one job fewer
+    // an RDD count: one job fewer than Dataset.count's aggregate
     candidates.rdd.count()
     candidates
   }
 
   /** Exact Jaccard of the store candidates (id_a from the sized batch
-    * rows `hB`, id_b from the store). The store's shingle table streams
-    * through a join with the candidates, which keeps only candidate
-    * docs; ONE exchange by pair then serves three steps: it drops the
-    * repeats of a pair that met in several bands, sizes each store doc
-    * by a window over its rows, and feeds the per-pair count. So the
-    * store side needs no size lookup and its signature table is not
-    * read. Same rows as jaccardForHashed over hB ∪ the store's
-    * shingles. */
+    * rows `hB`). The store's shingles stream through a join that keeps
+    * candidate docs; ONE exchange by pair then drops repeated pairs,
+    * sizes each store doc by a window and feeds the per-pair count, so
+    * the signature table is not read. Same rows as jaccardForHashed
+    * over hB ∪ the store's shingles. */
   private[graft] def jaccardVsStore(hB: DataFrame, candidates: DataFrame,
                                     dir: String, threshold: Double): DataFrame = {
     val storeRows = storeTable(hB.sparkSession, dir, "shingles",
@@ -2612,11 +2591,8 @@ object Dedup {
                                         seed: Long = 42L): DataFrame =
     if (exactJaccardAffordable(nDocs, maxExactDocs))
       jaccardPairsHashed(h, threshold, maxDocFreq.filter(_ < nDocs))
-    else {
-      val plain = h.select("id", "hs")
-      jaccardForHashed(plain, lshCandidates(
-        minHashSignaturesHashed(plain, numHashes, seed), numHashes, bands), threshold)
-    }
+    else jaccardForHashed(h, lshCandidates(
+      minHashSignaturesHashed(h, numHashes, seed), numHashes, bands), threshold)
 
   /** [[jaccardPairs]] over hashed rows, plain or sized — the caller
     * persists them when the guard is armed (its stats pass and the plan

@@ -336,13 +336,11 @@ object EventStream {
           val hB = Dedup.hashedShinglesFor(batch, idCol, textCol,
               meta("shingleSize").toInt)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          // ONE action FREEZES, on the driver, the batch's signatures (a
-          // row per doc that has shingles) and ALL its ids (a doc too
-          // short to shingle has no signature but is published): the ids
-          // gate the empty batch, size the within-batch pass and bound
-          // the drop set. A local sigB carries its exact size, so the
-          // probe's band-key join broadcasts this side, never the
-          // store's band keys
+          // ONE action freezes on the driver the batch's signatures and
+          // ALL its ids (a doc too short to shingle has no signature):
+          // the ids gate the empty batch and bound the drop set. A local
+          // sigB has its exact size, so the band-key join broadcasts it,
+          // never the store's band keys
           val sigs = Dedup.sizedSignaturesFor(hB, meta)
           val (sigRows, idRows) = sigs
             .unionByName(batch.select(col(idCol).as("id")),
@@ -361,9 +359,8 @@ object EventStream {
             val alreadyPublished = graft.sources.Sources
               .publishedBatches(spark, keptDir).contains(batchId + 1)
             step("probe")
-            // the drop set is FROZEN on the driver before the first write:
-            // the publish and the append slice the batch by it, so the
-            // probe runs once and no write can recompute it mid-append
+            // the drop set is FROZEN before the first write: the publish and
+            // the append slice by it, so no write can recompute the probe
             val dropIds: Set[Any] =
               if (alreadyPublished)
                 batchIds.toSet -- graft.sources.Sources
