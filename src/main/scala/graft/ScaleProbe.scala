@@ -918,11 +918,12 @@ object ScaleProbe {
               batchId = 99L, idCol = "doc_id")
             batchDocs
           },
-          // round 15: the store is banded + (band, pfx)-partitioned at
-          // rest, so the probe reads only the partitions the batch's
-          // own prefixes can collide in — the formerly store-linear
-          // hash scan now prunes (flat when batch prefixes don't cover
-          // the prefix space; worst-case the old skinny scan)
+          // the store is banded at rest, one flat file set per
+          // generation: the probe is one (band, bk) join against a
+          // pinned-schema scan of every band row, so it is linear in
+          // the landed corpus by design — a prefix prune cannot skip
+          // anything once a batch's keys cover every prefix of every
+          // band, which a batch of more than a few images does
           timed("image_neardup_from_store")(
             Multimodal.incrementalImageNearDup(ppmify(batch),
               s"$tmp/imgnd", maxHamming = 3).count()),

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType}
 import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for a training-data pipeline: exact,
@@ -1910,15 +1910,15 @@ object Dedup {
     hashedShingles(shingles(df, idCol, textCol, n))
       .withColumn("sz", count(lit(1)).over(Window.partitionBy("id")))
 
-  /** SIZED signature table of a hashed-shingle frame under a store's
-    * pinned geometry — the streaming loop's compute-once seam for the
-    * frame the store probe ([[nearDupStoreCandidates]],
-    * [[jaccardVsStore]]) reads and [[appendToNearDupStoreSigs]] lands
-    * (freeze it before sharing). */
-  private[graft] def sizedSignaturesFor(h: DataFrame,
-                                        meta: Map[String, String]): DataFrame =
+  /** Signature table of a hashed-shingle frame under a store's pinned
+    * geometry — the streaming loop's compute-once seam for the frame
+    * the store probe ([[nearDupStoreCandidates]]) bands and
+    * [[appendToNearDupStoreSigs]] lands as band keys (freeze it before
+    * sharing). */
+  private[graft] def signaturesFor(h: DataFrame,
+                                   meta: Map[String, String]): DataFrame =
     minHashSignaturesHashed(h, meta("numHashes").toInt,
-      meta("minhashSeed").toLong, withSize = true)
+      meta("minhashSeed").toLong)
 
   /** The one tail of every Jaccard path, (shared, sz_a, sz_b) → the
     * rounded coefficient ≥ `threshold`: d4, d2 (LSH-verified) and the
@@ -2079,8 +2079,7 @@ object Dedup {
     * min per hash per doc — ONE aggregation pass over the shingle table.
     * Seeded, fully deterministic. */
   private def minHashSignaturesHashed(h: DataFrame, numHashes: Int,
-                                      seed: Long,
-                                      withSize: Boolean = false): DataFrame = {
+                                      seed: Long): DataFrame = {
     // Affine transforms over GF(2^31−1): coefficients < p keep every
     // product < 2^62, so ANSI-mode long arithmetic can't overflow.
     val p = 2147483647L // Mersenne prime 2^31 − 1
@@ -2093,16 +2092,9 @@ object Dedup {
     // transform)
     val hashed = h.select(col("id"),
       col("hs").bitwiseAND(0x3FFFFFFFL).as("h31"))
-    // withSize rides the per-doc shingle count on the SAME aggregation
-    // pass (one row per id already): the at-rest store lands it as a
-    // `sz` column so probes read sizes off a pruned 2-column scan
-    // instead of re-aggregating the whole shingle table per batch
-    // (guide §3 — slim the join inputs; the sizes agg was O(store) per
-    // probe, the one asymptotically wrong term on an unbounded ingest
-    // line)
     val minCols = coeffs.zipWithIndex.map { case ((a, b), i) =>
       min(pmod(col("h31") * a + b, lit(p))).as(s"mh_$i")
-    } ++ (if (withSize) Seq(count(lit(1)).as("sz")) else Nil)
+    }
     hashed.groupBy("id").agg(minCols.head, minCols.tail.toIndexedSeq: _*)
   }
 
@@ -2161,7 +2153,7 @@ object Dedup {
     * |batch| · collision-rate, never |corpus|²; candidates are then
     * exact-Jaccard-verified over the union of the hashed shingle
     * tables. At production scale the corpus side of BOTH tables
-    * (signatures and hashed shingles) is the at-rest store appended at
+    * (band keys and hashed shingles) is the at-rest store appended at
     * ingest — recomputing here stands in for reading it.
     *
     * CONTRACT: batch and corpus ids must be disjoint (they share one id
@@ -2175,23 +2167,14 @@ object Dedup {
                          idCol: String, textCol: String,
                          shingleSize: Int = 3, numHashes: Int = 64,
                          bands: Int = 16, threshold: Double = 0.8): DataFrame = {
-    val hC = hashedShingles(shingles(corpus, idCol, textCol, shingleSize))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    crossNearDup(
-      hashedShingles(shingles(batch, idCol, textCol, shingleSize))
-        .persist(StorageLevel.MEMORY_AND_DISK),
-      hC, minHashSignaturesHashed(hC, numHashes, 42L),
-      numHashes, bands, threshold)
-  }
-
-  /** Shared tail of the incremental paths: batch hashed shingles vs a
-    * corpus given as (hashed shingles, signatures) — live or at-rest. */
-  private def crossNearDup(hB: DataFrame, hC: DataFrame, sigC: DataFrame,
-                           numHashes: Int, bands: Int,
-                           threshold: Double, seed: Long = 42L): DataFrame = {
-    val bB = bandBuckets(minHashSignaturesHashed(hB, numHashes, seed),
-      numHashes, bands)
-    val bC = bandBuckets(sigC, numHashes, bands)
+    def banded(df: DataFrame) = {
+      val h = hashedShingles(shingles(df, idCol, textCol, shingleSize))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      (h, bandBuckets(minHashSignaturesHashed(h, numHashes, 42L),
+        numHashes, bands))
+    }
+    val (hC, bC) = banded(corpus)
+    val (hB, bB) = banded(batch)
     val cands = bB.as("x").join(bC.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
@@ -2200,31 +2183,33 @@ object Dedup {
   }
 
   /** Materialize the at-rest near-dup store for a corpus: the hashed
-    * shingle table and the MinHash signature table, written as parquet
+    * shingle table and the MinHash band-key table, written as parquet
     * under `dir`, plus a `_meta.json` sidecar recording (shingleSize,
-    * numHashes, minhashSeed, formatVersion) — everything a reader must
-    * agree on, because ANY mismatch (4-gram reader on a 3-gram store, a
-    * differently-seeded signer) silently yields near-zero pairs. This is
-    * what turns `incrementalNearDup`'s "recomputing the corpus side
-    * stands in for reading it" into the real production shape —
-    * signatures are computed ONCE at ingest and every later batch reads
-    * them (append a dedup'd batch's own tables with SaveMode.Append to
-    * grow the store). Store rows are 8-byte hashes/ids only — ~10×
-    * lighter than the text. The sidecar goes through the store dir's
-    * Hadoop filesystem so an hdfs://-/s3a://-rooted store keeps its
-    * meta NEXT TO its tables, not on the driver's local disk.
+    * numHashes, minhashSeed, bands, formatVersion) — everything a reader
+    * must agree on, because ANY mismatch (4-gram reader on a 3-gram
+    * store, a differently-seeded signer) silently yields near-zero
+    * pairs. This is what turns `incrementalNearDup`'s "recomputing the
+    * corpus side stands in for reading it" into the real production
+    * shape — signatures are computed ONCE at ingest and every later
+    * batch reads their band keys (append a dedup'd batch's own tables
+    * to grow the store). Store rows are hashes/ids only — ~10× lighter
+    * than the text. The sidecar goes through the store dir's Hadoop
+    * filesystem so an hdfs://-/s3a://-rooted store keeps its meta NEXT
+    * TO its tables, not on the driver's local disk.
     *
-    * Every generation (this install is `batch=0`) also lands its
-    * band-bucket keys as ONE flat file set under
-    * `bandkeys/batch=<id>` — (band, bh, id) rows, ~(4 B + 4 B + 8 B) ×
-    * bands per doc — and probes join their own band keys against it on
-    * (band, bh). The banding geometry is pinned in the sidecar. The
-    * earlier (band, pfx)-partitioned tree (bands · 2^pfxBits directories
-    * per generation) was dropped: its prefix prune never fires on a
-    * batch of more than a few docs — a 100-doc batch misses one of a
-    * band's 4 prefixes with probability ≤ 4·(3/4)^100 ≈ 1e-12 — so every
-    * probe read every directory anyway, while every install, append and
-    * fold paid a 64-way shuffle and 64 directory creates. */
+    * The store holds exactly what its probe reads. Every generation
+    * (this install is `batch=0`) lands its band-bucket keys as ONE flat
+    * file set under `bandkeys/batch=<id>` — (band, bh, id) rows,
+    * ~(4 B + 4 B + 8 B) × bands per doc — and probes join their own band
+    * keys against it on (band, bh), then verify against `shingles`. The
+    * signatures themselves are an in-memory input to the band-key write,
+    * never landed. The earlier (band, pfx)-partitioned tree (one
+    * directory per band and key prefix per generation) was dropped: its
+    * prefix prune never fires on a batch of more than a few docs — a
+    * 100-doc batch misses one of a band's 4 prefixes with probability
+    * ≤ 4·(3/4)^100 ≈ 1e-12 — so every probe read every directory anyway,
+    * while every install, append and fold paid a 64-way shuffle and 64
+    * directory creates. */
   def writeNearDupStore(corpus: DataFrame, idCol: String, textCol: String,
                         dir: String, shingleSize: Int = 3,
                         numHashes: Int = 64, seed: Long = 42L,
@@ -2238,36 +2223,25 @@ object Dedup {
     // replaces batch=0 only — re-installing over a dir that already has
     // append batches keeps them (resuming an ingest line); a true
     // fresh install starts from an empty dir.
-    // REBALANCE before the shingle and signature writes (guide §6): the upstream map
-    // pass runs at core parallelism (shingles' widen), so an unhinted
-    // write would land one tiny file per task per generation — and at
-    // probe time each tiny file is its own scan split. The AQE-managed
+    // REBALANCE before both writes (guide §6): the upstream map pass
+    // runs at core parallelism (shingles' widen), so an unhinted write
+    // would land one tiny file per task per generation — and at probe
+    // time each tiny file is its own scan split. The AQE-managed
     // rebalance writes size-targeted files instead: few per generation
     // here, advisory-sized at cluster scale, deferring the compaction
-    // pressure the maintenance matrix exists to relieve.
+    // pressure the maintenance matrix exists to relieve. The band keys
+    // explode the rebalanced signatures partition by partition.
     //
-    // The sized signature table (sz = per-doc shingle count on the same
-    // agg pass) is part of the v4 layout; probes do not read it — they
-    // size the candidate store docs from their shingle rows.
-    val sigs = minHashSignaturesHashed(h, numHashes, seed, withSize = true)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // the three tables are independent given the persisted inputs
+    // the two tables are independent given the persisted shingles
     // (distinct dirs; the store is not live until _meta.json lands
     // LAST) — overlap their jobs so one write's commit tail backfills
     // the next's scan (guide §2.6)
     graft.core.Par.run(
       () => h.hint("rebalance").write.mode("overwrite")
         .parquet(s"$dir/shingles/batch=0"),
-      () => {
-        sigs.hint("rebalance").write.mode("overwrite")
-          .parquet(s"$dir/signatures/batch=0")
-        // band keys land AFTER the signature write: a candidate implies
-        // its band-key row, which now implies the signature (and its
-        // sz) landed — the inert-orphan classes stay exactly the
-        // documented ones
-        writeBandKeysGeneration(sigs, dir, 0L, numHashes, bands)
-      })
-    sigs.unpersist()
+      () => writeBandKeysGeneration(
+        minHashSignaturesHashed(h, numHashes, seed).hint("rebalance"),
+        dir, 0L, numHashes, bands))
     h.unpersist()
     StoreMaintenance.publishMeta(corpus.sparkSession, dir,
       nearDupStoreVersion,
@@ -2277,13 +2251,14 @@ object Dedup {
         "bands" -> bands.toString))
   }
 
-  /** The near-dup store's layout version — sized signatures plus one
-    * flat band-key file set per generation — shared by
+  /** The near-dup store's layout version — shingles plus one flat
+    * band-key file set per generation, no signature table — shared by
     * [[writeNearDupStore]] and every reader through
-    * [[openNearDupStore]]. An older store (a (band, pfx) band-key
-    * tree, or no band keys at all) is refused, never read: a flat
-    * generation cannot share a table with the tree. */
-  private val nearDupStoreVersion = "4"
+    * [[openNearDupStore]]. An older store (a (band, pfx) band-key tree,
+    * no band keys at all, or v4's signature table beside them) is
+    * refused, never read: one layout per store, so no path half-reads
+    * another's tables. */
+  private val nearDupStoreVersion = "5"
 
   /** [[StoreMaintenance.open]] for the near-dup store: the streaming
     * loop opens once per trigger and hands the meta to the probe and
@@ -2296,13 +2271,13 @@ object Dedup {
   /** Grow the at-rest store with a batch — the other half of the ingest
     * loop `writeNearDupStore` starts: after a batch has been paired
     * against the store (`incrementalNearDupFromStore`) and its true
-    * dups dropped, the SURVIVORS' hashed shingles and signatures are
+    * dups dropped, the SURVIVORS' hashed shingles and band keys are
     * appended so the NEXT batch dedups against corpus ∪ batch. The
     * batch is signed with the STORE's parameters and seed (read from
     * `_meta.json`) — the append is only meaningful if writer and reader
-    * agree, which is exactly what the sidecar pins. Parquet
-    * SaveMode.Append is file-level, so the growth path never rewrites
-    * landed data — O(batch) work per batch regardless of corpus size.
+    * agree, which is exactly what the sidecar pins. The growth path
+    * never rewrites landed data — O(batch) work per batch regardless of
+    * corpus size.
     *
     * IDEMPOTENT PER BATCH at O(batch) cost — no store scan at all:
     * both tables land under `batch=<batchId>` subdirectories with
@@ -2312,16 +2287,15 @@ object Dedup {
     * crash-and-replay interleaving converges by overwrite. This is the
     * design that survives scale review: an earlier guard anti-joined a
     * store id projection per append — O(store) work per batch on the
-    * shingle table, and the cheap signature-table variant left a crash
-    * window where replay duplicated shingle rows (which corrupt every
-    * later jaccard against those docs). A crash BETWEEN the two writes
-    * leaves a batch with shingles but no signatures (or vice versa)
-    * until the replay heals it; both orphan classes are inert — a doc
-    * pairs only when its SIGNATURE row produces a band-bucket
-    * candidate, and candidate verification reads shingles that the
-    * healed batch re-lands. Callers append SURVIVORS of a store
-    * pairing, so cross-batch id overlap is a caller contract, not a
-    * store check. */
+    * shingle table, and a cheaper id-table variant left a crash window
+    * where replay duplicated shingle rows (which corrupt every later
+    * jaccard against those docs). A crash BETWEEN the two writes leaves
+    * a batch with shingles but no band keys (or vice versa) until the
+    * replay heals it; both orphan classes are inert — a doc pairs only
+    * when its BAND-KEY row meets a probe's, and candidate verification
+    * reads shingles that the healed batch re-lands. Callers append
+    * SURVIVORS of a store pairing, so cross-batch id overlap is a
+    * caller contract, not a store check. */
   def appendToNearDupStore(batch: DataFrame, dir: String,
                            idCol: String, textCol: String,
                            batchId: Long): Unit = {
@@ -2338,21 +2312,21 @@ object Dedup {
     // plan-keyed cache entries after each parquet write; a merely
     // persisted `h` would be invalidated by the FIRST write and
     // recomputed against the HALF-WRITTEN store — where the batch doc
-    // now near-dups its own just-landed signature — so the SECOND
-    // write would land zero rows. localCheckpoint truncates the
-    // lineage so both writes emit the same frozen rows.
+    // now near-dups its own just-landed rows — so the SECOND write
+    // would land zero rows. localCheckpoint truncates the lineage so
+    // both writes emit the same frozen rows; the signatures are derived
+    // from the frozen rows, so they need no snapshot of their own.
     val h = hashedShingles(shingles(batch, idCol, textCol,
       meta("shingleSize").toInt)).localCheckpoint()
-    val sigs = sizedSignaturesFor(h, meta).localCheckpoint()
-    appendGenerationTables(spark, h, sigs, dir, batchId, meta)
-    sigs.unpersist()
+    appendGenerationTables(spark, h, signaturesFor(h, meta), dir, batchId,
+      meta)
     h.unpersist()
   }
 
-  /** [[appendToNearDupStore]] from caller-held shingles AND sized
-    * signatures, under a `meta` the caller [[openNearDupStore]]ed in
-    * the same trigger — the streaming loop's share-the-minhash seam:
-    * the probe's frozen sigB, sliced to the survivors, lands directly,
+  /** [[appendToNearDupStore]] from caller-held shingles AND signatures,
+    * under a `meta` the caller [[openNearDupStore]]ed in the same
+    * trigger — the streaming loop's share-the-minhash seam: the probe's
+    * frozen sigB, sliced to the survivors, lands directly as band keys,
     * so the per-trigger minhash aggregation runs ONCE (probe) instead
     * of twice (probe + append). CALLER CONTRACT, replacing the public
     * append's localCheckpoint: both frames must be safe to recompute
@@ -2369,16 +2343,14 @@ object Dedup {
       batchId, meta)
   }
 
-  /** Shared write fan-out of the append paths. `h`/`sigs` must be
-    * frozen or store-lineage-free (see callers). The two lanes run
-    * CONCURRENTLY (guide §2.6); every crash interleaving degrades to
-    * the two documented inert-orphan classes (a batch with shingles
-    * but no signatures pairs nothing until the replay heals it;
-    * signatures/band keys without shingles produce candidates whose
-    * verify finds no shingle rows — dropped until the same replay), so
-    * overlapping them adds NO new crash state. Band keys land strictly
-    * AFTER the signature write: a candidate implies its band-key row,
-    * which implies the signature row (and its sz) landed. */
+  /** Shared write fan-out of the append paths: the shingles and the
+    * band keys of `sigs`. `h`/`sigs` must be frozen or
+    * store-lineage-free (see callers). The two writes run CONCURRENTLY
+    * (guide §2.6); every crash interleaving degrades to the two
+    * documented inert-orphan classes (shingles without band keys pair
+    * nothing; band keys without shingles produce candidates whose
+    * verify finds no shingle rows — both until the replay heals the
+    * generation), so overlapping them adds NO new crash state. */
   private def appendGenerationTables(spark: org.apache.spark.sql.SparkSession,
                                      h: DataFrame, sigs: DataFrame,
                                      dir: String, batchId: Long,
@@ -2392,12 +2364,8 @@ object Dedup {
     graft.core.Par.run(
       () => h.write.mode("overwrite")
         .parquet(s"$dir/shingles/batch=$batchId"),
-      () => {
-        sigs.write.mode("overwrite")
-          .parquet(s"$dir/signatures/batch=$batchId")
-        writeBandKeysGeneration(sigs, dir, batchId,
-          meta("numHashes").toInt, meta("bands").toInt)
-      })
+      () => writeBandKeysGeneration(sigs, dir, batchId,
+        meta("numHashes").toInt, meta("bands").toInt))
     // invalidate cached reads of the store: CacheManager matches plans
     // by ROOT PATH, not file listing, so a store scan persisted by an
     // earlier incrementalNearDupFromStore in this session would keep
@@ -2445,13 +2413,9 @@ object Dedup {
                           dir: String,
                           maxBatchId: Long = Long.MaxValue): Unit =
     StoreMaintenance.compactStore(spark, dir, nearDupStoreVersion,
-        "writeNearDupStore", maxBatchId) { meta =>
-      // the fold keeps the v4 layout's per-doc shingle count on the
-      // signature table
-      val sigCols = (0 until meta("numHashes").toInt).map(i => s"mh_$i") :+ "sz"
+        "writeNearDupStore", maxBatchId) { _ =>
       Seq(
         StoreMaintenance.TableSpec("shingles", _.select("id", "hs")),
-        StoreMaintenance.TableSpec("signatures", _.select("id", sigCols: _*)),
         StoreMaintenance.TableSpec("bandkeys", _.select("band", "bh", "id")))
     }
 
@@ -2481,18 +2445,11 @@ object Dedup {
         meta("shingleSize").toInt)
       .persist(StorageLevel.MEMORY_AND_DISK)
     // materialized, so the band-key join is planned on sigB's real size
-    val sigB = sizedSignaturesFor(hB, meta).persist(StorageLevel.MEMORY_AND_DISK)
+    val sigB = signaturesFor(hB, meta).persist(StorageLevel.MEMORY_AND_DISK)
     sigB.rdd.count()
     jaccardVsStore(hB, nearDupStoreCandidates(sigB, dir, meta), dir,
       threshold)
   }
-
-  /** A store table read with a pinned schema: no schema-inference job. */
-  private def storeTable(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, table: String,
-                         cols: (String, DataType)*): DataFrame =
-    spark.read.schema(StructType(cols.map { case (n, t) => StructField(n, t) }))
-      .parquet(s"$dir/$table")
 
   /** The probe's candidate pairs (id_a, id_b): band keys of the frozen
     * batch signatures `sigB` that meet the store's band keys. A pair
@@ -2508,7 +2465,7 @@ object Dedup {
                                             meta: Map[String, String]): DataFrame = {
     val candidates = bandBuckets(sigB, meta("numHashes").toInt,
         meta("bands").toInt).withColumnRenamed("id", "id_a")
-      .join(storeTable(sigB.sparkSession, dir, "bandkeys",
+      .join(StoreMaintenance.storeTable(sigB.sparkSession, dir, "bandkeys",
           "band" -> IntegerType, "bh" -> IntegerType,
           "id" -> sigB.schema("id").dataType)
         .withColumnRenamed("id", "id_b"), Seq("band", "bh"))
@@ -2523,12 +2480,12 @@ object Dedup {
     * rows `hB`). The store's shingles stream through a join that keeps
     * candidate docs; ONE exchange by pair then drops repeated pairs,
     * sizes each store doc by a window and feeds the per-pair count, so
-    * the signature table is not read. Same rows as jaccardForHashed
+    * the store needs no size column. Same rows as jaccardForHashed
     * over hB ∪ the store's shingles. */
   private[graft] def jaccardVsStore(hB: DataFrame, candidates: DataFrame,
                                     dir: String, threshold: Double): DataFrame = {
-    val storeRows = storeTable(hB.sparkSession, dir, "shingles",
-        "id" -> hB.schema("id").dataType, "hs" -> LongType)
+    val storeRows = StoreMaintenance.storeTable(hB.sparkSession, dir,
+        "shingles", "id" -> hB.schema("id").dataType, "hs" -> LongType)
       .withColumnRenamed("id", "id_b")
       .join(candidates, "id_b")
       .repartition(col("id_a"), col("id_b"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Multimodal column handling: image/audio/video as opaque binary
   * columns + typed metadata, with decode / feature-extraction /
@@ -418,40 +419,37 @@ object Multimodal {
       .distinct()
   }
 
-  /** NEAR-dup image store at rest, PROBE-PRUNABLE: the store lands
-    * ALREADY BANDED — rows (bk, id, h) under
-    * `$dir/bands/batch=<i>/band=<b>/pfx=<p>`, where `pfx` is the top
-    * `pfxBits` bits of the band key. A batch probe knows exactly which
-    * (band, pfx) partitions its own hashes can collide in, so each
-    * probe is a partition-PRUNED read of ~(batch-distinct prefixes /
-    * 2^pfxBits) of the store instead of a full (id, hash) scan — the
-    * one store-side term that previously grew with corpus instead of
-    * with the answer. Banding geometry (bands, pfxBits) is pinned in
-    * `_meta.json` (formatVersion 2): band keys only align when writer
+  /** NEAR-dup image store at rest: the store lands ALREADY BANDED —
+    * (band, bk, id, h) rows, one flat file set per generation under
+    * `$dir/bands/batch=<i>` — and a batch probe joins its own band keys
+    * against it on (band, bk). Banding geometry (bands) is pinned in
+    * `_meta.json` (formatVersion 3): band keys only align when writer
     * and reader agree, the near-dup-store sidecar convention. Rows
     * carry the full hash `h`, so the popcount verify needs no second
-    * store read. Batch-keyed overwrites keep appends idempotent; the
+    * store read. The earlier (band, pfx) partition tree is gone for the
+    * text store's reason (`Dedup.writeNearDupStore`): a batch of more
+    * than a few images hits every prefix of every band, so its prune
+    * read the whole store anyway while every write paid a shuffle and
+    * a directory per band and prefix. The install rebalances (the decode
+    * runs at input parallelism); appends land as they are, like the
+    * text store's. Batch-keyed overwrites keep appends idempotent; the
     * store carries hashes only, never bytes (~24 bytes × bands per
     * image at rest). */
   def writeImageNearDupStore(images: DataFrame, dir: String,
                              idCol: String = "media_id",
                              bytesCol: String = "bytes",
-                             bands: Int = 4, pfxBits: Int = 4): Unit = {
+                             bands: Int = 4): Unit = {
     require(64 % bands == 0, "bands must divide 64")
-    require(pfxBits >= 1 && pfxBits <= 64 / bands,
-      s"pfxBits must be in [1, ${64 / bands}]")
-    val spark = images.sparkSession
-    writeBandedGeneration(
-      imageDHash(images, idCol, bytesCol), idCol,
-      dir, 0L, bands, pfxBits)
-    StoreMaintenance.publishMeta(spark, dir, imageStoreVersion,
-      Map("bands" -> bands.toString, "pfxBits" -> pfxBits.toString))
+    bandRows(images, idCol, bytesCol, bands).hint("rebalance")
+      .write.mode("overwrite").parquet(s"$dir/bands/batch=0")
+    StoreMaintenance.publishMeta(images.sparkSession, dir, imageStoreVersion,
+      Map("bands" -> bands.toString))
   }
 
   /** Layout version of the perceptual banded store, shared by
     * [[writeImageNearDupStore]] and every reader through
     * [[openImageStore]]. */
-  private val imageStoreVersion = "2"
+  private val imageStoreVersion = "3"
 
   private def openImageStore(spark: org.apache.spark.sql.SparkSession,
                              dir: String): Map[String, String] =
@@ -469,36 +467,23 @@ object Multimodal {
     require(batchId > 0, "batchId 0 is the base install")
     val spark = batch.sparkSession
     val meta = openImageStore(spark, dir)
-    writeBandedGeneration(
-      imageDHash(batch, idCol, bytesCol), idCol,
-      dir, batchId, meta("bands").toInt, meta("pfxBits").toInt)
+    bandRows(batch, idCol, bytesCol, meta("bands").toInt)
+      .write.mode("overwrite").parquet(s"$dir/bands/batch=$batchId")
     spark.catalog.refreshByPath(dir)
   }
 
-  /** Shared writer half: band the (id, dhash) frame and land it
-    * partitioned by (band, pfx) under the batch's generation dir. */
-  private def writeBandedGeneration(hashed: DataFrame, idCol: String,
-                                    dir: String, batchId: Long,
-                                    bands: Int, pfxBits: Int): Unit = {
-    val r = 64 / bands
-    bandedHashes(hashed.filter(col("dhash").isNotNull), "dhash", bands, idCol)
-      .select(col("band"),
-        shiftrightunsigned(col("bk"), r - pfxBits).as("pfx"),
-        col("bk"), col(idCol).as("id"), col("_h").as("h"))
-      // one task per (band, pfx) → one file per directory; see
-      // Dedup.writeBandKeysGeneration for the open-writer-per-dir
-      // pathology this avoids
-      .repartition(col("band"), col("pfx"))
-      .write.partitionBy("band", "pfx")
-      .mode("overwrite").parquet(s"$dir/bands/batch=$batchId")
-  }
+  /** The banded store's (band, bk, id, h) rows for a batch of images —
+    * what a generation lands and what a probe joins. */
+  private def bandRows(images: DataFrame, idCol: String, bytesCol: String,
+                       bands: Int): DataFrame =
+    bandedHashes(imageDHash(images, idCol, bytesCol), "dhash", bands, idCol)
+      .select(col("band"), col("bk"), col(idCol).as("id"), col("_h").as("h"))
 
   /** Fold every committed generation of the perceptual banded store
     * into one `batch=0` — [[graft.operators.StoreMaintenance]]'s
-    * crash-safe three-phase protocol applied to the image/audio/video
-    * near-dup stores this module lands via `writeBandedGeneration`.
-    * Same contract as `Dedup.compactNearDupStore`: single writer,
-    * fold only generations the ingest checkpoint has committed
+    * crash-safe three-phase protocol applied to the image near-dup
+    * store. Same contract as `Dedup.compactNearDupStore`: single
+    * writer, fold only generations the ingest checkpoint has committed
     * (`maxBatchId`), probes and appends fail loudly on a crashed swap
     * until a re-run finishes it. */
   def compactImageNearDupStore(spark: org.apache.spark.sql.SparkSession,
@@ -507,26 +492,19 @@ object Multimodal {
     StoreMaintenance.compactStore(spark, dir, imageStoreVersion,
         "writeImageNearDupStore", maxBatchId) { _ =>
       Seq(StoreMaintenance.TableSpec("bands",
-        _.select(col("band"), col("pfx"), col("bk"), col("id"), col("h"))
-          .repartition(col("band"), col("pfx")),
-        partitionCols = Seq("band", "pfx")))
+        _.select("band", "bk", "id", "h")))
     }
 
   /** Batch × store NEAR-dup pairs at Hamming ≤ `maxHamming` — the
     * incremental fuzzy-image-dedup read path (d10's shape on the
     * pixel channel): the batch bands its hashes with the STORE's
-    * pinned geometry, candidates come from band-key equi-joins
-    * (pigeonhole recall 1.0 at maxHamming ≤ bands−1 — deterministic,
-    * not probabilistic), a popcount verifies — BEFORE the pair dedup,
-    * so far collisions never ride the exchange. The store side is a
-    * partition-PRUNED read: the batch's distinct (band, pfx) keys —
-    * a bounded driver fetch, ≤ bands · 2^pfxBits values by
-    * construction — become partition filters on the banded store
-    * scan, so a trickle batch against a billion-image store reads
-    * only the partitions its own hashes can collide in. The batch
-    * never pairs against itself and the store never re-pairs its
-    * landed corpus. CONTRACT: batch and store ids disjoint. Output
-    * (batch_id, store_id, hamming). */
+    * pinned geometry, candidates come from ONE band-key equi-join
+    * against the store read with a pinned schema (pigeonhole recall
+    * 1.0 at maxHamming ≤ bands−1 — deterministic, not probabilistic),
+    * a popcount verifies — BEFORE the pair dedup, so far collisions
+    * never ride the exchange. The batch never pairs against itself and
+    * the store never re-pairs its landed corpus. CONTRACT: batch and
+    * store ids disjoint. Output (batch_id, store_id, hamming). */
   def incrementalImageNearDup(batch: DataFrame, dir: String,
                               maxHamming: Int = 3,
                               idCol: String = "media_id",
@@ -534,32 +512,15 @@ object Multimodal {
     val spark = batch.sparkSession
     val meta = openImageStore(spark, dir)
     val bands = meta("bands").toInt
-    val pfxBits = meta("pfxBits").toInt
     requireBandedExact(maxHamming, bands)
-    val r = 64 / bands
-    val qb = bandedHashes(
-        imageDHash(batch, idCol, bytesCol), "dhash", bands, idCol)
-      .select(col(idCol).as("batch_id"), col("_h").as("h_a"),
-        col("band"), shiftrightunsigned(col("bk"), r - pfxBits).as("pfx"),
-        col("bk"))
-      .localCheckpoint() // two consumers: the partition-key fetch + the join
-    // bounded driver fetch: ≤ bands · 2^pfxBits distinct partition keys
-    val wanted = qb.select("band", "pfx").distinct().collect()
-      .map(row => (row.getInt(0), row.getLong(1)))
-    // empty batch → lit(false) prunes EVERY partition (zero-file scan)
-    val prune =
-      if (wanted.isEmpty) lit(false)
-      else wanted.groupBy(_._1).map { case (b, ps) =>
-        col("band") === b && col("pfx").isin(ps.map(_._2).toIndexedSeq: _*)
-      }.reduce(_ || _)
-    // join on (band, bk) only — bk equality already implies pfx
-    // equality, and the discovered pfx partition column's directory-
-    // inferred type need not match the probe side's
-    val sb = spark.read.parquet(s"$dir/bands")
-      .filter(prune)
-      .select(col("id").as("store_id"), col("h").as("h_b"),
+    val qb = bandRows(batch, idCol, bytesCol, bands)
+    val sb = StoreMaintenance.storeTable(spark, dir, "bands",
+      "band" -> IntegerType, "bk" -> LongType,
+      "id" -> qb.schema("id").dataType, "h" -> LongType)
+    qb.select(col("id").as("batch_id"), col("h").as("h_a"),
         col("band"), col("bk"))
-    qb.drop("pfx").join(sb, Seq("band", "bk"))
+      .join(sb.select(col("id").as("store_id"), col("h").as("h_b"),
+        col("band"), col("bk")), Seq("band", "bk"))
       .select(col("batch_id"), col("store_id"),
         bit_count(col("h_a").bitwiseXOR(col("h_b"))).cast("long")
           .as("hamming"))

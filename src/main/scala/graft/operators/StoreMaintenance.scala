@@ -1,10 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Crash-safe GENERATION COMPACTION shared by the at-rest stores whose
   * tables accumulate `batch=<id>` dirs per ingest batch (near-dup
-  * shingles/signatures/bandkeys, perceptual bands): fold every
+  * shingles/bandkeys, perceptual bands): fold every
   * committed generation into a single `batch=0` per table, bounding
   * file/dir counts on a long ingest line (week 50 of a crawl is
   * thousands of small-file generations; probes pay the listing even
@@ -75,6 +76,14 @@ private[graft] object StoreMaintenance {
         s"reinstall it with $installer")
     meta
   }
+
+  /** A store table read with a pinned schema: no schema-inference job.
+    * The `batch=<id>` generation dirs still list as a partition column,
+    * which callers project away. */
+  def storeTable(spark: SparkSession, dir: String, table: String,
+                 cols: (String, DataType)*): DataFrame =
+    spark.read.schema(StructType(cols.map { case (n, t) => StructField(n, t) }))
+      .parquet(s"$dir/$table")
 
   /** Land a store's meta — the installer's LAST write (a reader that
     * finds the meta can rely on every table it describes), or a

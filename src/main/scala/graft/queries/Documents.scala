@@ -308,13 +308,13 @@ object Documents {
   }
 
   /** D11 — the d10 semantics through the AT-REST store: the corpus'
-    * hashed shingles + MinHash signatures are landed as parquet (plus a
-    * `_meta.json` pinning shingleSize/numHashes/seed), then the batch is
-    * paired against the STORE — the production ingest path where the
-    * corpus side is read, never recomputed. Same split and parameters
-    * as d10, so the oracle is d10's exact cross-set jaccard SQL:
-    * store-equals-live is the contract under test (already spec-pinned;
-    * this row makes the driver gate it too). */
+    * hashed shingles + MinHash band keys are landed as parquet (plus
+    * a `_meta.json` pinning shingleSize/numHashes/seed/bands), then the
+    * batch is paired against the STORE — the production ingest path
+    * where the corpus side is read, never recomputed. Same split and
+    * parameters as d10, so the oracle is d10's exact cross-set jaccard
+    * SQL: store-equals-live is the contract under test (already
+    * spec-pinned; this row makes the driver gate it too). */
   def d11NearDupStore(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val dir = sys.props("java.io.tmpdir") +

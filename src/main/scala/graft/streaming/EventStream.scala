@@ -270,7 +270,7 @@ object EventStream {
     * against the landed store (`incrementalNearDupFromStore` — the
     * corpus side is READ, never recomputed), (2) drop the batch docs
     * that near-dup something already landed, (3) append the SURVIVORS'
-    * shingles/signatures so the next micro-batch dedups against
+    * shingles and band keys so the next micro-batch dedups against
     * corpus ∪ survivors. foreachBatch is the right tool, not a stateful
     * operator: the dedup state IS the at-rest store (shared with the
     * batch layer, unbounded corpus), not a watermark-bounded state
@@ -329,7 +329,7 @@ object EventStream {
           // whether they arrived in one micro-batch or two.
           val meta = Dedup.openNearDupStore(spark, storeDir)
           step("sign")
-          // ONE tokenize → gram → hash pass and ONE sized minhash
+          // ONE tokenize → gram → hash pass and ONE minhash
           // aggregation per trigger, shared by the probe and the
           // survivor append. hB reads the raw batch only and sigB is
           // frozen, so neither can be recomputed against the store.
@@ -340,12 +340,13 @@ object EventStream {
           // ALL its ids (a doc too short to shingle has no signature):
           // the ids gate the empty batch and bound the drop set. A local
           // sigB has its exact size, so the band-key join broadcasts it,
-          // never the store's band keys
-          val sigs = Dedup.sizedSignaturesFor(hB, meta)
+          // never the store's band keys. A signature row has a non-null
+          // mh_0 (a min over at least one shingle); an id row has none
+          val sigs = Dedup.signaturesFor(hB, meta)
           val (sigRows, idRows) = sigs
             .unionByName(batch.select(col(idCol).as("id")),
               allowMissingColumns = true)
-            .collect().partition(r => !r.isNullAt(r.fieldIndex("sz")))
+            .collect().partition(r => !r.isNullAt(r.fieldIndex("mh_0")))
           val batchIds = idRows.map(_.get(0))
           if (batchIds.nonEmpty) {
             val sigB = spark.createDataFrame(
@@ -389,7 +390,7 @@ object EventStream {
               graft.sources.Sources.publishBatch(batch.filter(kept(idCol)),
                 keptDir, batchId + 1)
             step("append")
-            // the SURVIVORS' shingles and signatures land as store
+            // the SURVIVORS' shingles and band keys land as store
             // generation batchId + 1 (batch=0 is the base install), so a
             // replay overwrites the same directory
             Dedup.appendToNearDupStoreSigs(

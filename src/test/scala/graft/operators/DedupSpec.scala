@@ -646,13 +646,11 @@ class DedupSpec extends SparkSpec {
     // fold only ≤ 1; it must survive untouched
     Dedup.compactNearDupStore(spark, dir, maxBatchId = 1L)
     assert(gens("shingles") == Set("batch=0", "batch=2") &&
-      gens("signatures") == Set("batch=0", "batch=2") &&
       gens("bandkeys") == Set("batch=0", "batch=2"))
     assert(pairs() == before, "partial fold must not change any answer")
     // full fold
     Dedup.compactNearDupStore(spark, dir)
     assert(gens("shingles") == Set("batch=0") &&
-      gens("signatures") == Set("batch=0") &&
       gens("bandkeys") == Set("batch=0"))
     assert(pairs() == before, "full fold must not change any answer")
     // the store keeps growing normally after a fold (a DIFFERENT id
@@ -666,9 +664,8 @@ class DedupSpec extends SparkSpec {
     // and the next compact call must heal it
     graft.sources.Sources.writeJsonSidecarFs(spark,
       s"$dir/_compact_swap.json",
-      Map("tables" -> "shingles,signatures,bandkeys",
-        "folded_shingles" -> "", "folded_signatures" -> "",
-        "folded_bandkeys" -> ""))
+      Map("tables" -> "shingles,bandkeys",
+        "folded_shingles" -> "", "folded_bandkeys" -> ""))
     intercept[IllegalArgumentException](pairs())
     intercept[IllegalArgumentException](
       Dedup.appendToNearDupStore(b3, dir, "doc_id", "text", 4L))
@@ -687,15 +684,7 @@ class DedupSpec extends SparkSpec {
     val corpus = docs.filter($"doc_id" % 5 =!= 0)
     Dedup.writeNearDupStore(corpus, "doc_id", "text", dir, seed = 7L)
     val meta = graft.sources.Sources.readJsonSidecarFs(spark, s"$dir/_meta.json")
-    assert(meta("minhashSeed") == "7" && meta("formatVersion") == "4")
-    // the signature table carries the per-doc shingle count, and it
-    // must equal what aggregating the shingle table would give — the
-    // probe's size lookup reads sz instead of re-aggregating the store
-    val szFromSigs = spark.read.parquet(s"$dir/signatures")
-      .select($"id", $"sz").as[(Long, Long)].collect().toMap
-    val szFromShingles = spark.read.parquet(s"$dir/shingles")
-      .groupBy("id").count().as[(Long, Long)].collect().toMap
-    assert(szFromSigs == szFromShingles && szFromSigs.nonEmpty)
+    assert(meta("minhashSeed") == "7" && meta("formatVersion") == "5")
     // candidates band differently under seed 7, but exact-Jaccard
     // verification makes the OUTPUT seed-robust on this planted corpus
     val fromStore = Dedup.incrementalNearDupFromStore(batch, dir, "doc_id", "text")
@@ -736,11 +725,11 @@ class DedupSpec extends SparkSpec {
     // the store is silently inconsistent
     val expectIds = (corpus.select("doc_id").as[Long].collect()
       ++ batch1.select("doc_id").as[Long].collect()).toSet
-    val sigIds = spark.read.parquet(s"$dir/signatures")
+    val keyIds = spark.read.parquet(s"$dir/bandkeys")
       .select("id").distinct().as[Long].collect().toSet
     val shIds = spark.read.parquet(s"$dir/shingles")
       .select("id").distinct().as[Long].collect().toSet
-    assert(sigIds == expectIds, "signature ids must cover corpus + batch 1")
+    assert(keyIds == expectIds, "band-key ids must cover corpus + batch 1")
     assert(shIds == expectIds, "shingle ids must cover corpus + batch 1")
     // IDEMPOTENCE: replaying an already-applied batch under ITS OWN
     // batchId (foreachBatch is at-least-once with stable ids) must
@@ -773,9 +762,11 @@ class DedupSpec extends SparkSpec {
     val files = entries.filter(_.getName.endsWith(".parquet"))
     assert(files.nonEmpty && files.size <= spark.sparkContext.defaultParallelism,
       s"a 100-doc generation must be a few files, got ${files.size}")
-    // one (band, bh, id) row per signed doc per band (16 bands)
+    // one (band, bh, id) row per signed doc per band (16 bands); a doc
+    // is signed iff it has shingles
     assert(spark.read.parquet(s"$dir/bandkeys/batch=1").count() ==
-      16L * spark.read.parquet(s"$dir/signatures/batch=1").count())
+      16L * spark.read.parquet(s"$dir/shingles/batch=1")
+        .select("id").distinct().count())
   }
 
   test("softDedupWeights: commonness counts, 1/n weights, every row flows") {
@@ -1264,7 +1255,7 @@ class DedupSpec extends SparkSpec {
     // deterministic under the store seed), so install the union into a
     // scratch store and move its tables into the staging slots
     Dedup.writeNearDupStore(corpus.unionByName(b1), "doc_id", "text", tmp)
-    Seq("shingles", "signatures", "bandkeys").foreach { t =>
+    Seq("shingles", "bandkeys").foreach { t =>
       val src = new java.io.File(s"$tmp/$t/batch=0")
       val dst = new java.io.File(s"$dir/_compacting/$t/batch=0")
       dst.getParentFile.mkdirs()
@@ -1273,11 +1264,10 @@ class DedupSpec extends SparkSpec {
     // COMMIT: the marker records folds of generations 0 and 1 ONLY
     graft.sources.Sources.writeJsonSidecarFs(spark,
       s"$dir/_compact_swap.json",
-      Map("tables" -> "shingles,signatures,bandkeys",
-        "folded_shingles" -> "0,1", "folded_signatures" -> "0,1",
-        "folded_bandkeys" -> "0,1"))
+      Map("tables" -> "shingles,bandkeys",
+        "folded_shingles" -> "0,1", "folded_bandkeys" -> "0,1"))
     Dedup.compactNearDupStore(spark, dir) // resumes: finish-only path
-    Seq("shingles", "signatures", "bandkeys").foreach { t =>
+    Seq("shingles", "bandkeys").foreach { t =>
       assert(gens(t) == Set("batch=0", "batch=2"),
         s"$t must keep the fold AND the interleaved newcomer: ${gens(t)}")
     }

@@ -423,34 +423,27 @@ class MultimodalSpec extends SparkSpec {
       s"post-fold appends must stay probe-visible: $grown")
   }
 
-  test("incrementalImageNearDup probe PRUNES the banded store scan by (band, pfx)") {
-    // the 100 TB posture: a batch probe must read only the store
-    // partitions its own hash prefixes can collide in — a full store
-    // scan per batch is the one term that grows with corpus instead of
-    // with the answer (round-14 verdict weak #1)
-    val dir = java.nio.file.Files.createTempDirectory("imgndprune").toString
+  test("image near-dup store lands a generation as a few flat files") {
+    // a (band, pfx) directory tree per generation buys a prefix prune
+    // that never fires on a batch of more than a few images (it hits
+    // every prefix of every band) while costing every install, append
+    // and fold bands · 2^pfxBits directories; a generation is a flat
+    // file set
+    val dir = java.nio.file.Files.createTempDirectory("imgndflat").toString
     def img(seed: Int) = grayPpm(16, 8, i => (i * seed + 5) % 200)
     writeImageNearDupStore(
       (100L to 131L).map(i => (i, img(i.toInt))).toDF("media_id", "bytes"), dir)
-    // probe an exact twin of stored 105: a non-empty pair set keeps
-    // the store scan in the FINAL AQE plan (an empty result collapses
-    // the whole tree to EmptyRelation and there is no scan to assert)
-    val probe = incrementalImageNearDup(
-      Seq((1L, img(105))).toDF("media_id", "bytes"), dir, maxHamming = 3)
-    // execute THIS queryExecution (fills the scan metrics the
-    // assertions below read) and check the twin actually paired
-    assert(probe.collect().length >= 1, "fixture must pair the planted twin")
-    val scans = fileScans(probe)
-      .filter(_.metadata.get("Location").exists(_.contains("bands")))
-    assert(scans.nonEmpty, "probe must scan the banded store")
-    val pf = scans.flatMap(_.partitionFilters)
-    val refNames = pf.flatMap(_.references.map(_.name)).toSet
-    assert(refNames.contains("band") && refNames.contains("pfx"),
-      s"store scan must carry (band, pfx) partition filters, got $pf")
-    // and the pruning must bite: a 1-image batch touches at most
-    // bands (=4) of the bands×2^pfxBits (=64) partitions per batch dir
-    val parts = scans.map(_.metrics("numPartitions").value).sum
-    assert(parts <= 4, s"1-image probe must read <= 4 partitions, read $parts")
+    val batch = (1L to 32L).map(i => (i, img(i.toInt + 200)))
+      .toDF("media_id", "bytes")
+    appendToImageNearDupStore(batch, dir, batchId = 1L)
+    val entries = new java.io.File(s"$dir/bands/batch=1").listFiles().toSeq
+    assert(!entries.exists(_.isDirectory),
+      s"flat generation expected, got dirs ${entries.filter(_.isDirectory).map(_.getName)}")
+    val files = entries.filter(_.getName.endsWith(".parquet"))
+    assert(files.nonEmpty && files.size <= spark.sparkContext.defaultParallelism,
+      s"a 32-image generation must be a few files, got ${files.size}")
+    // one (band, bk, id, h) row per decodable image per band (4 bands)
+    assert(spark.read.parquet(s"$dir/bands/batch=1").count() == 4L * 32L)
   }
 
   test("imageNearDupPairs: banded candidates reproduce brute-force hamming pairs") {

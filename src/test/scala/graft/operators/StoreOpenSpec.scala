@@ -157,6 +157,18 @@ class StoreOpenSpec extends SparkSpec {
     }
   }
 
+  // the layout each family's current version replaced: a near-dup
+  // store with a signature table, an image store with a (band, pfx)
+  // partition tree
+  Seq("near-dup" -> "4", "image" -> "2").foreach { case (name, previous) =>
+    test(s"$name store: the previous formatVersion $previous refuses every call") {
+      val f = family(name)
+      val dir = freshStore(f)
+      rewriteMeta(dir)(_ + ("formatVersion" -> previous))
+      refusesEveryEntryPoint(f, dir, f.installer)
+    }
+  }
+
   test("v1 inline-stats BM25 index: append and probe refuse, nothing lands") {
     // a v1 index keeps nDocs/sumDl inline in _meta.json: an append that
     // landed against it would add the batch's df while a v1-aware probe

@@ -294,7 +294,7 @@ class EventStreamSpec extends SparkSpec {
       s"survivors should be {2, 3, 6}, got $kept")
     assert(graft.sources.Sources.publishedBatches(spark, keptDir) == Seq(1L, 2L))
     // the store grew by exactly the survivors
-    val storeIds = spark.read.parquet(s"$storeDir/signatures")
+    val storeIds = spark.read.parquet(s"$storeDir/shingles")
       .select("id").distinct().as[Long].collect().toSet
     assert(storeIds == Set(100L, 2L, 3L, 6L))
   }
@@ -328,13 +328,13 @@ class EventStreamSpec extends SparkSpec {
     val kept = graft.sources.Sources.readPublished(spark, keptDir)
       .select("doc_id").as[Long].collect().toSet
     assert(kept == Set(1L, 2L, 4L), s"survivors should be {1, 2, 4}: $kept")
-    val gens = new java.io.File(s"$storeDir/signatures").listFiles()
+    val gens = new java.io.File(s"$storeDir/shingles").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("batch="))
       .map(_.getName).toSet
     // gens 0/1/2 folded at trigger 2; trigger 2's own gen (3) landed after
     assert(gens == Set("batch=0", "batch=3"),
       s"triggers 0-1 must be folded, trigger 2's generation kept: $gens")
-    val storeIds = spark.read.parquet(s"$storeDir/signatures")
+    val storeIds = spark.read.parquet(s"$storeDir/shingles")
       .select("id").distinct().as[Long].collect().toSet
     assert(storeIds == Set(100L, 1L, 2L, 4L),
       s"fold must lose no store rows: $storeIds")
@@ -376,7 +376,7 @@ class EventStreamSpec extends SparkSpec {
         "fp store must hold landed + both survivors after the replay")
     }
     // near-dup loop: the store append is batch-keyed OVERWRITE, so an
-    // unguarded replay would also blank the batch's shingles/signatures
+    // unguarded replay would also blank the batch's shingles and band keys
     locally {
       val tmp = java.nio.file.Files.createTempDirectory("ndreplay").toString
       val (storeDir, keptDir) = (s"$tmp/store", s"$tmp/kept")
@@ -399,7 +399,7 @@ class EventStreamSpec extends SparkSpec {
       val kept = graft.sources.Sources.readPublished(spark, keptDir)
         .select("doc_id").as[Long].collect().toSet
       assert(kept == Set(2L), s"replay must not erase published rows, got $kept")
-      val storeIds = spark.read.parquet(s"$storeDir/signatures")
+      val storeIds = spark.read.parquet(s"$storeDir/shingles")
         .select("id").distinct().as[Long].collect().toSet
       assert(storeIds == Set(100L, 2L),
         s"replay must not blank the batch's store rows, got $storeIds")
@@ -472,10 +472,12 @@ class EventStreamSpec extends SparkSpec {
     val table = perStep.toSeq.sorted.map { case ((b, s), n) => s"$b/$s=$n" }
     info(s"jobs per (batch, step): ${table.mkString(", ")}")
     Seq(0L, 1L).foreach { b =>
-      assert(total(b) <= 15, s"plain trigger $b ran ${total(b)} jobs: $table")
+      assert(total(b) <= 14, s"plain trigger $b ran ${total(b)} jobs: $table")
       assert(perStep.getOrElse((b, "fold"), 0) == 0, s"plain trigger $b folded")
     }
     assert(perStep.getOrElse((2L, "fold"), 0) > 0, s"trigger 2 must fold: $table")
+    // two jobs per folded table (shingles, band keys): a read and a write
+    assert(perStep((2L, "fold")) <= 4, s"trigger 2's fold ran too many jobs: $table")
     assert(Seq("sign", "probe", "publish", "append")
       .forall(s => perStep.contains((1L, s))), s"missing steps: $table")
     assert(!perStep.keys.exists(_._2 == "unlabelled"), s"unlabelled jobs: $table")
@@ -509,8 +511,7 @@ class EventStreamSpec extends SparkSpec {
       def ids(df: org.apache.spark.sql.DataFrame, c: String) =
         df.select(col(c).cast("string")).distinct().as[String].collect().toSet
       (ids(graft.sources.Sources.readPublished(spark, keptDir), "doc_id"),
-        ids(spark.read.parquet(s"$storeDir/signatures"), "id") ++
-          ids(spark.read.parquet(s"$storeDir/shingles"), "id"))
+        ids(spark.read.parquet(s"$storeDir/shingles"), "id"))
     }
     val (keptL, storeL) = run(col("n"))
     // zero-padded, so string order is the Long twin's id order and the
