@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, forcing FULL materialization through the noop
@@ -62,16 +63,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build("graft-bench", cpus, cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     def loadAvg: Double =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Plan-audit main: prints the formatted physical plan for selected
   * queries (all if no names given). Used to check the scale contract:
@@ -11,12 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build("graft-explain", 8, 8)
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Model-quality parity measurement — the engine's counterpart of the
@@ -21,14 +21,8 @@ import org.apache.spark.sql.functions._
 object ParityRun {
   def main(args: Array[String]): Unit = {
     val nLoans = args.headOption.map(_.toInt).getOrElse(600000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-parity")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.build("graft-parity", cpus, cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val grades = "ABCDEFG".map(_.toString)

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.GraftSession
 import graft.operators.Similarity
 
 /** Recall-vs-cost evidence for the ANN family — the ScaleProbe
@@ -26,15 +27,8 @@ object RecallProbe {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
         "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-recall-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    val spark = GraftSession.build("graft-recall-probe", cpus, cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val K = 5

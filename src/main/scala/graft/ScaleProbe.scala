@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.GraftSession
 import graft.operators.{Dedup, TextAnalysis}
 
 /** Scaling-evidence main: replicates the documents corpus N× (distinct
@@ -20,16 +21,9 @@ import graft.operators.{Dedup, TextAnalysis}
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val factors = if (args.nonEmpty) args.toSeq.map(_.toInt) else Seq(1, 2, 5, 10)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build("graft-scale-probe", cpus, cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -41,9 +35,12 @@ object ScaleProbe {
         // offset ids into disjoint ranges; salt the text so replicas are
         // near-dups of each other only where the base corpus already
         // had planted dups (keeps pair counts ~linear in n, like a real
-        // crawl growing by new-but-similarly-duplicated content)
+        // crawl growing by new-but-similarly-duplicated content).
+        // Replica 0 keeps the base text, so probes planted from the base
+        // corpus find their twins at every factor.
         base.select((col("doc_id") + lit(r.toLong * 10000000L)).as("doc_id"),
-          concat(col("text"), lit(s" replica$r")).as("text"),
+          (if (r == 0) col("text") else concat(col("text"), lit(s" replica$r")))
+            .as("text"),
           col("lang"), col("source"), col("n_chars"))
       }.reduce(_ unionByName _)
 
@@ -525,10 +522,10 @@ object ScaleProbe {
               regexp_replace(col("text"), "(\\S+)", s"e${r}_$$1").as("text"))
         }.reduce(_ unionByName _)
           .unionByName(d.filter(col("doc_id") % 997 === 0).select("doc_id", "text"))
-      val corpus = replicated(2).repartition(cpus.toInt).persist()
+      val corpus = replicated(2).repartition(cpus).persist()
       corpus.count()
       factors.foreach { k =>
-        val ev = evalMixN(corpus, k).repartition(cpus.toInt).persist()
+        val ev = evalMixN(corpus, k).repartition(cpus).persist()
         val evDocs = ev.count()
         def timed(f: => Long): (Double, Long) = {
           val t0 = System.nanoTime()
@@ -572,7 +569,7 @@ object ScaleProbe {
             col("label"))
         }.reduce(_ unionByName _)
       factors.foreach { n =>
-        val corpus = replicatedE(n).repartition(cpus.toInt).persist()
+        val corpus = replicatedE(n).repartition(cpus).persist()
         val vecs = corpus.count()
         val q = eBase.filter(col("vec_id") < 5)
         def timed(name: String)(f: => Long): String = {
@@ -637,7 +634,7 @@ object ScaleProbe {
             col("label"))
         }.reduce(_ unionByName _)
       factors.foreach { n =>
-        val corpus = replicatedE(n).repartition(cpus.toInt).persist()
+        val corpus = replicatedE(n).repartition(cpus).persist()
         val vecs = corpus.count()
         def timed(name: String)(f: => Long): String = {
           val t0 = System.nanoTime()
@@ -682,7 +679,7 @@ object ScaleProbe {
           .as("embedding"))
       factors.foreach { n =>
         val oldSnap = replicated(n).select("doc_id", "text")
-          .repartition(cpus.toInt).persist()
+          .repartition(cpus).persist()
         val docs = oldSnap.count()
         // fixed absolute sliver: base-replica ids only (replicas carry
         // +r*1e7 offsets, so these predicates never grow with n)
@@ -697,7 +694,7 @@ object ScaleProbe {
             (col("id") + 800000000L).as("doc_id"),
             concat(lit("freshly added maintained document "), col("id"))
               .as("text")))
-          .repartition(cpus.toInt).persist()
+          .repartition(cpus).persist()
         newSnap.count()
         val tmp = java.nio.file.Files
           .createTempDirectory(s"maintprobe$n").toString
@@ -878,10 +875,10 @@ object ScaleProbe {
             .otherwise(concat(col("text"), lit(" fresh-batch")))
             .as("text"),
           col("source"))
-        .repartition(cpus.toInt).persist()
+        .repartition(cpus).persist()
       val batchDocs = batch.count()
       factors.foreach { n =>
-        val corpus = replicated(n).repartition(cpus.toInt).persist()
+        val corpus = replicated(n).repartition(cpus).persist()
         val docs = corpus.count()
         val tmp = java.nio.file.Files
           .createTempDirectory(s"ingestprobe$n").toString
@@ -950,7 +947,7 @@ object ScaleProbe {
 
     factors.foreach { n =>
       val corpus = replicated(n)
-        .repartition(cpus.toInt).persist()
+        .repartition(cpus).persist()
       val docs = corpus.count() // materialize input outside the timings
       val timed = ops.map { case (name, fn) =>
         val t0 = System.nanoTime()

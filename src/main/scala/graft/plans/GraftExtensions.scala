@@ -7,9 +7,11 @@ import org.apache.spark.sql.functions.call_function
 import graft.functions.{BloomMightContain, BpeEncode, CharEntropy, CharGramHashes, CosineSimilarity, PqAssign, RangeBucket, WordGramCoverage}
 
 /** Engine extensions: registers graft's native expressions so they are
-  * callable from SQL. Activate with
+  * callable from SQL, and injects [[SelfCosineRule]]. Every in-repo
+  * session loads them through `GraftSession.build`; a session built
+  * elsewhere activates them with
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`, or
-  * call `GraftFunctions.register(spark)` on an existing session.
+  * gets the functions (not the rule) from `GraftFunctions.register(spark)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

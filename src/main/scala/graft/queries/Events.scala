@@ -120,4 +120,65 @@ object Events {
       .groupBy("event_type")
       .agg(round(avg("k"), 6).as("avg_k"), max("k").as("max_k"))
       .orderBy("event_type")
+
+  // ---- Gates: each plan with the DuckDB SQL that checks it ----------
+
+  val gates: Seq[Gate] = Seq(
+    Gate("j5_asof_join", j5AsofJoin,
+      """WITH p AS (SELECT event_id, user_id, ts, value FROM events
+        |  WHERE event_type = 'purchase'),
+        |v AS (SELECT user_id, ts, max(value) AS vvalue FROM events
+        |  WHERE event_type = 'view' GROUP BY 1, 2)
+        |SELECT p.event_id, p.user_id,
+        |  strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS p_ts,
+        |  round(p.value, 4) AS p_value,
+        |  round(v.vvalue, 4) AS asof_value,
+        |  strftime(v.ts, '%Y-%m-%d %H:%M:%S') AS asof_ts
+        |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts >= v.ts
+        |ORDER BY p.event_id""".stripMargin),
+    Gate("j6_range_join", j6RangeJoin,
+      """WITH b AS (SELECT min(epoch_us(ts)) AS mn, max(epoch_us(ts)) AS mx FROM events),
+        |iv AS (SELECT CAST(i AS BIGINT) AS interval_id,
+        |    mn + i * i * (mx - mn + 1) // 400 AS istart,
+        |    mn + (i + 1) * (i + 1) * (mx - mn + 1) // 400 AS iend
+        |  FROM range(20) t(i), b)
+        |SELECT interval_id, count(e.event_id) AS n_events
+        |FROM iv LEFT JOIN events e
+        |  ON epoch_us(e.ts) >= iv.istart AND epoch_us(e.ts) < iv.iend
+        |GROUP BY interval_id ORDER BY interval_id""".stripMargin),
+    Gate("t1_tumbling_window", t1TumblingWindow,
+      """SELECT strftime(make_timestamp(
+        |    CAST(floor(epoch(ts) / 604800) * 604800 AS BIGINT) * 1000000),
+        |    '%Y-%m-%d %H:%M:%S') AS win_start,
+        |  event_type, count(*) AS n, round(sum(value), 4) AS sum_value
+        |FROM events GROUP BY 1, 2 ORDER BY win_start, event_type""".stripMargin),
+    Gate("s_sessionize", sessionize,
+      """WITH e AS (SELECT user_id, ts, CAST(floor(epoch(ts)) AS BIGINT) AS es FROM events),
+        |l AS (SELECT user_id, ts, es,
+        |  lag(es) OVER (PARTITION BY user_id ORDER BY ts) AS prev_es FROM e),
+        |n AS (SELECT user_id, ts, es,
+        |  CASE WHEN prev_es IS NULL OR es - prev_es > 1800 THEN 1 ELSE 0 END AS new_sess FROM l),
+        |s AS (SELECT user_id, es,
+        |  sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sess_id FROM n),
+        |g AS (SELECT user_id, sess_id, max(es) - min(es) AS dur, count(*) AS n_events
+        |  FROM s GROUP BY 1, 2)
+        |SELECT user_id, count(*) AS n_sessions, round(avg(dur), 6) AS avg_dur_sec,
+        |  CAST(sum(n_events) AS BIGINT) AS n_events
+        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Gate("f_json_extract", fJsonExtract,
+      """SELECT event_type,
+        |  round(avg(CAST(json_extract_string(props, '$.k') AS INTEGER)), 6) AS avg_k,
+        |  max(CAST(json_extract_string(props, '$.k') AS INTEGER)) AS max_k
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    // T13: hopping window = the t1 epoch bucketing crossed with the
+    // two window offsets (len/slide = 2 windows per event).
+    Gate("t13_hopping_window", t13HoppingWindow,
+      """SELECT strftime(make_timestamp(
+        |    (CAST(floor(epoch(ts) / 604800) * 604800 AS BIGINT)
+        |      - o.o * 604800) * 1000000),
+        |    '%Y-%m-%d %H:%M:%S') AS win_start,
+        |  event_type, count(*) AS n, round(sum(value), 4) AS sum_value
+        |FROM events CROSS JOIN (VALUES (CAST(0 AS BIGINT)), (CAST(1 AS BIGINT))) AS o(o)
+        |GROUP BY 1, 2 ORDER BY win_start, event_type""".stripMargin)
+  )
 }

@@ -66,8 +66,8 @@ object Fuzz {
 
   /** Build one seeded composition. All randomness is drawn HERE, once,
     * while both renderings are assembled — the SQL text is a pure
-    * function of the seed (no session needed, so the driver's
-    * oracle-SQL map can carry it). */
+    * function of the seed (no session needed, so the gate's
+    * oracle SQL can carry it). */
   def compose(seed: Long): Case = {
     val rng = new scala.util.Random(seed)
     def pick[A](xs: Seq[A]): A = xs(rng.nextInt(xs.size))
@@ -245,4 +245,15 @@ object Fuzz {
       digestSql(compose(seed).sql, f"c$seed%02d")
     }.mkString("SELECT * FROM (\n", "\nUNION ALL\n",
       "\n) u ORDER BY case_id, bucket")
+
+  // ---- Gates: each plan with the DuckDB SQL that checks it ----------
+
+  val gates: Seq[Gate] = Seq(
+    // cross-engine differential fuzz: 12 seeded operator compositions
+    // (joins/fills/windows/aggs over the real tables), digested
+    // order-insensitively; the oracle text is generated from the SAME
+    // seeds, so both engines replay identical plans
+    Gate("fuzz_differential", fuzzDifferential,
+      fuzzDifferentialSql)
+  )
 }

@@ -278,7 +278,7 @@ object Medallion {
       s"ELSE (day($d1) - day($d2)) / 31.0e0 END, 8)"
 
   /** The dialect-neutral SQL twin of [[graft.ops.ColumnOps.parseEmpLength]]
-    * — ONE definition shared by the m5 oracle (SparkEntry) and the
+    * — ONE definition shared by the m5 oracle (MLFeatures) and the
     * pl_gold_demo oracle, so a portability tweak can never split the
     * two gates. */
   private[graft] val empLengthIntSql: String =
@@ -366,11 +366,11 @@ object Medallion {
     * under spark.sql.ansi.doubleQuotedIdentifiers. */
   private def qi(c: String): String = "\"" + c + "\""
 
-  def oracleSql: Map[String, String] = Map(
-    "pl_silver_loan" ->
-      s"${silverLoanSelect(pq("silver_loan/raw"))} ORDER BY id",
+  val gates: Seq[Gate] = Seq(
+    Gate("pl_silver_loan", plSilverLoan,
+      s"${silverLoanSelect(pq("silver_loan/raw"))} ORDER BY id"),
 
-    "pl_silver_demo" ->
+    Gate("pl_silver_demo", plSilverDemo,
       s"""SELECT member_id, CAST(snapshot_date AS STRING) AS snapshot_date,
          |  upper(trim(coalesce(emp_title, 'MISSING'))) AS emp_title,
          |  coalesce(emp_length, 'MISSING') AS emp_length,
@@ -378,9 +378,9 @@ object Medallion {
          |  annual_inc, verification_status, addr_state, application_type,
          |  zip_code
          |FROM ${pq("silver_demo/raw")}
-         |ORDER BY member_id, snapshot_date""".stripMargin,
+         |ORDER BY member_id, snapshot_date""".stripMargin),
 
-    "pl_silver_fin" -> {
+    Gate("pl_silver_fin", plSilverFin, {
       val fill0 = (Schemas.financialFill0 :+ "all_util")
         .map(c => s"coalesce($c, 0.0) AS $c")
       val fillM1 = (Schemas.financialFillMinus1 ++ Seq("il_util", "bc_util"))
@@ -394,9 +394,9 @@ object Medallion {
          |  ${(fill0 ++ fillM1 ++ flags).mkString(",\n  ")}
          |FROM raw, m
          |ORDER BY member_id, snapshot_date""".stripMargin
-    },
+    }),
 
-    "pl_silver_credit" -> {
+    Gate("pl_silver_credit", plSilverCredit, {
       val modes = Schemas.creditModeImputed
         .map(c => s"coalesce($c, ${modeSubquery(c, "raw")}) AS $c")
       val fillM1 = Schemas.creditFillMinus1
@@ -412,35 +412,35 @@ object Medallion {
          |    AS months_since_earliest_cr_line
          |FROM p
          |ORDER BY member_id, snapshot_date""".stripMargin
-    },
+    }),
 
-    "pl_gold_loan" ->
-      s"SELECT ${goldLoanOracleCols.mkString(", ")} FROM ${pq("gold_loan/silver")} ORDER BY id",
+    Gate("pl_gold_loan", plGoldLoan,
+      s"SELECT ${goldLoanOracleCols.mkString(", ")} FROM ${pq("gold_loan/silver")} ORDER BY id"),
 
-    "pl_gold_demo" ->
+    Gate("pl_gold_demo", plGoldDemo,
       s"""${goldDemoSelect(pq("gold_demo/silver"))}
-         |ORDER BY member_id, snapshot_date""".stripMargin,
+         |ORDER BY member_id, snapshot_date""".stripMargin),
 
-    "pl_gold_fin" ->
+    Gate("pl_gold_fin", plGoldFin,
       s"""SELECT member_id, CAST(snapshot_date AS STRING) AS snapshot_date,
          |  ${goldFinNonKeys.map(c => s"CAST($c AS DOUBLE) AS $c").mkString(",\n  ")}
          |FROM ${pq("gold_fin/silver")}
-         |ORDER BY member_id, snapshot_date""".stripMargin,
+         |ORDER BY member_id, snapshot_date""".stripMargin),
 
-    "pl_gold_credit" ->
+    Gate("pl_gold_credit", plGoldCredit,
       s"""SELECT member_id, CAST(snapshot_date AS STRING) AS snapshot_date,
          |  ${goldCreditPassThrough.mkString(", ")},
          |  coalesce(CAST((year(snapshot_date) - year(earliest_cr_line)) * 12
          |    + (month(snapshot_date) - month(earliest_cr_line)) AS INTEGER),
          |    999) AS months_since_earliest_cr
          |FROM ${pq("gold_credit/silver")}
-         |ORDER BY member_id, snapshot_date""".stripMargin,
+         |ORDER BY member_id, snapshot_date""".stripMargin),
 
     // explicit quoted select list instead of DuckDB's `* EXCLUDE` —
     // the one construct that kept this gate off the Spark-SQL sweep;
     // the names are derived from the same lists the pl_gold_* oracles
     // select (featureStoreCols), so they cannot drift
-    "pl_feature_store" ->
+    Gate("pl_feature_store", plFeatureStore,
       s"""WITH gl AS (SELECT * FROM ${pq("feature_store/gold_loan")}),
          |gd AS (SELECT * FROM ${pq("feature_store/gold_demo")}),
          |gf AS (SELECT * FROM ${pq("feature_store/gold_fin")}),
@@ -451,24 +451,11 @@ object Medallion {
          |  LEFT JOIN gc USING (member_id, snapshot_date)),
          |dd AS (SELECT DISTINCT * FROM j)
          |SELECT ${featureStoreCols.map(qi).mkString(", ")} FROM dd
-         |WHERE grade IS NOT NULL ORDER BY id""".stripMargin,
+         |WHERE grade IS NOT NULL ORDER BY id""".stripMargin),
 
-    "pl_label_store" ->
+    Gate("pl_label_store", plLabelStore,
       s"""SELECT id, CAST(snapshot_date AS STRING) AS snapshot_date, grade
          |FROM ${pq("label_store/silver")}
-         |WHERE grade IS NOT NULL ORDER BY id""".stripMargin
-  )
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pl_silver_loan" -> (plSilverLoan _),
-    "pl_silver_demo" -> (plSilverDemo _),
-    "pl_silver_fin" -> (plSilverFin _),
-    "pl_silver_credit" -> (plSilverCredit _),
-    "pl_gold_loan" -> (plGoldLoan _),
-    "pl_gold_demo" -> (plGoldDemo _),
-    "pl_gold_fin" -> (plGoldFin _),
-    "pl_gold_credit" -> (plGoldCredit _),
-    "pl_feature_store" -> (plFeatureStore _),
-    "pl_label_store" -> (plLabelStore _)
+         |WHERE grade IS NOT NULL ORDER BY id""".stripMargin)
   )
 }

@@ -195,4 +195,37 @@ object PipelineE2E {
     Seq(loanSilver, demoSilver, finSilver, creditSilver).foreach(_.unpersist())
     out
   }
+
+  // ---- Gates: each plan with the DuckDB SQL that checks it ----------
+
+  /** pipeline_e2e oracle: the query parquet-dumps its deterministic gold
+    * tables + loan silver (oracleDumpDir, same process so the
+    * pid-scoped path matches), and DuckDB independently recomputes the
+    * store assembly — 3 left joins, full-row distinct, grade filter,
+    * label counts, grade distribution. feature_cols is derived from the
+    * dumped schemas (join width minus the 3 dropped key/label columns),
+    * so a silent schema change fails the hash. */
+  private def pipelineE2ESql: String = {
+    val t = oracleDumpDir
+    s"""WITH lab AS (SELECT grade, count(*) AS n
+       |  FROM read_parquet('$t/silver_loan/*.parquet')
+       |  WHERE grade IS NOT NULL GROUP BY grade),
+       |j AS (SELECT * FROM read_parquet('$t/gold_loan/*.parquet') l
+       |  LEFT JOIN read_parquet('$t/gold_demo/*.parquet') dm USING (member_id, snapshot_date)
+       |  LEFT JOIN read_parquet('$t/gold_fin/*.parquet') f USING (member_id, snapshot_date)
+       |  LEFT JOIN read_parquet('$t/gold_credit/*.parquet') c USING (member_id, snapshot_date))
+       |SELECT
+       |  (SELECT count(*) FROM (SELECT DISTINCT * FROM j WHERE grade IS NOT NULL)) AS feature_rows,
+       |  (SELECT count(*) FROM (DESCRIBE SELECT * FROM read_parquet('$t/gold_loan/*.parquet')))
+       |   + (SELECT count(*) - 2 FROM (DESCRIBE SELECT * FROM read_parquet('$t/gold_demo/*.parquet')))
+       |   + (SELECT count(*) - 2 FROM (DESCRIBE SELECT * FROM read_parquet('$t/gold_fin/*.parquet')))
+       |   + (SELECT count(*) - 2 FROM (DESCRIBE SELECT * FROM read_parquet('$t/gold_credit/*.parquet')))
+       |   - 3 AS feature_cols,
+       |  (SELECT CAST(coalesce(sum(n), 0) AS BIGINT) FROM lab) AS label_rows,
+       |  (SELECT string_agg(grade || ':' || n, ',' ORDER BY grade) FROM lab) AS grade_dist""".stripMargin
+  }
+
+  val gates: Seq[Gate] = Seq(
+    Gate("pipeline_e2e", featureStoreStats, pipelineE2ESql)
+  )
 }

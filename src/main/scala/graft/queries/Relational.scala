@@ -7,8 +7,8 @@ import graft.core.Tables
 
 /** The relational operator inventory of SURVEY.md §2 (scans, projections,
   * predicates, scalar functions, aggregations, joins, sorts, sets, windows,
-  * dedup), re-expressed Spark-first over the TESTDATA corpus. Each method is
-  * one `SparkEntry.queries` entry with a DuckDB oracle.
+  * dedup), re-expressed Spark-first over the TESTDATA corpus. Each gate
+  * plan is declared with its DuckDB oracle in `gates`, at the end.
   *
   * Conventions for oracle parity:
   *  - every query ends in a total ORDER BY so row order is deterministic;
@@ -883,4 +883,401 @@ object Relational {
     heavyHitters(toks, "tok", 0.01)
       .orderBy("tok")
   }
+
+  // ---- Gates: each plan with the DuckDB SQL that checks it ----------
+
+  val gates: Seq[Gate] = Seq(
+    Gate("q1_agg", q1Agg,
+      """SELECT l_returnflag, l_linestatus,
+        |  round(sum(l_quantity), 4) AS sum_qty,
+        |  round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
+        |  round(avg(l_quantity), 6) AS avg_qty,
+        |  count(*) AS count_order
+        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Gate("s3_parquet_scan", s3ParquetScan,
+      "SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey"),
+    Gate("p2_select", p2Select,
+      "SELECT c_custkey, c_mktsegment FROM customer ORDER BY c_custkey"),
+    Gate("p5_between", p5Between,
+      """SELECT l_orderkey, l_linenumber, l_shipdate FROM lineitem
+        |WHERE l_shipdate BETWEEN TIMESTAMP '1996-01-01 00:00:00' AND TIMESTAMP '1996-12-31 23:59:59'
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    Gate("p6p7p8_predicates", p6p7p8Predicates,
+      """SELECT o_orderkey, o_custkey, o_orderpriority FROM orders
+        |WHERE o_orderstatus = 'F' AND o_orderpriority IN ('1-URGENT', '2-HIGH')
+        |  AND o_custkey IS NOT NULL
+        |ORDER BY o_orderkey""".stripMargin),
+    Gate("f_scalar_fns", fScalarFns,
+      """SELECT o_orderkey,
+        |  CASE WHEN o_totalprice > 200000 THEN 'high'
+        |       WHEN o_totalprice > 100000 THEN 'mid' ELSE 'low' END AS price_band,
+        |  strftime(date_trunc('month', o_orderdate), '%Y-%m-%d') AS order_month,
+        |  round((2002 - year(o_orderdate)) * 12 + (1 - month(o_orderdate))
+        |    + CASE WHEN day(o_orderdate) = 1 THEN 0.0
+        |           ELSE (1 - day(o_orderdate)) / 31.0 END, 6) AS months_ago,
+        |  upper(trim(o_orderpriority)) AS prio_norm,
+        |  coalesce(o_orderstatus, 'MISSING') AS status_filled,
+        |  CAST(regexp_extract(o_orderpriority, '^(\d+)', 1) AS INTEGER) AS prio_rank
+        |FROM orders WHERE o_orderkey <= 500 ORDER BY o_orderkey""".stripMargin),
+    Gate("a1_mode", a1Mode,
+      """SELECT o_orderpriority FROM orders GROUP BY o_orderpriority
+        |ORDER BY count(*) DESC, o_orderpriority ASC LIMIT 1""".stripMargin),
+    Gate("a2_mean", a2Mean,
+      "SELECT round(avg(l_quantity), 6) AS avg_qty FROM lineitem"),
+    Gate("a4_topk_freq", a4TopK,
+      """SELECT p_brand, count(*) AS cnt FROM part GROUP BY p_brand
+        |ORDER BY cnt DESC, p_brand ASC LIMIT 10""".stripMargin),
+    Gate("a5_distinct", a5Distinct,
+      "SELECT DISTINCT o_orderpriority FROM orders ORDER BY o_orderpriority"),
+    Gate("a6_summary", a6Summary,
+      """SELECT c_mktsegment,
+        |  count(*) AS n,
+        |  round(avg(c_acctbal), 6) AS avg_bal,
+        |  round(min(c_acctbal), 4) AS min_bal,
+        |  round(max(c_acctbal), 4) AS max_bal,
+        |  round(stddev(c_acctbal), 6) AS std_bal,
+        |  round(sum(c_acctbal), 4) AS sum_bal
+        |FROM customer GROUP BY c_mktsegment
+        |ORDER BY avg_bal DESC, c_mktsegment ASC""".stripMargin),
+    Gate("a9_percentile", a9Percentile,
+      """SELECT
+        |  round(quantile_cont(o_totalprice, 0.25), 4) AS p25,
+        |  round(quantile_cont(o_totalprice, 0.50), 4) AS p50,
+        |  round(quantile_cont(o_totalprice, 0.75), 4) AS p75,
+        |  round(quantile_cont(o_totalprice, 0.90), 4) AS p90
+        |FROM orders""".stripMargin),
+    Gate("j1_left_join", j1LeftJoin,
+      """SELECT r_name, n_name, count(*) AS n_customers,
+        |  round(sum(c_acctbal), 4) AS sum_bal
+        |FROM customer
+        |LEFT JOIN nation ON c_nationkey = n_nationkey
+        |LEFT JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin),
+    Gate("j2_inner_join", j2InnerJoin,
+      """SELECT o_orderstatus, count(*) AS n_lines,
+        |  round(sum(l_extendedprice), 4) AS sum_price
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    Gate("j3_semi_join", j3SemiJoin,
+      """SELECT o_orderkey, o_totalprice FROM orders
+        |WHERE EXISTS (SELECT 1 FROM lineitem
+        |  WHERE l_orderkey = o_orderkey AND l_quantity >= 49)
+        |ORDER BY o_orderkey""".stripMargin),
+    Gate("j4_anti_join", j4AntiJoin,
+      """SELECT c_custkey, c_name FROM customer
+        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+        |ORDER BY c_custkey""".stripMargin),
+    Gate("o1_topk_limit", o1TopkLimit,
+      """SELECT o_orderkey, o_totalprice FROM orders
+        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""".stripMargin),
+    Gate("u2_union", u2Union,
+      """SELECT o_orderstatus, count(*) AS n FROM (
+        |  SELECT * FROM orders WHERE o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
+        |  UNION ALL
+        |  SELECT * FROM orders WHERE o_orderdate >= TIMESTAMP '1999-01-01 00:00:00'
+        |) GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    Gate("w1_row_number", w1RowNumber,
+      """SELECT o_custkey, o_orderkey, o_totalprice FROM (
+        |  SELECT o_custkey, o_orderkey, o_totalprice,
+        |    ROW_NUMBER() OVER (PARTITION BY o_custkey
+        |      ORDER BY o_totalprice DESC, o_orderkey ASC) AS rk
+        |  FROM orders) WHERE rk = 1 ORDER BY o_custkey""".stripMargin),
+    Gate("w2_in_subquery", w2InSubquery,
+      """SELECT strftime(o_orderdate, '%Y-%m-%d') AS o_day, count(*) AS n,
+        |  round(sum(o_totalprice), 4) AS sum_price
+        |FROM orders
+        |WHERE CAST(o_orderdate AS DATE) IN (
+        |  SELECT DISTINCT CAST(o_orderdate AS DATE) FROM orders
+        |  ORDER BY 1 DESC LIMIT 30)
+        |GROUP BY 1 ORDER BY o_day""".stripMargin),
+    Gate("w3_running_sum", w3RunningSum,
+      """SELECT l_orderkey, l_linenumber,
+        |  round(sum(l_quantity) OVER (PARTITION BY l_orderkey ORDER BY l_linenumber
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS run_qty,
+        |  lag(l_quantity, 1) OVER (PARTITION BY l_orderkey ORDER BY l_linenumber) AS prev_qty
+        |FROM lineitem WHERE l_orderkey <= 100
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    Gate("r3_distinct", r3Distinct,
+      """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Gate("f2_date_parse", f2DateParse,
+      """SELECT o_orderkey,
+        |  strftime(o_orderdate, '%b-%Y') AS mmm_yyyy,
+        |  strftime(date_trunc('month', o_orderdate), '%Y-%m-%d') AS parsed,
+        |  round((2002 - year(o_orderdate)) * 12 + (1 - month(o_orderdate)), 6) AS months_since
+        |FROM orders WHERE o_orderkey <= 300 ORDER BY o_orderkey""".stripMargin),
+    Gate("a_cube", aCube,
+      """SELECT l_returnflag, l_linestatus, count(*) AS n,
+        |  round(sum(l_quantity), 4) AS sum_qty
+        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
+        |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin),
+    Gate("s6_csv_roundtrip", s6CsvRoundtrip,
+      """SELECT s_nationkey, count(*) AS n, round(sum(s_acctbal), 4) AS sum_bal
+        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin),
+    Gate("a_pivot", aPivot,
+      """SELECT l_returnflag,
+        |  round(sum(CASE WHEN l_linestatus = 'F' THEN l_quantity END), 4) AS qty_f,
+        |  round(sum(CASE WHEN l_linestatus = 'O' THEN l_quantity END), 4) AS qty_o
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Gate("u3_intersect_except", u3IntersectExcept,
+      """WITH early AS (SELECT DISTINCT o_custkey FROM orders
+        |  WHERE o_orderdate < TIMESTAMP '1998-01-01 00:00:00'),
+        |late AS (SELECT DISTINCT o_custkey FROM orders
+        |  WHERE o_orderdate >= TIMESTAMP '1998-01-01 00:00:00')
+        |SELECT o_custkey, 'both' AS set_op FROM (SELECT * FROM early INTERSECT SELECT * FROM late)
+        |UNION ALL
+        |SELECT o_custkey, 'early_only' FROM (SELECT * FROM early EXCEPT SELECT * FROM late)
+        |ORDER BY set_op, o_custkey""".stripMargin),
+    Gate("w4_lead_ntile", w4LeadNtile,
+      """SELECT o_custkey, o_orderkey,
+        |  lead(o_orderkey, 1) OVER w AS next_orderkey,
+        |  ntile(4) OVER w AS quartile
+        |FROM orders WHERE o_custkey <= 50
+        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+        |ORDER BY o_custkey, o_orderkey""".stripMargin),
+    Gate("s9_json_roundtrip", s9JsonRoundtrip,
+      """SELECT n_regionkey, count(*) AS n FROM nation
+        |GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin),
+    Gate("s5_orc_roundtrip", s5OrcRoundtrip,
+      """SELECT p_brand, count(*) AS n, round(sum(p_retailprice), 4) AS sum_price
+        |FROM part GROUP BY p_brand ORDER BY p_brand""".stripMargin),
+    Gate("s5_partitioned_roundtrip", s5PartitionedRoundtrip,
+      """SELECT o_orderstatus, count(*) AS n, round(sum(o_totalprice), 4) AS sum_price
+        |FROM orders WHERE year(o_orderdate) = 1997
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    Gate("q1_typed", q1Typed,
+      """SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 4) AS sum_qty
+        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Gate("q3_shipping", q3Shipping,
+      """SELECT l_orderkey,
+        |  strftime(o_orderdate, '%Y-%m-%d') AS o_date, o_orderpriority,
+        |  round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
+        |FROM customer
+        |JOIN orders ON c_custkey = o_custkey
+        |JOIN lineitem ON l_orderkey = o_orderkey
+        |WHERE c_mktsegment = 'BUILDING'
+        |  AND o_orderdate < TIMESTAMP '1995-03-15 00:00:00'
+        |  AND l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
+        |GROUP BY 1, 2, 3
+        |ORDER BY revenue DESC, l_orderkey ASC LIMIT 10""".stripMargin),
+    Gate("q5_local_supplier", q5LocalSupplier,
+      """SELECT n_name,
+        |  round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
+        |FROM customer
+        |JOIN orders ON c_custkey = o_custkey
+        |JOIN lineitem ON l_orderkey = o_orderkey
+        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |WHERE r_name = 'ASIA'
+        |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+        |  AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
+        |GROUP BY n_name ORDER BY revenue DESC, n_name ASC""".stripMargin),
+    Gate("u_upsert", uUpsert,
+      """WITH base AS (SELECT o_orderkey, o_orderstatus, o_totalprice, 1 AS version
+        |  FROM orders),
+        |upd AS (SELECT o_orderkey, 'U' AS o_orderstatus,
+        |    CAST(round(CAST(o_totalprice AS DECIMAL(15,2)) * 1.1, 2) AS DOUBLE)
+        |      AS o_totalprice, 2 AS version
+        |  FROM orders WHERE o_orderkey % 7 = 0),
+        |u AS (SELECT * FROM base UNION ALL SELECT * FROM upd),
+        |latest AS (SELECT * FROM (
+        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY o_orderkey ORDER BY version DESC) AS rn
+        |  FROM u) WHERE rn = 1)
+        |SELECT o_orderstatus, count(*) AS n, round(sum(o_totalprice), 4) AS sum_price
+        |FROM latest GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    Gate("s_merge_schema", sMergeSchema,
+      """WITH m AS (
+        |  SELECT n_nationkey, n_name, CAST(NULL AS BIGINT) AS n_regionkey FROM nation
+        |  UNION ALL
+        |  SELECT n_nationkey, n_name, n_regionkey FROM nation)
+        |SELECT n_regionkey, count(*) AS n, count(n_regionkey) AS n_with_region
+        |FROM m GROUP BY n_regionkey ORDER BY n_regionkey NULLS FIRST""".stripMargin),
+    Gate("dq_checks", dqChecks,
+      """WITH checks AS (
+        |  SELECT 'orders_pk_unique' AS check,
+        |    count(*) - count(DISTINCT o_orderkey) AS violations FROM orders
+        |  UNION ALL SELECT 'customer_pk_unique',
+        |    count(*) - count(DISTINCT c_custkey) FROM customer
+        |  UNION ALL SELECT 'lineitem_pk_unique',
+        |    count(*) - count(DISTINCT (l_orderkey, l_linenumber)) FROM lineitem
+        |  UNION ALL SELECT 'orders_custkey_not_null',
+        |    count(CASE WHEN o_custkey IS NULL THEN 1 END) FROM orders
+        |  UNION ALL SELECT 'orders_customer_fk', count(*) FROM orders o
+        |    WHERE o_custkey IS NOT NULL AND NOT EXISTS
+        |      (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
+        |  UNION ALL SELECT 'lineitem_orders_fk', count(*) FROM lineitem l
+        |    WHERE l_orderkey IS NOT NULL AND NOT EXISTS
+        |      (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)
+        |  UNION ALL SELECT 'lineitem_discount_range',
+        |    count(CASE WHEN l_discount < 0.0 OR l_discount > 0.1 THEN 1 END)
+        |    FROM lineitem)
+        |SELECT "check", CAST(violations AS BIGINT) AS violations,
+        |  violations = 0 AS passed
+        |FROM checks ORDER BY "check"""".stripMargin),
+    Gate("w5_rank_family", w5RankFamily,
+      """SELECT c_custkey, c_mktsegment,
+        |  dense_rank() OVER w AS drank,
+        |  round(percent_rank() OVER w, 6) AS prank,
+        |  round(cume_dist() OVER w, 6) AS cdist
+        |FROM customer WHERE c_custkey <= 200
+        |WINDOW w AS (PARTITION BY c_mktsegment
+        |  ORDER BY c_acctbal DESC, c_custkey ASC)
+        |ORDER BY c_custkey""".stripMargin),
+    Gate("a_rollup", aRollup,
+      """SELECT l_returnflag, l_linestatus, count(*) AS n,
+        |  round(sum(l_quantity), 4) AS sum_qty
+        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
+        |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin),
+    Gate("a_stats_corr", aStatsCorr,
+      """SELECT l_returnflag,
+        |  round(corr(l_quantity, l_extendedprice), 6) AS corr_qp,
+        |  round(covar_samp(l_quantity, l_extendedprice), 4) AS covar_qp,
+        |  round(regr_slope(l_extendedprice, l_quantity), 6) AS slope,
+        |  round(regr_intercept(l_extendedprice, l_quantity), 4) AS intercept
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Gate("a_map_metrics", aMapMetrics,
+      """SELECT '2024-01-07' AS week_date, 'lgbm' AS model_name,
+        |  round(avg(CASE WHEN o_orderstatus = 'F' THEN o_totalprice END), 4) AS avg_f,
+        |  round(avg(CASE WHEN o_orderstatus = 'O' THEN o_totalprice END), 4) AS avg_o,
+        |  round(avg(CASE WHEN o_orderstatus = 'P' THEN o_totalprice END), 4) AS avg_p,
+        |  count(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS n_f,
+        |  count(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS n_o,
+        |  count(CASE WHEN o_orderstatus = 'P' THEN 1 END) AS n_p,
+        |  CAST(count(DISTINCT o_orderstatus) AS INTEGER) AS n_grades
+        |FROM orders ORDER BY week_date""".stripMargin),
+    // A10: the HLL estimate is engine-specific, so the oracle pins the
+    // exact counts plus the within-5%-of-exact flag (rsd = 2%).
+    Gate("a10_approx_distinct", a10ApproxDistinct,
+      """SELECT l_returnflag, count(DISTINCT l_orderkey) AS n_exact, 1 AS approx_ok
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    // the GK sketch's rank-error contract pinned: every flag 1, n_rows
+    // data-dependent — a sketch past its ±n/acc bound flips a flag
+    Gate("a12_approx_quantiles", a12ApproxQuantiles,
+      """SELECT q, (SELECT CAST(count(*) AS BIGINT) FROM orders) AS n_rows,
+        |  1 AS rank_ok
+        |FROM (SELECT unnest([0.25, 0.5, 0.75]) AS q) ORDER BY q""".stripMargin),
+    // exact hot set recomputed; in_sketch pinned to 1 — freqItems'
+    // contract is superset-above-support, so any 0 is a sketch bug
+    Gate("a11_heavy_hitters", a11HeavyHitters,
+      """WITH t AS (SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS tok
+        |  FROM documents),
+        |tot AS (SELECT count(*) AS n FROM t)
+        |SELECT tok, count(*) AS n, 1 AS in_sketch
+        |FROM t GROUP BY tok
+        |HAVING count(*) > 0.01 * (SELECT n FROM tot)
+        |ORDER BY tok""".stripMargin),
+    // J7: salting is shuffle topology only — the oracle is the PLAIN
+    // join + aggregate the salted plan must be row-identical to.
+    Gate("j7_salted_join", j7SaltedJoin,
+      """SELECT o_orderpriority, count(*) AS n, round(sum(l_quantity), 4) AS sum_qty
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    // S-compact: compaction is a file-layout rewrite only — the oracle
+    // recomputes the aggregate from the ORIGINAL table.
+    Gate("s_compact_roundtrip", sCompactRoundtrip,
+      """SELECT lang, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+        |  CAST(sum(length(text)) AS BIGINT) AS sum_text_len
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin),
+    Gate("s_zorder_roundtrip", sZorderRoundtrip,
+      """SELECT l_returnflag, count(*) AS n,
+        |  CAST(sum(l_orderkey) AS BIGINT) AS sum_ok,
+        |  CAST(sum(l_partkey) AS BIGINT) AS sum_pk,
+        |  round(sum(l_quantity), 2) AS sum_qty
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    // exact distinct counts: the gate value-compares against DuckDB's
+    // exact COUNT(DISTINCT); the operator's scale default is approx
+    // (spec pins approx within 5% of exact)
+    Gate("dq_profile", (s, dir) => dqProfile(s, dir, exact = true),
+      """SELECT * FROM (
+        |  SELECT 'doc_id' AS col_name, count(*) - count(doc_id) AS n_null,
+        |    count(DISTINCT doc_id) AS n_distinct,
+        |    CAST(min(doc_id) AS VARCHAR) AS min_val,
+        |    CAST(max(doc_id) AS VARCHAR) AS max_val FROM documents
+        |  UNION ALL SELECT 'lang', count(*) - count(lang),
+        |    count(DISTINCT lang), CAST(min(lang) AS VARCHAR),
+        |    CAST(max(lang) AS VARCHAR) FROM documents
+        |  UNION ALL SELECT 'source', count(*) - count(source),
+        |    count(DISTINCT source), CAST(min(source) AS VARCHAR),
+        |    CAST(max(source) AS VARCHAR) FROM documents
+        |  UNION ALL SELECT 'n_chars', count(*) - count(n_chars),
+        |    count(DISTINCT n_chars), CAST(min(n_chars) AS VARCHAR),
+        |    CAST(max(n_chars) AS VARCHAR) FROM documents)
+        |ORDER BY col_name""".stripMargin),
+    Gate("j8_full_outer", j8FullOuter,
+      """WITH c AS (SELECT c_custkey FROM customer WHERE c_custkey <= 1000),
+        |o AS (SELECT o_custkey, count(*) AS n_orders FROM orders GROUP BY o_custkey)
+        |SELECT side, count(*) AS n FROM (
+        |  SELECT CASE WHEN c.c_custkey IS NULL THEN 'order_only'
+        |    WHEN o.o_custkey IS NULL THEN 'customer_only'
+        |    ELSE 'both' END AS side
+        |  FROM c FULL OUTER JOIN o ON c.c_custkey = o.o_custkey)
+        |GROUP BY side ORDER BY side""".stripMargin),
+    // W6: RANGE (value-bounded) frame on epoch seconds; floor() on the
+    // oracle side per gotcha 6 (unix_timestamp truncates to seconds).
+    Gate("w6_range_frame", w6RangeFrame,
+      """SELECT o_custkey, o_orderkey,
+        |  round(sum(o_totalprice) OVER (
+        |    PARTITION BY o_custkey
+        |    ORDER BY CAST(floor(epoch(o_orderdate)) AS BIGINT)
+        |    RANGE BETWEEN 2592000 PRECEDING AND CURRENT ROW), 4) AS trailing_30d
+        |FROM orders WHERE o_custkey <= 200
+        |ORDER BY o_custkey, o_orderkey""".stripMargin),
+    Gate("a_grouping_sets", aGroupingSets,
+      """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
+        |  round(sum(o_totalprice), 4) AS sum_price
+        |FROM orders
+        |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
+        |  (o_orderstatus), ())
+        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin),
+    Gate("a_unpivot", aUnpivot,
+      """WITH a AS (SELECT l_returnflag, round(sum(l_quantity), 4) AS sum_qty,
+        |    round(sum(l_extendedprice), 4) AS sum_price,
+        |    round(avg(l_discount), 6) AS avg_disc
+        |  FROM lineitem GROUP BY 1)
+        |SELECT l_returnflag, metric, value FROM (
+        |  SELECT l_returnflag, 'sum_qty' AS metric, sum_qty AS value FROM a
+        |  UNION ALL SELECT l_returnflag, 'sum_price', sum_price FROM a
+        |  UNION ALL SELECT l_returnflag, 'avg_disc', avg_disc FROM a)
+        |ORDER BY l_returnflag, metric""".stripMargin),
+    // DQ-skew: exact key-count distribution stats; sums cast (gotcha 19)
+    Gate("dq_skew_stats", dqSkewStats,
+      """WITH c AS (SELECT l_suppkey AS k, count(*) AS n FROM lineitem GROUP BY 1),
+        |top AS (SELECT CAST(sum(n) AS BIGINT) AS top_n
+        |  FROM (SELECT n FROM c ORDER BY n DESC, k LIMIT 10)),
+        |agg AS (SELECT count(*) AS n_keys, CAST(sum(n) AS BIGINT) AS n_rows,
+        |  max(n) AS max_n, round(avg(n), 4) AS mean_n,
+        |  round(max(n) / avg(n), 4) AS skew_ratio FROM c)
+        |SELECT n_keys, n_rows, max_n, mean_n, skew_ratio,
+        |  round(top_n * 1.0 / n_rows, 6) AS top_share
+        |FROM agg, top""".stripMargin),
+    // U-SCD2: the change-suppressed interval build recomputed from
+    // scratch (lag change filter → lead valid_to → census)
+    Gate("u_scd2", uScd2,
+      """WITH base AS (SELECT o_orderkey, o_orderstatus, o_totalprice, 1 AS version FROM orders),
+        |v2 AS (SELECT o_orderkey, 'U' AS o_orderstatus,
+        |    CAST(round(CAST(o_totalprice AS DECIMAL(15,2)) * 1.1, 2) AS DOUBLE) AS o_totalprice,
+        |    2 AS version FROM orders WHERE o_orderkey % 7 = 0),
+        |v3 AS (SELECT o_orderkey,
+        |    CASE WHEN o_orderkey % 28 = 0 THEN 'X' ELSE 'U' END AS o_orderstatus,
+        |    CAST(round(CAST(o_totalprice AS DECIMAL(15,2)) * 1.1, 2) AS DOUBLE) AS o_totalprice,
+        |    3 AS version FROM orders WHERE o_orderkey % 14 = 0),
+        |u AS (SELECT * FROM base UNION ALL SELECT * FROM v2 UNION ALL SELECT * FROM v3),
+        |chg AS (SELECT o_orderkey, o_orderstatus, o_totalprice, version FROM (
+        |  SELECT *, lag(o_orderstatus) OVER w AS _ps, lag(o_totalprice) OVER w AS _pp
+        |  FROM u WINDOW w AS (PARTITION BY o_orderkey ORDER BY version))
+        |  WHERE _ps IS NULL OR _ps <> o_orderstatus OR _pp <> o_totalprice),
+        |hist AS (SELECT version, o_orderstatus, o_totalprice,
+        |    lead(version) OVER (PARTITION BY o_orderkey ORDER BY version) AS valid_to
+        |  FROM chg)
+        |SELECT version, o_orderstatus,
+        |  CAST(CASE WHEN valid_to IS NULL THEN 1 ELSE 0 END AS INT) AS is_current,
+        |  CAST(count(*) AS BIGINT) AS n, round(sum(o_totalprice), 4) AS sum_price
+        |FROM hist GROUP BY 1, 2, 3
+        |ORDER BY version, o_orderstatus, is_current""".stripMargin)
+  )
 }

@@ -1,6 +1,10 @@
 package graft
 
-/** Driver-contract invariants: entry() smoke, query/oracle key alignment. */
+import org.apache.spark.sql.SparkSession
+import graft.queries.Gate
+
+/** Driver-contract invariants: entry() smoke, one gate per name, every
+  * gate's plan runs. */
 class SparkEntrySpec extends SparkSpec {
 
   test("entry() returns rows on the smoke scale factor") {
@@ -8,14 +12,20 @@ class SparkEntrySpec extends SparkSpec {
   }
 
   test("every oracle key has a query; names/aliases stay aligned") {
-    val qs = SparkEntry.queries.keySet
-    val os = SparkEntry.oracleSql.keySet
-    assert(os.subsetOf(qs), s"oracle keys without queries: ${os -- qs}")
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
     // every query runs and yields a non-degenerate schema on smoke data
     SparkEntry.queries.foreach { case (name, fn) =>
       val df = fn(spark, sf)
       assert(df.columns.nonEmpty, s"$name has no columns")
     }
+  }
+
+  test("a gate list with a repeated name is refused") {
+    val g = Gate("g", (s: SparkSession, _: String) => s.range(1).toDF(), "SELECT 1")
+    assert(Gate.unique(Seq(g, g.copy(name = "h"))).map(_.name) == Seq("g", "h"))
+    val e = intercept[IllegalArgumentException](
+      Gate.unique(Seq(g, g.copy(name = "h"), g.copy(oracleSql = "SELECT 2"))))
+    assert(e.getMessage.contains("declared more than once: g"))
   }
 
   // queries whose plan INTENTIONALLY contains a bounded broadcast nested

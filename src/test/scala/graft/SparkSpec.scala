@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+import graft.core.GraftSession
 
 /** Shared local session for specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -32,13 +33,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.build("graft-test", 4, 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

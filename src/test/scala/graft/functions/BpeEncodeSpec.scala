@@ -55,7 +55,6 @@ class BpeEncodeSpec extends SparkSpec {
   }
 
   test("registered for SQL use via the function registry") {
-    GraftFunctions.register(spark)
     // the word-end piece is s</w>, which "e s" does NOT match — word
     // boundaries are part of the symbol, exactly Sennrich's formulation
     val out = spark.sql(

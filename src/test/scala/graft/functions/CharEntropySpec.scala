@@ -35,7 +35,6 @@ class CharEntropySpec extends SparkSpec {
   }
 
   test("interpreted and codegen paths agree on real data; null maps to null") {
-    GraftFunctions.register(spark)
     val docs = Tables.documents(spark, sf).select($"doc_id", $"text")
     val viaPlan = docs
       .select($"doc_id", GraftFunctions.charEntropy(spark, $"text").as("e"))
@@ -52,7 +51,6 @@ class CharEntropySpec extends SparkSpec {
   }
 
   test("SQL registry + the quality positioning: padding scores below prose") {
-    GraftFunctions.register(spark)
     Seq(("prose", "the quick brown fox jumps over the lazy dog"),
         ("padding", "xxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxx"))
       .toDF("kind", "text").createOrReplaceTempView("ce_test")

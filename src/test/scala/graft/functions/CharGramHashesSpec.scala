@@ -67,7 +67,6 @@ class CharGramHashesSpec extends SparkSpec {
   }
 
   test("registered for SQL use via the function registry") {
-    GraftFunctions.register(spark)
     val out = spark.sql(
       "SELECT size(char_gram_hashes('abcdefghij', 3)) AS k").as[Int].head()
     assert(out == 8)

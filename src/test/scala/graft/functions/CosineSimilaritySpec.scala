@@ -11,7 +11,6 @@ class CosineSimilaritySpec extends SparkSpec {
   import spark.implicits._
 
   test("native expression is bit-equal to the composed version") {
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, sf).limit(200)
     val pairs = e.as("a").join(e.as("b"), $"a.vec_id" < $"b.vec_id")
       .limit(5000)
@@ -22,7 +21,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("registered for SQL use via the function registry") {
-    GraftFunctions.register(spark)
     Tables.embeddings(spark, sf).limit(5).createOrReplaceTempView("emb_test")
     val out = spark.sql(
       """SELECT cosine_sim(a.embedding, a.embedding) AS self_sim
@@ -31,7 +29,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("ragged arrays yield NULL, matching the composed version") {
-    GraftFunctions.register(spark)
     val v = Seq((Array(1.0f, 2.0f, 3.0f), Array(1.0f, 2.0f)))
       .toDF("a", "b")
     val out = v.select(
@@ -42,7 +39,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("interpreted and codegen paths agree") {
-    GraftFunctions.register(spark)
     // force interpreted evaluation via a non-codegen context: eval directly
     val v = Seq((Array(1.0f, 2.0f, 3.0f), Array(3.0f, 2.0f, 1.0f)))
       .toDF("a", "b")

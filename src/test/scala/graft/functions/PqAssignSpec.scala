@@ -61,7 +61,6 @@ class PqAssignSpec extends SparkSpec {
   }
 
   test("null vectors yield null, and the SQL registry path works") {
-    GraftFunctions.register(spark)
     val out = spark.sql(
       """SELECT pq_assign(CAST(NULL AS array<float>),
         |  array(array(array(CAST(1.0 AS float))))) AS enc""".stripMargin)

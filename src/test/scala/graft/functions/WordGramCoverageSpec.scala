@@ -73,7 +73,6 @@ class WordGramCoverageSpec extends SparkSpec {
   }
 
   test("registered for SQL use via the function registry") {
-    GraftFunctions.register(spark)
     val out = spark.sql(
       "SELECT word_gram_coverage(array('x', 'x', 'x'), 2, 2) AS c")
       .head().getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("c")

@@ -23,7 +23,6 @@ class ZorderSpec extends SparkSpec {
   }
 
   test("range_bucket: upper-bound tie handling, equal-population buckets") {
-    GraftFunctions.register(spark)
     val bounds = Array(10.0, 20.0, 30.0)
     val out = Seq(5.0, 10.0, 15.0, 30.0, 31.0, Double.NaN)
       .toDF("v")
