@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.core.GraftSession
+import graft.core.{GraftSession, Tables}
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, forcing FULL materialization through the noop
@@ -102,7 +102,7 @@ object Bench {
 
     // warm-up: JVM + codegen + parquet reader paths, not part of timings
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    Tables.region(spark, sfDir).count()
 
     // optional args select a subset (targeted local iteration)
     val selected =

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.core.GraftSession
+import graft.core.{GraftSession, Tables}
 import graft.operators.Similarity
 
 /** Recall-vs-cost evidence for the ANN family — the ScaleProbe
@@ -33,7 +33,7 @@ object RecallProbe {
 
     val K = 5
     dirs.foreach { dir =>
-      val e = spark.read.parquet(s"$dir/embeddings.parquet")
+      val e = Tables.embeddings(spark, dir)
         .persist()
       val n = e.count()
       val q = e.filter(col("vec_id") < 10)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.core.GraftSession
+import graft.core.{GraftSession, Tables}
 import graft.operators.{Dedup, TextAnalysis}
 
 /** Scaling-evidence main: replicates the documents corpus N× (distinct
@@ -26,7 +26,7 @@ object ScaleProbe {
     val spark = GraftSession.build("graft-scale-probe", cpus, cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    val base = spark.read.parquet(s"$sfDir/documents.parquet")
+    val base = Tables.documents(spark, sfDir)
     val baseN = base.count()
 
     def replicated(n: Int): DataFrame =
@@ -559,7 +559,7 @@ object ScaleProbe {
     // fit cost must stay FLAT while encode/scan track corpus size.
     if (sys.env.get("SPARK_GRAFT_PROBE_MODE").contains("pq")) {
       import graft.operators.Similarity
-      val eBase = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val eBase = Tables.embeddings(spark, sfDir)
       def replicatedE(n: Int): DataFrame =
         if (n == 1) eBase
         else (0 until n).map { r =>
@@ -624,7 +624,7 @@ object ScaleProbe {
     // set ⇒ the same linear law, no fit at all).
     if (sys.env.get("SPARK_GRAFT_PROBE_MODE").contains("knn")) {
       import graft.operators.Similarity
-      val eBase = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val eBase = Tables.embeddings(spark, sfDir)
       def replicatedE(n: Int): DataFrame =
         if (n == 1) eBase
         else (0 until n).map { r =>

@@ -1,7 +1,11 @@
 package graft.core
 
+import scala.collection.concurrent.TrieMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided parquet corpus (TESTDATA.md).
   *
@@ -9,14 +13,49 @@ import org.apache.spark.sql.functions._
   * Catalyst's parquet source gives us vectorized reads, predicate
   * pushdown, and column pruning for free. At 100 TB the same call reads
   * a partitioned table; nothing here assumes single-file layout.
+  *
+  * Schema memo: `spark.read.parquet` runs one Spark job per call to
+  * infer the schema from the footers, even on a file it read a moment
+  * ago. [[load]] runs Spark's own inference once per file version and
+  * reads later loads with that schema. The memo key is the path's leaf
+  * files (path, length, modification time) plus every session conf whose
+  * key names parquet (so `spark.sql.legacy.parquet.nanosAsLong`, which
+  * [[events]] turns on, gets its own entry). Its limit: a file rewritten
+  * in place with the same length and modification time is not seen as
+  * new. The corpus is read-only, so that never happens to it.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, table: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$table.parquet")
+  private type SchemaKey = (Seq[(String, Long, Long)], Map[String, String])
+  private val schemas = TrieMap.empty[SchemaKey, StructType]
+
+  def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
+    val path = s"$sfDir/$table.parquet"
+    val key = (leafFiles(spark, path), spark.conf.getAll.filter(_._1.contains("parquet")))
+    // a missing or empty path fails inference with Spark's own error,
+    // so nothing is memoized for it
+    val schema = schemas.getOrElseUpdate(key, spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** (path, length, modification time) of every file under `path`. */
+  private def leafFiles(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Nil
+    else {
+      val it = fs.listFiles(p, true)
+      val out = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      out.result().sorted
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Tables
 
 /** Seeded DIFFERENTIAL operator fuzzer (round-18 verdict #3): the gate
   * board is hand-authored, so interactions BETWEEN §2 operators
@@ -54,7 +55,7 @@ object Fuzz {
     BaseT("nation", "n_nationkey", "n_name", "n_regionkey"))
 
   private def baseDf(s: SparkSession, d: String, b: BaseT): DataFrame =
-    s.read.parquet(s"$d/${b.table}.parquet").select(
+    Tables.load(s, d, b.table).select(
       col(b.k).cast("long").as("k"), col(b.s).as("s1"),
       col(b.n).cast("long").as("n1"))
 
