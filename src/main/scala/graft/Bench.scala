@@ -42,10 +42,14 @@ import graft.core.{GraftSession, Tables}
   *
   * STREAM-LIFECYCLE MIN POLICY: keys containing "_stream" publish the
   * MIN over all samples as their headline (detail line lists them under
-  * "stream_min_keys") — their wall is a deterministic lifecycle floor
-  * plus strictly-additive scheduler noise that tracks box load, not
-  * code, so the min is the code-attributable number and cross-round
-  * deltas on these keys become readable from the JSON alone.
+  * "stream_min_keys") — their wall is a lifecycle floor plus
+  * strictly-additive scheduler noise that tracks box load, not code, so
+  * the min is the code-attributable number and cross-round deltas on
+  * these keys become readable from the JSON alone. The floor includes
+  * a near-full recompile of the key's generated classes on every
+  * sample: each sample starts a new query, and although every session
+  * shares one codegen cache (see `GraftSession`), Spark's cache holds
+  * 100 classes, fewer than one pass over these keys compiles.
   *
   * A warm-up pass (tiny range job + one parquet footer read) is excluded
   * from timings so the first measured query doesn't absorb JVM/codegen/

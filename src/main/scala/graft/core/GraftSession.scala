@@ -5,6 +5,17 @@ import org.apache.spark.sql.SparkSession
 /** Canonical session builder: the engine's recommended configuration,
   * sized for local[N] testing but expressing the knobs that matter on a
   * real cluster.
+  *
+  * Artifact isolation is off, as a fixed setting. Spark's codegen cache
+  * is keyed on the task's context classloader, and with isolation on
+  * every session (each `newSession`, each streaming query's clone) gets
+  * an executor classloader of its own, so the first trigger of every
+  * new query compiles each generated class again. graft adds no session
+  * artifacts (no `addArtifact`, `addJar` or `addFile` anywhere), so every
+  * session shares the one executor classloader and one codegen cache: a
+  * restarted stream, or an `AvailableNow` catch-up, reuses the classes
+  * its predecessor compiled while they stay in the cache (Spark's holds
+  * 100 classes).
   */
 object GraftSession {
 
@@ -37,5 +48,6 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .getOrCreate()
 }

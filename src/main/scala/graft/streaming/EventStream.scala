@@ -382,7 +382,14 @@ object EventStream {
                   .collect().map(_.get(0)).toSet
                 finally candidates.unpersist(blocking = false)
               }
-            def kept(id: String) = !col(id).isin(dropIds.toSeq: _*)
+            // the slices test ids against the frozen drop set by
+            // reference: the set rides the task closure, not the code, so
+            // the generated classes are the same every trigger (an `isin`
+            // inlines each id into a new predicate class)
+            val notDropped = udf(new org.apache.spark.sql.api.java.UDF1[Any, Boolean] {
+              def call(id: Any): Boolean = !dropIds(id)
+            }, org.apache.spark.sql.types.BooleanType)
+            def kept(id: String) = notDropped(col(id))
             step("publish")
             // manifest-committed under the stable batchId: a replay
             // overwrites its own data dir, so delivery is exactly-once

@@ -70,6 +70,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     import scala.jdk.CollectionConverters._
     seen.asScala.count(_ != marker)
   }
+
+  /** Classes Spark's code generator compiled while `run` runs: the
+    * codegen cache's misses, at planning and in tasks alike (local mode
+    * runs every task in this JVM, and the counter is JVM-wide). */
+  protected def compilesIn(run: => Unit): Long = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    run
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
 }
 
 object SparkSpec {

@@ -525,6 +525,64 @@ class EventStreamSpec extends SparkSpec {
     assert(asLong(storeS) == storeL.map(_.toLong), s"String store ids: $storeS")
   }
 
+  test("streamingNearDupIngest: warm triggers and a restarted query's first " +
+       "trigger compile no class") {
+    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.types._
+    def doc(p: String): String = (1 to 20).map(i => s"$p$i").mkString(" ")
+    def variant(b: String): String = b.split(" ").dropRight(1).mkString(" ") + " zz"
+    val tmp = java.nio.file.Files.createTempDirectory("ndrestart").toString
+    val (storeDir, keptDir, inDir, ckpt) =
+      (s"$tmp/store", s"$tmp/kept", s"$tmp/in", s"$tmp/ckpt")
+    graft.operators.Dedup.writeNearDupStore(
+      (0 until 40).map(i => (100L + i, doc(s"rs$i"))).toDF("doc_id", "text"),
+      "doc_id", "text", storeDir)
+    // the store outsizes every batch, so the probe's band-key join
+    // broadcasts the batch side from the first trigger on. Batch t holds
+    // a dup of the previous batch's novel doc (of a store doc for t = 0),
+    // a within-batch pair and a novel doc: every trigger drops two of
+    // its four docs
+    def batch(t: Int): Seq[(Long, String)] = Seq(
+      (10L * t + 1, variant(if (t == 0) doc("rs0") else doc(s"rn${t - 1}"))),
+      (10L * t + 2, doc(s"rp$t")), (10L * t + 3, variant(doc(s"rp$t"))),
+      (10L * t + 4, doc(s"rn$t")))
+    // one parquet file per batch, landed the way a catch-up finds it
+    def land(t: Int): Unit = {
+      val out = s"$tmp/stage/$t"
+      batch(t).toDF("doc_id", "text").coalesce(1).write.parquet(out)
+      val part = new java.io.File(out).listFiles().find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.move(part.toPath, new java.io.File(inDir, s"b$t.parquet").toPath)
+    }
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType)))
+    def query(trigger: Trigger) = streamingNearDupIngest(
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+          .parquet(inDir), storeDir, keptDir, "doc_id", "text")
+      .trigger(trigger).option("checkpointLocation", ckpt).start()
+    new java.io.File(inDir).mkdirs()
+    val q = query(Trigger.ProcessingTime(0L))
+    val compiles =
+      try (0 until 3).map { t => compilesIn { land(t); q.processAllAvailable() } }
+      finally q.stop()
+    // the restart: a second query over the same store and checkpoint
+    // catches up on the batch landed while it was down
+    land(3)
+    val restart = compilesIn {
+      val q2 = query(Trigger.AvailableNow())
+      try assert(q2.awaitTermination(120000), "the catch-up did not finish")
+      finally q2.stop()
+    }
+    info(s"classes compiled per trigger: ${compiles.mkString(", ")}; " +
+      s"restarted query's first trigger: $restart")
+    val kept = graft.sources.Sources.readPublished(spark, keptDir)
+      .select("doc_id").as[Long].collect().toSet
+    assert(kept == (0 until 4).flatMap(t => Seq(10L * t + 2, 10L * t + 4)).toSet,
+      s"survivors: $kept")
+    assert(graft.sources.Sources.publishedBatches(spark, keptDir) == Seq(1L, 2L, 3L, 4L))
+    assert(compiles.tail.forall(_ == 0), s"a warm trigger compiled classes: $compiles")
+    assert(restart == 0, s"the restarted query's first trigger compiled $restart classes")
+  }
+
   test("streamingExactDedupIngest drops exact dups against the growing fp store") {
     implicit val sqlCtx = spark.sqlContext
     val tmp = java.nio.file.Files.createTempDirectory("fpstream").toString
