@@ -14,8 +14,30 @@ import org.apache.spark.sql.SparkSession
   * artifacts (no `addArtifact`, `addJar` or `addFile` anywhere), so every
   * session shares the one executor classloader and one codegen cache: a
   * restarted stream, or an `AvailableNow` catch-up, reuses the classes
-  * its predecessor compiled while they stay in the cache (Spark's holds
-  * 100 classes).
+  * its predecessor compiled.
+  *
+  * The codegen cache holds 5000 classes, also a fixed setting. Spark's
+  * default of 100 is an LRU smaller than one `analytics_mix` cycle
+  * (about 175 classes), so a workload that cycles through its plans
+  * evicted each class before its next use and every warm query
+  * compiled again. One full `graft.Verify` pass over the 240 gates at
+  * sf0.1, in a fresh JVM with the cache unbounded, compiles 2977
+  * distinct classes (Spark's `CodegenMetrics` compile counter; 3632
+  * with stage ids in class names, see below); 5000 holds that with
+  * ample headroom for the cache's per-segment eviction, so a warm query
+  * compiles 0 classes.
+  * The conf is static: the cache is a JVM-wide singleton, sized when
+  * it is first used. Generated class names leave out the whole-stage
+  * codegen stage id (`spark.sql.codegen.useIdInClassName=false`): AQE
+  * numbers codegen stages as it creates query stages, in an order that
+  * depends on which earlier stages finished first, so with the id in
+  * the name the same code now and then came back under a new name and
+  * compiled again.
+  *
+  * `spark.sql.legacy.parquet.nanosAsLong` is on from the start, also a
+  * fixed setting: the corpus's `events.parquet` has shipped its `ts` as
+  * TIMESTAMP(NANOS), which Spark 4 otherwise refuses to read. Loading
+  * a table never changes the session's conf (see `Tables.events`).
   */
 object GraftSession {
 
@@ -49,5 +71,8 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .config("spark.sql.codegen.useIdInClassName", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
 }

@@ -19,10 +19,11 @@ import org.apache.spark.sql.types.StructType
   * ago. [[load]] runs Spark's own inference once per file version and
   * reads later loads with that schema. The memo key is the path's leaf
   * files (path, length, modification time) plus every session conf whose
-  * key names parquet (so `spark.sql.legacy.parquet.nanosAsLong`, which
-  * [[events]] turns on, gets its own entry). Its limit: a file rewritten
-  * in place with the same length and modification time is not seen as
-  * new. The corpus is read-only, so that never happens to it.
+  * key names parquet (so a session that turns
+  * `spark.sql.legacy.parquet.nanosAsLong` off gets its own entry). Its
+  * limit: a file rewritten in place with the same length and
+  * modification time is not seen as new. The corpus is read-only, so
+  * that never happens to it.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -65,17 +66,16 @@ object Tables {
   def orders(s: SparkSession, d: String): DataFrame     = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame   = load(s, d, "lineitem")
   /** events.parquet's `ts` has shipped as TIMESTAMP(NANOS) in some data
-    * generations (Spark 4 rejects it by default — read nanos as long,
-    * rebuild with integer division: ns-epoch exceeds double's 2^53
+    * generations (Spark 4 rejects it by default; every
+    * [[GraftSession.build]] session reads nanos as long, and this
+    * rebuilds it with integer division: ns-epoch exceeds double's 2^53
     * mantissa, so float division would corrupt timestamps) and as plain
     * TIMESTAMP(MICROS) in others (arrives as TIMESTAMP_NTZ — cast to
     * the session-zoned type so downstream window/diff arithmetic sees
     * ONE type either way; the session is pinned UTC, so the cast is
     * instant-preserving). Route by the loaded type, not by assumption. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(s: SparkSession, d: String): DataFrame =
     normalizeTs(load(s, d, "events"))
-  }
 
   /** The ts-routing half of [[events]], shared with the STREAMING twin
     * (EventStreamSpec reads the same file through readStream, where the

@@ -214,12 +214,13 @@ private[graft] object StoreMaintenance {
     // changes no crash state, only the wall: one table's commit tail
     // backfills the next's scan.
     graft.core.Par.run(tables.map { t => () =>
-      val paths = folds(t.name).map(_._2.toString)
+      val gens = folds(t.name).map(_._2)
       // basePath: the folded generation dirs are sibling partition
       // dirs (some with nested partitions inside) — without the table
-      // root Spark refuses the multi-root partition inference
-      val df = t.project(spark.read
-        .option("basePath", s"$dir/${t.name}").parquet(paths: _*))
+      // root Spark refuses the multi-root partition inference. The
+      // schema is pinned, so the read runs no schema-inference job
+      val df = t.project(spark.read.schema(footerSchema(spark, gens))
+        .option("basePath", s"$dir/${t.name}").parquet(gens.map(_.toString): _*))
       val w = df.write
       (if (t.partitionCols.nonEmpty) w.partitionBy(t.partitionCols: _*)
        else w).parquet(s"$dir/_compacting/${t.name}/batch=0")
@@ -232,6 +233,28 @@ private[graft] object StoreMaintenance {
           folds(t.name).map(_._1).mkString(",")).toMap)
     // phase 3: swap
     finish(spark, dir)
+  }
+
+  /** The data schema of the first parquet file under the generation
+    * dirs `gens` (nested partition dirs included; names starting `_`
+    * or `.` skipped, as Spark's listing skips them): the Spark schema
+    * its writer stored in the footer, which is what Spark's inference
+    * reads, read here on the driver with no Spark job. Every generation
+    * of a table is written by Spark with one schema. */
+  private def footerSchema(spark: SparkSession,
+                           gens: Seq[org.apache.hadoop.fs.Path]): StructType = {
+    val fs = hadoopFs(spark, gens.head.toString)
+    def files(p: org.apache.hadoop.fs.Path): Iterator[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).iterator.filterNot(s => "_.".contains(s.getPath.getName.head))
+        .flatMap(s => if (s.isDirectory) files(s.getPath) else Iterator(s))
+    val file = gens.iterator.flatMap(files).nextOption().getOrElse(throw new IllegalStateException(
+      s"store compaction: no parquet file under ${gens.mkString(", ")}"))
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(org.apache.parquet.hadoop.util
+      .HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration))
+    val stored = try reader.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata") finally reader.close()
+    require(stored != null, s"store compaction: ${file.getPath} was not written by Spark")
+    DataType.fromJson(stored).asInstanceOf[StructType]
   }
 
   /** Phase 3, idempotent under re-entry. */

@@ -53,7 +53,8 @@ class TablesSpec extends SparkSpec {
         .append("ts", i * 1000000000L + 123456789L))
     } finally writer.close()
 
-    val raw = withNanosAsLong(on = true)(Tables.load(spark, d, "events"))
+    // every GraftSession reads nanos as long
+    val raw = Tables.load(spark, d, "events")
     assert(raw.schema("ts").dataType == LongType)
     val plain = withNanosAsLong(on = false) {
       scala.util.Try(spark.read.parquet(s"$d/events.parquet").schema("ts").dataType)
@@ -66,10 +67,23 @@ class TablesSpec extends SparkSpec {
       s"with nanosAsLong off the memo must read as Spark does: $memo vs $plain")
     assert(!memo.toOption.contains(LongType))
 
-    val ev = withNanosAsLong(on = false)(Tables.events(spark, d))
+    val conf = spark.conf.getAll
+    val ev = Tables.events(spark, d)
+    assert(spark.conf.getAll == conf, "loading events changed the session conf")
     assert(ev.schema("ts").dataType == TimestampType)
     assert(ev.selectExpr("unix_micros(ts)").collect().map(_.getLong(0)).toSeq ==
       (1L to 3L).map(i => i * 1000000L + 123456L))
+  }
+
+  test("no table is inferred twice in a session, events loaded or not") {
+    val d = tmpDir("tables-once")
+    spark.range(10).write.parquet(s"$d/t.parquet")
+    spark.range(3).selectExpr("id AS event_id", "timestamp_seconds(id) AS ts")
+      .write.parquet(s"$d/events.parquet")
+    assert(jobsIn(Tables.load(spark, d, "t")) >= 1, "the first load infers the schema")
+    assert(jobsIn(Tables.events(spark, d)) >= 1, "the first events load infers the schema")
+    assert(jobsIn(Tables.load(spark, d, "t")) == 0, "events re-keyed the memo")
+    assert(jobsIn(Tables.events(spark, d)) == 0)
   }
 
   test("memo-read rows equal plain spark.read.parquet rows for every sf0.01 table") {
