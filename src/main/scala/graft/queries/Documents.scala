@@ -2433,8 +2433,11 @@ object Documents {
     // batches, so sentinel #1's own window MAY also flush before the
     // stream stops — the gate pins the corpus window explicitly below,
     // making the emitted-sentinel question irrelevant to the hash.
+    // one row from a range, not `docs.limit(1)`: Spark names a limit's
+    // row counter from a JVM-wide sequence, so the generated class of
+    // a plan holding a limit is new, and compiles again, on every run
     def sentinel(idVal: Long, tag: String, tsLit: String) =
-      docs.limit(1).select(lit(idVal).as("doc_id"),
+      s.range(1).select(lit(idVal).as("doc_id"),
         lit("the a of and is to in " +
           (1 to 50).map(i => s"sentinel$tag$i").mkString(" ")).as("text"),
         lit("en").as("lang"), to_timestamp(lit(tsLit)).as("ts"))
