@@ -94,64 +94,3 @@ case class CosineSimilarity(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): CosineSimilarity =
     copy(left = newLeft, right = newRight)
 }
-
-/** cos(x, x) with ONE accumulator: the self-dot d = Σv², returned as
-  * d/(√d·√d) — the exact arithmetic the full kernel performs when both
-  * inputs are x, so the rewrite is BIT-identical, ULP for ULP (d=2 gives
-  * 0.9999999999999998, not 1.0 — an exact ==1.0 filter behaves the same
-  * whether or not the rule fired). NaN/Inf elements and all-zero/empty
-  * arrays fall out of the same arithmetic (NaN/Inf → NaN, 0/0 → NaN).
-  * Still a win: one array read and one multiply per element instead of
-  * two reads and three. The SelfCosineRule rewrite target. */
-case class SelfCosine(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "self_cosine"
-  override def nullable: Boolean = true
-
-  private lazy val elementsNullable: Boolean = child.dataType match {
-    case ArrayType(_, containsNull) => containsNull
-    case _ => true
-  }
-
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    var d = 0.0
-    var i = 0
-    while (i < n) {
-      if (elementsNullable && x.isNullAt(i)) return null
-      val v = x.getFloat(i).toDouble
-      d += v * v
-      i += 1
-    }
-    d / (math.sqrt(d) * math.sqrt(d))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val v = ctx.freshName("v")
-      val d = ctx.freshName("d")
-      val nullCheck = if (elementsNullable)
-        s"if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }"
-      else ""
-      s"""
-         |int $n = $a.numElements();
-         |double $d = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $nullCheck
-         |  double $v = (double) $a.getFloat($i);
-         |  $d += $v * $v;
-         |}
-         |if (!${ev.isNull}) {
-         |  ${ev.value} = $d / (java.lang.Math.sqrt($d) * java.lang.Math.sqrt($d));
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SelfCosine =
-    copy(child = newChild)
-}

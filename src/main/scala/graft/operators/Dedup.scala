@@ -189,42 +189,48 @@ object Dedup {
   }
 
   /** At-rest exact-dedup fingerprint store: distinct md5 fps as parquet
-    * plus Bloom filter sidecar(s) over their xxhash64 keys. The filter
-    * is sized ONCE for the store's target capacity (`expectedTotalFps`
+    * plus Bloom filter sidecars over their xxhash64 keys. The filters
+    * are sized ONCE for the store's target capacity (`expectedTotalFps`
     * — corpus plus all future batches) so per-batch filters built with
     * the same parameters stay bit-compatible for merging; capacity,
-    * fpp, and shard count travel in `_meta.json`, and everything lives
-    * on the store dir's own filesystem. The filter is the store's hot
+    * fpp, and lane count travel in `_meta.json`, and everything lives
+    * on the store dir's own filesystem. The filters are the store's hot
     * half: ~1.8 bytes/fp at fpp 1e-3 where the parquet side is 16
     * bytes.
     *
+    * LAYOUT (formatVersion 3): fps land flat under per-batch generation
+    * dirs `fps/batch=<id>` (batch=0 is the base install), and the
+    * filters are [[BloomLanes]]: `shards = k` lanes, lane i holding the
+    * fps with xxhash64(fp) mod k = i as `_bloom.s<i>.bin` plus one
+    * `_bloom.s<i>.b<id>.bin` per append. The lane is computed from the
+    * fp, never stored, so the parquet table is the same at every k.
+    * Every filter comes from the one lane builder,
+    * `BloomFilter.create(capacity / k, fpp)` filled by one Spark job,
+    * so its size depends only on the meta — no session conf caps it,
+    * and the probe-time merge of a lane's filters never meets two bit
+    * sizes.
+    *
     * SHARDING: one filter serializes through a JVM byte array, so a
-    * single sidecar tops out around 1e9 fps (~1.8 GB) at fpp 1e-3.
-    * `shards = k` splits the store by fp hash range — fps land under
-    * `fps/shard=<i>` (i = xxhash64(fp) mod k) with one
-    * `_bloom.s<i>.bin` sidecar each, sized for 1/k of the capacity, so
-    * k shards carry k× the single-sidecar ceiling and the probe/append
-    * paths compose per shard ([[incrementalExactDedupFromFpStore]] /
-    * [[appendToFpStore]] read the shard count from the meta — callers
-    * never pass it again). `shards = 1` (default) keeps the flat
-    * single-sidecar layout; the capacity ceiling is checked PER SHARD,
-    * loudly, either way. */
+    * single lane tops out around 1e9 fps (~1.8 GB) at fpp 1e-3; k lanes
+    * carry k× that ceiling and the probe/append paths read k from the
+    * meta — callers never pass it again. The capacity ceiling is
+    * checked PER LANE, loudly. */
   def writeFpStore(corpus: DataFrame, idCol: String, textCol: String,
                    dir: String, expectedTotalFps: Long,
                    fpp: Double = 0.001, shards: Int = 1): Unit = {
     require(shards >= 1, s"shards must be >= 1: $shards")
-    val perShard = fpShardCapacity(expectedTotalFps, shards)
-    require(bloomFits(perShard, fpp),
-      s"writeFpStore: $perShard fps/shard at fpp=$fpp needs " +
-        f"${bloomBits(perShard, fpp) / 8 / 1e9}%.1f GB of filter — past " +
-        s"the single-sidecar ceiling (~1e9 fps at 1e-3); raise `shards` " +
+    val perLane = BloomLanes.perLane(expectedTotalFps, shards)
+    require(BloomLanes.fits(perLane, fpp),
+      s"writeFpStore: $perLane fps/lane at fpp=$fpp needs " +
+        f"${BloomLanes.bits(perLane, fpp) / 8 / 1e9}%.1f GB of filter — past " +
+        s"the single-filter ceiling (~1e9 fps at 1e-3); raise `shards` " +
         s"(currently $shards)")
     val spark = corpus.sparkSession
     // the version guard prescribes "reinstall with writeFpStore": over
-    // an older flat layout, fps/batch=0 landing next to flat files would
-    // brick every later read; over a store with appends, stale
-    // generations and their blooms would survive a full rebuild — clear
-    // both shapes
+    // an older layout, fps/batch=0 landing next to flat files or shard
+    // partitions would brick every later read; over a store with
+    // appends, stale generations and their blooms would survive a full
+    // rebuild — clear both shapes
     StoreMaintenance.requireInputNotFromStore(corpus, dir, "writeFpStore")
     StoreMaintenance.clearForReinstall(spark, dir,
       Seq("fps"), Seq("_bloom*.bin"))
@@ -232,27 +238,13 @@ object Dedup {
       .select(TextAnalysis.fingerprint(col(textCol)).as("fp"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // formatVersion 2: fps land under per-batch generation dirs
-    // (batch=0 is the base install) and every APPEND owns its own
-    // bloom sidecar (see appendToFpStore) — no sidecar is ever
-    // read-modify-written, so replays converge by overwrite and two
-    // ingest lines with distinct batch ids never lose an update
-    if (shards == 1) {
-      fps.write.mode("overwrite").parquet(s"$dir/fps/batch=0")
-      val filter = fps.select(xxhash64(col("fp")).as("k"))
-        .stat.bloomFilter("k", expectedTotalFps, fpp)
-      graft.sources.Sources.writeBinarySidecarFs(spark, s"$dir/_bloom.bin",
-        graft.functions.BloomMightContain.toBytes(filter))
-    } else {
-      fps.withColumn("shard", fpShardId(col("fp"), shards))
-        .write.partitionBy("shard").mode("overwrite")
-        .parquet(s"$dir/fps/batch=0")
-      (0 until shards).foreach { i =>
-        val keys = fps.filter(fpShardId(col("fp"), shards) === i)
-          .select(xxhash64(col("fp")).as("k"))
-        writeShardBloom(spark, dir, i, keys, perShard, fpp)
-      }
-    }
+    // every APPEND owns its own generation and filters (see
+    // appendToFpStore) — no sidecar is ever read-modify-written, so
+    // replays converge by overwrite and two ingest lines with distinct
+    // batch ids never lose an update
+    fps.write.mode("overwrite").parquet(s"$dir/fps/batch=0")
+    BloomLanes.land(spark, dir, fps.select(xxhash64(col("fp")).as("k")),
+      shards, perLane, fpp, batchId = 0L)
     fps.unpersist(blocking = false)
     StoreMaintenance.publishMeta(spark, dir, fpStoreVersion,
       Map("expectedTotalFps" -> expectedTotalFps.toString,
@@ -260,126 +252,51 @@ object Dedup {
         "shards" -> shards.toString))
   }
 
-  /** The fp store's layout version (per-batch `fps/batch=<id>`
-    * generations, one bloom sidecar per append), shared by
-    * [[writeFpStore]] and every reader through [[openFpStore]]. */
-  private val fpStoreVersion = "2"
+  /** The fp store's layout version (flat `fps/batch=<id>` generations,
+    * [[BloomLanes]] filters), shared by [[writeFpStore]] and every
+    * reader through [[openFpStore]]. */
+  private val fpStoreVersion = "3"
 
   private def openFpStore(spark: org.apache.spark.sql.SparkSession,
                           dir: String): Map[String, String] =
     StoreMaintenance.open(spark, dir, fpStoreVersion, "writeFpStore")
 
-  /** Shard routing for the fp store: xxhash64(fp) mod k, non-negative.
-    * The SAME xxhash64 key feeds the Bloom probes — harmless, because a
-    * shard's filter only ever answers for keys in its own residue
-    * class, and within it the full 64-bit key still spreads. */
-  private def fpShardId(fp: Column, shards: Int): Column =
-    pmod(xxhash64(fp), lit(shards.toLong)).cast("int")
-
-  private def fpShardCapacity(expectedTotalFps: Long, shards: Int): Long =
-    math.max(1L, (expectedTotalFps + shards - 1) / shards)
-
-  /** One shard lineage's Bloom filter, merged at probe time: the base
-    * install's filter OR'd with every per-batch append filter
-    * (`_bloom[.s<i>].b<batchId>.bin`). All filters in a lineage are
-    * built with the store's recorded capacity/fpp, so the layouts are
-    * bit-compatible and the merge is a byte-array OR. The driver-side
-    * read is |appends| sidecar files — a long ingest line folds them
-    * down with [[compactFpStoreSidecars]] from its single-writer
-    * maintenance slot. */
-  private[graft] def mergedBloomBytes(spark: org.apache.spark.sql.SparkSession,
-                                      dir: String, shard: Option[Int]): Array[Byte] = {
-    val prefix = shard.map(i => s"_bloom.s$i").getOrElse("_bloom")
-    val batchPat =
-      (java.util.regex.Pattern.quote(prefix) + "\\.b(\\d+)\\.bin").r
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batchFiles = fs.listStatus(d).map(_.getPath.getName)
-      .filter(n => batchPat.matches(n)).sorted
-    val base = org.apache.spark.util.sketch.BloomFilter.readFrom(
-      graft.sources.Sources.readBinarySidecarFs(spark, s"$dir/$prefix.bin"))
-    batchFiles.foreach { n =>
-      base.mergeInPlace(org.apache.spark.util.sketch.BloomFilter.readFrom(
-        graft.sources.Sources.readBinarySidecarFs(spark, s"$dir/$n")))
-    }
-    graft.functions.BloomMightContain.toBytes(base)
-  }
-
-  /** Single-writer maintenance: fold every per-batch append filter into
-    * the base sidecar and delete the batch files, so probe-time merge
-    * cost resets to one file per shard. Safe ONLY from the store's one
-    * writer lineage (a streaming loop's maintenance slot, or an offline
-    * job while ingest is paused) — it re-introduces exactly the
-    * read-modify-write the per-batch layout exists to avoid, which is
-    * fine when nobody else is writing. */
-  def compactFpStoreSidecars(spark: org.apache.spark.sql.SparkSession,
-                             dir: String): Unit =
-    foldBloomSidecars(spark, dir, openFpStore(spark, dir)("shards").toInt)
-
-  /** [[compactFpStoreSidecars]] over `shards` bloom lanes — shared with
-    * the eval-gram store, whose one lane has the fp store's unsharded
-    * sidecar layout. */
-  private def foldBloomSidecars(spark: org.apache.spark.sql.SparkSession,
-                                dir: String, shards: Int): Unit = {
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lineages: Seq[Option[Int]] =
-      if (shards == 1) Seq(None) else (0 until shards).map(Some(_))
-    lineages.foreach { shard =>
-      val prefix = shard.map(i => s"_bloom.s$i").getOrElse("_bloom")
-      val batchPat =
-        (java.util.regex.Pattern.quote(prefix) + "\\.b(\\d+)\\.bin").r
-      val batchFiles = fs.listStatus(d).map(_.getPath.getName)
-        .filter(n => batchPat.matches(n)).sorted
-      if (batchFiles.nonEmpty) {
-        // merged bytes FIRST (bloom ⊇ fps must hold at every instant),
-        // batch-file deletes after — a crash between leaves harmless
-        // already-merged extras
-        graft.sources.Sources.writeBinarySidecarFs(spark,
-          s"$dir/$prefix.bin", mergedBloomBytes(spark, dir, shard))
-        batchFiles.foreach(n =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$n"), false))
-      }
-    }
-  }
-
-  /** Fold the fp store's committed generations into one `batch=0` and
-    * fold OR RE-SIZE its bloom sidecars ([[resizeFpSidecarsAfterFold]]):
-    * when the table fold left unfolded generations behind (a bounded
-    * `maxBatchId`), per-batch filters are unioned into the base
-    * ([[compactFpStoreSidecars]] — replay-proof, set union); when EVERY
-    * generation folded into `batch=0`, the base filter is REBUILT from
-    * the folded keys with capacity = max(installed, 2×folded), because
-    * the install-sized union quietly saturates once appends outgrow the
-    * original sizing — the effective fpp degrades and every probe leaks
-    * more false-positive candidates into the exact-verify join, eroding
-    * the O(batch) guarantee the sidecar exists to provide. The fold is
-    * exactly the moment a right-sized rebuild is nearly free: batch 0's
-    * folded parquet is already in hand, one `stat.bloomFilter` pass
-    * restores the designed fpp, and `_meta.json` records the new
-    * capacity so later appends build bit-compatible per-batch filters.
-    * The fps TABLE fold takes `maxBatchId` like every row-table fold
-    * (duplicate fp rows from a replayed folded generation would be
-    * anti-join-invisible, but the store should not grow on replay). */
+  /** Fold the fp store's committed generations into one `batch=0`, then
+    * fold OR RE-SIZE its Bloom lanes
+    * ([[BloomLanes.foldAfterCompaction]]): when the table fold left
+    * unfolded generations behind (a bounded `maxBatchId`), per-batch
+    * filters are unioned into the base (replay-proof, set union); when
+    * EVERY generation folded into `batch=0`, each lane is REBUILT from
+    * the folded DISTINCT fps (folds concatenate generations without
+    * dedup, so the raw row count would over-size it) with capacity =
+    * max(installed, 2×hottest lane), because the install-sized union
+    * quietly saturates once appends outgrow the original sizing — the
+    * effective fpp degrades and every probe leaks more false-positive
+    * candidates into the exact-verify join. The fold is exactly the
+    * moment a right-sized rebuild is nearly free, and `_meta.json`
+    * records the new capacity so later appends build bit-compatible
+    * per-batch filters. The fps TABLE fold takes `maxBatchId` like
+    * every row-table fold (duplicate fp rows from a replayed folded
+    * generation would be anti-join-invisible, but the store should not
+    * grow on replay). */
   def compactFpStore(spark: org.apache.spark.sql.SparkSession, dir: String,
                      maxBatchId: Long = Long.MaxValue): Unit = {
     StoreMaintenance.compactStore(spark, dir, fpStoreVersion,
-        "writeFpStore", maxBatchId) { meta =>
-      if (meta("shards") == "1")
-        Seq(StoreMaintenance.TableSpec("fps", _.select("fp")))
-      else Seq(StoreMaintenance.TableSpec("fps",
-        _.select(col("fp"), col("shard")).repartition(col("shard")),
-        partitionCols = Seq("shard")))
+        "writeFpStore", maxBatchId) { _ =>
+      Seq(StoreMaintenance.TableSpec("fps", _.select("fp")))
     }
-    resizeFpSidecarsAfterFold(spark, dir)
+    // re-opened, never carried over from the fold: the re-size rewrites
+    // expectedTotalFps, and every later reader must see the new value
+    val meta = openFpStore(spark, dir)
+    BloomLanes.foldAfterCompaction(spark, dir, meta("shards").toInt,
+      onlyBase = (liveGenIds(spark, s"$dir/fps") - 0L).isEmpty,
+      spark.read.parquet(s"$dir/fps/batch=0").select("fp").distinct()
+        .select(xxhash64(col("fp")).as("k")),
+      meta("expectedTotalFps").toLong, meta("fpp").toDouble,
+      total => StoreMaintenance.publishMeta(spark, dir, fpStoreVersion,
+        meta + ("expectedTotalFps" -> total.toString)),
+      "reinstall with writeFpStore and more shards")
   }
-
-  /** Capacity growth factor a post-fold sidecar rebuild applies when the
-    * folded key count outgrew the installed sizing: room for one more
-    * store doubling before the next fold needs to re-size again, at
-    * ~1.8 bytes/key of filter — cheap insurance against re-sizing every
-    * fold on a steadily growing ingest line. */
-  private val bloomFoldHeadroom = 2L
 
   /** Batch-id set of a store table's live `batch=<id>` generation dirs. */
   private def liveGenIds(spark: org.apache.spark.sql.SparkSession,
@@ -390,171 +307,6 @@ object Dedup {
     else fs.listStatus(p).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
       .map(_.getPath.getName.stripPrefix("batch=").toLong).toSet
-  }
-
-  /** Names of a dir's per-batch bloom sidecar files (`_bloom.b<id>.bin`
-    * and `_bloom.s<i>.b<id>.bin`). */
-  private def batchBloomFiles(spark: org.apache.spark.sql.SparkSession,
-                              dir: String): Seq[String] = {
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pat = "_bloom(\\.s\\d+)?\\.b\\d+\\.bin".r
-    fs.listStatus(d).toSeq.map(_.getPath.getName).filter(pat.matches)
-  }
-
-  /** Optimal Bloom bit count ≈ -n·ln(p)/ln²2; 8·Int.MaxValue is the
-    * serializable ceiling (byte-array length), reached near 1.19e9
-    * keys at fpp 1e-3. Shared by `writeFpStore`'s install require and
-    * the fold-time re-size guards. */
-  private def bloomBits(capacity: Long, fpp: Double): Double =
-    math.ceil(-capacity * math.log(fpp) / (math.log(2) * math.log(2)))
-
-  private def bloomFits(capacity: Long, fpp: Double): Boolean =
-    bloomBits(capacity, fpp) <= 8.0 * Int.MaxValue
-
-  /** Delete every per-batch bloom sidecar file of a store dir. */
-  private def dropBatchBloomFiles(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    batchBloomFiles(spark, dir).foreach(n =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$n"), false))
-  }
-
-  /** One LANE's fold-time re-sized rebuild (a lane = the base filter of
-    * an unsharded store, or one shard's): `keys` is the folded
-    * generation's DISTINCT key frame as one `k` column; capacity grows
-    * to folded×headroom only when the lane outgrew `installed`.
-    *
-    * WRITE ORDER is meta FIRST, filter second, batch-file deletes last
-    * — the ordering that keeps every crash window self-healing: once
-    * `_meta.json` records the new capacity, the per-batch sidecar
-    * files are still on disk, so the idempotent fast path
-    * (batch-files-empty ⇒ return) cannot trap an inconsistent store —
-    * any later maintenance call sees the files and re-runs this
-    * rebuild. The reverse order (meta last) had a real hole: a crash
-    * after the deletes but before the meta write left a new-capacity
-    * base with an old-capacity meta, the fast path returned forever,
-    * and the next append's old-capacity filter made every probe's
-    * `mergeInPlace` throw until some unrelated fold happened by. A
-    * crash BETWEEN meta and filter (or filter and deletes) leaves
-    * mixed-capacity sidecars whose merge fails LOUDLY on probe; the
-    * next compact call heals it (bloom ⊇ keys holds throughout — the
-    * base filter always covers batch=0, and unfolded keys only ever
-    * live in their own still-present batch files).
-    *
-    * Returns (resized?, folded key count); resized = false means the
-    * lane would not fit the serializable ceiling — the caller falls
-    * back to the saturated union (never false-negative) and warns
-    * with the count. */
-  private def resizeLane(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, keys: DataFrame, installed: Long,
-                         fpp: Double, writeMeta: Long => Unit)
-      : (Boolean, Long) = {
-    val cached = keys.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n0 = cached.count()
-      val newCap = if (n0 > installed) n0 * bloomFoldHeadroom else installed
-      if (!bloomFits(newCap, fpp)) return (false, n0)
-      if (newCap != installed) writeMeta(newCap)
-      val filter =
-        if (n0 == 0L)
-          org.apache.spark.util.sketch.BloomFilter.create(newCap, fpp)
-        else cached.stat.bloomFilter("k", newCap, fpp)
-      graft.sources.Sources.writeBinarySidecarFs(spark, s"$dir/_bloom.bin",
-        graft.functions.BloomMightContain.toBytes(filter))
-      dropBatchBloomFiles(spark, dir)
-      (true, n0)
-    } finally cached.unpersist(blocking = false)
-  }
-
-  /** Post-fold sidecar policy for the fp store (see [[compactFpStore]]):
-    * union when unfolded generations remain (their keys live only in
-    * their own per-batch filters — rebuilding from `batch=0` alone
-    * would DROP them and admit silent false negatives), rebuild
-    * re-sized from the folded DISTINCT fps when `batch=0` is the only
-    * generation (folds concatenate generations without dedup, so the
-    * raw row count would over-size the lane). No-op when no per-batch
-    * sidecar files exist — the idempotent-maintenance-visit fast path,
-    * safe under [[resizeLane]]'s meta-first crash discipline. */
-  private[graft] def resizeFpSidecarsAfterFold(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    if (batchBloomFiles(spark, dir).isEmpty) return
-    // re-opened, never carried over from the fold: this rewrites
-    // expectedTotalFps, and every later reader must see the new value
-    val meta = openFpStore(spark, dir)
-    val shards = meta("shards").toInt
-    if ((liveGenIds(spark, s"$dir/fps") - 0L).nonEmpty) {
-      foldBloomSidecars(spark, dir, shards)
-      return
-    }
-    val fpp = meta("fpp").toDouble
-    val installed = meta("expectedTotalFps").toLong
-    val perShard = fpShardCapacity(installed, shards)
-    // ceiling fallback in every branch: the union keeps every key
-    // (saturated but never false-negative); the warn carries the count
-    // the operator needs to size the honest fix — a (more-)sharded
-    // writeFpStore reinstall
-    def unionWithWarn(msg: String): Unit = {
-      System.err.println(msg)
-      foldBloomSidecars(spark, dir, shards)
-    }
-    if (shards == 1) {
-      val (ok, n0) = resizeLane(spark, dir,
-        spark.read.parquet(s"$dir/fps/batch=0")
-          .select("fp").distinct()
-          .select(xxhash64(col("fp")).as("k")),
-        installed, fpp,
-        newCap => StoreMaintenance.publishMeta(spark, dir, fpStoreVersion,
-          meta + ("expectedTotalFps" -> newCap.toString)))
-      if (!ok) unionWithWarn(s"[graft] fp store $dir: $n0 folded fps " +
-        "need a filter past the single-sidecar ceiling — keeping the " +
-        "saturated union; reinstall with writeFpStore(shards=k)")
-    } else {
-      val cached = spark.read.parquet(s"$dir/fps/batch=0")
-        .select("fp", "shard").distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val counts = cached.groupBy("shard").count().collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap
-        val maxN = if (counts.isEmpty) 0L else counts.values.max
-        val newPerShard =
-          if (maxN > perShard) maxN * bloomFoldHeadroom else perShard
-        if (!bloomFits(newPerShard, fpp))
-          unionWithWarn(s"[graft] fp store $dir: hottest shard holds " +
-            s"$maxN folded fps — past the per-shard ceiling; keeping " +
-            "the saturated union; reinstall with more shards")
-        else {
-          // meta FIRST (the resizeLane crash discipline), then every
-          // shard's filter, batch-file deletes last
-          if (newPerShard != perShard)
-            StoreMaintenance.publishMeta(spark, dir, fpStoreVersion,
-              meta + ("expectedTotalFps" ->
-                (newPerShard * shards).toString))
-          (0 until shards).foreach { i =>
-            val keys = cached.filter(col("shard") === i)
-              .select(xxhash64(col("fp")).as("k"))
-            writeShardBloom(spark, dir, i, keys, newPerShard, fpp)
-          }
-          dropBatchBloomFiles(spark, dir)
-        }
-      } finally cached.unpersist(blocking = false)
-    }
-  }
-
-  /** One shard's Bloom sidecar from its key frame; an EMPTY shard gets
-    * an explicit empty filter (stat.bloomFilter over zero rows yields a
-    * null sketch buffer). */
-  private def writeShardBloom(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, shard: Int, keys: DataFrame,
-                              capacity: Long, fpp: Double): Unit = {
-    val filter =
-      if (keys.isEmpty)
-        org.apache.spark.util.sketch.BloomFilter.create(capacity, fpp)
-      else keys.stat.bloomFilter("k", capacity, fpp)
-    graft.sources.Sources.writeBinarySidecarFs(spark,
-      s"$dir/_bloom.s$shard.bin",
-      graft.functions.BloomMightContain.toBytes(filter))
   }
 
   /** `incrementalExactDedup` against the at-rest store, Bloom-routed:
@@ -570,25 +322,8 @@ object Dedup {
                                        dir: String, idCol: String,
                                        textCol: String): DataFrame = {
     val spark = batch.sparkSession
-    val shards = openFpStore(spark, dir)("shards").toInt
-    // sharded probe: route each fp to its shard's filter with a
-    // when-chain keyed on the shard id. NOTE the plan carries ALL shard
-    // filters (they are expression literals) — sharding raises the
-    // 2 GB-per-JVM-byte-array SERIALIZATION ceiling, not the executor
-    // memory bill, which is the total filter size either way.
-    val maybe: Column =
-      if (shards == 1)
-        graft.plans.GraftFunctions.bloomMightContain(spark,
-          xxhash64(col("fp")), mergedBloomBytes(spark, dir, None))
-      else {
-        val sid = fpShardId(col("fp"), shards)
-        (0 until shards).map { i =>
-          (i, graft.plans.GraftFunctions.bloomMightContain(spark,
-            xxhash64(col("fp")), mergedBloomBytes(spark, dir, Some(i))))
-        }.foldRight(lit(false): Column) { case ((i, probe), acc) =>
-          when(sid === i, probe).otherwise(acc)
-        }
-      }
+    val mightContain = BloomLanes.probe(spark, dir,
+      openFpStore(spark, dir)("shards").toInt)
     // one row per distinct batch fp, smallest id wins (within-batch
     // dedup) — tiny, and consumed by BOTH probe branches. Eager
     // localCheckpoint (not persist): the frame is materialized once
@@ -599,87 +334,53 @@ object Dedup {
       .select(col(idCol).as("id"),
         TextAnalysis.fingerprint(col(textCol)).as("fp"))
       .groupBy("fp").agg(min("id").as("id"))
-      .withColumn("_maybe", maybe)
+      .withColumn("_maybe", mightContain(xxhash64(col("fp"))))
       .localCheckpoint()
     val fresh = batchFp.filter(!col("_maybe")).select("id", "fp")
     val suspects = batchFp.filter(col("_maybe")).select("id", "fp")
-    // the verify join keys on fp alone — the sharded layout's partition
-    // column is irrelevant to it, so one scan serves both layouts
     val verified = suspects.join(
       spark.read.parquet(s"$dir/fps").select("fp"), Seq("fp"), "left_anti")
     fresh.unionByName(verified)
   }
 
-  /** Close the exact-dedup ingest loop: land the survivors' fps under
-    * the batch's own `fps/batch=<batchId>` generation dir and its keys
-    * as the batch's OWN Bloom sidecar (`_bloom[.s<i>].b<batchId>.bin`)
-    * — probes merge base + batch filters at read time
-    * ([[mergedBloomBytes]]). Nothing on this path reads or rewrites a
-    * shared mutable file, which buys two properties the old
-    * merge-into-base design lacked: (1) an at-least-once REPLAY of the
-    * same batchId converges by overwrite instead of re-landing
-    * duplicate fp rows, and (2) two ingest lines with DISTINCT batch
-    * ids never lose an update (the RMW interleave A-read/B-read/
-    * A-write/B-write silently dropped A's keys — a later duplicate of
-    * an A-batch doc could then probe negative and be re-admitted).
+  /** Close the exact-dedup ingest loop: land the survivors' keys as
+    * the batch's OWN Bloom filters (`_bloom.s<i>.b<batchId>.bin`, one
+    * per lane the batch touches) and its fps under the batch's own
+    * `fps/batch=<batchId>` generation dir — probes merge base + batch
+    * filters at read time ([[BloomLanes.merged]]). Nothing on this
+    * path reads or rewrites a shared mutable file, which buys two
+    * properties the old merge-into-base design lacked: (1) an
+    * at-least-once REPLAY of the same batchId converges by overwrite
+    * instead of re-landing duplicate fp rows, and (2) two ingest lines
+    * with DISTINCT batch ids never lose an update (the RMW interleave
+    * A-read/B-read/A-write/B-write silently dropped A's keys — a later
+    * duplicate of an A-batch doc could then probe negative and be
+    * re-admitted).
     *
-    * Write ORDER is still the store invariant — the filter FIRST, the
+    * Write ORDER is still the store invariant — the filters FIRST, the
     * parquet generation SECOND — because correctness requires
     * bloom ⊇ fps at all times: a parquet fp missing from the merged
     * filter would let a later duplicate probe negative and skip its
     * verify (silent re-admit), while a filter entry missing from
     * parquet only sends one more suspect to the verify join, which
     * finds nothing and correctly admits it. Crash between the writes →
-    * the safe side, healed by the replay's overwrite. The per-batch
-    * filter is built with the STORE's recorded capacity/fpp so
-    * probe-time `mergeInPlace` sees bit-compatible layouts; batchId
-    * namespace is the caller's contract (the near-dup store rule). */
+    * the safe side, healed by the replay's overwrite. A zero-row append
+    * (a replay whose fps are all stored) lands nothing. The batch is
+    * read once per lane, so callers pass a frozen frame
+    * (`localCheckpoint`); batchId namespace is the caller's contract
+    * (the near-dup store rule). */
   def appendToFpStore(newFps: DataFrame, dir: String, batchId: Long): Unit = {
     require(batchId > 0, "batchId 0 is the base install (writeFpStore)")
-    // zero-row append is a no-op — reached on replay paths where every
-    // fp is already in the store. Guarded explicitly because
-    // stat.bloomFilter over zero rows yields a null sketch buffer
-    // (NPE), and a zero-row parquet generation would only add an
-    // empty dir
-    if (newFps.isEmpty) return
     val spark = newFps.sparkSession
     val meta = openFpStore(spark, dir)
-    val expected = meta("expectedTotalFps").toLong
-    val fpp = meta("fpp").toDouble
     val shards = meta("shards").toInt
-    if (shards == 1) {
-      val batchFilter = newFps.select(xxhash64(col("fp")).as("k"))
-        .stat.bloomFilter("k", expected, fpp)
-      graft.sources.Sources.writeBinarySidecarFs(spark,
-        s"$dir/_bloom.b$batchId.bin",
-        graft.functions.BloomMightContain.toBytes(batchFilter))
+    val landed = BloomLanes.land(spark, dir,
+      newFps.select(xxhash64(col("fp")).as("k")), shards,
+      BloomLanes.perLane(meta("expectedTotalFps").toLong, shards),
+      meta("fpp").toDouble, batchId)
+    if (landed)
       newFps.select("fp").write.mode("overwrite")
         .parquet(s"$dir/fps/batch=$batchId")
-    } else {
-      // per shard: slice the batch by the routing hash, land the
-      // slice's keys as that shard's per-batch sidecar (same
-      // bloom-first ordering — bloom ⊇ fps must hold per shard). The
-      // batch is localCheckpoint'd by every ingest caller, so the k
-      // slice passes re-read a frozen frame, not the store. Empty
-      // slices skip the sidecar; the fps generation lands once,
-      // shard-partitioned.
-      val perShard = fpShardCapacity(expected, shards)
-      (0 until shards).foreach { i =>
-        val slice = newFps.filter(fpShardId(col("fp"), shards) === i)
-          .select("fp")
-        if (!slice.isEmpty) {
-          val batchFilter = slice.select(xxhash64(col("fp")).as("k"))
-            .stat.bloomFilter("k", perShard, fpp)
-          graft.sources.Sources.writeBinarySidecarFs(spark,
-            s"$dir/_bloom.s$i.b$batchId.bin",
-            graft.functions.BloomMightContain.toBytes(batchFilter))
-        }
-      }
-      newFps.withColumn("shard", fpShardId(col("fp"), shards))
-        .select(col("fp"), col("shard"))
-        .write.partitionBy("shard").mode("overwrite")
-        .parquet(s"$dir/fps/batch=$batchId")
-    }
     // same-session cached plans over the store keep serving the
     // pre-append file list otherwise (CacheManager keys on root path) —
     // the writer invalidates so readers stay oblivious
@@ -1447,8 +1148,9 @@ object Dedup {
     * streaming crawl ingest probes every micro-batch
     * ([[graft.streaming.EventStream.streamingDecontamIngest]]): the
     * eval suite's distinct 128-bit positional word-n-gram keys as
-    * parquet plus a Bloom sidecar over the h1 lane (the d15 fp-store
-    * layout applied to the decontamination family). The suite is
+    * parquet plus Bloom filters over the h1 half (the fp store's
+    * [[BloomLanes]] layout with one lane: `_bloom.s0.bin` plus one
+    * `_bloom.s0.b<id>.bin` per appended suite). The suite is
     * published ONCE when benchmarks are frozen; batches then pay a
     * map-side Bloom probe + an exact verify join against the parquet
     * keys — the eval texts themselves never travel again. 128-bit
@@ -1489,22 +1191,18 @@ object Dedup {
     // of re-scanning every landed generation's parquet
     graft.sources.Sources.writeJsonSidecarFs(spark,
       s"$dir/_stats/batch_0.json", Map("grams" -> nGrams.toString))
-    val filter =
-      if (grams.isEmpty)
-        org.apache.spark.util.sketch.BloomFilter.create(capacity, fpp)
-      else grams.select(col("h1").as("k")).stat.bloomFilter("k", capacity, fpp)
-    graft.sources.Sources.writeBinarySidecarFs(spark, s"$dir/_bloom.bin",
-      graft.functions.BloomMightContain.toBytes(filter))
+    BloomLanes.land(spark, dir, grams.select(col("h1").as("k")), lanes = 1,
+      capacity, fpp, batchId = 0L)
     StoreMaintenance.publishMeta(spark, dir, evalGramStoreVersion,
       Map("n" -> n.toString, "fpp" -> fpp.toString,
         "expectedTotalGrams" -> capacity.toString))
   }
 
   /** The eval-gram store's layout version (per-batch `grams/batch=<id>`
-    * generations, bloom sidecars and `_stats` entries), shared by
-    * [[writeEvalGramStore]] and every reader through
+    * generations, one [[BloomLanes]] lane and `_stats` entries), shared
+    * by [[writeEvalGramStore]] and every reader through
     * [[openEvalGramStore]]. */
-  private val evalGramStoreVersion = "2"
+  private val evalGramStoreVersion = "3"
 
   private[graft] def openEvalGramStore(spark: org.apache.spark.sql.SparkSession,
                                        dir: String): Map[String, String] =
@@ -1580,16 +1278,13 @@ object Dedup {
       .select(col("hg.h1").as("h1"), col("hg.h2").as("h2"))
       .distinct()
       .localCheckpoint()
-    if (grams.isEmpty) return
     // per-batch ownership (the fp-store design): the suite's filter
     // and gram generation land under the batch's own names — replays
     // converge by overwrite, concurrent suite publications with
-    // distinct ids never lose an update, nothing shared is RMW'd
-    val batchFilter = grams.select(col("h1").as("k"))
-      .stat.bloomFilter("k", capacity, fpp)
-    graft.sources.Sources.writeBinarySidecarFs(spark,
-      s"$dir/_bloom.b$batchId.bin",
-      graft.functions.BloomMightContain.toBytes(batchFilter))
+    // distinct ids never lose an update, nothing shared is RMW'd. An
+    // empty suite lands nothing.
+    if (!BloomLanes.land(spark, dir, grams.select(col("h1").as("k")),
+        lanes = 1, capacity, fpp, batchId)) return
     grams.write.mode("overwrite").parquet(s"$dir/grams/batch=$batchId")
     // this batch's gram count lands under its own `_stats` entry
     // (idempotent by overwrite, no shared-file RMW) and the warn total
@@ -1668,15 +1363,22 @@ object Dedup {
         "writeEvalGramStore", maxBatchId) { _ =>
       Seq(StoreMaintenance.TableSpec("grams", _.select("h1", "h2")))
     }
-    // same `_bloom.b<id>.bin` lineage as the fp store (unsharded), same
-    // post-fold policy (see compactFpStore): union only while unfolded
-    // generations remain; once batch=0 is the only generation, REBUILD
-    // the base filter from the folded h1 keys re-sized to
-    // max(installed, 2×folded) and record the new capacity in
-    // `_meta.json` — this is the de-saturation the warn in
-    // appendToEvalGramStore asks for, paid when the folded parquet is
-    // already in hand
-    resizeEvalGramSidecarAfterFold(spark, dir)
+    // the fp store's post-fold filter policy on the one lane (see
+    // compactFpStore): union only while unfolded generations remain;
+    // once batch=0 is the only generation, REBUILD the filter from the
+    // folded distinct h1 keys re-sized to max(installed, 2×folded) and
+    // record the new capacity in `_meta.json` — the de-saturation the
+    // warn in appendToEvalGramStore asks for, paid when the folded
+    // parquet is already in hand
+    val meta = openEvalGramStore(spark, dir)
+    BloomLanes.foldAfterCompaction(spark, dir, lanes = 1,
+      onlyBase = (gens() - 0L).isEmpty,
+      spark.read.parquet(s"$dir/grams/batch=0")
+        .select(col("h1").as("k")).distinct(),
+      meta("expectedTotalGrams").toLong, meta("fpp").toDouble,
+      total => StoreMaintenance.publishMeta(spark, dir,
+        evalGramStoreVersion, meta + ("expectedTotalGrams" -> total.toString)),
+      "split the suite across stores")
     // stats: batch 0's entry becomes the EXACT row count of the folded
     // generation — one parquet count of the table the fold just
     // rewrote, so a generation whose entry a crashed append never wrote
@@ -1731,37 +1433,6 @@ object Dedup {
     }
   }
 
-  /** [[resizeFpSidecarsAfterFold]]'s unsharded twin for the eval-gram
-    * store's h1-lane sidecar: union while unfolded generations remain,
-    * rebuild re-sized (capacity = max(installed, 2×folded distinct h1))
-    * once `batch=0` is the only generation, updating
-    * `expectedTotalGrams` so later suite appends build bit-compatible
-    * per-batch filters — one [[resizeLane]] call, so the two store
-    * families share the meta-first crash discipline by construction. */
-  private def resizeEvalGramSidecarAfterFold(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    if (batchBloomFiles(spark, dir).isEmpty) return
-    if ((liveGenIds(spark, s"$dir/grams") - 0L).nonEmpty) {
-      foldBloomSidecars(spark, dir, shards = 1)
-      return
-    }
-    val meta = openEvalGramStore(spark, dir)
-    val fpp = meta("fpp").toDouble
-    val (ok, n0) = resizeLane(spark, dir,
-      spark.read.parquet(s"$dir/grams/batch=0")
-        .select(col("h1").as("k")).distinct(),
-      meta("expectedTotalGrams").toLong, fpp,
-      newCap => StoreMaintenance.publishMeta(spark, dir,
-        evalGramStoreVersion,
-        meta + ("expectedTotalGrams" -> newCap.toString)))
-    if (!ok) {
-      System.err.println(s"[graft] eval-gram store $dir: $n0 folded " +
-        "grams need a filter past the single-sidecar ceiling — keeping " +
-        "the saturated union; split the suite across stores")
-      foldBloomSidecars(spark, dir, shards = 1)
-    }
-  }
-
   /** [[decontaminateRewrite]] against the at-rest eval-gram store —
     * BIT-IDENTICAL output to the live operator over the suite the
     * store was built from (the d15/d20 store-equals-live contract,
@@ -1778,18 +1449,19 @@ object Dedup {
     val spark = corpus.sparkSession
     val meta = openEvalGramStore(spark, dir)
     decontaminateRewriteLoaded(corpus, dir, meta("n").toInt,
-      mergedBloomBytes(spark, dir, None), idCol, textCol)
+      BloomLanes.probe(spark, dir, lanes = 1), idCol, textCol)
   }
 
   /** [[decontaminateRewriteFromStore]] with the store's geometry and
-    * Bloom bytes already in hand — the repeated-consumer entry point:
-    * a streaming loop probing the SAME read-only store every
-    * micro-batch ([[graft.streaming.EventStream.streamingDecontamIngest]])
-    * loads the sidecar ONCE and closes over it, instead of paying a
-    * driver read + executor re-broadcast of the filter bytes
-    * (~1.8 bytes/gram — tens of MB for a real eval suite) per batch. */
+    * Bloom probe ([[BloomLanes.probe]]) already in hand — the
+    * repeated-consumer entry point: a streaming loop probing the SAME
+    * read-only store every micro-batch
+    * ([[graft.streaming.EventStream.streamingDecontamIngest]]) loads
+    * the filter ONCE and closes over it, instead of re-reading the
+    * filter files and re-shipping their bytes (~1.8 bytes/gram — tens
+    * of MB for a real eval suite) to the executors per batch. */
   def decontaminateRewriteLoaded(corpus: DataFrame, dir: String, n: Int,
-                                 probeBytes: Array[Byte],
+                                 mightContain: Column => Column,
                                  idCol: String, textCol: String): DataFrame = {
     val spark = corpus.sparkSession
     val tokenized = corpus.select(col(idCol).as("id"),
@@ -1797,8 +1469,7 @@ object Dedup {
     val pos = tokenized.select(col("id"),
       posexplode(positionalGrams128(col("toks"), n)).as(Seq("p", "hg")))
     val survivors = pos
-      .filter(graft.plans.GraftFunctions.bloomMightContain(spark,
-        col("hg.h1"), probeBytes))
+      .filter(mightContain(col("hg.h1")))
       .select(col("id"), col("p"),
         col("hg.h1").as("h1"), col("hg.h2").as("h2"))
     val evalGrams = spark.read.parquet(s"$dir/grams")

@@ -34,12 +34,9 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * half-old/half-new table set. */
 private[graft] object StoreMaintenance {
 
-  /** One store table: how to project its fold (include any
-    * `repartition` the landed layout needs) and the partition columns
-    * of its at-rest layout (empty = plain dir of files). */
-  final case class TableSpec(name: String,
-                             project: DataFrame => DataFrame,
-                             partitionCols: Seq[String] = Nil)
+  /** One store table: its name and how to project its fold. Every
+    * generation is a plain dir of files. */
+  final case class TableSpec(name: String, project: DataFrame => DataFrame)
 
   private def marker(dir: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(s"$dir/_compact_swap.json")
@@ -216,14 +213,12 @@ private[graft] object StoreMaintenance {
     graft.core.Par.run(tables.map { t => () =>
       val gens = folds(t.name).map(_._2)
       // basePath: the folded generation dirs are sibling partition
-      // dirs (some with nested partitions inside) — without the table
-      // root Spark refuses the multi-root partition inference. The
-      // schema is pinned, so the read runs no schema-inference job
-      val df = t.project(spark.read.schema(footerSchema(spark, gens))
+      // dirs — without the table root Spark refuses the multi-root
+      // partition inference. The schema is pinned, so the read runs no
+      // schema-inference job
+      t.project(spark.read.schema(footerSchema(spark, gens))
         .option("basePath", s"$dir/${t.name}").parquet(gens.map(_.toString): _*))
-      val w = df.write
-      (if (t.partitionCols.nonEmpty) w.partitionBy(t.partitionCols: _*)
-       else w).parquet(s"$dir/_compacting/${t.name}/batch=0")
+        .write.parquet(s"$dir/_compacting/${t.name}/batch=0")
     }: _*)
     // phase 2: commit — record exactly which generation dirs the fold
     // covers, so the swap's deletes are replayable
@@ -235,20 +230,19 @@ private[graft] object StoreMaintenance {
     finish(spark, dir)
   }
 
-  /** The data schema of the first parquet file under the generation
-    * dirs `gens` (nested partition dirs included; names starting `_`
-    * or `.` skipped, as Spark's listing skips them): the Spark schema
-    * its writer stored in the footer, which is what Spark's inference
-    * reads, read here on the driver with no Spark job. Every generation
-    * of a table is written by Spark with one schema. */
+  /** The data schema of the first parquet file in the generation dirs
+    * `gens` (names starting `_` or `.` skipped, as Spark's listing
+    * skips them): the Spark schema its writer stored in the footer,
+    * which is what Spark's inference reads, read here with no Spark
+    * job. Every generation of a table is written by Spark with one
+    * schema. */
   private def footerSchema(spark: SparkSession,
                            gens: Seq[org.apache.hadoop.fs.Path]): StructType = {
     val fs = hadoopFs(spark, gens.head.toString)
-    def files(p: org.apache.hadoop.fs.Path): Iterator[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(p).iterator.filterNot(s => "_.".contains(s.getPath.getName.head))
-        .flatMap(s => if (s.isDirectory) files(s.getPath) else Iterator(s))
-    val file = gens.iterator.flatMap(files).nextOption().getOrElse(throw new IllegalStateException(
-      s"store compaction: no parquet file under ${gens.mkString(", ")}"))
+    val file = gens.iterator.flatMap(fs.listStatus(_))
+      .find(s => s.isFile && !"_.".contains(s.getPath.getName.head))
+      .getOrElse(throw new IllegalStateException(
+        s"store compaction: no parquet file under ${gens.mkString(", ")}"))
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(org.apache.parquet.hadoop.util
       .HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration))
     val stored = try reader.getFileMetaData.getKeyValueMetaData

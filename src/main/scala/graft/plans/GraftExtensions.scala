@@ -7,19 +7,17 @@ import org.apache.spark.sql.functions.call_function
 import graft.functions.{BloomMightContain, BpeEncode, CharEntropy, CharGramHashes, CosineSimilarity, PqAssign, RangeBucket, WordGramCoverage}
 
 /** Engine extensions: registers graft's native expressions so they are
-  * callable from SQL, and injects two rules: the optimizer rule
-  * [[SelfCosineRule]] (`cosine_sim(x, x)` ⇒ `self_cosine(x)`) and the
-  * AQE query-stage prep rule [[SmallSortRule]] (a global sort over a
-  * small materialized result shuffles to one partition, with no range
-  * sampling job). Every in-repo session loads them through
-  * `GraftSession.build`; a session built elsewhere activates them with
+  * callable from SQL, and injects the AQE query-stage prep rule
+  * [[SmallSortRule]] (a global sort over a small materialized result
+  * shuffles to one partition, with no range sampling job). Every
+  * in-repo session loads them through `GraftSession.build`; a session
+  * built elsewhere activates them with
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`, or
-  * gets the functions (not the rules) from `GraftFunctions.register(spark)`.
+  * gets the functions (not the rule) from `GraftFunctions.register(spark)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.descriptors.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => SelfCosineRule)
     ext.injectQueryStagePrepRule(_ => SmallSortRule)
   }
 }

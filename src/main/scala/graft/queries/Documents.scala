@@ -164,10 +164,10 @@ object Documents {
     * as d7 — the Bloom route is exact (negative probes are definitely
     * new; suspects are exact-verified against the parquet fps), so
     * store-vs-live can never diverge without breaking this gate.
-    * Written SHARDED (shards = 2) so the oracle also gates the
-    * hash-range-sharded layout — the path past the single-sidecar
-    * 1e9-fp ceiling; shard routing is layout-only, the probe answer
-    * is identical by construction. */
+    * Written with two Bloom lanes (shards = 2) so the oracle also
+    * gates lane routing — the path past the single-filter 1e9-fp
+    * ceiling; routing is layout-only, the probe answer is identical by
+    * construction. */
   def d15FpStore(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val dir = sys.props("java.io.tmpdir") +
@@ -182,7 +182,7 @@ object Documents {
 
   /** D30 — fp store GENERATION COMPACTION oracle-gated (the d29/t50
     * pattern on the exact-dedup store): the corpus lands in two
-    * installments (sharded base install + appendToFpStore), the fold
+    * installments (2-lane base install + appendToFpStore), the fold
     * ([[Dedup.compactFpStore]]) collapses fps generations and per-batch
     * bloom sidecars, and the probe runs against the FOLDED store —
     * same oracle shape as d15 over the union. A fold that loses an fp
@@ -199,10 +199,10 @@ object Documents {
         docs.filter(col("doc_id") % 5 === 1 || col("doc_id") % 5 === 2),
         "doc_id", "text", dir, expectedTotalFps = 1000000L, shards = 2)
     }
-    // localCheckpoint — the append path's caller contract: the sharded
-    // append re-reads the batch frame per shard slice + filter build,
-    // and an unfrozen lineage would re-run the scan+fingerprint+distinct
-    // for each of those jobs
+    // localCheckpoint — the append path's caller contract: the append
+    // reads the batch frame once per lane filter and once for the
+    // parquet write, and an unfrozen lineage would re-run the
+    // scan+fingerprint+distinct for each of those jobs
     timed("append") {
       Dedup.appendToFpStore(
         docs.filter(col("doc_id") % 5 === 3 || col("doc_id") % 5 === 4)
@@ -583,8 +583,11 @@ object Documents {
       s"/graft_${ProcessHandle.current.pid}/published"
     Sources.publishBatch(docs.filter(col("doc_id") % 2 === 0), dir, 1L)
     Sources.publishBatch(docs.filter(col("doc_id") % 2 =!= 0), dir, 2L)
-    // crash residue: data landed, manifest never did — must be invisible
-    docs.limit(50).write.mode("overwrite").parquet(s"$dir/data/batch=99")
+    // crash residue: data landed, manifest never did — must be invisible.
+    // An id range, not `limit`: Spark names a limit's row counter from
+    // a JVM-wide sequence, so every run would compile a new class
+    docs.filter(col("doc_id") < 50)
+      .write.mode("overwrite").parquet(s"$dir/data/batch=99")
     Sources.readPublished(s, dir)
       .groupBy("lang")
       .agg(count(lit(1)).as("n"), sum("n_chars").as("sum_chars"))
@@ -611,7 +614,8 @@ object Documents {
     Sources.publishBatch(docs.filter(col("doc_id") % 3 === 1).repartition(16), dir, 2L)
     Sources.publishBatch(docs.filter(col("doc_id") % 3 === 2).repartition(16), dir, 3L)
     // crash residue: data landed, manifest never did — must stay invisible
-    docs.limit(50).write.mode("overwrite").parquet(s"$dir/data/batch=99")
+    docs.filter(col("doc_id") < 50)
+      .write.mode("overwrite").parquet(s"$dir/data/batch=99")
     val (_, nOut) = Sources.compactPublished(s, dir, targetFileBytes = 1L << 30)
     require(nOut == 1, s"1 GiB target must compact to one file, got $nOut")
     // GC inside the gated path: vacuum may reclaim ONLY the
@@ -641,7 +645,8 @@ object Documents {
     p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
     Sources.publishBatch(docs.filter(col("doc_id") % 2 === 0).repartition(8), dir, 1L)
     Sources.publishBatch(docs.filter(col("doc_id") % 2 =!= 0).repartition(8), dir, 2L)
-    docs.limit(50).write.mode("overwrite").parquet(s"$dir/data/batch=99")
+    docs.filter(col("doc_id") < 50)
+      .write.mode("overwrite").parquet(s"$dir/data/batch=99")
     val (_, nOut) = Sources.zorderPublished(s, dir,
       Seq("doc_id", "n_chars"), nFiles = 4)
     // ≤: a range partition can land empty at tiny SFs; the layout

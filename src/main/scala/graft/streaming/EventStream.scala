@@ -667,13 +667,13 @@ object EventStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     import graft.operators.Dedup
     // the store is READ-ONLY to this loop: load its geometry and Bloom
-    // sidecar ONCE here and close over them — per-batch reloads would
+    // filter ONCE here and close over them — per-batch reloads would
     // pay a driver read + executor re-broadcast of the filter bytes on
     // every micro-batch for bits that never change
     val spark = docs.sparkSession
     val n = Dedup.openEvalGramStore(spark, evalStoreDir)("n").toInt
-    val probeBytes =
-      graft.operators.Dedup.mergedBloomBytes(spark, evalStoreDir, None)
+    val mightContain =
+      graft.operators.BloomLanes.probe(spark, evalStoreDir, lanes = 1)
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
@@ -686,7 +686,7 @@ object EventStream {
           graft.operators.StoreMaintenance
             .requireNoCrashedCompaction(spark, evalStoreDir)
           val cleaned = Dedup.decontaminateRewriteLoaded(
-            batch, evalStoreDir, n, probeBytes, idCol, textCol)
+            batch, evalStoreDir, n, mightContain, idCol, textCol)
           val kept =
             if (minKeptFrac <= 0.0) cleaned
             else cleaned.filter(

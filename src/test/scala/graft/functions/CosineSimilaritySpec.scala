@@ -38,6 +38,20 @@ class CosineSimilaritySpec extends SparkSpec {
     assert(out.isNullAt(1))
   }
 
+  test("zero vectors yield NaN and null elements NULL, self and cross") {
+    val zeros = Seq(Array(0.0f, 0.0f), Array(1.0f, 0.0f)).toDF("v")
+    val out = zeros.select(GraftFunctions.cosineSim($"v", $"v").as("c"))
+      .as[Double].collect()
+    assert(out(0).isNaN && out(1) == 1.0)
+    val a = Seq((Seq(Some(1.0f), None), Seq(Some(1.0f), Some(1.0f)))).toDF("x", "y")
+      .select($"x".cast("array<float>").as("x"), $"y".cast("array<float>").as("y"))
+    val nulls = a.select(isnull(GraftFunctions.cosineSim($"x", $"y")),
+      isnull(GraftFunctions.cosineSim($"x", $"x")),
+      isnull(GraftFunctions.cosineSim($"y", $"y"))).as[(Boolean, Boolean, Boolean)].first()
+    assert(nulls == ((true, true, false)),
+      "a null element in either side must poison the score to NULL")
+  }
+
   test("interpreted and codegen paths agree") {
     // force interpreted evaluation via a non-codegen context: eval directly
     val v = Seq((Array(1.0f, 2.0f, 3.0f), Array(3.0f, 2.0f, 1.0f)))

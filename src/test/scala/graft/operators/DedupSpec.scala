@@ -326,111 +326,81 @@ class DedupSpec extends SparkSpec {
     assert(viaStore.toSeq == Seq(11L, 13L))
   }
 
-  test("fp store sharded: 2-shard layout equals live path, grows, bloom ⊇ fps per shard") {
-    val dir = java.nio.file.Files.createTempDirectory("fpshard").toString
-    val docs = graft.core.Tables.documents(spark, sf)
-    val corpus = docs.filter($"doc_id" % 5 =!= 0)
-    val batch1 = docs.filter($"doc_id" % 5 === 0 && $"doc_id" % 2 === 0)
-    val batch2 = docs.filter($"doc_id" % 5 === 0 && $"doc_id" % 2 =!= 0)
-    Dedup.writeFpStore(corpus, "doc_id", "text", dir,
-      expectedTotalFps = 100000L, shards = 2)
-    // layout: two bloom sidecars, hash-partitioned fps dirs under the
-    // base generation
-    assert(new java.io.File(s"$dir/_bloom.s0.bin").exists() &&
-      new java.io.File(s"$dir/_bloom.s1.bin").exists())
-    assert(new java.io.File(s"$dir/fps/batch=0/shard=0").exists() &&
-      new java.io.File(s"$dir/fps/batch=0/shard=1").exists())
-    // shard routing is layout-only: same answer as the live path
-    val live1 = Dedup.incrementalExactDedup(batch1, corpus, "doc_id", "text")
-      .select("fp", "id").as[(String, Long)].collect().toSet
-    val store1raw = Dedup.incrementalExactDedupFromFpStore(
-      batch1, dir, "doc_id", "text")
-    val store1 = store1raw.select("fp", "id").as[(String, Long)].collect().toSet
-    assert(store1 == live1 && store1.nonEmpty)
-    // grow: the append must slice by the SAME routing hash
-    Dedup.appendToFpStore(store1raw.select("fp"), dir, batchId = 1L)
-    val corpus2 = corpus.unionByName(
-      batch1.join(store1raw.select($"id".as("doc_id")), Seq("doc_id"), "left_semi"))
-    val live2 = Dedup.incrementalExactDedup(batch2, corpus2, "doc_id", "text")
-      .select("fp", "id").as[(String, Long)].collect().toSet
-    val store2 = Dedup.incrementalExactDedupFromFpStore(
-        batch2, dir, "doc_id", "text")
-      .select("fp", "id").as[(String, Long)].collect().toSet
-    assert(store2 == live2)
-    // per-shard invariant after the grow: every landed fp probes
-    // POSITIVE in ITS OWN shard's MERGED filter (base + per-batch
-    // sidecars: bloom ⊇ fps, shard-wise) — and the shard dirs really
-    // partition by the routing hash
-    (0 to 1).foreach { i =>
-      val bloom = org.apache.spark.util.sketch.BloomFilter.readFrom(
-        Dedup.mergedBloomBytes(spark, dir, Some(i)))
+  // one table over the lane count: k = 1 is the unsharded store, k = 2
+  // the sharded one; both land the same flat fps table
+  Seq(1, 2).foreach { k =>
+    test(s"fp store at $k lane(s): Bloom-routed path equals live, grows, " +
+         "keeps bloom ⊇ fps per lane") {
+      val dir = java.nio.file.Files.createTempDirectory("fpstore").toString
+      val docs = graft.core.Tables.documents(spark, sf)
+      val corpus = docs.filter($"doc_id" % 5 =!= 0)
+      val batch1 = docs.filter($"doc_id" % 5 === 0 && $"doc_id" % 2 === 0)
+      val batch2 = docs.filter($"doc_id" % 5 === 0 && $"doc_id" % 2 =!= 0)
+      Dedup.writeFpStore(corpus, "doc_id", "text", dir,
+        expectedTotalFps = 100000L, shards = k)
+      // layout: one base filter per lane, and a flat base generation —
+      // the lane is computed from the fp, never stored
+      assert((0 until k).forall(i => new java.io.File(s"$dir/_bloom.s$i.bin").exists()))
+      assert(!new java.io.File(s"$dir/_bloom.s$k.bin").exists())
+      assert(new java.io.File(s"$dir/fps/batch=0").listFiles()
+        .forall(f => !f.isDirectory), "fps generations must be flat")
+      // lane routing is layout-only: same answer as the live path
+      val live1 = Dedup.incrementalExactDedup(batch1, corpus, "doc_id", "text")
+        .select("fp", "id").as[(String, Long)].collect().toSet
+      val store1raw = Dedup.incrementalExactDedupFromFpStore(
+        batch1, dir, "doc_id", "text")
+      assert(store1raw.columns.toSeq == Seq("id", "fp"),
+        "store path must keep incrementalExactDedup's output contract")
+      val store1 = store1raw.select("fp", "id").as[(String, Long)].collect().toSet
+      assert(store1 == live1 && store1.nonEmpty)
+      // ONE ROW per fp is the probe's output contract (fp → min-id agg
+      // resolves within-batch dups): the streaming ingest loop appends
+      // survivors' fps WITHOUT a distinct on the strength of it
+      assert(store1raw.groupBy("fp").count().filter($"count" > 1).isEmpty,
+        "probe output must be row-unique per fp")
+
+      // grow, then batch 2 must dedup against corpus ∪ batch-1 survivors;
+      // the append must route by the SAME lane hash
+      Dedup.appendToFpStore(store1raw.select("fp"), dir, batchId = 1L)
+      val corpus2 = corpus.unionByName(
+        batch1.join(store1raw.select($"id".as("doc_id")), Seq("doc_id"), "left_semi"))
+      val live2 = Dedup.incrementalExactDedup(batch2, corpus2, "doc_id", "text")
+        .select("fp", "id").as[(String, Long)].collect().toSet
+      val store2 = Dedup.incrementalExactDedupFromFpStore(
+          batch2, dir, "doc_id", "text")
+        .select("fp", "id").as[(String, Long)].collect().toSet
+      assert(store2 == live2)
+
+      // store invariant after the grow, lane-wise: every landed fp probes
+      // POSITIVE in ITS OWN lane's MERGED filter (base + per-batch
+      // filters) — a parquet fp the bloom misses would let a later
+      // duplicate skip its verify and be silently re-admitted — and the
+      // lanes really partition by the routing hash: a lane's filter
+      // answers (almost) none of another lane's keys
       val landed = spark.read.parquet(s"$dir/fps")
-        .filter($"shard" === i).select(xxhash64($"fp")).as[Long].collect()
-      assert(landed.nonEmpty, s"shard $i must hold fps")
-      assert(landed.forall(k => ((k % 2) + 2) % 2 == i),
-        s"shard $i dir must hold only its residue class")
-      assert(landed.forall(bloom.mightContainLong),
-        s"bloom ⊇ fps must hold for shard $i after append")
+        .select(xxhash64($"fp")).as[Long].collect()
+      def laneOf(key: Long): Int = (((key % k) + k) % k).toInt
+      (0 until k).foreach { i =>
+        val bloom = BloomLanes.merged(spark, dir, i)
+        val (own, others) = landed.partition(laneOf(_) == i)
+        assert(own.nonEmpty, s"lane $i must hold fps")
+        assert(own.forall(bloom.mightContainLong),
+          s"bloom ⊇ fps must hold for lane $i after append")
+        assert(others.count(bloom.mightContainLong) <= others.length / 20,
+          s"lane $i's filter must hold only its residue class")
+      }
+
+      // the Bloom route must actually route: on a mostly-novel batch the
+      // negative probes vastly outnumber the suspects
+      val batchFp = batch2.select(
+        graft.operators.TextAnalysis.fingerprint($"text").as("fp")).distinct()
+      val nSuspect = batchFp
+        .filter(BloomLanes.probe(spark, dir, k)(xxhash64($"fp")))
+        .count()
+      val nDup = batchFp.count() - store2.size
+      assert(nSuspect < nDup + math.max(10, batchFp.count() / 20),
+        s"suspect count $nSuspect should be ≈ true dups $nDup + fpp dribble")
     }
-  }
-
-  test("fp store: Bloom-routed path equals live, grows, keeps bloom ⊇ fps") {
-    val dir = java.nio.file.Files.createTempDirectory("fpstore").toString
-    val docs = graft.core.Tables.documents(spark, sf)
-    val corpus = docs.filter($"doc_id" % 5 =!= 0)
-    val batch1 = docs.filter($"doc_id" % 5 === 0 && $"doc_id" % 2 === 0)
-    val batch2 = docs.filter($"doc_id" % 5 === 0 && $"doc_id" % 2 =!= 0)
-
-    Dedup.writeFpStore(corpus, "doc_id", "text", dir,
-      expectedTotalFps = 100000L)
-    val live1 = Dedup.incrementalExactDedup(batch1, corpus, "doc_id", "text")
-      .select("fp", "id").as[(String, Long)].collect().toSet
-    val store1raw = Dedup.incrementalExactDedupFromFpStore(
-      batch1, dir, "doc_id", "text")
-    assert(store1raw.columns.toSeq == Seq("id", "fp"),
-      "store path must keep incrementalExactDedup's output contract")
-    val store1 = store1raw.select("fp", "id").as[(String, Long)].collect().toSet
-    assert(store1 == live1 && store1.nonEmpty)
-    // ONE ROW per fp is the probe's output contract (fp → min-id agg
-    // resolves within-batch dups): the streaming ingest loop appends
-    // survivors' fps WITHOUT a distinct on the strength of it
-    assert(store1raw.groupBy("fp").count().filter($"count" > 1).isEmpty,
-      "probe output must be row-unique per fp")
-
-    // grow, then batch 2 must dedup against corpus ∪ batch-1 survivors
-    Dedup.appendToFpStore(store1raw.select("fp"), dir, batchId = 1L)
-    val corpus2 = corpus.unionByName(
-      batch1.join(store1raw.select($"id".as("doc_id")), Seq("doc_id"), "left_semi"))
-    val live2 = Dedup.incrementalExactDedup(batch2, corpus2, "doc_id", "text")
-      .select("fp", "id").as[(String, Long)].collect().toSet
-    val store2 = Dedup.incrementalExactDedupFromFpStore(
-        batch2, dir, "doc_id", "text")
-      .select("fp", "id").as[(String, Long)].collect().toSet
-    assert(store2 == live2)
-
-    // store invariant after the grow: every landed fp probes POSITIVE in
-    // the MERGED filter (base + per-batch sidecars) — a parquet fp the
-    // bloom misses would let a later duplicate skip its verify and be
-    // silently re-admitted
-    val bloom = org.apache.spark.util.sketch.BloomFilter.readFrom(
-      Dedup.mergedBloomBytes(spark, dir, None))
-    val landed = spark.read.parquet(s"$dir/fps")
-      .select(xxhash64($"fp")).as[Long].collect()
-    assert(landed.forall(bloom.mightContainLong),
-      "bloom ⊇ fps must hold after append")
-
-    // the Bloom route must actually route: on a mostly-novel batch the
-    // negative probes vastly outnumber the suspects
-    val batchFp = batch2.select(
-      graft.operators.TextAnalysis.fingerprint($"text").as("fp")).distinct()
-    val nSuspect = batchFp
-      .filter(graft.plans.GraftFunctions.bloomMightContain(
-        spark, xxhash64($"fp"),
-        graft.sources.Sources.readBinarySidecarFs(spark, s"$dir/_bloom.bin")))
-      .count()
-    val nDup = batchFp.count() - store2.size
-    assert(nSuspect < nDup + math.max(10, batchFp.count() / 20),
-      s"suspect count $nSuspect should be ≈ true dups $nDup + fpp dribble")
   }
 
   test("fp store: appends never touch shared files — two writer lineages " +
@@ -441,7 +411,7 @@ class DedupSpec extends SparkSpec {
       dir, expectedTotalFps = 100000L)
     def sidecar(name: String): Array[Byte] =
       graft.sources.Sources.readBinarySidecarFs(spark, s"$dir/$name")
-    val baseBefore = sidecar("_bloom.bin")
+    val baseBefore = sidecar("_bloom.s0.bin")
     def fpsOf(pred: org.apache.spark.sql.Column) = docs.filter(pred)
       .select(graft.operators.TextAnalysis.fingerprint($"text").as("fp"))
       .distinct().localCheckpoint()
@@ -455,11 +425,10 @@ class DedupSpec extends SparkSpec {
       dir, batchId = 1L)
     Dedup.appendToFpStore(fpsOf($"doc_id" % 5 === 0 && $"doc_id" % 2 =!= 0),
       dir, batchId = 2L)
-    assert(java.util.Arrays.equals(baseBefore, sidecar("_bloom.bin")),
+    assert(java.util.Arrays.equals(baseBefore, sidecar("_bloom.s0.bin")),
       "append must not read-modify-write the shared base sidecar")
     // both lineages' keys probe positive in the merged filter
-    val merged = org.apache.spark.util.sketch.BloomFilter.readFrom(
-      Dedup.mergedBloomBytes(spark, dir, None))
+    val merged = BloomLanes.merged(spark, dir, 0)
     val allKeys = docs.filter($"doc_id" % 5 === 0)
       .select(xxhash64(graft.operators.TextAnalysis.fingerprint($"text")))
       .as[Long].collect()
@@ -477,16 +446,15 @@ class DedupSpec extends SparkSpec {
     // generations to one batch=0 AND the per-batch sidecars into the
     // base, preserving bloom ⊇ fps
     Dedup.compactFpStore(spark, dir)
-    assert(!new java.io.File(s"$dir/_bloom.b1.bin").exists() &&
-      !new java.io.File(s"$dir/_bloom.b2.bin").exists())
+    assert(!new java.io.File(s"$dir/_bloom.s0.b1.bin").exists() &&
+      !new java.io.File(s"$dir/_bloom.s0.b2.bin").exists())
     val fpGens = new java.io.File(s"$dir/fps").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("batch="))
       .map(_.getName).toSet
     assert(fpGens == Set("batch=0"), s"fold must leave one generation: $fpGens")
     assert(spark.read.parquet(s"$dir/fps").count() == rowsBefore,
       "fold must lose no fp rows")
-    val compacted = org.apache.spark.util.sketch.BloomFilter.readFrom(
-      Dedup.mergedBloomBytes(spark, dir, None))
+    val compacted = BloomLanes.merged(spark, dir, 0)
     assert(allKeys.forall(compacted.mightContainLong),
       "compaction must preserve bloom ⊇ fps")
     // and the folded store still answers probes: a batch of known dups
@@ -1123,8 +1091,7 @@ class DedupSpec extends SparkSpec {
     // lane of the MERGED filter (base + per-batch sidecars) — the
     // invariant that makes a false NEGATIVE (silent contamination)
     // impossible
-    val bloom = org.apache.spark.util.sketch.BloomFilter.readFrom(
-      Dedup.mergedBloomBytes(spark, tmp, None))
+    val bloom = BloomLanes.merged(spark, tmp, 0)
     val h1s = spark.read.parquet(s"$tmp/grams").select("h1").as[Long].collect()
     assert(h1s.nonEmpty && h1s.forall(bloom.mightContainLong),
       "bloom sidecar must cover every stored gram key")
@@ -1322,7 +1289,7 @@ class DedupSpec extends SparkSpec {
       .filter(f => f.isDirectory && f.getName.startsWith("batch="))
       .map(_.getName).toSet
     assert(gens == Set("batch=0"), s"gens after fold: $gens")
-    assert(!new java.io.File(s"$dir/_bloom.b1.bin").exists(),
+    assert(!new java.io.File(s"$dir/_bloom.s0.b1.bin").exists(),
       "per-batch bloom sidecar must fold into the base filter")
     assert(!new java.io.File(s"$dir/_stats/batch_1.json").exists(),
       "per-batch stats entry must fold into batch 0")
@@ -1336,8 +1303,7 @@ class DedupSpec extends SparkSpec {
     assert(gramsAfter.toSet == gramsBefore &&
       gramsAfter.length == gramsBefore.size)
     // bloom ⊇ grams still holds through the folded base filter
-    val bloom = org.apache.spark.util.sketch.BloomFilter.readFrom(
-      Dedup.mergedBloomBytes(spark, dir, None))
+    val bloom = BloomLanes.merged(spark, dir, 0)
     assert(gramsAfter.map(_._1).forall(bloom.mightContainLong))
     assert(rewrite() == before, "fold must not change any rewrite answer")
     // folded ids are RETIRED — enforced, not just documented: replaying
@@ -1378,7 +1344,7 @@ class DedupSpec extends SparkSpec {
         .localCheckpoint(),
       dir, batchId = 1L)
     assert(new java.io.File(s"$dir/fps/batch=1").exists() &&
-      new java.io.File(s"$dir/_bloom.b1.bin").exists())
+      new java.io.File(s"$dir/_bloom.s0.b1.bin").exists())
     // full rebuild over a DIFFERENT corpus slice: the old generation and
     // its bloom must not survive — a stale batch=1 would keep rejecting
     // docs the rebuilt store never saw
@@ -1387,7 +1353,7 @@ class DedupSpec extends SparkSpec {
     val gens = new java.io.File(s"$dir/fps").listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
     assert(gens == Set("batch=0"), s"stale generations survived: $gens")
-    assert(!new java.io.File(s"$dir/_bloom.b1.bin").exists(),
+    assert(!new java.io.File(s"$dir/_bloom.s0.b1.bin").exists(),
       "stale per-batch bloom survived the reinstall")
     // probe semantics = a fresh store over the new slice: a %5==2 doc
     // (in the OLD store only) must now be admitted as new
@@ -1412,8 +1378,7 @@ class DedupSpec extends SparkSpec {
       dir, expectedTotalFps = 8L)
     Dedup.appendToFpStore(fpsOf($"doc_id" % 5 === 1), dir, batchId = 1L)
     Dedup.appendToFpStore(fpsOf($"doc_id" % 5 === 2), dir, batchId = 2L)
-    def merged() = org.apache.spark.util.sketch.BloomFilter.readFrom(
-      Dedup.mergedBloomBytes(spark, dir, None))
+    def merged() = BloomLanes.merged(spark, dir, 0)
     def novelHitRate(f: org.apache.spark.util.sketch.BloomFilter): Double =
       (0 until 2000).count(i => f.mightContainLong(0x9E3779B97F4A7C15L * i))
         .toDouble / 2000
@@ -1443,12 +1408,12 @@ class DedupSpec extends SparkSpec {
     // per-batch sidecars folded away; a second maintenance visit is a
     // byte-level no-op (the idempotent fast path)
     assert(new java.io.File(dir).listFiles()
-      .forall(f => !f.getName.matches("_bloom\\.b\\d+\\.bin")))
+      .forall(f => !f.getName.matches("_bloom\\.s\\d+\\.b\\d+\\.bin")))
     val baseBytes = graft.sources.Sources
-      .readBinarySidecarFs(spark, s"$dir/_bloom.bin")
+      .readBinarySidecarFs(spark, s"$dir/_bloom.s0.bin")
     Dedup.compactFpStore(spark, dir)
     assert(java.util.Arrays.equals(baseBytes, graft.sources.Sources
-      .readBinarySidecarFs(spark, s"$dir/_bloom.bin")),
+      .readBinarySidecarFs(spark, s"$dir/_bloom.s0.bin")),
       "idempotent visit must not rewrite the base sidecar")
     // and appends after the re-size stay bit-compatible with the new base
     Dedup.appendToFpStore(fpsOf($"doc_id" % 5 === 3), dir, batchId = 3L)
@@ -1478,14 +1443,14 @@ class DedupSpec extends SparkSpec {
     Dedup.appendToFpStore(fpsOf($"doc_id" % 5 === 1), dir, batchId = 1L)
     // capture an OLD-capacity per-batch sidecar before the fold
     val residue = graft.sources.Sources
-      .readBinarySidecarFs(spark, s"$dir/_bloom.b1.bin")
+      .readBinarySidecarFs(spark, s"$dir/_bloom.s0.b1.bin")
     Dedup.compactFpStore(spark, dir) // folds + re-sizes past capacity 8
     assert(graft.sources.Sources
       .readJsonSidecarFs(spark, s"$dir/_meta.json")("expectedTotalFps")
       .toLong > 8L, "fixture must actually re-size")
     // the crash artifact: an old-capacity batch file re-lands
     graft.sources.Sources.writeBinarySidecarFs(spark,
-      s"$dir/_bloom.b9.bin", residue)
+      s"$dir/_bloom.s0.b9.bin", residue)
     val probe = docs.filter($"doc_id" % 5 === 2)
     // the SPECIFIC loud failure: mergeInPlace refusing mixed bit sizes
     // — an incidental unrelated exception must not green this test
@@ -1496,7 +1461,7 @@ class DedupSpec extends SparkSpec {
     // the next maintenance call heals (rebuild path deletes the
     // residue without reading it) and the probe answers exactly
     Dedup.compactFpStore(spark, dir)
-    assert(!new java.io.File(s"$dir/_bloom.b9.bin").exists(),
+    assert(!new java.io.File(s"$dir/_bloom.s0.b9.bin").exists(),
       "heal must drop the residue file")
     val out = Dedup.incrementalExactDedupFromFpStore(
       probe, dir, "doc_id", "text")
@@ -1522,8 +1487,7 @@ class DedupSpec extends SparkSpec {
       s"fold must re-size to 2x the $n0 folded grams, got " +
         meta("expectedTotalGrams"))
     // the de-saturated sidecar still covers every stored key
-    val bloom = org.apache.spark.util.sketch.BloomFilter.readFrom(
-      Dedup.mergedBloomBytes(spark, dir, None))
+    val bloom = BloomLanes.merged(spark, dir, 0)
     val h1s = spark.read.parquet(s"$dir/grams").select("h1").as[Long].collect()
     assert(h1s.nonEmpty && h1s.forall(bloom.mightContainLong))
     // folded ids 1,2 are retired even after their residue entries are

@@ -159,8 +159,9 @@ class StoreOpenSpec extends SparkSpec {
 
   // the layout each family's current version replaced: a near-dup
   // store with a signature table, an image store with a (band, pfx)
-  // partition tree
-  Seq("near-dup" -> "4", "image" -> "2").foreach { case (name, previous) =>
+  // partition tree, fp and eval-gram stores with unlaned `_bloom.bin`
+  // filters (and shard-partitioned fps)
+  Seq("near-dup" -> "4", "image" -> "2", "fp" -> "2", "eval-gram" -> "2").foreach { case (name, previous) =>
     test(s"$name store: the previous formatVersion $previous refuses every call") {
       val f = family(name)
       val dir = freshStore(f)

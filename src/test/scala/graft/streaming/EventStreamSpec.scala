@@ -612,8 +612,7 @@ class EventStreamSpec extends SparkSpec {
     // covers them (bloom ⊇ fps after every batch)
     val fps = spark.read.parquet(s"$storeDir/fps")
     assert(fps.distinct().count() == 4) // landed + 3 survivors
-    val bloom = org.apache.spark.util.sketch.BloomFilter.readFrom(
-      graft.operators.Dedup.mergedBloomBytes(spark, storeDir, None))
+    val bloom = graft.operators.BloomLanes.merged(spark, storeDir, 0)
     val keys = fps.select(xxhash64($"fp")).as[Long].collect()
     assert(keys.forall(bloom.mightContainLong))
     // no per-batch cache leak: the loop must release what it created
