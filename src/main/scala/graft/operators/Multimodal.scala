@@ -8,15 +8,16 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * columns + typed metadata, with decode / feature-extraction /
   * resize / frame-sampling plumbing.
   *
-  * Decode is MODALITY-ROUTED through REAL pure-JVM decoders for all
-  * three modalities: audio = RIFF/WAVE PCM ([[Wav]] — header parse +
+  * Decode is MODALITY-ROUTED through one table ([[Multimodal.Modality]])
+  * of REAL pure-JVM decoders for all three modalities: audio = RIFF/WAVE PCM ([[Wav]] — header parse +
   * PCM samples → fixed-dim band-energy features), image = binary PPM
   * ([[Ppm]] — pixels → luminance histogram fractions), video =
   * uncompressed Y4M ([[Y4m]] — stream-header walk + per-frame Y
   * planes → fixed-dim temporal luminance features). A payload that is
   * not its modality's container decodes to the ALL-ZERO feature
   * vector — the explicit "undecodable" marker (total, deterministic,
-  * inside every route's feature bounds). Everything around the seam —
+  * inside every route's feature bounds); a modality name the table
+  * does not own fails loudly. Everything around the seam —
   * schema, batch-per-partition processing shape, partitioning, output
   * contract — is identical across routes, so swapping a decoder for a
   * compressed-codec call is a one-line change per modality: decode
@@ -31,35 +32,80 @@ object Multimodal {
   case class MediaFeatures(media_id: Long, modality: String, n_bytes: Int,
                            features: Array[Float])
 
-  /** The modality-routed decode seam: audio payloads that parse as
-    * RIFF/WAVE PCM get [[Wav.bandEnergies]] (each in [0, 1]); image
-    * payloads that parse as binary PPM (P6) get
-    * [[Ppm.luminanceHistogram]] (fractions summing to 1); video
-    * payloads that parse as Y4M get [[Y4m.temporalLuminance]] (per-
-    * time-bin mean luma, each in [0, 1]). Bytes that are NOT their
-    * modality's container decode to the all-zero vector — the
-    * explicit undecodable marker, which still satisfies every route's
-    * bound invariants, so a misrouted payload can never be silently
-    * wrong-dim or unbounded (it shows up as zeros, and in the mm2
-    * gate as a flipped sum-≈-1 flag on the image route). */
-  private[operators] def decodeFeatures(row: MediaRow, dim: Int): Array[Float] =
-    row.meta.modality match {
-      case "audio" =>
-        Wav.decode(row.bytes) match {
-          case Some(pcm) => Wav.bandEnergies(pcm.samples, dim)
-          case None => new Array[Float](dim)
-        }
-      case "image" =>
-        Ppm.decode(row.bytes) match {
-          case Some(img) => Ppm.luminanceHistogram(img, dim)
-          case None => new Array[Float](dim)
-        }
-      case _ =>
-        Y4m.decode(row.bytes) match {
-          case Some(vid) => Y4m.temporalLuminance(vid, dim)
-          case None => new Array[Float](dim)
-        }
+  /** The modality table: one entry per perceptual modality, owning its
+    * [[MediaMeta.modality]] name, its pure-JVM decoder, its 64-bit
+    * fingerprint and the fingerprint's column, and its feature
+    * extractor. Every per-modality operator in this object routes
+    * through an entry; a modality name no entry owns fails loudly
+    * ([[Modality.named]]) rather than falling to some decoder. */
+  sealed abstract class Modality(val name: String, val fpCol: String)
+      extends Serializable {
+    type Decoded
+    def decode(bytes: Array[Byte]): Option[Decoded]
+    def fingerprint(d: Decoded): Long
+    def features(d: Decoded, dim: Int): Array[Float]
+
+    /** The payload's fingerprint; None when the bytes are not this
+      * modality's container (no perceptual identity). */
+    final def fingerprintOf(bytes: Array[Byte]): Option[Long] =
+      decode(bytes).map(fingerprint)
+
+    /** The payload's `dim` features; bytes that are not this modality's
+      * container get the all-zero vector — the explicit undecodable
+      * marker, which still satisfies every route's bound invariants, so
+      * a misrouted payload is never silently wrong-dim or unbounded (it
+      * shows up as zeros, and in the mm2 gate as a flipped sum-≈-1 flag
+      * on the image route). */
+    final def featuresOf(bytes: Array[Byte], dim: Int): Array[Float] =
+      decode(bytes).fold(new Array[Float](dim))(features(_, dim))
+
+    override def toString: String = name
+  }
+
+  object Modality {
+    /** Binary PPM ([[Ppm]]): the brightness-shift-invariant dHash
+      * ([[Ppm.dHash64]]), luminance-histogram fractions summing to 1. */
+    case object Image extends Modality("image", "dhash") {
+      type Decoded = Ppm.Rgb
+      def decode(bytes: Array[Byte]): Option[Ppm.Rgb] = Ppm.decode(bytes)
+      def fingerprint(d: Ppm.Rgb): Long = Ppm.dHash64(d)
+      def features(d: Ppm.Rgb, dim: Int): Array[Float] =
+        Ppm.luminanceHistogram(d, dim)
     }
+
+    /** RIFF/WAVE PCM ([[Wav]]): the volume-invariant Goertzel sign
+      * pattern ([[Wav.audioFingerprint]]), band energies in [0, 1]. */
+    case object Audio extends Modality("audio", "afp") {
+      type Decoded = Wav.Pcm
+      def decode(bytes: Array[Byte]): Option[Wav.Pcm] = Wav.decode(bytes)
+      def fingerprint(d: Wav.Pcm): Long = Wav.audioFingerprint(d)
+      def features(d: Wav.Pcm, dim: Int): Array[Float] =
+        Wav.bandEnergies(d.samples, dim)
+    }
+
+    /** Uncompressed Y4M ([[Y4m]]): the brightness-invariant luma-bin
+      * pattern ([[Y4m.videoFingerprint]]), per-time-bin mean luma in
+      * [0, 1]. */
+    case object Video extends Modality("video", "vfp") {
+      type Decoded = Y4m.Video
+      def decode(bytes: Array[Byte]): Option[Y4m.Video] = Y4m.decode(bytes)
+      def fingerprint(d: Y4m.Video): Long = Y4m.videoFingerprint(d)
+      def features(d: Y4m.Video, dim: Int): Array[Float] =
+        Y4m.temporalLuminance(d, dim)
+    }
+
+    val all: Seq[Modality] = Seq(Image, Audio, Video)
+
+    /** The entry owning `name`; an unknown name throws, naming it. */
+    def named(name: String): Modality =
+      all.find(_.name == name).getOrElse(throw new IllegalArgumentException(
+        s"unknown modality '$name' (known: ${all.mkString(", ")})"))
+  }
+
+  /** The decode seam: the row's modality entry decodes and featurizes
+    * its payload ([[Modality.featuresOf]]). */
+  private[operators] def decodeFeatures(row: MediaRow, dim: Int): Array[Float] =
+    Modality.named(row.meta.modality).featuresOf(row.bytes, dim)
 
   /** Batch feature extraction: one partition = one batch, mirroring the
     * mapInPandas/Arrow-batch shape. The iterator is processed lazily —
@@ -96,7 +142,8 @@ object Multimodal {
     val base = media
       // zero-duration media yields no frames; sequence(0, -1, step) would
       // throw on descending bounds (same guard as Dedup.shingles)
-      .filter(col("meta.modality") === "video" && col("meta.durationMs") > 0)
+      .filter(col("meta.modality") === Modality.Video.name &&
+        col("meta.durationMs") > 0)
       .select(col("media_id"),
         explode(sequence(lit(0L), col("meta.durationMs") - 1, lit(everyMs)))
           .as("offset_ms"))
@@ -135,233 +182,96 @@ object Multimodal {
         // greatest(octet_length, 1) to mirror it.
         val raw0 = text.getBytes("UTF-8")
         val raw = if (raw0.isEmpty) Array(' '.toByte) else raw0
-        val modality = id % 3 match {
-          case 0 => "image"; case 1 => "audio"; case _ => "video"
+        val m = id % 3 match {
+          case 0 => Modality.Image; case 1 => Modality.Audio
+          case _ => Modality.Video
         }
         val nFrames = 4
-        val bytes = modality match {
-          case "audio" =>
-            Wav.encode(raw.map(b => (((b & 0xFF) - 128) << 8).toShort), 16000)
-          case "image" =>
-            Ppm.encode(raw.length, 1, raw.flatMap(b => Array(b, b, b)))
-          case _ =>
-            Y4m.encode(raw.length, 1, 25,
+        // (payload, width, height, duration in ms)
+        val (bytes, w, h, durMs) = m match {
+          case Modality.Audio =>
+            (Wav.encode(raw.map(b => (((b & 0xFF) - 128) << 8).toShort), 16000),
+              64, 64, raw.length.toLong * 1000L / 16000L)
+          case Modality.Image =>
+            (Ppm.encode(raw.length, 1, raw.flatMap(b => Array(b, b, b))),
+              raw.length, 1, raw.length.toLong * 10)
+          case Modality.Video =>
+            (Y4m.encode(raw.length, 1, 25,
               Array.tabulate(nFrames)(f =>
-                Array.tabulate(raw.length)(i => ((raw(i) + f) & 0xFF).toByte)))
+                Array.tabulate(raw.length)(i => ((raw(i) + f) & 0xFF).toByte))),
+              raw.length, 1, nFrames * 40L) // 4 frames at 25 fps
         }
-        val durMs = modality match {
-          case "audio" => raw.length.toLong * 1000L / 16000L
-          case "video" => nFrames * 40L // 4 frames at 25 fps
-          case _ => raw.length.toLong * 10
-        }
-        val (w, h) =
-          if (modality == "audio") (64, 64) else (raw.length, 1)
-        MediaRow(id, bytes, MediaMeta(modality, w, h, 16000, durMs))
+        MediaRow(id, bytes, MediaMeta(m.name, w, h, 16000, durMs))
     }
   }
 
-  /** Per-image 64-bit perceptual hash ([[Ppm.dHash64]]) over a binary
-    * image column — the LAION-style dedup key for image corpora where
-    * re-encodes/re-grades defeat byte-level fingerprints. Map-side:
-    * decode + hash amortize per partition, only (id, dhash) ever
-    * leaves the scan — the multi-TB binary payload is never on an
-    * exchange. Undecodable payloads hash to NULL (the mm2 all-zero
-    * marker's scalar twin) so they can never merge into a dup group. */
-  def imageDHash(images: DataFrame, idCol: String = "media_id",
-                 bytesCol: String = "bytes"): DataFrame = {
-    import images.sparkSession.implicits._
-    images.select(col(idCol).cast("long"), col(bytesCol))
+  /** The trio's fingerprint projection: (media_id, bytes) rows →
+    * (media_id, bytes, `m.fpCol`), the modality's 64-bit fingerprint
+    * computed map-side (decode + hash amortize per partition). The
+    * payload rides only this id-local map — the streaming ingest
+    * publishes it with the kept rows; callers that need (media_id, fp)
+    * select those two columns before any exchange, and Spark prunes the
+    * bytes out of the map's serializer, so the multi-TB binary payload
+    * never reaches a shuffle. Undecodable payloads fingerprint to NULL
+    * (the all-zero feature marker's scalar twin), so they never merge
+    * into a dup group. */
+  def fingerprints(media: DataFrame, m: Modality): DataFrame = {
+    import media.sparkSession.implicits._
+    media.select(col("media_id").cast("long"), col("bytes"))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, bytes) =>
-        (id, Ppm.decode(bytes).map(Ppm.dHash64))
+        (id, bytes, m.fingerprintOf(bytes))
       })
-      .toDF(idCol, "dhash")
+      .toDF("media_id", "bytes", m.fpCol)
   }
 
-  /** [[imageDHash]] with the payload carried through: (id, bytes,
-    * dhash) — the streaming-ingest shape, where the kept rows must
-    * publish their binary payload. The bytes ride only the id-local
-    * map; nothing here puts them on an exchange. */
-  def withImageDHash(images: DataFrame, idCol: String = "media_id",
-                     bytesCol: String = "bytes"): DataFrame = {
-    import images.sparkSession.implicits._
-    images.select(col(idCol).cast("long"), col(bytesCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        (id, bytes, Ppm.decode(bytes).map(Ppm.dHash64))
-      })
-      .toDF(idCol, bytesCol, "dhash")
-  }
+  /** [[fingerprints]] as `Dedup`'s fp-store rows: undecodable payloads
+    * are EXCLUDED — they have no perceptual identity and must never
+    * merge (route them to a quarantine table upstream) — and `_dh`, the
+    * fingerprint's string form, is the store's text column (an injective
+    * key, so the store's md5 keeps exact-dedup semantics). The payload
+    * is still carried for the ingest loop's kept publish. */
+  private[graft] def fpStoreRows(media: DataFrame, m: Modality): DataFrame =
+    fingerprints(media, m).filter(col(m.fpCol).isNotNull)
+      .withColumn("_dh", col(m.fpCol).cast("string"))
 
-  /** [[withImageDHash]] for the audio modality: (id, bytes, afp) —
-    * the streaming-ingest shape with the volume-invariant Goertzel
-    * fingerprint ([[Wav.audioFingerprint]]) computed map-side and the
-    * payload carried through to the kept publish, never an exchange. */
-  def withAudioFingerprint(audio: DataFrame, idCol: String = "media_id",
-                           bytesCol: String = "bytes",
-                           bands: Int = 64): DataFrame = {
-    import audio.sparkSession.implicits._
-    audio.select(col(idCol).cast("long"), col(bytesCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        (id, bytes, Wav.decode(bytes).map(Wav.audioFingerprint(_, bands)))
-      })
-      .toDF(idCol, bytesCol, "afp")
-  }
-
-  /** [[withImageDHash]] for the video modality: (id, bytes, vfp) —
-    * the streaming-ingest shape with the brightness-invariant luma-bin
-    * fingerprint ([[Y4m.videoFingerprint]]) computed map-side and the
-    * payload carried through to the kept publish, never an exchange. */
-  def withVideoFingerprint(video: DataFrame, idCol: String = "media_id",
-                           bytesCol: String = "bytes",
-                           bins: Int = 64): DataFrame = {
-    import video.sparkSession.implicits._
-    video.select(col(idCol).cast("long"), col(bytesCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        (id, bytes, Y4m.decode(bytes).map(Y4m.videoFingerprint(_, bins)))
-      })
-      .toDF(idCol, bytesCol, "vfp")
-  }
-
-  /** At-rest image-dedup fingerprint store: the dHash AS the
+  /** At-rest perceptual dedup store: the modality's fingerprint AS the
     * fingerprint, riding [[Dedup.writeFpStore]]'s Bloom-fronted
-    * machinery unchanged (the dHash string is an injective key, so
-    * md5-of-dhash keeps exact-dedup semantics while reusing the
-    * store's sharding/capacity/meta conventions verbatim). Undecodable
-    * payloads are EXCLUDED — they have no perceptual identity and must
-    * never merge; route them to a quarantine table upstream. */
-  def writeImageDHashStore(images: DataFrame, dir: String,
-                           expectedTotalImages: Long,
-                           idCol: String = "media_id",
-                           bytesCol: String = "bytes",
-                           fpp: Double = 0.001, shards: Int = 1): Unit =
-    Dedup.writeFpStore(
-      fingerprintFrame(imageDHash(images, idCol, bytesCol), idCol, "dhash"),
-      idCol, "_dh", dir, expectedTotalImages, fpp, shards)
+    * machinery unchanged (capacity, lanes, meta). A store written for
+    * one modality must only ever be probed with the same modality (the
+    * fingerprint namespaces are disjoint only within one decoder). */
+  def writeFingerprintStore(media: DataFrame, m: Modality, dir: String,
+                            expectedTotal: Long): Unit =
+    Dedup.writeFpStore(fpStoreRows(media, m).select("media_id", "_dh"),
+      "media_id", "_dh", dir, expectedTotal)
 
-  /** (id, hash) → the fp-store's (id, "_dh" string) contract, NULLs
-    * (undecodable) excluded — the seam that lets every perceptual
-    * fingerprint ride the d15 store machinery. */
-  private def fingerprintFrame(hashed: DataFrame, idCol: String,
-                               hashCol: String): DataFrame =
-    hashed.filter(col(hashCol).isNotNull)
-      .select(col(idCol), col(hashCol).cast("string").as("_dh"))
-
-  /** Batch image dedup against the at-rest store — the weekly-crawl
+  /** Batch perceptual dedup against the at-rest store — the weekly-crawl
     * read path: (id, fp) keepers per [[Dedup
     * .incrementalExactDedupFromFpStore]]'s contract (one row per
-    * distinct batch dHash absent from the store, smallest id wins
+    * distinct batch fingerprint absent from the store, smallest id wins
     * within the batch; Bloom-routed so a mostly-novel batch pays map
     * work + an anti join over the suspect sliver only). A re-graded /
-    * re-exported copy of a stored image carries the stored dHash and
-    * drops here even though its bytes match nothing. */
-  def imageDedupFromStore(batch: DataFrame, dir: String,
-                          idCol: String = "media_id",
-                          bytesCol: String = "bytes"): DataFrame =
+    * remastered copy of a stored item carries the stored fingerprint
+    * and drops here even though its bytes match nothing. */
+  def dedupFromStore(batch: DataFrame, m: Modality, dir: String): DataFrame =
     Dedup.incrementalExactDedupFromFpStore(
-      fingerprintFrame(imageDHash(batch, idCol, bytesCol), idCol, "dhash"),
-      dir, idCol, "_dh")
+      fpStoreRows(batch, m).select("media_id", "_dh"), dir, "media_id", "_dh")
 
-  /** [[writeImageDHashStore]]/[[imageDedupFromStore]] for the other
-    * two trio members — same store layout, same keeper contract, the
-    * fingerprint swapped ([[Wav.audioFingerprint]] /
-    * [[Y4m.videoFingerprint]]). A store written by one modality's
-    * writer must only ever be probed by the same modality's reader
-    * (the fp namespaces are disjoint by construction only within one
-    * decoder). */
-  def writeAudioFingerprintStore(audio: DataFrame, dir: String,
-                                 expectedTotalClips: Long,
-                                 idCol: String = "media_id",
-                                 bytesCol: String = "bytes",
-                                 fpp: Double = 0.001,
-                                 shards: Int = 1): Unit =
-    Dedup.writeFpStore(
-      fingerprintFrame(audioFingerprints(audio, idCol, bytesCol),
-        idCol, "afp"),
-      idCol, "_dh", dir, expectedTotalClips, fpp, shards)
-
-  def audioDedupFromStore(batch: DataFrame, dir: String,
-                          idCol: String = "media_id",
-                          bytesCol: String = "bytes"): DataFrame =
-    Dedup.incrementalExactDedupFromFpStore(
-      fingerprintFrame(audioFingerprints(batch, idCol, bytesCol),
-        idCol, "afp"),
-      dir, idCol, "_dh")
-
-  def writeVideoFingerprintStore(video: DataFrame, dir: String,
-                                 expectedTotalClips: Long,
-                                 idCol: String = "media_id",
-                                 bytesCol: String = "bytes",
-                                 fpp: Double = 0.001,
-                                 shards: Int = 1): Unit =
-    Dedup.writeFpStore(
-      fingerprintFrame(videoFingerprints(video, idCol, bytesCol),
-        idCol, "vfp"),
-      idCol, "_dh", dir, expectedTotalClips, fpp, shards)
-
-  def videoDedupFromStore(batch: DataFrame, dir: String,
-                          idCol: String = "media_id",
-                          bytesCol: String = "bytes"): DataFrame =
-    Dedup.incrementalExactDedupFromFpStore(
-      fingerprintFrame(videoFingerprints(batch, idCol, bytesCol),
-        idCol, "vfp"),
-      dir, idCol, "_dh")
-
-  /** Per-clip volume-invariant fingerprint ([[Wav.audioFingerprint]])
-    * over a binary audio column — [[imageDHash]]'s audio sibling, same
-    * map-side shape and NULL-on-undecodable contract. The fingerprint
-    * is an injective-keyed Long, so [[imageDupGroups]] (hashCol =
-    * "afp") and the dHash store adapters ([[writeImageDHashStore]]'s
-    * pattern — fp = afp string) compose unchanged. */
-  def audioFingerprints(audio: DataFrame, idCol: String = "media_id",
-                        bytesCol: String = "bytes",
-                        bands: Int = 64): DataFrame = {
-    import audio.sparkSession.implicits._
-    audio.select(col(idCol).cast("long"), col(bytesCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        (id, Wav.decode(bytes).map(Wav.audioFingerprint(_, bands)))
-      })
-      .toDF(idCol, "afp")
-  }
-
-  /** Per-clip brightness-invariant video fingerprint
-    * ([[Y4m.videoFingerprint]]) over a binary video column — the trio's
-    * third member, same map-side shape and NULL-on-undecodable
-    * contract as [[imageDHash]]/[[audioFingerprints]]. Composes with
-    * [[imageDupGroups]] (hashCol = "vfp") and the dHash store adapters
-    * unchanged. */
-  def videoFingerprints(video: DataFrame, idCol: String = "media_id",
-                        bytesCol: String = "bytes",
-                        bins: Int = 64): DataFrame = {
-    import video.sparkSession.implicits._
-    video.select(col(idCol).cast("long"), col(bytesCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        (id, Y4m.decode(bytes).map(Y4m.videoFingerprint(_, bins)))
-      })
-      .toDF(idCol, "vfp")
-  }
-
-  /** Hash-equality dup groups over [[imageDHash]] output (or any
-    * (id, hash) frame — pass `hashCol`, e.g. [[audioFingerprints]]'
-    * "afp"): every row gets its group's minimum id (`group_id`),
-    * member count (`n_in_group`) and an `is_dup` flag. One aggregate
-    * of skinny (hash → min-id, count) rows — map-side combinable —
-    * plus one id-keyed join back; no window, so a viral image with
-    * millions of copies is one combiner cell, not one task's sort.
-    * NULL hashes (undecodable) stay singleton by definition. */
-  def imageDupGroups(hashed: DataFrame,
-                     idCol: String = "media_id",
-                     hashCol: String = "dhash"): DataFrame = {
-    val groups = hashed.filter(col(hashCol).isNotNull)
-      .groupBy(hashCol)
-      .agg(min(col(idCol)).as("group_id"), count(lit(1)).as("n_in_group"))
-    hashed.join(groups, Seq(hashCol), "left")
-      .select(col(idCol),
-        coalesce(col("group_id"), col(idCol)).as("group_id"),
+  /** Fingerprint-equality dup groups: every row gets its group's minimum
+    * id (`group_id`), member count (`n_in_group`) and an `is_dup` flag.
+    * One aggregate of skinny (fp → min-id, count) rows — map-side
+    * combinable — plus one id-keyed join back; no window, so a viral
+    * item with millions of copies is one combiner cell, not one task's
+    * sort. NULL fingerprints (undecodable) stay singleton by
+    * definition. */
+  def dupGroups(media: DataFrame, m: Modality): DataFrame = {
+    val hashed = fingerprints(media, m).select("media_id", m.fpCol)
+    val groups = hashed.filter(col(m.fpCol).isNotNull)
+      .groupBy(m.fpCol)
+      .agg(min(col("media_id")).as("group_id"), count(lit(1)).as("n_in_group"))
+    hashed.join(groups, Seq(m.fpCol), "left")
+      .select(col("media_id"),
+        coalesce(col("group_id"), col("media_id")).as("group_id"),
         coalesce(col("n_in_group"), lit(1L)).as("n_in_group"),
         (coalesce(col("n_in_group"), lit(1L)) > 1).cast("int").as("is_dup"))
   }
@@ -475,9 +385,14 @@ object Multimodal {
   /** The banded store's (band, bk, id, h) rows for a batch of images —
     * what a generation lands and what a probe joins. */
   private def bandRows(images: DataFrame, idCol: String, bytesCol: String,
-                       bands: Int): DataFrame =
-    bandedHashes(imageDHash(images, idCol, bytesCol), "dhash", bands, idCol)
-      .select(col("band"), col("bk"), col(idCol).as("id"), col("_h").as("h"))
+                       bands: Int): DataFrame = {
+    val hashed = fingerprints(
+        images.select(col(idCol).as("media_id"), col(bytesCol).as("bytes")),
+        Modality.Image)
+      .select("media_id", "dhash")
+    bandedHashes(hashed, "dhash", bands, "media_id")
+      .select(col("band"), col("bk"), col("media_id").as("id"), col("_h").as("h"))
+  }
 
   /** Fold every committed generation of the perceptual banded store
     * into one `batch=0` — [[graft.operators.StoreMaintenance]]'s
@@ -782,8 +697,8 @@ object Wav {
   }
 
   /** Volume-invariant audio fingerprint: the sign pattern of adjacent
-    * [[bandEnergies]] differences packed into `bands−1` bits (MSB
-    * first) — the audio twin of [[Ppm.dHash64]]. A re-mastered copy at
+    * [[bandEnergies]] differences over 64 bands, packed into 63 bits
+    * (MSB first) — the audio twin of [[Ppm.dHash64]]. A re-mastered copy at
     * a power-of-two gain carries EXACTLY scaled band energies (IEEE
     * scaling by 2^k is exact through the whole Goertzel recurrence,
     * the power term, and the n² normalization — no epsilon anywhere),
@@ -791,12 +706,11 @@ object Wav {
     * fingerprint while its bytes differ everywhere. Non-power-of-two
     * gains preserve the signs up to float rounding at near-tie bands —
     * the usual perceptual-hash tolerance, not an exactness claim. */
-  def audioFingerprint(pcm: Pcm, bands: Int = 64): Long = {
-    require(bands >= 2 && bands <= 64, s"bands in [2, 64]: $bands")
-    val e = bandEnergies(pcm.samples, bands)
+  def audioFingerprint(pcm: Pcm): Long = {
+    val e = bandEnergies(pcm.samples, 64)
     var h = 0L
     var i = 0
-    while (i < bands - 1) {
+    while (i < 63) {
       h <<= 1
       if (e(i) > e(i + 1)) h |= 1L
       i += 1
@@ -932,15 +846,16 @@ object Y4m {
     * cross-multiplied (sumᵢ·countⱼ vs sumⱼ·countᵢ — the dHash
     * discipline: no float anywhere, so a constant +s on every Y byte
     * shifts each bin's sum by exactly s·count and provably preserves
-    * every bit), packed MSB-first into `bins−1` bits. A re-graded /
-    * re-exported copy of a clip collides on the fingerprint while its
-    * bytes differ everywhere. Bins that received no frame (clips
-    * shorter than `bins`) read as mean 0 — deterministic and total.
+    * every bit), over 64 time bins packed MSB-first into 63 bits. A
+    * re-graded / re-exported copy of a clip collides on the fingerprint
+    * while its bytes differ everywhere. Bins that received no frame
+    * (clips shorter than 64 frames) read as mean 0 — deterministic and
+    * total.
     * Exactness bound: cross-products stay below 2⁵³ for up to ~2³²
     * luma-pixels per bin — far past any clip this decoder holds in
     * memory. */
-  def videoFingerprint(vid: Video, bins: Int = 64): Long = {
-    require(bins >= 2 && bins <= 65, s"bins in [2, 65]: $bins")
+  def videoFingerprint(vid: Video): Long = {
+    val bins = 64
     val nf = vid.frames.length
     if (nf == 0) return 0L
     val sums = new Array[Long](bins)

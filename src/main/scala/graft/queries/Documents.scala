@@ -170,8 +170,7 @@ object Documents {
     * construction. */
   def d15FpStore(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val dir = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/fp_store"
+    val dir = Gate.scratch(s, "fp_store")
     Dedup.writeFpStore(docs.filter(col("doc_id") % 5 =!= 0),
       "doc_id", "text", dir, expectedTotalFps = 1000000L, shards = 2)
     Dedup.incrementalExactDedupFromFpStore(
@@ -192,8 +191,7 @@ object Documents {
   def d30FpCompacted(s: SparkSession, d: String): DataFrame = {
     import graft.core.PhaseTimer.timed
     val docs = Tables.documents(s, d)
-    val dir = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/fp_compact"
+    val dir = Gate.scratch(s, "fp_compact")
     timed("install") {
       Dedup.writeFpStore(
         docs.filter(col("doc_id") % 5 === 1 || col("doc_id") % 5 === 2),
@@ -317,8 +315,7 @@ object Documents {
     * spec-pinned; this row makes the driver gate it too). */
   def d11NearDupStore(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val dir = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/neardup_store"
+    val dir = Gate.scratch(s, "neardup_store")
     Dedup.writeNearDupStore(docs.filter(col("doc_id") % 5 =!= 0),
       "doc_id", "text", dir)
     Dedup.incrementalNearDupFromStore(docs.filter(col("doc_id") % 5 === 0),
@@ -433,8 +430,7 @@ object Documents {
     * spec-verified (EventStreamSpec / DedupSpec). */
   def t23DecontamStore(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val dir = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/evalgram_store"
+    val dir = Gate.scratch(s, "evalgram_store")
     Dedup.writeEvalGramStore(docs.filter(col("doc_id") % 97 === 0),
       "text", dir, n = 5)
     Dedup.decontaminateRewriteFromStore(
@@ -453,10 +449,7 @@ object Documents {
     * skips its verify), or a swap that loses the table all hash-fail. */
   def t50DecontamCompacted(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/evalgram_compact"
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val base = Gate.scratch(s, "evalgram_compact")
     val suite = docs.filter(col("doc_id") % 97 === 0)
     import graft.core.PhaseTimer.timed
     timed("install") {
@@ -489,10 +482,7 @@ object Documents {
     * earlier bench repeat would replay instead of re-measure. */
   def t29DecontamStream(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/t29_stream"
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val base = Gate.scratch(s, "t29_stream")
     val (storeDir, inDir) = (s"$base/evalstore", s"$base/in")
     val (keptDir, ckpt) = (s"$base/kept", s"$base/ckpt")
     import graft.core.PhaseTimer.timed
@@ -579,8 +569,7 @@ object Documents {
   def sPublishRoundtrip(s: SparkSession, d: String): DataFrame = {
     import graft.sources.Sources
     val docs = Tables.documents(s, d)
-    val dir = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/published"
+    val dir = Gate.scratch(s, "published")
     Sources.publishBatch(docs.filter(col("doc_id") % 2 === 0), dir, 1L)
     Sources.publishBatch(docs.filter(col("doc_id") % 2 =!= 0), dir, 2L)
     // crash residue: data landed, manifest never did — must be invisible.
@@ -606,10 +595,7 @@ object Documents {
   def sPublishCompact(s: SparkSession, d: String): DataFrame = {
     import graft.sources.Sources
     val docs = Tables.documents(s, d)
-    val dir = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/published_compact"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val dir = Gate.scratch(s, "published_compact")
     Sources.publishBatch(docs.filter(col("doc_id") % 3 === 0).repartition(16), dir, 1L)
     Sources.publishBatch(docs.filter(col("doc_id") % 3 === 1).repartition(16), dir, 2L)
     Sources.publishBatch(docs.filter(col("doc_id") % 3 === 2).repartition(16), dir, 3L)
@@ -639,10 +625,7 @@ object Documents {
   def sPublishZorder(s: SparkSession, d: String): DataFrame = {
     import graft.sources.Sources
     val docs = Tables.documents(s, d)
-    val dir = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/published_zorder"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val dir = Gate.scratch(s, "published_zorder")
     Sources.publishBatch(docs.filter(col("doc_id") % 2 === 0).repartition(8), dir, 1L)
     Sources.publishBatch(docs.filter(col("doc_id") % 2 =!= 0).repartition(8), dir, 2L)
     docs.filter(col("doc_id") < 50)
@@ -679,8 +662,7 @@ object Documents {
     * accumulation and the foreachBatch loop stay spec-verified
     * (DedupSpec / EventStreamSpec). */
   def d20BoilerplateStore(s: SparkSession, d: String): DataFrame = {
-    val dir = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/boilerplate_store"
+    val dir = Gate.scratch(s, "boilerplate_store")
     // widen the narrow corpus ONCE for both whole-corpus gram passes
     // (guide §2.5; no-op on wide input). Caller-side on purpose: the
     // store functions are shared with the d24 ingest loop, whose tiny
@@ -1117,8 +1099,7 @@ object Documents {
     * streaming twin stays spec-verified (EventStreamSpec). */
   def t26BigramLmStore(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val dir = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/bigram_lm_store"
+    val dir = Gate.scratch(s, "bigram_lm_store")
     TextAnalysis.writeBigramLmStore(
       docs.filter(col("source") === "src0"), "text", dir)
     TextAnalysis.bigramLogProbFromStore(docs, dir, "doc_id", "text")
@@ -1315,8 +1296,7 @@ object Documents {
     * schema keeps types bit-stable. */
   def sJsonlRoundtrip(s: SparkSession, d: String): DataFrame = {
     val src = Tables.documents(s, d)
-    val tmp = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/jsonl_roundtrip/documents"
+    val tmp = Gate.scratch(s, "jsonl_roundtrip/documents")
     src.write.mode("overwrite").json(tmp)
     s.read.schema(src.schema).json(tmp)
       .groupBy("lang")
@@ -1427,8 +1407,7 @@ object Documents {
   def ann4IvfStore(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
     val q = e.filter(col("vec_id") < 5)
-    val path = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/ivf_index"
+    val path = Gate.scratch(s, "ivf_index")
     val centroids = Similarity.writeIvfIndex(e, path, nCells = 8)
     annInvariantGate(
       Similarity.ivfTopKFromIndex(path, centroids, q, 5, nProbe = 4),
@@ -1445,8 +1424,7 @@ object Documents {
   def ann5IvfAppend(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
     val q = e.filter(col("vec_id") < 5)
-    val path = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/ivf_index_grow"
+    val path = Gate.scratch(s, "ivf_index_grow")
     val centroids = Similarity.writeIvfIndex(
       e.filter(col("vec_id") % 5 =!= 0), path, nCells = 8)
     Similarity.appendToIvfIndex(
@@ -1472,10 +1450,7 @@ object Documents {
   def ann20IvfRebuilt(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
     val q = e.filter(col("vec_id") < 5)
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/ann20_ivf"
-    val bp = new org.apache.hadoop.fs.Path(base)
-    bp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(bp, true)
+    val base = Gate.scratch(s, "ann20_ivf")
     val path = s"$base/index"
     import graft.core.PhaseTimer.timed
     timed("install") { Similarity.writeIvfIndex(e, path, nCells = 8) }
@@ -1548,8 +1523,7 @@ object Documents {
   def ann9PqStore(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
     val q = e.filter(col("vec_id") < 5)
-    val path = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/pq_index"
+    val path = Gate.scratch(s, "pq_index")
     Similarity.writePqIndex(e, path, dim = 64, m = 8, k = 16,
       sampleCap = 20000)
     annInvariantGate(
@@ -1586,8 +1560,7 @@ object Documents {
   /** ann7's at-rest index path — exposed so the oracle SQL (built in
     * the same JVM) can point DuckDB at the very files the stats ran
     * over, the pipeline_e2e dump-dir pattern. */
-  val ivfStatsDir: String = sys.props("java.io.tmpdir") +
-    s"/graft_${ProcessHandle.current.pid}/ivf_index_stats"
+  val ivfStatsDir: String = s"${Gate.scratchRoot}/ivf_index_stats"
 
   /** ANN7 — the IVF DRIFT MONITOR driver-gated: the index is built from
     * 80% of the corpus, grown by the remaining 20%
@@ -1634,8 +1607,7 @@ object Documents {
         when(pmod(col("doc_id"), lit(13)) === 0,
           concat(col("text"), lit(" v2")))
           .otherwise(col("text")).as("text"))
-    val dir = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/ivf_index_incremental"
+    val dir = Gate.scratch(s, "ivf_index_incremental")
     Similarity.writeIvfIndex(embed(oldSnap), dir, nCells = 8,
       idCol = "doc_id")
     Similarity.incrementalReembedIvf(oldSnap, newSnap, embed, dir,
@@ -1654,8 +1626,7 @@ object Documents {
     * built it. */
   def d14StoreAppend(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val dir = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/neardup_store_grown"
+    val dir = Gate.scratch(s, "neardup_store_grown")
     Dedup.writeNearDupStore(
       docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 5 =!= 1),
       "doc_id", "text", dir)
@@ -1677,10 +1648,7 @@ object Documents {
     * additionally pins the crashed-swap marker and the replay bound). */
   def d29NearDupCompacted(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val dir = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/neardup_store_compacted"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val dir = Gate.scratch(s, "neardup_store_compacted")
     import graft.core.PhaseTimer.timed
     timed("install") {
       Dedup.writeNearDupStore(
@@ -2235,10 +2203,7 @@ object Documents {
       transform(sequence(lit(0), lit(7)), i =>
         pmod(length(col("text")) * 31 + col("doc_id") * 17 + i * 7,
           lit(97)).cast("float")).as("embedding"))
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/ann13_cdc"
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val base = Gate.scratch(s, "ann13_cdc")
     val (idxDir, inDir, ckpt) = (s"$base/index", s"$base/in", s"$base/ckpt")
     val id = col("doc_id")
     Similarity.writeIvfIndex(embed(docs.filter(pmod(id, lit(5)) =!= 0)),
@@ -2300,10 +2265,7 @@ object Documents {
     * or a flipped batch order all hash-fail. */
   def d23DedupStream(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/d23_stream"
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val base = Gate.scratch(s, "d23_stream")
     val (storeDir, inDir) = (s"$base/store", s"$base/in")
     val (keptDir, ckpt) = (s"$base/kept", s"$base/ckpt")
     import graft.core.PhaseTimer.timed
@@ -2351,10 +2313,7 @@ object Documents {
     * rule: rn = 1 over (batch ordinal, id) per fingerprint. */
   def d26ExactDedupStream(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/d26_stream"
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val base = Gate.scratch(s, "d26_stream")
     val (inDir, outDir, ckpt) = (s"$base/in", s"$base/out", s"$base/ckpt")
     val t0 = to_timestamp(lit("2024-03-01 00:00:00"))
     val cols = Seq(col("doc_id"), col("text"), col("n_chars"), t0.as("ts"))
@@ -2373,14 +2332,13 @@ object Documents {
       .option("maxFilesPerTrigger", "1").parquet(inDir)
     timed("stream") {
       graft.streaming.EventStream.withStatePartitions(s) {
-        val q = graft.streaming.EventStream
+        graft.streaming.EventStream
           .streamingExactDedup(stream, "ts", "text", "doc_id")
           .writeStream.format("parquet").option("path", outDir)
           .option("checkpointLocation", ckpt)
           .outputMode("append")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      }.awaitTermination()
     }
     s.read.parquet(outDir)
       .select("doc_id", "n_chars")
@@ -2406,10 +2364,7 @@ object Documents {
     * branches carrying hundreds of docs. */
   def d27CorpusIngestStream(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/d27_stream"
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val base = Gate.scratch(s, "d27_stream")
     val (inDir, outDir, ckpt) = (s"$base/in", s"$base/out", s"$base/ckpt")
     val t0 = to_timestamp(lit("2024-03-01 00:00:00"))
     val id = col("doc_id")
@@ -2461,12 +2416,11 @@ object Documents {
       "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
     try timed("stream") {
       graft.streaming.EventStream.withStatePartitions(s) {
-        val q = out.writeStream.format("parquet").option("path", outDir)
+        out.writeStream.format("parquet").option("path", outDir)
           .option("checkpointLocation", ckpt)
           .outputMode("append")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      }.awaitTermination()
     } finally s.conf.set(
       "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", prev)
     s.read.parquet(outDir)
@@ -2492,10 +2446,7 @@ object Documents {
     * engines, so the boundary cannot ulp-flip. */
   def t34LmScoreStream(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/t34_stream"
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val base = Gate.scratch(s, "t34_stream")
     val (storeDir, inDir) = (s"$base/lmstore", s"$base/in")
     val (outDir, ckpt) = (s"$base/kept", s"$base/ckpt")
     TextAnalysis.writeBigramLmStore(
@@ -2532,10 +2483,7 @@ object Documents {
     * dropped count append, or a flipped batch order hash-fails. */
   def d24BoilerplateStream(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/d24_stream"
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val base = Gate.scratch(s, "d24_stream")
     val (storeDir, inDir) = (s"$base/store", s"$base/in")
     val (keptDir, ckpt) = (s"$base/kept", s"$base/ckpt")
     Dedup.writeBoilerplateStore(docs.filter(col("doc_id") % 31 === 0),
@@ -2589,8 +2537,7 @@ object Documents {
     * Shares t35's oracle: store ≡ live IS the gate. */
   def t36FuzzyDecontamStore(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val dir = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/fuzzy_eval_store"
+    val dir = Gate.scratch(s, "fuzzy_eval_store")
     Dedup.writeNearDupStore(fuzzyEvalSuite(docs), "doc_id", "text", dir)
     Dedup.fuzzyDecontaminateFromStore(docs, dir, "doc_id", "text",
         threshold = 0.8)
@@ -2598,81 +2545,115 @@ object Documents {
       .orderBy("doc_id")
   }
 
-  /** MM4 — perceptual-hash image dedup ([[graft.operators.Multimodal
-    * .imageDHash]] + [[graft.operators.Multimodal.imageDupGroups]]):
-    * every doc < 2000 synthesizes a 16×8 grayscale PPM whose pixels
-    * are md5-avalanched from the TEXT (identical texts — the corpus's
-    * real verbatim-dup structure — yield identical images; any text
-    * difference scrambles every pixel, so distinct texts collide on
-    * the 64-bit dHash with ~2⁻⁶⁰ odds), and every %5 == 0 doc also
-    * plants a BRIGHTNESS-SHIFTED copy (+1 to every channel): its
-    * bytes differ everywhere — exact binary dedup misses it — but
-    * dHash's cross-multiplied cell-difference bits are shift-invariant
-    * by construction, so it MUST land in its original's dup group.
-    * The oracle replays the group structure from what the hash is
-    * CONTRACTED to mirror: text equality (+ the planted-twin
-    * arithmetic). A hash that splits a brightness pair (invariance
-    * bug), merges distinct texts (discrimination bug), or mis-elects
-    * the keeper hash-fails. */
-  /** Shared mm4/mm5/mm6 image synthesis: a 16×8 grayscale PPM whose
-    * pixels are md5-avalanched from the doc TEXT (128 hex chars, one
-    * md5 block per two raster rows) — identical texts yield identical
-    * images, any text change scrambles every pixel, and `shift` is the
-    * constant brightness offset the dHash must be invariant to. */
-  private def md5ImageBytes(hex: String, shift: Int): Array[Byte] = {
-    val base = hex.getBytes("US-ASCII")
-    Ppm.encode(16, 8, base.flatMap { b =>
-      val v = (b + shift).toByte; Array(v, v, v)
-    })
-  }
-  private def md5HexImages(docs: DataFrame): DataFrame =
+  /** One perceptual fixture per modality for mm4–mm10: the carrier
+    * column each payload derives from and the encoder from (carrier,
+    * twin) to the payload. `twin` plants the copy the modality's
+    * fingerprint is contracted to be invariant to — its bytes differ
+    * everywhere, so exact binary dedup misses it. Identical texts yield
+    * identical payloads and any text change scrambles every pixel or
+    * sample, so distinct texts collide on a 64-bit fingerprint with
+    * ~2⁻⁶⁰ odds: each fingerprint mirrors text equality, which is what
+    * the shared oracles replay. */
+  private final case class MediaFixture(modality: Multimodal.Modality,
+                                        carrier: DataFrame => DataFrame,
+                                        encode: (String, Boolean) => Array[Byte])
+
+  /** The md5 hex carrier of the image and audio fixtures: 128 hex chars
+    * per doc, md5-avalanched from the doc TEXT. */
+  private def md5HexCarrier(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       concat((2 to 5).map(i =>
         md5(concat(col("text"), lit(s":$i")))): _*).as("hex"))
-  private def ppmFrame(s: SparkSession, hexed: DataFrame,
-                       idOffset: Long, shift: Int): DataFrame = {
+
+  /** Image: a 16×8 grayscale PPM, one md5 block per two raster rows; the
+    * twin is +1 brightness on every channel, which dHash's
+    * cross-multiplied cell-difference bits are invariant to by
+    * construction. */
+  private val imageFixture = MediaFixture(Multimodal.Modality.Image,
+    md5HexCarrier, { (hex, twin) =>
+      val shift = if (twin) 1 else 0
+      Ppm.encode(16, 8, hex.getBytes("US-ASCII").flatMap { b =>
+        val v = (b + shift).toByte; Array(v, v, v)
+      })
+    })
+
+  /** Audio: a WAV whose 16-bit samples are md5-avalanched from the text;
+    * the twin is a ×2-GAIN remaster — a power-of-two gain scales the
+    * whole Goertzel chain EXACTLY in IEEE float, so every band-energy
+    * difference sign (the fingerprint bits) provably survives. */
+  private val audioFixture = MediaFixture(Multimodal.Modality.Audio,
+    md5HexCarrier, { (hex, twin) =>
+      val gain = if (twin) 2 else 1
+      // samples in ±1728·gain — gain 2 stays far from Short overflow
+      Wav.encode(hex.getBytes("US-ASCII")
+        .map(c => (((c - 75) << 6) * gain).toShort), 16000)
+    })
+
+  /** Video: a 64-frame Y4M stream whose Y planes are md5-avalanched from
+    * the text per frame; the twin is +16 BRIGHTNESS on every Y byte —
+    * the integer cross-multiplied bin comparisons provably survive a
+    * constant shift (the dHash discipline on the time axis). */
+  private val videoFixture = MediaFixture(Multimodal.Modality.Video,
+    _.select("doc_id", "text"), { (text, twin) =>
+      val shift = if (twin) 16 else 0
+      val md = java.security.MessageDigest.getInstance("MD5")
+      val frames = Array.tabulate(64) { f =>
+        md.reset()
+        // mask to 0..127 so the +16 twin can never wrap a byte
+        md.digest((text + ":" + f).getBytes("UTF-8"))
+          .map(b => ((b & 0x7F) + shift).toByte)
+      }
+      Y4m.encode(16, 1, 25, frames)
+    })
+
+  /** (media_id, bytes) rows of a fixture over its (doc_id, carrier)
+    * rows, ids shifted by `idOffset`. */
+  private def mediaFrame(s: SparkSession, f: MediaFixture, carried: DataFrame,
+                         idOffset: Long, twin: Boolean): DataFrame = {
     import s.implicits._
-    hexed.as[(Long, String)].map { case (id, hex) =>
-      (id + idOffset, md5ImageBytes(hex, shift))
+    val encode = f.encode
+    carried.as[(Long, String)].map { case (id, c) =>
+      (id + idOffset, encode(c, twin))
     }.toDF("media_id", "bytes")
   }
 
-  def mm4ImageDedup(s: SparkSession, d: String): DataFrame = {
-    val hexed = md5HexImages(
-      Tables.documents(s, d).filter(col("doc_id") < 2000))
-    val media = ppmFrame(s, hexed, 0L, 0).unionByName(
-      ppmFrame(s, hexed.filter(col("doc_id") % 5 === 0), 500000000L, 1))
-    Multimodal.imageDupGroups(Multimodal.imageDHash(media))
-      .orderBy("media_id")
+  /** A fixture's carrier rows for the docs below 2000. */
+  private def mediaCarried(s: SparkSession, d: String,
+                           f: MediaFixture): DataFrame =
+    f.carrier(Tables.documents(s, d).filter(col("doc_id") < 2000))
+
+  /** MM4/MM7/MM8 — perceptual dedup of one modality
+    * ([[graft.operators.Multimodal.dupGroups]]): every doc < 2000
+    * synthesizes its payload, and every %5 == 0 doc also plants its twin,
+    * which MUST land in its original's dup group. The oracle replays the
+    * group structure from what the fingerprint is CONTRACTED to mirror:
+    * text equality (+ the planted-twin arithmetic). A fingerprint that
+    * splits a twin pair (invariance bug), merges distinct texts
+    * (discrimination bug), or mis-elects the keeper hash-fails. */
+  private def mediaDupGroups(s: SparkSession, d: String,
+                             f: MediaFixture): DataFrame = {
+    val carried = mediaCarried(s, d, f)
+    val media = mediaFrame(s, f, carried, 0L, twin = false).unionByName(
+      mediaFrame(s, f, carried.filter(col("doc_id") % 5 === 0), 500000000L,
+        twin = true))
+    Multimodal.dupGroups(media, f.modality).orderBy("media_id")
   }
 
-  /** MM7 — volume-invariant AUDIO dedup ([[graft.operators.Wav
-    * .audioFingerprint]] + the shared dup-group machinery): clips are
-    * WAVs whose 16-bit samples are md5-avalanched from the text, and
-    * every %5 doc plants a ×2-GAIN twin — every PCM byte differs, but
-    * a power-of-two gain scales the whole Goertzel chain EXACTLY in
-    * IEEE float, so all band-energy difference signs (the fingerprint
-    * bits) provably survive and the remaster lands in its original's
-    * group. Same oracle contract as mm4: group structure replayed
-    * from text equality + twin arithmetic — a gain-twin split
-    * (invariance bug) or a distinct-text merge (discrimination bug)
-    * hash-fails. */
-  def mm7AudioDedup(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val hexed = md5HexImages(
-      Tables.documents(s, d).filter(col("doc_id") < 2000))
-    def wavFrame(df: DataFrame, off: Long, gain: Int): DataFrame =
-      df.as[(Long, String)].map { case (id, hex) =>
-        // samples in ±1728·gain — gain 2 stays far from Short overflow
-        val samples = hex.getBytes("US-ASCII")
-          .map(c => (((c - 75) << 6) * gain).toShort)
-        (id + off, Wav.encode(samples, 16000))
-      }.toDF("media_id", "bytes")
-    val media = wavFrame(hexed, 0L, 1).unionByName(
-      wavFrame(hexed.filter(col("doc_id") % 5 === 0), 500000000L, 2))
-    Multimodal.imageDupGroups(Multimodal.audioFingerprints(media),
-        hashCol = "afp")
-      .orderBy("media_id")
+  /** The at-rest split of mm5/mm6/mm9/mm10: the %31 slice installs the
+    * store, and the batch is everything else PLUS twins of stored items
+    * (%31 ∧ %10 — their bytes match nothing in the store, their
+    * fingerprints do). Returns (store rows, batch rows). */
+  private def mediaStoreAndBatch(s: SparkSession, d: String,
+                                 f: MediaFixture): (DataFrame, DataFrame) = {
+    val carried = mediaCarried(s, d, f)
+    val store = mediaFrame(s, f, carried.filter(col("doc_id") % 31 === 0),
+      0L, twin = false)
+    val batch = mediaFrame(s, f, carried.filter(col("doc_id") % 31 =!= 0),
+        0L, twin = false)
+      .unionByName(mediaFrame(s, f,
+        carried.filter(col("doc_id") % 31 === 0 && col("doc_id") % 10 === 0),
+        500000000L, twin = true))
+    (store, batch)
   }
 
   /** T37 — integer-exact link centrality ([[graft.operators.Graph
@@ -2775,41 +2756,10 @@ object Documents {
       .orderBy("doc_id")
   }
 
-  /** MM8 — brightness-invariant VIDEO dedup ([[graft.operators.Y4m
-    * .videoFingerprint]]): clips are 64-frame Y4M streams whose Y
-    * planes are md5-avalanched from the text per frame, and every %5
-    * doc plants a +16-BRIGHTNESS twin (every Y byte differs; the
-    * integer cross-multiplied bin comparisons provably survive a
-    * constant shift — the dHash discipline on the time axis). Third
-    * member of the modality trio, same shared oracle contract as
-    * mm4/mm7: group structure from text equality + twin arithmetic. */
-  def mm8VideoDedup(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val docs = Tables.documents(s, d).filter(col("doc_id") < 2000)
-      .select("doc_id", "text")
-    def vidFrame(df: DataFrame, off: Long, shift: Int): DataFrame =
-      df.as[(Long, String)].map { case (id, text) =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val frames = Array.tabulate(64) { f =>
-          md.reset()
-          // mask to 0..127 so the +16 twin can never wrap a byte
-          md.digest((text + ":" + f).getBytes("UTF-8"))
-            .map(b => ((b & 0x7F) + shift).toByte)
-        }
-        (id + off, Y4m.encode(16, 1, 25, frames))
-      }.toDF("media_id", "bytes")
-    val media = vidFrame(docs, 0L, 0).unionByName(
-      vidFrame(docs.filter(col("doc_id") % 5 === 0), 500000000L, 16))
-    Multimodal.imageDupGroups(Multimodal.videoFingerprints(media),
-        hashCol = "vfp")
-      .orderBy("media_id")
-  }
-
   /** MM5 — image dedup against the AT-REST dHash store (the weekly-
     * crawl read path): the %31 slice's images install the Bloom-
     * fronted store, the batch is everything else PLUS brightness-
-    * shifted twins of stored images (%31 ∧ %10 — bytes match nothing
-    * in the store, the dHash does), and every batch image reports
+    * shifted twins of stored images, and every batch image reports
     * `kept` per the keeper rule (first carrier of a dHash the store
     * has never seen). The oracle replays the rule on what the hash is
     * contracted to mirror — text equality: min-id per text among the
@@ -2817,18 +2767,12 @@ object Documents {
     * negative, a store-probe miss, a twin surviving (invariance bug),
     * or a wrong within-batch election hash-fails. */
   def mm5ImageDedupStore(s: SparkSession, d: String): DataFrame = {
-    val hexed = md5HexImages(
-      Tables.documents(s, d).filter(col("doc_id") < 2000))
-    val storeImgs = ppmFrame(s, hexed.filter(col("doc_id") % 31 === 0), 0L, 0)
-    val batch = ppmFrame(s, hexed.filter(col("doc_id") % 31 =!= 0), 0L, 0)
-      .unionByName(ppmFrame(s,
-        hexed.filter(col("doc_id") % 31 === 0 && col("doc_id") % 10 === 0),
-        500000000L, 1))
-    val dir = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/mm5_imgstore"
-    Multimodal.writeImageDHashStore(storeImgs, dir,
-      expectedTotalImages = 100000L)
-    val keepers = Multimodal.imageDedupFromStore(batch, dir)
+    val (storeImgs, batch) = mediaStoreAndBatch(s, d, imageFixture)
+    val dir = Gate.scratch(s, "mm5_imgstore")
+    val image = Multimodal.Modality.Image
+    Multimodal.writeFingerprintStore(storeImgs, image, dir,
+      expectedTotal = 100000L)
+    val keepers = Multimodal.dedupFromStore(batch, image, dir)
       .select(col("id").as("media_id"), lit(1).as("kept"))
     batch.select("media_id")
       .join(keepers, Seq("media_id"), "left")
@@ -2836,36 +2780,28 @@ object Documents {
       .orderBy("media_id")
   }
 
-  /** MM6 — the image-dedup INGEST loop on the hard signal
-    * ([[graft.streaming.EventStream.streamingImageDedupIngest]] —
-    * d23's loop with the perceptual dHash as the fingerprint): the
-    * %31 slice installs the store, the mm5 batch (twins included)
-    * streams as two AvailableNow micro-batches split by id parity,
-    * and the PUBLISHED kept table is hashed against DuckDB replaying
-    * the full cross-batch keeper rule — rn = 1 over (batch index,
-    * media_id) per text, store slice excluded. A dropped store
-    * append (batch-2 copy of a batch-1 image re-admitted), a flipped
-    * batch order, a double publish, or a surviving brightness twin
+  /** MM6/MM9/MM10 — the perceptual-dedup INGEST loop of one modality on
+    * the hard signal ([[graft.streaming.EventStream
+    * .streamingPerceptualDedupIngest]] — d23's loop with the modality's
+    * fingerprint): the %31 slice installs the store, the mm5-shaped
+    * batch (twins included) streams as two AvailableNow micro-batches
+    * split by id parity, and the PUBLISHED kept table is hashed against
+    * DuckDB replaying the full cross-batch keeper rule — rn = 1 over
+    * (batch index, media_id) per text, store slice excluded. A dropped
+    * store append (batch-2 copy of a batch-1 item re-admitted), a
+    * flipped batch order, a double publish, or a surviving twin
     * hash-fails. */
-  def mm6ImageDedupStream(s: SparkSession, d: String): DataFrame = {
-    val hexed = md5HexImages(
-      Tables.documents(s, d).filter(col("doc_id") < 2000))
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/mm6_stream"
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+  private def mediaDedupStream(s: SparkSession, d: String, f: MediaFixture,
+                               name: String): DataFrame = {
+    val base = Gate.scratch(s, name)
     val (storeDir, inDir) = (s"$base/store", s"$base/in")
     val (keptDir, ckpt) = (s"$base/kept", s"$base/ckpt")
+    val (store, batch) = mediaStoreAndBatch(s, d, f)
     import graft.core.PhaseTimer.timed
     timed("install") {
-      Multimodal.writeImageDHashStore(
-        ppmFrame(s, hexed.filter(col("doc_id") % 31 === 0), 0L, 0),
-        storeDir, expectedTotalImages = 100000L)
+      Multimodal.writeFingerprintStore(store, f.modality, storeDir,
+        expectedTotal = 100000L)
     }
-    val batch = ppmFrame(s, hexed.filter(col("doc_id") % 31 =!= 0), 0L, 0)
-      .unionByName(ppmFrame(s,
-        hexed.filter(col("doc_id") % 31 === 0 && col("doc_id") % 10 === 0),
-        500000000L, 1))
     timed("fixtures") {
       writeOrderedBatches(s, inDir,
         Seq(batch.filter(col("media_id") % 2 === 0),
@@ -2874,121 +2810,12 @@ object Documents {
     val stream = s.readStream.schema(batch.schema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
     timed("stream") {
-      val q = graft.streaming.EventStream.streamingImageDedupIngest(
-          stream, storeDir, keptDir)
+      val q = graft.streaming.EventStream.streamingPerceptualDedupIngest(
+          stream, f.modality, storeDir, keptDir)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation", ckpt).start()
       q.awaitTermination()
     }
-    graft.sources.Sources.readPublished(s, keptDir)
-      .select("media_id")
-      .orderBy("media_id")
-  }
-
-  /** MM9 — the AUDIO-dedup INGEST loop on the hard signal
-    * ([[graft.streaming.EventStream.streamingAudioDedupIngest]] —
-    * mm6's loop with the volume-invariant Goertzel fingerprint),
-    * proving the shared fingerprint store/stream seam end-to-end for
-    * a second modality: the %31 slice installs the store (gain 1),
-    * the rest of the corpus plus ×2-gain remasters of stored clips
-    * streams as two AvailableNow micro-batches split by id parity,
-    * and the PUBLISHED kept table is hashed against DuckDB replaying
-    * the cross-batch keeper rule on what the fingerprint is
-    * contracted to mirror — text equality (samples derive from the
-    * text's md5 hex; the ×2 gain is provably fingerprint-invariant,
-    * the mm7 IEEE argument). A dropped store append, a flipped batch
-    * order, a double publish, or a surviving gain twin hash-fails. */
-  def mm9AudioDedupStream(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val hexed = md5HexImages(
-      Tables.documents(s, d).filter(col("doc_id") < 2000))
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/mm9_stream"
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    val (storeDir, inDir) = (s"$base/store", s"$base/in")
-    val (keptDir, ckpt) = (s"$base/kept", s"$base/ckpt")
-    def wavFrame(df: DataFrame, off: Long, gain: Int): DataFrame =
-      df.as[(Long, String)].map { case (id, hex) =>
-        // samples in ±1728·gain — gain 2 stays far from Short overflow
-        val samples = hex.getBytes("US-ASCII")
-          .map(c => (((c - 75) << 6) * gain).toShort)
-        (id + off, Wav.encode(samples, 16000))
-      }.toDF("media_id", "bytes")
-    Multimodal.writeAudioFingerprintStore(
-      wavFrame(hexed.filter(col("doc_id") % 31 === 0), 0L, 1),
-      storeDir, expectedTotalClips = 100000L)
-    val batch = wavFrame(hexed.filter(col("doc_id") % 31 =!= 0), 0L, 1)
-      .unionByName(wavFrame(
-        hexed.filter(col("doc_id") % 31 === 0 && col("doc_id") % 10 === 0),
-        500000000L, 2))
-    writeOrderedBatches(s, inDir,
-      Seq(batch.filter(col("media_id") % 2 === 0),
-        batch.filter(col("media_id") % 2 =!= 0)))
-    val stream = s.readStream.schema(batch.schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val q = graft.streaming.EventStream.streamingAudioDedupIngest(
-        stream, storeDir, keptDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt).start()
-    q.awaitTermination()
-    graft.sources.Sources.readPublished(s, keptDir)
-      .select("media_id")
-      .orderBy("media_id")
-  }
-
-  /** MM10 — the VIDEO-dedup INGEST loop on the hard signal
-    * ([[graft.streaming.EventStream.streamingVideoDedupIngest]] —
-    * mm6's loop with the brightness-invariant luma-bin fingerprint),
-    * closing the modality trio end-to-end through the shared
-    * store/stream seam: the %31 slice's clips install the store
-    * (shift 0), the rest of the corpus plus +16-brightness re-encodes
-    * of stored clips streams as two AvailableNow micro-batches split
-    * by id parity, and the PUBLISHED kept table is hashed against
-    * DuckDB replaying the cross-batch keeper rule on text equality
-    * (frames derive from the text's per-frame md5 masked to 0..127,
-    * so the +16 shift never wraps a byte and is provably
-    * fingerprint-invariant — the mm8 integer argument). A dropped
-    * store append, a flipped batch order, a double publish, or a
-    * surviving brightness twin hash-fails. */
-  def mm10VideoDedupStream(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val docs = Tables.documents(s, d).filter(col("doc_id") < 2000)
-      .select("doc_id", "text")
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/mm10_stream"
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    val (storeDir, inDir) = (s"$base/store", s"$base/in")
-    val (keptDir, ckpt) = (s"$base/kept", s"$base/ckpt")
-    def vidFrame(df: DataFrame, off: Long, shift: Int): DataFrame =
-      df.as[(Long, String)].map { case (id, text) =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val frames = Array.tabulate(64) { f =>
-          md.reset()
-          // mask to 0..127 so the +16 twin can never wrap a byte
-          md.digest((text + ":" + f).getBytes("UTF-8"))
-            .map(b => ((b & 0x7F) + shift).toByte)
-        }
-        (id + off, Y4m.encode(16, 1, 25, frames))
-      }.toDF("media_id", "bytes")
-    Multimodal.writeVideoFingerprintStore(
-      vidFrame(docs.filter(col("doc_id") % 31 === 0), 0L, 0),
-      storeDir, expectedTotalClips = 100000L)
-    val batch = vidFrame(docs.filter(col("doc_id") % 31 =!= 0), 0L, 0)
-      .unionByName(vidFrame(
-        docs.filter(col("doc_id") % 31 === 0 && col("doc_id") % 10 === 0),
-        500000000L, 16))
-    writeOrderedBatches(s, inDir,
-      Seq(batch.filter(col("media_id") % 2 === 0),
-        batch.filter(col("media_id") % 2 =!= 0)))
-    val stream = s.readStream.schema(batch.schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val q = graft.streaming.EventStream.streamingVideoDedupIngest(
-        stream, storeDir, keptDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt).start()
-    q.awaitTermination()
     graft.sources.Sources.readPublished(s, keptDir)
       .select("media_id")
       .orderBy("media_id")
@@ -3017,8 +2844,7 @@ object Documents {
       transform(sequence(lit(0), lit(7)), i =>
         pmod(col("n_tokens") * 31 + col("chunk_key") * 17 + i * 7, lit(97))
           .cast("float")).as("embedding"))
-    val dir = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/rag_chunk_index"
+    val dir = Gate.scratch(s, "rag_chunk_index")
     val centroids = Similarity.writeIvfIndex(embedded, dir, nCells = 8)
     // query ids live in their own range: scoreProbed's q_id != n_id
     // self-pair guard must never collide with a chunk key
@@ -3083,10 +2909,7 @@ object Documents {
     * fate (the loop's dropIds union), replayed as-is. */
   def d25NearDupStream(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/d25_stream"
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val base = Gate.scratch(s, "d25_stream")
     val (storeDir, inDir) = (s"$base/store", s"$base/in")
     val (keptDir, ckpt) = (s"$base/kept", s"$base/ckpt")
     import graft.core.PhaseTimer.timed
@@ -3130,10 +2953,7 @@ object Documents {
       transform(sequence(lit(0), lit(7)), i =>
         pmod(length(col("text")) * 31 + col("doc_id") * 17 + i * 7,
           lit(97)).cast("float")).as("embedding"))
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/ann15_stream"
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val base = Gate.scratch(s, "ann15_stream")
     val (idxDir, inDir, ckpt) = (s"$base/index", s"$base/in", s"$base/ckpt")
     import graft.core.PhaseTimer.timed
     timed("install") {
@@ -3193,10 +3013,7 @@ object Documents {
     val norm2 = grid.map(_.map(_.foldLeft(0.0)((a, x) =>
       a + x.toDouble * x.toDouble)))
     val cb = Similarity.PqCodebooks(2, 4, 4, grid, norm2)
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/ann19_stream"
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val base = Gate.scratch(s, "ann19_stream")
     val (idxDir, inDir, ckpt) = (s"$base/index", s"$base/in", s"$base/ckpt")
     import graft.core.PhaseTimer.timed
     timed("install") {
@@ -3442,10 +3259,7 @@ object Documents {
     * render → fingerprint → the (batch, min-conv) keeper rule; an
     * arrival-order or global-min-id implementation hash-fails. */
   def t45SftDedupStream(s: SparkSession, d: String): DataFrame = {
-    val baseDir = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/t45_stream"
-    val p = new org.apache.hadoop.fs.Path(baseDir)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val baseDir = Gate.scratch(s, "t45_stream")
     val (inDir, outDir, ckpt) = (s"$baseDir/in", s"$baseDir/out", s"$baseDir/ckpt")
     val turns = sftTwinTurns(s, d)
     val rendered = Instruction.renderChat(turns, "conv_id", "ord", "role", "t")
@@ -3464,14 +3278,13 @@ object Documents {
     val stream = s.readStream.schema(b1.schema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
     graft.streaming.EventStream.withStatePartitions(s) {
-      val q = graft.streaming.EventStream
+      graft.streaming.EventStream
         .streamingDedupByKey(stream, "ts", col("prompt_fp"), "conv_id")
         .writeStream.format("parquet").option("path", outDir)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    }.awaitTermination()
     s.read.parquet(outDir)
       .select("conv_id", "prompt_fp", "resp_len")
       .orderBy("conv_id")
@@ -3499,10 +3312,7 @@ object Documents {
     * is partition-pruned to the query terms' buckets —
     * TextAnalysisSpec asserts the partition filter. */
   def t47Bm25Store(s: SparkSession, d: String): DataFrame = {
-    val dir = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/t47_bm25"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val dir = Gate.scratch(s, "t47_bm25")
     TextAnalysis.writeBm25Index(Tables.documents(s, d), dir, buckets = 16)
     TextAnalysis.bm25TopKFromIndex(dir, retrievalQueries(s, d), k = 5,
         maxDfRatio = 1.0)
@@ -3515,10 +3325,7 @@ object Documents {
     * to a fresh rebuild — same oracle as t46/t47 (the d14
     * convention). */
   def t48Bm25Append(s: SparkSession, d: String): DataFrame = {
-    val dir = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/t48_bm25"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val dir = Gate.scratch(s, "t48_bm25")
     val docs = Tables.documents(s, d)
     TextAnalysis.writeBm25Index(docs.filter(col("doc_id") % 3 =!= 0),
       dir, buckets = 16)
@@ -3585,11 +3392,9 @@ object Documents {
     * generation, one stats entry) so a hygiene regression fails
     * loudly even before the hash does. */
   def t51Bm25Rebuilt(s: SparkSession, d: String): DataFrame = {
-    val dir = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/t51_bm25"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
+    val dir = Gate.scratch(s, "t51_bm25")
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
     val corpus = prunedVocabCorpus(s, d)
     import graft.core.PhaseTimer.timed
     timed("install") {
@@ -3988,8 +3793,8 @@ object Documents {
         |FROM t LEFT JOIN hits h ON t.doc_id = h.doc_id
         |ORDER BY t.doc_id""".stripMargin
 
-  /** mm4/mm7 shared oracle: the %5-twin dup-group structure both
-    * perceptual fingerprints are contracted to mirror. */
+  /** mm4/mm7/mm8 shared oracle: the %5-twin dup-group structure every
+    * perceptual fingerprint is contracted to mirror. */
   private val mediaDupGroupsSql: String =
     """WITH t AS (SELECT doc_id, text FROM documents WHERE doc_id < 2000),
       |m AS (SELECT doc_id AS media_id, text FROM t
@@ -4000,6 +3805,22 @@ object Documents {
       |SELECT media_id, group_id, CAST(n_in_group AS BIGINT) AS n_in_group,
       |  CASE WHEN n_in_group > 1 THEN 1 ELSE 0 END AS is_dup
       |FROM g ORDER BY media_id""".stripMargin
+
+  /** mm6/mm9/mm10 shared oracle: the cross-batch keeper rule every
+    * perceptual ingest loop is contracted to publish (batch index = id
+    * parity, batch 1 first; store slice excluded). */
+  private val mediaDedupStreamSql: String =
+    """WITH t AS (SELECT doc_id, text FROM documents WHERE doc_id < 2000),
+      |st AS (SELECT DISTINCT text FROM t WHERE doc_id % 31 = 0),
+      |b AS (SELECT doc_id AS media_id, text FROM t WHERE doc_id % 31 <> 0
+      |  UNION ALL SELECT doc_id + 500000000, text FROM t
+      |  WHERE doc_id % 31 = 0 AND doc_id % 10 = 0),
+      |r AS (SELECT media_id, text, row_number() OVER (PARTITION BY text
+      |  ORDER BY CASE WHEN media_id % 2 = 0 THEN 1 ELSE 2 END, media_id) AS rn
+      |  FROM b)
+      |SELECT media_id FROM r
+      |WHERE rn = 1 AND text NOT IN (SELECT text FROM st)
+      |ORDER BY media_id""".stripMargin
 
   /** Shared CTE prefix: word-3-gram shingles, per-doc sizes, per-pair
     * shared counts — the ground-truth Jaccard machinery used by the
@@ -5618,13 +5439,14 @@ object Documents {
     // SHARES this oracle (store = live is the contract, the t23
     // convention)
     Gate("t35_fuzzy_decontam", t35FuzzyDecontam, fuzzyDecontamSql),
-    // MM4/MM7: perceptual-hash image dedup / volume-invariant audio
-    // dedup — one shared oracle replaying the group structure both
-    // fingerprints are CONTRACTED to mirror (text equality + the
-    // planted %5 twin arithmetic: brightness shift for images, ×2
-    // gain for audio); invariance, discrimination and keeper election
-    // all land in one hash
-    Gate("mm4_image_dedup", mm4ImageDedup, mediaDupGroupsSql),
+    // MM4/MM7/MM8: perceptual image / audio / video dedup — one shared
+    // oracle replaying the group structure every fingerprint is
+    // CONTRACTED to mirror (text equality + the planted %5 twin
+    // arithmetic: brightness shift for images and video, ×2 gain for
+    // audio); invariance, discrimination and keeper election all land
+    // in one hash
+    Gate("mm4_image_dedup", (s, d) => mediaDupGroups(s, d, imageFixture),
+      mediaDupGroupsSql),
     // MM5: at-rest image dedup — keeper rule replayed on text equality
     // (what the dHash is contracted to mirror); store slice excluded,
     // min-id election within the batch
@@ -5639,7 +5461,8 @@ object Documents {
         |    AND text NOT IN (SELECT text FROM st) THEN 1 ELSE 0 END AS kept
         |  FROM b)
         |SELECT media_id, kept FROM k ORDER BY media_id""".stripMargin),
-    Gate("mm7_audio_dedup", mm7AudioDedup, mediaDupGroupsSql),
+    Gate("mm7_audio_dedup", (s, d) => mediaDupGroups(s, d, audioFixture),
+      mediaDupGroupsSql),
     // Decontam REPORT: both channels vs t35's suite + the policy CASE
     // (drop > rewrite > clean) in one chain; the exact channel is
     // t10's >= 2-shared-grams rule, the fuzzy channel t35's whole-doc
@@ -5673,7 +5496,8 @@ object Documents {
         |FROM t LEFT JOIN ex ON t.doc_id = ex.doc_id
         |LEFT JOIN hits h ON t.doc_id = h.doc_id
         |ORDER BY t.doc_id""".stripMargin),
-    Gate("mm8_video_dedup", mm8VideoDedup, mediaDupGroupsSql),
+    Gate("mm8_video_dedup", (s, d) => mediaDupGroups(s, d, videoFixture),
+      mediaDupGroupsSql),
     // T37: integer-exact PageRank, all 3 Jacobi iterations UNROLLED —
     // floor division + integer sums are the kernel's portability
     // design, so the replay is bit-exact with no float tolerance
@@ -5733,18 +5557,9 @@ object Documents {
     // MM6: the streamed twin — cross-batch keeper rule (batch index =
     // id parity, batch 1 first), store slice excluded; published table
     // is the hashed surface, so order/append/publish slips all land
-    Gate("mm6_image_dedup_stream", mm6ImageDedupStream,
-      """WITH t AS (SELECT doc_id, text FROM documents WHERE doc_id < 2000),
-        |st AS (SELECT DISTINCT text FROM t WHERE doc_id % 31 = 0),
-        |b AS (SELECT doc_id AS media_id, text FROM t WHERE doc_id % 31 <> 0
-        |  UNION ALL SELECT doc_id + 500000000, text FROM t
-        |  WHERE doc_id % 31 = 0 AND doc_id % 10 = 0),
-        |r AS (SELECT media_id, text, row_number() OVER (PARTITION BY text
-        |  ORDER BY CASE WHEN media_id % 2 = 0 THEN 1 ELSE 2 END, media_id) AS rn
-        |  FROM b)
-        |SELECT media_id FROM r
-        |WHERE rn = 1 AND text NOT IN (SELECT text FROM st)
-        |ORDER BY media_id""".stripMargin),
+    Gate("mm6_image_dedup_stream",
+      (s, d) => mediaDedupStream(s, d, imageFixture, "mm6_stream"),
+      mediaDedupStreamSql),
     // LLM-RAG retrieval composite: chunk (t11's chain) -> integer-grid
     // embed (ann11's convention) -> IVF at nProbe = nCells (exact, the
     // ann14 replayability rule) -> top-3 with provenance; rank on
@@ -5985,34 +5800,16 @@ object Documents {
     // as mm6 (the fingerprint is contracted to mirror text equality;
     // gain twins are invariance-dropped), proving the shared
     // store/stream seam end-to-end for a second modality
-    Gate("mm9_audio_dedup_stream", mm9AudioDedupStream,
-      """WITH t AS (SELECT doc_id, text FROM documents WHERE doc_id < 2000),
-        |st AS (SELECT DISTINCT text FROM t WHERE doc_id % 31 = 0),
-        |b AS (SELECT doc_id AS media_id, text FROM t WHERE doc_id % 31 <> 0
-        |  UNION ALL SELECT doc_id + 500000000, text FROM t
-        |  WHERE doc_id % 31 = 0 AND doc_id % 10 = 0),
-        |r AS (SELECT media_id, text, row_number() OVER (PARTITION BY text
-        |  ORDER BY CASE WHEN media_id % 2 = 0 THEN 1 ELSE 2 END, media_id) AS rn
-        |  FROM b)
-        |SELECT media_id FROM r
-        |WHERE rn = 1 AND text NOT IN (SELECT text FROM st)
-        |ORDER BY media_id""".stripMargin),
+    Gate("mm9_audio_dedup_stream",
+      (s, d) => mediaDedupStream(s, d, audioFixture, "mm9_stream"),
+      mediaDedupStreamSql),
     // MM10: the video-modality streamed twin — the trio's third member
     // on the SAME keeper-rule replay (frames derive per-text, so the
     // fingerprint mirrors text equality; +16 brightness twins are
     // invariance-dropped), closing the store/stream seam for all three
-    Gate("mm10_video_dedup_stream", mm10VideoDedupStream,
-      """WITH t AS (SELECT doc_id, text FROM documents WHERE doc_id < 2000),
-        |st AS (SELECT DISTINCT text FROM t WHERE doc_id % 31 = 0),
-        |b AS (SELECT doc_id AS media_id, text FROM t WHERE doc_id % 31 <> 0
-        |  UNION ALL SELECT doc_id + 500000000, text FROM t
-        |  WHERE doc_id % 31 = 0 AND doc_id % 10 = 0),
-        |r AS (SELECT media_id, text, row_number() OVER (PARTITION BY text
-        |  ORDER BY CASE WHEN media_id % 2 = 0 THEN 1 ELSE 2 END, media_id) AS rn
-        |  FROM b)
-        |SELECT media_id FROM r
-        |WHERE rn = 1 AND text NOT IN (SELECT text FROM st)
-        |ORDER BY media_id""".stripMargin),
+    Gate("mm10_video_dedup_stream",
+      (s, d) => mediaDedupStream(s, d, videoFixture, "mm10_stream"),
+      mediaDedupStreamSql),
     // D28: SoftDeDup reweighting — canonical md5 commonness and the
     // rounded 1/n weight recomputed from the raw planted corpus
     Gate("d28_soft_dedup", d28SoftDedup,

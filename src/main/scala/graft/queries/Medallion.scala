@@ -34,8 +34,7 @@ import graft.pipeline.{Gold, Schemas, Silver}
   */
 object Medallion {
 
-  private def dumpBase: String = sys.props("java.io.tmpdir") +
-    s"/graft_${ProcessHandle.current.pid}/medallion"
+  private def dumpBase: String = s"${Gate.scratchRoot}/medallion"
 
   private def dump(df: DataFrame, sub: String): Unit =
     df.write.mode("overwrite").parquet(s"$dumpBase/$sub")

@@ -80,8 +80,7 @@ object PipelineE2E {
     * tables plus the loan silver are fully deterministic, so DuckDB can
     * recompute the store assembly — join, distinct, grade filter, label
     * counts — independently and hash-check the result. */
-  def oracleDumpDir: String = sys.props("java.io.tmpdir") +
-    s"/graft_${ProcessHandle.current.pid}/pipeline_e2e"
+  def oracleDumpDir: String = s"${Gate.scratchRoot}/pipeline_e2e"
 
   /** Model-quality parity fixture (NOTES "Model-quality parity"): the
     * e2e silver→gold store assembly at arbitrary scale with a

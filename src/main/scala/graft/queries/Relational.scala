@@ -227,8 +227,7 @@ object Relational {
     val src = Tables.supplier(s, d)
     // per-process fixed path: no /tmp accumulation across runs, no
     // overwrite-while-read race between concurrent Bench/Verify JVMs
-    val tmp = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/csv_roundtrip/supplier"
+    val tmp = Gate.scratch(s, "csv_roundtrip/supplier")
     graft.sources.Sources.writeCsv(src, tmp)
     graft.sources.Sources.csv(s, tmp, Some(src.schema))
       .groupBy("s_nationkey")
@@ -263,8 +262,7 @@ object Relational {
     * parquet/CSV; aggregate parity vs the parquet oracle). */
   def s5OrcRoundtrip(s: SparkSession, d: String): DataFrame = {
     val src = Tables.part(s, d)
-    val tmp = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/orc_roundtrip/part"
+    val tmp = Gate.scratch(s, "orc_roundtrip/part")
     src.write.mode("overwrite").orc(tmp)
     s.read.orc(tmp)
       .groupBy("p_brand")
@@ -276,8 +274,7 @@ object Relational {
     * orders partitioned by year, reads back ONE partition (the filter on
     * the partition column prunes at planning time), aggregates. */
   def s5PartitionedRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val tmp = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/part_roundtrip/orders"
+    val tmp = Gate.scratch(s, "part_roundtrip/orders")
     Tables.orders(s, d)
       .withColumn("o_year", year(col("o_orderdate")))
       .write.mode("overwrite").partitionBy("o_year").parquet(tmp)
@@ -295,8 +292,7 @@ object Relational {
     * per language. The oracle recomputes the aggregate from the
     * original table — compaction must be bit-transparent to content. */
   def sCompactRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/compact_roundtrip"
+    val base = Gate.scratch(s, "compact_roundtrip")
     val src = s"$base/documents_small"
     val dst = s"$base/documents_compacted"
     Tables.documents(s, d).repartition(64)
@@ -316,8 +312,7 @@ object Relational {
     * spec-asserted in ZorderSpec; DuckDB can't see Spark's file layout,
     * so the oracle pins content transparency. */
   def sZorderRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/zorder_roundtrip"
+    val base = Gate.scratch(s, "zorder_roundtrip")
     val dst = s"$base/lineitem_z"
     graft.sources.Sources.zorderWrite(
       s, Tables.lineitem(s, d), Seq("l_orderkey", "l_partkey"), dst,
@@ -417,8 +412,7 @@ object Relational {
     * oracle, same pattern as the CSV round-trip). */
   def s9JsonRoundtrip(s: SparkSession, d: String): DataFrame = {
     val src = Tables.nation(s, d)
-    val tmp = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/json_roundtrip/nation"
+    val tmp = Gate.scratch(s, "json_roundtrip/nation")
     src.write.mode("overwrite").json(tmp)
     s.read.schema(src.schema).json(tmp)
       .groupBy("n_regionkey").agg(count(lit(1)).as("n"))
@@ -500,8 +494,7 @@ object Relational {
     * mergeSchema, missing columns null-filled — the drift story the
     * reference meets with inferSchema + serve-time zero-fill. */
   def sMergeSchema(s: SparkSession, d: String): DataFrame = {
-    val tmp = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/merge_schema"
+    val tmp = Gate.scratch(s, "merge_schema")
     val n = Tables.nation(s, d)
     n.select("n_nationkey", "n_name")
       .write.mode("overwrite").parquet(s"$tmp/batch1")
@@ -618,13 +611,9 @@ object Relational {
     * per-key via element_at — the reference's "F1 for grade X last
     * week" access path. */
   def aMapMetrics(s: SparkSession, d: String): DataFrame = {
-    val tmp = sys.props("java.io.tmpdir") +
-      s"/graft_${ProcessHandle.current.pid}/map_metrics/store"
-    // the store APPENDS (one row per weekly eval); start from a fresh
-    // path so re-runs in one process don't accumulate rows
-    val p = new org.apache.hadoop.fs.Path(tmp)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    // the store APPENDS (one row per weekly eval); the cleared scratch
+    // dir keeps re-runs in one process from accumulating rows
+    val tmp = Gate.scratch(s, "map_metrics/store")
     val per = Tables.orders(s, d).groupBy(col("o_orderstatus").as("g"))
       .agg(count(lit(1)).as("n"), round(avg("o_totalprice"), 4).as("v"))
     val row = per.agg(
@@ -722,21 +711,25 @@ object Relational {
     * distinct count, and min/max, melted to one row per column — the
     * ingest-time profile a data-quality gate reads before rules exist.
     * One aggregation job over the table. Distinct counting is
-    * approx_count_distinct (HLL++, rsd 2%) BY DEFAULT: exact
-    * countDistinct makes Spark expand the input once per distinct
-    * column, so a 4-column profile scans the table ~4× through the
-    * exchange — at 100 TB the profile would cost more than the queries
-    * it guards. A profile tolerates ±2% on distinct counts by nature
-    * (it feeds alerts, not answers); `exact = true` keeps the exact
-    * variant for small tables and for the DuckDB oracle gate (spec pins
-    * approx within 5% of exact). min/max are cast AFTER aggregation so
-    * numeric columns order numerically, not lexicographically. */
+    * approx_count_distinct (HLL++, rsd 2%) BY DEFAULT: an exact count
+    * must carry every distinct value of every column to the final
+    * aggregate, so at 100 TB the profile would cost more than the
+    * queries it guards. A profile tolerates ±2% on distinct counts by
+    * nature (it feeds alerts, not answers); `exact = true` keeps the
+    * exact variant for small tables and for the DuckDB oracle gate
+    * (spec pins approx within 5% of exact). It counts each column's
+    * `collect_set`, not a `countDistinct`: Spark rewrites several
+    * distinct aggregates into an Expand whose projections it orders by
+    * a hash over expression ids, so that plan's generated code was new,
+    * and compiled again, on every run. min/max are cast AFTER
+    * aggregation so numeric columns order numerically, not
+    * lexicographically. */
   def dqProfile(s: SparkSession, d: String, exact: Boolean = false): DataFrame = {
     val docs = Tables.documents(s, d)
     val cols = Seq("doc_id", "lang", "source", "n_chars")
     val aggs = cols.flatMap { c => Seq(
       count(when(col(c).isNull, 1)).as(s"${c}__nulls"),
-      (if (exact) countDistinct(col(c))
+      (if (exact) size(collect_set(col(c))).cast("long")
        else approx_count_distinct(col(c), 0.02)).as(s"${c}__distinct"),
       min(col(c)).cast("string").as(s"${c}__min"),
       max(col(c)).cast("string").as(s"${c}__max")) }

@@ -17,8 +17,8 @@ import java.sql.Timestamp
   */
 object EventStream {
 
-  /** Scope a STATEFUL streaming query's state-partition count: Spark
-    * pins the number of state-store partitions to
+  /** Start a STATEFUL streaming query with a scoped state-partition
+    * count: Spark pins the number of state-store partitions to
     * `spark.sql.shuffle.partitions` at the stream's FIRST batch (the
     * checkpoint records it forever), and every trigger then opens,
     * commits and snapshot-maintains one HDFS-backed store per
@@ -29,24 +29,23 @@ object EventStream {
     * 256 store commits of pure metadata (round-18 profile: ~1.3 s per
     * trigger of 65-task no-op stages). Default 8 locally;
     * SPARK_GRAFT_STREAM_STATE_PARTITIONS overrides for production
-    * (set it to hundreds+ on a real cluster). Batch-side shuffles of
-    * the same session are untouched — the conf is restored as soon as
-    * the lifecycle (start → awaitTermination) returns, and AQE
-    * coalescing governs the micro-batch's own exchanges either way.
+    * (set it to hundreds+ on a real cluster).
     *
-    * SCOPE CAVEAT: the override is session-global for the body's
-    * duration. Current callers are pure stateful streams, where the
-    * only shuffles inside the window are the state-store exchanges this
-    * helper exists to size. Do NOT wrap a foreachBatch ingest loop
-    * (its batch jobs would inherit the pinned count), and do not run a
-    * concurrent batch query on the same session inside the body — use
-    * a separate session, or leave that stream unwrapped. */
-  def withStatePartitions[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A = {
+    * The override covers `start` only: a streaming query runs on a
+    * clone of the session taken when it starts, so the query keeps the
+    * pinned count while the session's own value is restored as soon as
+    * `start` returns, and batch queries on the session never see it.
+    * The clone's batch-side shuffles do: a foreachBatch loop started
+    * through here would run its batch jobs at the pinned count, so only
+    * pure stateful streams start through it. */
+  def withStatePartitions(spark: SparkSession)(
+      start: => org.apache.spark.sql.streaming.StreamingQuery)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     val target = sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
     spark.conf.set(key, target)
-    try body finally spark.conf.set(key, prev)
+    try start finally spark.conf.set(key, prev)
   }
 
   /** T1/T3 — tumbling event-time window with a late-data watermark.
@@ -528,76 +527,27 @@ object EventStream {
     }
   }
 
-  /** Streaming IMAGE dedup ingest — [[streamingExactDedupIngest]] with
-    * the perceptual dHash as the fingerprint: each micro-batch of
-    * (id, bytes) image rows hashes map-side
-    * ([[graft.operators.Multimodal.withImageDHash]] — payload carried,
-    * never on an exchange until the kept publish), keeps the first
-    * carrier of each previously-unseen dHash, publishes the kept rows
-    * manifest-committed, and appends the new hashes to the Bloom-
-    * fronted store. Brightness-shifted re-exports of already-landed
-    * images drop even though their bytes match nothing — the byte-
-    * exact loop (d23's) would re-admit every one. Undecodable payloads
-    * DROP here (no perceptual identity ⇒ no dedup claim); a production
-    * loop routes them to a quarantine sink instead. Replay posture,
-    * manifest guard and maintenance hooks are inherited verbatim. */
-  def streamingImageDedupIngest(images: DataFrame, storeDir: String,
-                                keptDir: String,
-                                idCol: String = "media_id",
-                                bytesCol: String = "bytes")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val hashed = graft.operators.Multimodal
-      .withImageDHash(images, idCol, bytesCol)
-      .filter(col("dhash").isNotNull)
-      .withColumn("_dh", col("dhash").cast("string"))
-    streamingExactDedupIngest(hashed, storeDir, keptDir, idCol, "_dh")
-  }
-
-  /** Streaming AUDIO dedup ingest — [[streamingImageDedupIngest]] for
-    * the trio's second modality, proving the shared
-    * fingerprint-frame/store seam end-to-end as a stream: each
-    * micro-batch of (id, bytes) clips fingerprints map-side
-    * ([[graft.operators.Multimodal.withAudioFingerprint]] — the
-    * volume-invariant Goertzel sign pattern), keeps the first carrier
-    * of each previously-unseen fingerprint, publishes kept rows
-    * manifest-committed, and folds the new fingerprints into the
-    * Bloom-fronted store. A ×2-gain remaster of a landed clip drops
-    * even though its bytes match nothing. Undecodable payloads DROP
-    * (no perceptual identity ⇒ no dedup claim). Replay posture,
-    * manifest guard and maintenance hooks inherited verbatim. */
-  def streamingAudioDedupIngest(audio: DataFrame, storeDir: String,
-                                keptDir: String,
-                                idCol: String = "media_id",
-                                bytesCol: String = "bytes")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val hashed = graft.operators.Multimodal
-      .withAudioFingerprint(audio, idCol, bytesCol)
-      .filter(col("afp").isNotNull)
-      .withColumn("_dh", col("afp").cast("string"))
-    streamingExactDedupIngest(hashed, storeDir, keptDir, idCol, "_dh")
-  }
-
-  /** Streaming VIDEO dedup ingest — the trio's third modality on the
-    * same seam: micro-batches of (id, bytes) clips fingerprint
-    * map-side ([[graft.operators.Multimodal.withVideoFingerprint]] —
-    * the brightness-invariant luma-bin pattern), first carrier of a
-    * previously-unseen fingerprint wins, kept rows publish
-    * manifest-committed, new fingerprints fold into the Bloom-fronted
-    * store. A uniformly brightness-shifted re-encode of a landed clip
-    * drops even though its bytes match nothing. Undecodable payloads
-    * DROP. Replay posture, manifest guard and maintenance hooks
+  /** Streaming PERCEPTUAL dedup ingest — [[streamingExactDedupIngest]]
+    * with the modality's perceptual fingerprint as the fingerprint: each
+    * micro-batch of (media_id, bytes) rows fingerprints map-side
+    * ([[graft.operators.Multimodal.fingerprints]] through the modality
+    * table — payload carried, never on an exchange until the kept
+    * publish), keeps the first carrier of each previously-unseen
+    * fingerprint, publishes the kept rows manifest-committed, and
+    * appends the new fingerprints to the Bloom-fronted store. A
+    * brightness-shifted re-export of a landed image, a ×2-gain remaster
+    * of a landed clip or a re-graded video drops even though its bytes
+    * match nothing — the byte-exact loop (d23's) would re-admit every
+    * one. Undecodable payloads DROP here (no perceptual identity ⇒ no
+    * dedup claim); a production loop routes them to a quarantine sink
+    * instead. Replay posture, manifest guard and maintenance hooks are
     * inherited verbatim. */
-  def streamingVideoDedupIngest(video: DataFrame, storeDir: String,
-                                keptDir: String,
-                                idCol: String = "media_id",
-                                bytesCol: String = "bytes")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val hashed = graft.operators.Multimodal
-      .withVideoFingerprint(video, idCol, bytesCol)
-      .filter(col("vfp").isNotNull)
-      .withColumn("_dh", col("vfp").cast("string"))
-    streamingExactDedupIngest(hashed, storeDir, keptDir, idCol, "_dh")
-  }
+  def streamingPerceptualDedupIngest(media: DataFrame,
+                                     m: graft.operators.Multimodal.Modality,
+                                     storeDir: String, keptDir: String)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    streamingExactDedupIngest(graft.operators.Multimodal.fpStoreRows(media, m),
+      storeDir, keptDir, "media_id", "_dh")
 
   /** Streaming per-source boilerplate removal — the d19 operator's
     * ingest twin, closing the last batch-only member of the rewrite

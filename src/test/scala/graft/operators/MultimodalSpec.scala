@@ -277,20 +277,54 @@ class MultimodalSpec extends SparkSpec {
       Ppm.dHash64(Ppm.decode(grayPpm(1, 1, _ => 123)).get)))
   }
 
-  test("imageDHash + imageDupGroups: shifted twin groups with its original, undecodable stays singleton") {
-    val imgs = Seq(
-      (1L, grayPpm(16, 8, i => (i * 53) % 180)),
-      (2L, grayPpm(16, 8, i => (i * 53) % 180 + 40)), // brightness twin of 1
-      (3L, grayPpm(16, 8, i => (i * 91 + 3) % 210)), // different content
-      (4L, "not a ppm".getBytes("US-ASCII"))) // undecodable
-      .toDF("media_id", "bytes")
-    val out = imageDupGroups(imageDHash(imgs))
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
-        r.getInt(3)))).toMap
-    assert(out(1L) == ((1L, 2L, 1)) && out(2L) == ((1L, 2L, 1)),
-      s"twin must join its original's group: $out")
-    assert(out(3L) == ((3L, 1L, 0)), s"distinct content must stay apart: $out")
-    assert(out(4L) == ((4L, 1L, 0)), s"undecodable must stay singleton: $out")
+  /** One payload per modality for a content `seed`; `twin` is the copy
+    * the modality's fingerprint is invariant to (+40 brightness, ×2
+    * gain, +16 brightness), with bytes that differ everywhere. */
+  private def payload(m: Modality, seed: Int, twin: Boolean): Array[Byte] =
+    m match {
+      case Modality.Image =>
+        grayPpm(16, 8, i => (i * seed) % 180 + (if (twin) 40 else 0))
+      case Modality.Audio =>
+        Wav.encode(Array.tabulate(128)(i =>
+          ((i * seed + 11) % 1400 * (if (twin) 2 else 1)).toShort), 16000)
+      case Modality.Video =>
+        Y4m.encode(16, 1, 25, Array.tabulate(64)(f => Array.tabulate(16)(i =>
+          (((f * 16 + i) * seed % 120) + (if (twin) 16 else 0)).toByte)))
+    }
+
+  Modality.all.foreach { m =>
+    test(s"fingerprints + dupGroups ($m): twin groups, junk stays singleton") {
+      val media = Seq(
+        (1L, payload(m, 53, twin = false)),
+        (2L, payload(m, 53, twin = true)), // perceptual twin of 1
+        (3L, payload(m, 91, twin = false)), // different content
+        (4L, "not a payload".getBytes("US-ASCII"))) // undecodable
+        .toDF("media_id", "bytes")
+      val fps = fingerprints(media, m)
+      assert(fps.columns.toSeq == Seq("media_id", "bytes", m.fpCol))
+      assert(fps.filter(col(m.fpCol).isNull)
+        .select("media_id").as[Long].collect().toSeq == Seq(4L),
+        "only the undecodable payload fingerprints to NULL")
+      val out = dupGroups(media, m)
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
+          r.getInt(3)))).toMap
+      assert(out(1L) == ((1L, 2L, 1)) && out(2L) == ((1L, 2L, 1)),
+        s"twin must join its original's group: $out")
+      assert(out(3L) == ((3L, 1L, 0)), s"distinct content must stay apart: $out")
+      assert(out(4L) == ((4L, 1L, 0)), s"undecodable must stay singleton: $out")
+    }
+  }
+
+  test("an unknown modality name fails loudly, naming it") {
+    val row = MediaRow(1L, "x".getBytes("US-ASCII"),
+      MediaMeta("hologram", 0, 0, 0, 0L))
+    val direct = intercept[IllegalArgumentException](decodeFeatures(row, 16))
+    assert(direct.getMessage.contains("'hologram'"), direct.getMessage)
+    val viaJob = intercept[Exception](
+      extractFeatures(Seq(row).toDS(), dim = 16).collect())
+    val messages = Iterator.iterate[Throwable](viaJob)(_.getCause)
+      .takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).toSeq
+    assert(messages.exists(_.contains("'hologram'")), messages.mkString(" | "))
   }
 
   test("audioFingerprint: power-of-two gain invariant, content-sensitive, all bits live") {
@@ -327,47 +361,23 @@ class MultimodalSpec extends SparkSpec {
     assert(short == Y4m.videoFingerprint(clip(16, frames = 3)))
   }
 
-  test("imageDedupFromStore: stored/shifted dups drop, novel keeps, undecodable excluded") {
-    val dir = java.nio.file.Files.createTempDirectory("imgfpstore").toString
-    writeImageDHashStore(
-      Seq((100L, grayPpm(16, 8, i => (i * 53) % 180))).toDF("media_id", "bytes"),
-      dir, expectedTotalImages = 1000L)
-    val batch = Seq(
-      (1L, grayPpm(16, 8, i => (i * 53) % 180 + 40)), // brightness re-export of stored 100
-      (2L, grayPpm(16, 8, i => (i * 91 + 3) % 210)), // novel
-      (3L, grayPpm(16, 8, i => (i * 91 + 3) % 210)), // within-batch dup of 2
-      (4L, "junk".getBytes("US-ASCII"))) // undecodable: no perceptual identity
-      .toDF("media_id", "bytes")
-    val kept = imageDedupFromStore(batch, dir)
-      .select("id").collect().map(_.getLong(0)).toSet
-    assert(kept == Set(2L),
-      s"only the novel image's first carrier survives: $kept")
-  }
-
-  test("audio/video fingerprint stores: perceptual twins drop against the landed store") {
-    val aDir = java.nio.file.Files.createTempDirectory("afpstore").toString
-    val vDir = java.nio.file.Files.createTempDirectory("vfpstore").toString
-    def wavOf(seed: Int, gain: Int) = Wav.encode(
-      Array.tabulate(128)(i => ((i * seed + 11) % 1400 * gain).toShort), 16000)
-    def y4mOf(seed: Int, shift: Int) = Y4m.encode(16, 1, 25,
-      Array.tabulate(64)(f => Array.tabulate(16)(i =>
-        (((f * 16 + i) * seed % 120) + shift).toByte)))
-    writeAudioFingerprintStore(
-      Seq((100L, wavOf(37, 1))).toDF("media_id", "bytes"), aDir, 1000L)
-    writeVideoFingerprintStore(
-      Seq((100L, y4mOf(37, 0))).toDF("media_id", "bytes"), vDir, 1000L)
-    val aKept = audioDedupFromStore(Seq(
-        (1L, wavOf(37, 2)), // x2-gain remaster of stored 100
-        (2L, wavOf(53, 1))) // novel
-      .toDF("media_id", "bytes"), aDir)
-      .select("id").collect().map(_.getLong(0)).toSet
-    val vKept = videoDedupFromStore(Seq(
-        (1L, y4mOf(37, 16)), // +16-brightness re-grade of stored 100
-        (2L, y4mOf(53, 0))) // novel
-      .toDF("media_id", "bytes"), vDir)
-      .select("id").collect().map(_.getLong(0)).toSet
-    assert(aKept == Set(2L), s"audio: only the novel clip survives: $aKept")
-    assert(vKept == Set(2L), s"video: only the novel clip survives: $vKept")
+  Modality.all.foreach { m =>
+    test(s"fp store ($m): twin drops, novel keeps, min id wins, junk out") {
+      val dir = java.nio.file.Files.createTempDirectory(s"${m}fpstore").toString
+      writeFingerprintStore(
+        Seq((100L, payload(m, 53, twin = false))).toDF("media_id", "bytes"),
+        m, dir, expectedTotal = 1000L)
+      val batch = Seq(
+        (1L, payload(m, 53, twin = true)), // perceptual twin of stored 100
+        (3L, payload(m, 91, twin = false)), // novel
+        (2L, payload(m, 91, twin = false)), // within-batch dup of 3
+        (4L, "junk".getBytes("US-ASCII"))) // undecodable: no perceptual identity
+        .toDF("media_id", "bytes")
+      val kept = dedupFromStore(batch, m, dir)
+        .select("id").collect().map(_.getLong(0)).toSet
+      assert(kept == Set(2L),
+        s"only the novel item's smallest-id carrier survives: $kept")
+    }
   }
 
   test("incrementalImageNearDup: batch x store banded pairs == brute force; appends land") {

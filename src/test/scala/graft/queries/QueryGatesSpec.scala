@@ -23,6 +23,21 @@ class QueryGatesSpec extends SparkSpec {
     }
   }
 
+  test("dqProfile exact: a warm run plans alike and compiles no class") {
+    def run() = {
+      val df = Relational.dqProfile(spark, sf, exact = true)
+      (df.collect().toSeq, df.queryExecution.executedPlan.treeString
+        .replaceAll("(#|plan_id=)\\d+", "$1N"))
+    }
+    val (rows, plan) = run()
+    var again = (Seq.empty[org.apache.spark.sql.Row], "")
+    val n = compilesIn { again = run() }
+    info(s"jobs per warm run: ${jobsIn(run())}")
+    assert(again._1 == rows)
+    assert(again._2 == plan, "the plan's shape must not vary run to run")
+    assert(n == 0, s"a warm exact profile compiled $n classes")
+  }
+
   test("heavyHitters: sketch covers every exact hot item; flag can trip") {
     // skewed fixture: two hot values (30% and 20%), long uniform tail
     val vals = (1 to 300).map(_ => "hot_a") ++ (1 to 200).map(_ => "hot_b") ++

@@ -13,6 +13,46 @@ class EventStreamSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
+  test("withStatePartitions scopes to start: session keeps its own count") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    val key = "spark.sql.shuffle.partitions"
+    val pinned = sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
+    val own = if (pinned == "5") "6" else "5"
+    // the session's value as the listener bus sees it while the query
+    // runs (every progress event but the last is delivered before the
+    // query's next trigger ends), and each stateful operator's count
+    val confSeen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val opParts = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val terminated = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = {
+        confSeen.add(spark.conf.get(key))
+        e.progress.stateOperators.foreach(o => opParts.add(o.numShufflePartitions.toInt))
+      }
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        terminated.countDown()
+    }
+    withConf(key, own) {
+      spark.streams.addListener(listener)
+      try {
+        // d26 starts its stateful dedup through withStatePartitions and
+        // then awaits termination outside it
+        graft.queries.Documents.d26ExactDedupStream(spark, sf).collect()
+        assert(terminated.await(60, java.util.concurrent.TimeUnit.SECONDS),
+          "query termination never reached the listener")
+      } finally spark.streams.removeListener(listener)
+      import scala.jdk.CollectionConverters._
+      assert(confSeen.size >= 2, s"one progress event per trigger: $confSeen")
+      assert(confSeen.asScala.forall(_ == own),
+        s"the session must read its own $own while the query runs: $confSeen")
+      assert(spark.conf.get(key) == own)
+      assert(opParts.asScala.nonEmpty && opParts.asScala.forall(_ == pinned.toInt),
+        s"the stateful operator must keep $pinned partitions: $opParts")
+    }
+  }
+
   test("tumblingCounts aggregates a real stream by event-time window") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Timestamp, String, Double)]
